@@ -149,18 +149,6 @@ object VectorOps {
     else java.lang.Double.valueOf(dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble)))
   }
 
-  /** Exact integer dot product over two ARRAY<BIGINT> columns. */
-  def dotLong(a: ArrayData, b: ArrayData): Long = {
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += a.getLong(i) * b.getLong(i)
-      i += 1
-    }
-    acc
-  }
-
   /** Sign-bit bucket of `a` against `planes` (flattened row-major
     * `numPlanes x dim`): bit p set iff dot(a, planes[p]) >= 0.
     */
@@ -227,17 +215,6 @@ case class SignedProjectExpr(
       a => s"graft.functions.VectorOps.signedProject($a, $ref, $inDim, ${scale}L, ${shift}L)")
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Exact integer dot product over two ARRAY<BIGINT> columns. */
-case class DotLongExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dotLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps.dotLong($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** One-pass scalar quantization to BIGINT codes (see
@@ -324,8 +301,6 @@ object VectorFunctions {
     require(inDim > 0 && signs.length % inDim == 0, "signs must be outDim x inDim")
     column(SignedProjectExpr(expression(codes), signs, inDim, scale, shift))
   }
-  def vec_dot_long(a: Column, b: Column): Column =
-    column(DotLongExpr(expression(a), expression(b)))
   def vec_cosine_long(a: Column, b: Column): Column =
     column(CosineLongExpr(expression(a), expression(b)))
   def quantize_codes(vec: Column, levels: Int): Column = {

@@ -51,10 +51,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       n: Int,
-      threshold: Double,
-      persistIntermediate: Boolean = true
+      threshold: Double
   ): DataFrame = {
-    val sh = persisted(shingleTable(fanOut(docs), idCol, textCol, n), persistIntermediate)
+    val sh = shingleTable(fanOut(docs), idCol, textCol, n).cache()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val a = sh.as("a")
     val b = sh.as("b")
@@ -86,10 +85,9 @@ object Dedup {
       textCol: String,
       n: Int,
       threshold: Double,
-      maxDocsPerShingle: Int = 100,
-      persistIntermediate: Boolean = true
+      maxDocsPerShingle: Int = 100
   ): DataFrame = {
-    val base = shingleSets(docs, idCol, textCol, n, persistIntermediate)
+    val base = shingleSets(docs, idCol, textCol, n)
     // scores stay exact over the FULL shingle sets — the cap bounds only
     // the candidate generation
     rescoreExactJaccardSets(cappedCandidates(base, maxDocsPerShingle), base, threshold)
@@ -102,15 +100,13 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int,
-      persistIntermediate: Boolean
+      n: Int
   ): DataFrame = {
     import graft.functions.TextExpressions.word_shingles
-    persisted(
-      fanOut(docs)
-        .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
-        .where(size(col("shs")) > 0),
-      persistIntermediate)
+    fanOut(docs)
+      .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
+      .where(size(col("shs")) > 0)
+      .cache()
   }
 
   /** Frequency-capped shared-shingle candidate pairs over a
@@ -154,10 +150,9 @@ object Dedup {
       textCol: String,
       n: Int,
       threshold: Double,
-      maxDocsPerShingle: Int = 100,
-      persistIntermediate: Boolean = true
+      maxDocsPerShingle: Int = 100
   ): DataFrame = {
-    val base = shingleSets(docs, idCol, textCol, n, persistIntermediate)
+    val base = shingleSets(docs, idCol, textCol, n)
     val scored = joinedSortedSets(cappedCandidates(base, maxDocsPerShingle), base)
       .withColumn(
         "common",
@@ -213,12 +208,11 @@ object Dedup {
       idCol: String,
       textCol: String,
       n: Int,
-      threshold: Double,
-      persistIntermediate: Boolean = true
+      threshold: Double
   ): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"prefixFilterJaccardPairs: threshold must be in (0, 1], got $threshold")
-    val base = shingleSets(docs, idCol, textCol, n, persistIntermediate)
+    val base = shingleSets(docs, idCol, textCol, n)
     val sh = base.select(col("doc_id"), explode(col("shs")).as("shingle"))
     val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("_df"))
     val prefixes = sh
@@ -277,23 +271,21 @@ object Dedup {
       idCol: String,
       textCol: String,
       gramLen: Int = 8,
-      minDocs: Int = 2,
-      persistIntermediate: Boolean = true
+      minDocs: Int = 2
   ): DataFrame = {
     require(gramLen >= 2, s"duplicatedPassages: gramLen must be >= 2, got $gramLen")
     require(minDocs >= 2, s"duplicatedPassages: minDocs must be >= 2, got $minDocs")
     val toks = fanOut(docs)
       .select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("_w"))
       .where(size(col("_w")) >= gramLen)
-    val grams = persisted(
-      toks
-        .select(
-          col("doc_id"),
-          posexplode(expr(
-            s"transform(sequence(1, size(_w) - ${gramLen - 1}), " +
-              s"i -> md5(array_join(slice(_w, i, $gramLen), ' ')))")))
-        .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("_g")),
-      persistIntermediate)
+    val grams = toks
+      .select(
+        col("doc_id"),
+        posexplode(expr(
+          s"transform(sequence(1, size(_w) - ${gramLen - 1}), " +
+            s"i -> md5(array_join(slice(_w, i, $gramLen), ' ')))")))
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("_g"))
+      .cache()
     val dup = grams
       .select("_g", "doc_id").distinct()
       .groupBy("_g").agg(count(lit(1)).as("_nd"))
@@ -310,15 +302,6 @@ object Dedup {
         (col("end_sec") - col("start_sec") + 1).as("n_grams"))
       .orderBy("doc_id", "span_seq")
   }
-
-  /** Optional caching for intermediates reused across multiple join
-    * branches. `persist = false` lets long-lived sessions opt out —
-    * cached blocks otherwise accumulate in executor storage across
-    * repeated invocations (callers managing their own lifecycle can also
-    * `unpersist` the inputs themselves).
-    */
-  private def persisted(df: DataFrame, persist: Boolean): DataFrame =
-    if (persist) df.cache() else df
 
   /** CPU fan-out for hash-heavy per-row stages: a small parquet file
     * arrives as ONE input split, so signature computation would run
@@ -534,16 +517,14 @@ object Dedup {
       n: Int,
       threshold: Double,
       bands: Int = 8,
-      rowsPerBand: Int = 2,
-      persistIntermediate: Boolean = true
+      rowsPerBand: Int = 2
   ): DataFrame = {
     import graft.functions.TextExpressions.word_shingles
     val numHashes = bands * rowsPerBand
-    val base = persisted(
-      fanOut(docs)
-        .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
-        .where(size(col("shs")) > 0),
-      persistIntermediate)
+    val base = fanOut(docs)
+      .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
+      .where(size(col("shs")) > 0)
+      .cache()
 
     val banded = bandedMd5(base, bands, rowsPerBand)
     val l = banded.as("l")
@@ -607,13 +588,11 @@ object Dedup {
     * correct and still avoids any corpus self-join; size the bound to
     * executor memory.
     *
-    * `persistIntermediate` governs BOTH shingle tables: the batch
-    * side's cache is reused by the measuring count, the banding, and
-    * the rescore; the corpus side's cache trades a second scan for
-    * corpus-scale spillable storage. At true lake scale — or in a
-    * long-lived session where cached blocks would otherwise accumulate
-    * (the streaming-ingest loop) — pass `false` and let each pass
-    * re-read the scan.
+    * BOTH shingle tables are cached: the batch side's cache is reused
+    * by the measuring count, the banding, and the rescore; the corpus
+    * side's cache trades a second scan for corpus-scale spillable
+    * storage. Long-lived callers (the streaming-ingest loop) use
+    * [[incrementalNearDupMd5Managed]] and release them per batch.
     */
   def incrementalNearDupMd5(
       corpus: DataFrame,
@@ -624,20 +603,18 @@ object Dedup {
       threshold: Double,
       bands: Int = 8,
       rowsPerBand: Int = 2,
-      persistIntermediate: Boolean = true,
       maxBroadcastBandedRows: Long = 2000000L
   ): DataFrame =
     incrementalNearDupMd5Managed(
       corpus, batch, idCol, textCol, n, threshold, bands, rowsPerBand,
-      persistIntermediate, maxBroadcastBandedRows)._1
+      maxBroadcastBandedRows)._1
 
   /** [[incrementalNearDupMd5]] with an explicit cache-release handle:
     * returns `(pairs, release)` where `release()` unpersists the two
     * internal shingle-table caches. Long-lived callers (the streaming
     * ingest loop) call it after materializing the result, so each
     * micro-batch gets the cached-reuse plan WITHOUT accumulating
-    * corpus-scale blocks in executor storage forever. `release` is a
-    * no-op when `persistIntermediate = false`.
+    * corpus-scale blocks in executor storage forever.
     */
   def incrementalNearDupMd5Managed(
       corpus: DataFrame,
@@ -648,16 +625,14 @@ object Dedup {
       threshold: Double,
       bands: Int = 8,
       rowsPerBand: Int = 2,
-      persistIntermediate: Boolean = true,
       maxBroadcastBandedRows: Long = 2000000L
   ): (DataFrame, () => Unit) = {
     import graft.functions.TextExpressions.word_shingles
     require(maxBroadcastBandedRows >= 0, s"bad maxBroadcastBandedRows $maxBroadcastBandedRows")
-    def baseOf(df: DataFrame) = persisted(
-      fanOut(df)
-        .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
-        .where(size(col("shs")) > 0),
-      persistIntermediate)
+    def baseOf(df: DataFrame) = fanOut(df)
+      .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
+      .where(size(col("shs")) > 0)
+      .cache()
     val corpusBase = baseOf(corpus)
     val batchBase = baseOf(batch)
     // measure before hinting: an oversized "batch" must not reach the
@@ -720,11 +695,7 @@ object Dedup {
         (rescoreExactJaccardSets(
           candidates, corpusBase.union(batchBase).select(col("doc_id"), col("shs")), threshold),
           () => ())
-    val release: () => Unit =
-      if (persistIntermediate) { () =>
-        { corpusBase.unpersist(); batchBase.unpersist(); releaseCand() }
-      } else releaseCand
-    (rescored, release)
+    (rescored, () => { corpusBase.unpersist(); batchBase.unpersist(); releaseCand() })
   }
 
   /** NOVELTY filter: the batch docs that are neither exact nor near
@@ -745,26 +716,10 @@ object Dedup {
     * the broadcast batch digests, so the dup set is batch-bounded and
     * the anti-join broadcasts) plus the banding/rescore scans of
     * [[incrementalNearDupMd5]]; everything else is batch-scale.
-    * `persistIntermediate` is forwarded; long-lived callers should use
-    * [[noveltyFilterManaged]] and release the caches per batch.
-    */
-  def noveltyFilter(
-      corpus: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      threshold: Double,
-      bands: Int = 8,
-      rowsPerBand: Int = 2,
-      persistIntermediate: Boolean = true
-  ): DataFrame =
-    noveltyFilterManaged(
-      corpus, batch, idCol, textCol, n, threshold, bands, rowsPerBand, persistIntermediate)._1
-
-  /** [[noveltyFilter]] with the internal caches' release handle (see
-    * [[incrementalNearDupMd5Managed]]): call `release()` after
-    * materializing the survivors.
+    *
+    * Returns `(survivors, release)`: call `release()` after
+    * materializing the survivors to unpersist the internal caches (see
+    * [[incrementalNearDupMd5Managed]]).
     */
   def noveltyFilterManaged(
       corpus: DataFrame,
@@ -774,8 +729,7 @@ object Dedup {
       n: Int,
       threshold: Double,
       bands: Int = 8,
-      rowsPerBand: Int = 2,
-      persistIntermediate: Boolean = true
+      rowsPerBand: Int = 2
   ): (DataFrame, () => Unit) = {
     val batchDigests = batch.select(md5(col(textCol)).as("__h")).distinct()
     val dupDigests = corpus
@@ -787,7 +741,7 @@ object Dedup {
       .join(dupDigests, Seq("__h"), "left_anti")
       .drop("__h")
     val (pairs, release) = incrementalNearDupMd5Managed(
-      corpus, fresh, idCol, textCol, n, threshold, bands, rowsPerBand, persistIntermediate)
+      corpus, fresh, idCol, textCol, n, threshold, bands, rowsPerBand)
     val nearIds = pairs.select(col("doc_b").as(idCol)).distinct()
     (fresh.join(nearIds, Seq(idCol), "left_anti"), release)
   }
@@ -814,16 +768,6 @@ object Dedup {
       .where(col("n_members") >= 2)
       .orderBy("keep_id")
 
-  /** MinHash signatures as one ARRAY<BIGINT> column, computed row-wise by
-    * a custom expression — no explode, no `numHashes`-column aggregation
-    * shuffle. (An exploded + min-agg variant exists but shuffles the full
-    * shingle table; signature-per-row keeps the pre-LSH stage shuffle-free.)
-    */
-  def minhashSignatures(shingled: DataFrame, numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map(i => min(xxhash64(col("shingle"), lit(i))).as(s"mh_$i"))
-    shingled.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
   /** MinHash + LSH banding candidate pairs, verified with exact Jaccard.
     *
     * bands × rowsPerBand = numHashes. A pair lands in the candidate set if
@@ -840,25 +784,23 @@ object Dedup {
       n: Int,
       threshold: Double,
       bands: Int = 8,
-      rowsPerBand: Int = 4,
-      persistIntermediate: Boolean = true
+      rowsPerBand: Int = 4
   ): DataFrame = {
     import graft.functions.TextExpressions.{minhash_signature, word_shingles}
     val numHashes = bands * rowsPerBand
 
     // one row per doc: shingle set + minhash signature, computed in a
     // single scan with no shuffle
-    val base = persisted(
-      fanOut(docs)
-        .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
-        .where(size(col("shs")) > 0)
-        .select(
-          col("doc_id"),
-          col("shs"),
-          size(col("shs")).as("n_sh"),
-          minhash_signature(col("shs"), numHashes).as("sig")
-        ),
-      persistIntermediate)
+    val base = fanOut(docs)
+      .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
+      .where(size(col("shs")) > 0)
+      .select(
+        col("doc_id"),
+        col("shs"),
+        size(col("shs")).as("n_sh"),
+        minhash_signature(col("shs"), numHashes).as("sig")
+      )
+      .cache()
 
     // band id + band hash, one row per (doc, band)
     val bandCols = (0 until bands).map { b =>

@@ -1440,7 +1440,7 @@ object Similarity {
       .limit(topK)
   }
 
-  /** Bounded collect of the m·k (dot, ‖c_s‖²) PAIR table the dot face
+  /** Bounded collect of the m·k (dot, ‖c_s‖²) PAIR table [[ivfPqTopK]]
     * consumes — the ADC DOT table (`dot(q_s, c_s)`, exact per subspace
     * because PQ subspaces are disjoint coordinate blocks, the FAISS
     * IVFADC inner-product variant's [[adcDistanceTable]] analogue) and
@@ -1746,30 +1746,22 @@ object Similarity {
     * vectors stay out of the postings entirely). Returns `topK` rows
     * `(idCol, adc, cos_sim)` by (cos_sim desc, id).
     *
-    * TWO ADC rankings, chosen by `metric` (default `"dot"`):
-    *
-    *   - `"dot"` — QUANTIZED COSINE, the answer's own metric: the
-    *     candidate score is `cos(q, q(v)) = dot(q, q(v)) /
-    *     (‖q‖·‖q(v)‖)` where `dot(q, q(v)) = Σ_s dot(q_s, c_s)` and
-    *     `‖q(v)‖² = Σ_s ‖c_s‖²` are BOTH exact over the reconstruction
-    *     (subspaces are disjoint coordinate blocks) and both pure
-    *     functions of the CODES. This closes the measured L2↔cosine
-    *     mismatch: ranking quantized L2 while the answer is cosine
-    *     over unnormalized vectors mis-orders candidates whose norms
-    *     differ, measured to CAP clustered recall (0.52 at shortlist
-    *     200) and to get WORSE as codes get near-exact (m16 k64
-    *     recall 0.12–0.20, RECALL_r16.json) because exact L2 order is
-    *     still not cosine order. The denominator choice is
-    *     measured-load-bearing: dividing by the exact stored ‖v‖
-    *     instead collapses clustered small-shortlist recall to
-    *     ~topK/cell-size (0.04–0.05) — within a code cell the
-    *     numerator is constant, so 1/‖v‖, pure norm noise, does the
-    *     ranking; ‖q(v)‖ is cell-constant, keeping whole cells tied
-    *     for the rank cut. Shortlist keeps the LARGEST scores.
-    *   - `"l2"` — quantized squared L2 (`Σ_s l2sq(q_s, c_s)`), the
-    *     classic FAISS IVFADC ranking; kept as the face for callers
-    *     whose downstream metric IS L2 and as the measured-regression
-    *     pin. Shortlist keeps the smallest.
+    * The ADC ranking is QUANTIZED COSINE, the answer's own metric: the
+    * candidate score is `cos(q, q(v)) = dot(q, q(v)) / (‖q‖·‖q(v)‖)`
+    * where `dot(q, q(v)) = Σ_s dot(q_s, c_s)` and `‖q(v)‖² = Σ_s
+    * ‖c_s‖²` are BOTH exact over the reconstruction (subspaces are
+    * disjoint coordinate blocks) and both pure functions of the CODES.
+    * Ranking quantized L2 (the classic FAISS IVFADC score) while the
+    * answer is cosine over unnormalized vectors mis-orders candidates
+    * whose norms differ: on norm-concentrated corpora the two
+    * orderings coincide, on a norm-varying corpus L2 caps recall below
+    * 0.9 even re-ranking the whole probed population (RECALL_r17.json).
+    * The denominator choice is measured-load-bearing: dividing by the
+    * exact stored ‖v‖ instead collapses clustered small-shortlist
+    * recall to ~topK/cell-size (0.04–0.05) — within a code cell the
+    * numerator is constant, so 1/‖v‖, pure norm noise, does the
+    * ranking; ‖q(v)‖ is cell-constant, keeping whole cells tied for
+    * the rank cut. Shortlist keeps the LARGEST scores.
     *
     * Recall is bounded twice, both knobs explicit: by `nprobe` (a true
     * neighbour in an unprobed bucket is never seen — the IVF contract)
@@ -1780,18 +1772,16 @@ object Similarity {
     * The shortlist cut is TIE-INCLUSIVE (RANK-style top-N): the cut
     * value is the `shortlist`-th best adc and EVERY candidate at or
     * past it survives to the exact re-rank. PQ maps each vector to one
-    * of k^m cells, so under `"l2"` a tight natural cluster collapses
-    * to ONE adc value shared by the whole cell — a row-count cut by
-    * (adc, id) there keeps the `shortlist` smallest IDS of the cell,
-    * an arbitrary subset, and recall@10 measured on a clustered 500k
-    * corpus was 0.13 even at shortlist 200 (RECALL_r15.json). Under
-    * the rank cut, `shortlist` bounds CODE-RESOLUTION positions —
-    * candidates the codes genuinely distinguish — and the re-ranker
-    * always sees whole code-equivalence classes (same corpus and
-    * knobs: 0.13 → 0.52, RECALL_r16.json). The `"dot"` face scores are
-    * pure functions of the codes too, so its tie classes are exactly
-    * the code cells — the same rank-cut regime, with cosine-consistent
-    * ordering ACROSS cells. Cost is still bounded: the re-rank set is
+    * of k^m cells and the score is a pure function of the codes, so a
+    * tight natural cluster collapses to ONE adc value shared by the
+    * whole cell — a row-count cut by (adc, id) there keeps the
+    * `shortlist` smallest IDS of the cell, an arbitrary subset, and
+    * recall@10 measured on a clustered 500k corpus was 0.13 even at
+    * shortlist 200 (RECALL_r15.json). Under the rank cut, `shortlist`
+    * bounds CODE-RESOLUTION positions — candidates the codes genuinely
+    * distinguish — and the re-ranker always sees whole
+    * code-equivalence classes (same corpus and knobs: 0.13 → 0.52,
+    * RECALL_r16.json). Cost is still bounded: the re-rank set is
     * `shortlist` plus the boundary class, worst case one whole probed
     * bucket (≈ nprobe·n/nlist rows of exact cosine — the
     * IVF-without-PQ probe cost, the correct degenerate fallback when
@@ -1803,9 +1793,8 @@ object Similarity {
     * Size the shortlist with [[ivfPqShortlistFor]], not a constant:
     * any quantized score loses resolution inside a dense bucket, so a
     * fixed cut caps recall as the corpus grows, while the
-    * population-scaled cut restores IVF-level recall (RECALL_r16:
-    * 0.92 at 0.25× bucket population under "l2"; the "dot" face
-    * reaches the same recall at far smaller shortlists — RECALL_r17).
+    * population-scaled cut restores IVF-level recall (0.92 at 0.25×
+    * bucket population, 1.00 at 1× — RECALL_r16/RECALL_r17).
     * On uniform-ish corpora recall is nprobe-bound exactly as IVF's
     * is; see [[ivfTopKIndexed]]'s sizing note.
     */
@@ -1820,15 +1809,12 @@ object Similarity {
       shortlist: Int,
       rerank: DataFrame,
       rerankVecCol: String,
-      excludeId: Option[Long] = None,
-      metric: String = "dot"
+      excludeId: Option[Long] = None
   ): DataFrame = {
     require(topK >= 1, s"ivfPqTopK: topK must be at least 1, got $topK")
     require(shortlist >= topK,
       s"ivfPqTopK: shortlist ($shortlist) must be at least topK ($topK)")
     require(nprobe >= 1, s"ivfPqTopK: nprobe must be at least 1, got $nprobe")
-    require(metric == "dot" || metric == "l2",
-      s"ivfPqTopK: metric must be 'dot' or 'l2', got '$metric'")
     require(query.columns.length == 1,
       "ivfPqTopK: query must be a one-row, one-column DataFrame")
     query.schema.fields(0).dataType match {
@@ -1895,120 +1881,76 @@ object Similarity {
     // fixed-order folds of shared literals, in every engine), while
     // rounding to 6dp BEFORE the cut merged near-misses across cells
     // into spurious tie classes — measured 2.2× probe cost at 500k on
-    // the cosine-scale dot face (values concentrate near 1.0) with
+    // the cosine-scale scores (values concentrate near 1.0) with
     // zero recall change. Only the OUTPUT adc is 6dp-rounded (the
     // cross-engine hash grain).
     val inProbed = excluded
       .where(col("centroid_id").isin(probed.map(Long.box): _*))
       .where(size(col("codes")) === m)
     val qv = query.select(col(query.columns.head).as("_qv"))
-    def dbg(tag: String, t0: Long): Unit =
-      if (sys.env.contains("GRAFT_ADC_DEBUG"))
-        System.err.println(f"[adc] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    val tDt = System.nanoTime()
-    val (scored, cutOf, keepPastCut) = metric match {
-      case "dot" =>
-        // quantized cosine cos(q, q(v)) = dot(q, q(v)) / (|q|·‖q(v)‖):
-        // BOTH factors are pure functions of the CODES (per-subspace
-        // dot and centroid-norm² map literals, summed in fixed subspace
-        // order), so code-tied candidates score IDENTICALLY and the
-        // tie-inclusive cut hands the re-ranker whole code cells —
-        // exactly the L2 face's tie regime, with cosine-consistent
-        // ordering ACROSS cells. Dividing by the exact stored ‖v‖
-        // instead was measured to DESTROY small-shortlist recall
-        // (0.045 at shortlist 10 on clustered 50k ≈ 10/cell-size, i.e.
-        // random-within-cell): within a code cell the numerator is
-        // constant, so 1/‖v‖ — pure norm noise, uncorrelated with
-        // cosine — did the ranking. ‖q(v)‖ is cell-constant, so the
-        // quantized signal, not the noise, ranks. |q| is
-        // driver-computed with the same left-to-right fold as the
-        // oracle's sum.
-        // one collect for both per-(sub,cid) factors — identical values,
-        // one fewer driver round-trip per probe
-        val dtn2 = adcDotNorm2Table(storedCb, qv, "_qv", m, dim / m)
-        val qNorm = math.sqrt(
-          qRows.head.getSeq[Float](0).foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble))
-        require(qNorm > 0.0, "ivfPqTopK: metric 'dot' needs a non-zero query vector")
-        // ONE map lookup per subspace (cid → (dot, cn2) pair), not two:
-        // the measured cost of a second element_at chain was ~2.5× per
-        // probe at 500k for zero recall gain. The two sums still fold
-        // left-associated in subspace order over the SAME per-(sub,cid)
-        // values, so the 6dp adc is bit-identical to the two-chain
-        // form (and to the oracle's (((t0+t1)+t2)+t3 replay). The
-        // two-stage select keeps each lookup evaluated once — Catalyst
-        // leaves multi-referenced non-trivial aliases uncollapsed.
-        // SENTINEL instead of a WHERE on the score: a filter predicate
-        // over the lookup chain re-evaluates the whole chain per
-        // conjunct (isNotNull + isnan tripled the per-row work — a
-        // measured ~2.5× on the whole probe at 500k). nanvl∘coalesce
-        // wraps ONE evaluation; invalid rows (a code missing from the
-        // stored codebook → null; 0/0 on an all-zero cell → NaN) become
-        // −2, which sorts below every real quantized cosine (|cos| ≤ 1
-        // by Cauchy–Schwarz, exactly), so they reach the cut only when
-        // the probe is starved below `shortlist` — and the post-cut
-        // strip (shortlist-scale rows) removes them always.
-        val pairCols = (0 until m).map { s =>
-          val subPairs = dtn2.collect { case ((`s`, cid), dn) => cid -> dn }
-          if (subPairs.isEmpty) lit(null).cast("struct<_1:double,_2:double>")
-          else denseLookup(subPairs, col("codes").getItem(s))
-        }
-        val withPairs = inProbed.select(
-          col(idCol) +: pairCols.zipWithIndex.map { case (c, s) => c.as(s"_p$s") }: _*)
-        val qdot = (0 until m).map(s => col(s"_p$s").getField("_1")).reduce(_ + _)
-        val rec2 = (0 until m).map(s => col(s"_p$s").getField("_2")).reduce(_ + _)
-        val s = withPairs.select(col(idCol),
-          nanvl(coalesce(qdot / (lit(qNorm) * sqrt(rec2)), lit(-2.0)), lit(-2.0))
-            .as("_adcr"))
-        (s,
-          (sc: DataFrame) => sc.orderBy(col("_adcr").desc, col(idCol)).limit(shortlist)
-            .agg(min(col("_adcr"))).head(),
-          (cut: Double) => col("_adcr") >= cut && col("_adcr") >= lit(-1.5))
-      case _ =>
-        val dt = adcDistanceTable(storedCb, qv, "_qv", m, dim / m)
-        // same sentinel discipline, opposite pole: missing-code rows
-        // become Double.MaxValue, past any real L2 sum of float data
-        val s = inProbed
-          .select(col(idCol),
-            coalesce(adcLookupSum(dt, m, col("codes")), lit(Double.MaxValue)).as("_adcr"))
-        (s,
-          (sc: DataFrame) => sc.orderBy(col("_adcr"), col(idCol)).limit(shortlist)
-            .agg(max(col("_adcr"))).head(),
-          (cut: Double) => col("_adcr") <= cut && col("_adcr") < lit(1e300))
+    // quantized cosine cos(q, q(v)) = dot(q, q(v)) / (|q|·‖q(v)‖):
+    // BOTH factors are pure functions of the CODES (per-subspace dot
+    // and centroid-norm² map literals, summed in fixed subspace order),
+    // so code-tied candidates score IDENTICALLY and the tie-inclusive
+    // cut hands the re-ranker whole code cells, with cosine-consistent
+    // ordering ACROSS cells. Dividing by the exact stored ‖v‖ instead
+    // was measured to DESTROY small-shortlist recall (0.045 at
+    // shortlist 10 on clustered 50k ≈ 10/cell-size, i.e.
+    // random-within-cell): within a code cell the numerator is
+    // constant, so 1/‖v‖ — pure norm noise, uncorrelated with cosine —
+    // did the ranking. ‖q(v)‖ is cell-constant, so the quantized
+    // signal, not the noise, ranks. |q| is driver-computed with the
+    // same left-to-right fold as the oracle's sum.
+    // one collect for both per-(sub,cid) factors — identical values,
+    // one fewer driver round-trip per probe
+    val dtn2 = adcDotNorm2Table(storedCb, qv, "_qv", m, dim / m)
+    val qNorm = math.sqrt(
+      qRows.head.getSeq[Float](0).foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble))
+    require(qNorm > 0.0, "ivfPqTopK: needs a non-zero query vector")
+    // ONE map lookup per subspace (cid → (dot, cn2) pair), not two:
+    // the measured cost of a second element_at chain was ~2.5× per
+    // probe at 500k for zero recall gain. The two sums still fold
+    // left-associated in subspace order over the SAME per-(sub,cid)
+    // values, so the 6dp adc is bit-identical to the two-chain form
+    // (and to the oracle's (((t0+t1)+t2)+t3 replay). The two-stage
+    // select keeps each lookup evaluated once — Catalyst leaves
+    // multi-referenced non-trivial aliases uncollapsed.
+    // SENTINEL instead of a WHERE on the score: a filter predicate over
+    // the lookup chain re-evaluates the whole chain per conjunct
+    // (isNotNull + isnan tripled the per-row work — a measured ~2.5× on
+    // the whole probe at 500k). nanvl∘coalesce wraps ONE evaluation;
+    // invalid rows (a code missing from the stored codebook → null; 0/0
+    // on an all-zero cell → NaN) become −2, which sorts below every
+    // real quantized cosine (|cos| ≤ 1 by Cauchy–Schwarz, exactly), so
+    // they reach the cut only when the probe is starved below
+    // `shortlist` — and the post-cut strip (shortlist-scale rows)
+    // removes them always.
+    val pairCols = (0 until m).map { s =>
+      val subPairs = dtn2.collect { case ((`s`, cid), dn) => cid -> dn }
+      if (subPairs.isEmpty) lit(null).cast("struct<_1:double,_2:double>")
+      else denseLookup(subPairs, col("codes").getItem(s))
     }
-    dbg(s"$metric tables", tDt)
-    val tCut = System.nanoTime()
-    val cutRow = cutOf(scored)
-    dbg(s"$metric cut", tCut)
-    // Cross-engine flake attribution (debug-only extra pass): the cut
-    // compares RAW doubles on the recorded assumption that code-tied
-    // candidates fold bit-identically in BOTH engines from
-    // independently-trained/replayed centroid floats. A candidate in a
-    // DIFFERENT code cell within ~1e-7 of the cut is the one surface
-    // where that could flake, so report the closest non-tied gap —
-    // a future sf-drift becomes attributable instead of mysterious.
-    if (sys.env.contains("GRAFT_ADC_DEBUG") && !cutRow.isNullAt(0)) {
-      val c = cutRow.getDouble(0)
-      val gap = scored.where(col("_adcr") =!= c)
-        .agg(min(abs(col("_adcr") - lit(c)))).head()
-      System.err.println(s"[adc] $metric min|adcr-cut| gap: " +
-        (if (gap.isNullAt(0)) "n/a (all candidates code-tied at the cut)"
-         else gap.getDouble(0).toString))
-    }
+    val withPairs = inProbed.select(
+      col(idCol) +: pairCols.zipWithIndex.map { case (c, s) => c.as(s"_p$s") }: _*)
+    val qdot = (0 until m).map(s => col(s"_p$s").getField("_1")).reduce(_ + _)
+    val rec2 = (0 until m).map(s => col(s"_p$s").getField("_2")).reduce(_ + _)
+    val scored = withPairs.select(col(idCol),
+      nanvl(coalesce(qdot / (lit(qNorm) * sqrt(rec2)), lit(-2.0)), lit(-2.0)).as("_adcr"))
+    val cutRow = scored.orderBy(col("_adcr").desc, col(idCol)).limit(shortlist)
+      .agg(min(col("_adcr"))).head()
     if (cutRow.isNullAt(0))
       return spark.read.parquet(post)
         .where(lit(false))
         .select(col(idCol),
           lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos_sim"))
-    val short = scored.where(keepPastCut(cutRow.getDouble(0)))
+    val short = scored.where(col("_adcr") >= cutRow.getDouble(0) && col("_adcr") >= lit(-1.5))
     // 4. exact re-rank of the tie-inclusive shortlist against the
     // source-of-truth vector table: broadcast while the set is
     // provably small (one bounded count — the re-scan is a footer-
     // pruned codes read), shuffle-join past it (a maximal tie class is
     // a whole probed bucket; correctness must not depend on it
     // fitting in the driver)
-    val tCount = System.nanoTime()
     val shortCount = short.count()
-    dbg(s"$metric shortCount=$shortCount", tCount)
     val rerankVecs = rerank.select(col(idCol), col(rerankVecCol).as("_rv"))
     val joined =
       if (shortCount <= MaxBroadcastShortlist) broadcast(short).join(rerankVecs, idCol)
@@ -2031,8 +1973,8 @@ object Similarity {
   /** The measured SHORTLIST SIZING RULE as an executable helper
     * (RECALL_r16.json): a fixed shortlist does not survive corpus
     * growth — at n = 500k/nlist 64 the 200-row cut capped clustered
-    * recall@10 at 0.52–0.76 because ADC (an L2-quantized score
-    * re-ranked by cosine) cannot order the inside of a dense bucket,
+    * recall@10 at 0.52–0.76 because ADC (a quantized score re-ranked
+    * by cosine) cannot order the inside of a dense bucket,
     * while a shortlist scaled to the probed population restores
     * IVF-level recall (1.0 at 1× bucket population, where the probe
     * exact-re-ranks every probed candidate and PQ's remaining job is

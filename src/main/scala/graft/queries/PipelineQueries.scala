@@ -1706,9 +1706,9 @@ object PipelineQueries {
     // probed buckets' postings files are read, q76's footer contract),
     // PQ codes compress what each candidate COSTS (m lookups, no
     // vector reads), and only the 40-deep ADC shortlist pays an exact
-    // cosine against the source-of-truth table. The ADC ranking is the
-    // DOT face (quantized cosine over exact stored norms — the default
-    // metric, closing the measured L2↔cosine mis-ranking). Index
+    // cosine against the source-of-truth table. The ADC ranking is
+    // quantized cosine over the reconstruction norm (ivfPqTopK's one
+    // ranking, closing the measured L2↔cosine mis-ranking). Index
     // rebuilt per run (scratch dir); oracle = q150's training replay
     // composed with q75's coarse CTEs verbatim.
     "q152_ann_ivfpq" -> { (s, dir) =>

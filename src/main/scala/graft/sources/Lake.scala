@@ -241,12 +241,6 @@ object Lake {
   def writeOrc(df: DataFrame, path: String, mode: String = "overwrite"): Unit =
     df.write.mode(mode).orc(path)
 
-  /** S7 — dependency-metadata CSV (`Table, Parent Table, Layer`),
-    * `dependency_utils.py:22`.
-    */
-  def readDependencyCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
-
   // ------------------------------------------------------------------- sinks
 
   /** K1 — parquet overwrite write + catalog sync (`utils.py:200-209`).
@@ -283,10 +277,6 @@ object Lake {
     database.foreach(db => syncCatalogTable(spark, path, db))
     path
   }
-
-  /** K2 — parquet append (operational metadata, `utils.py:474-477`). */
-  def appendParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
 
   /** O8 — catalog sync standing in for the Glue crawler
     * (`utils.py:250-328`): register the files as a queryable view named

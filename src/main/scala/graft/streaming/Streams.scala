@@ -323,7 +323,7 @@ object Streams {
         // crash-replay keystone: docs an earlier crashed attempt already
         // MOVED into the corpus are dropped from the batch before the
         // banding join, so the replay re-enters the incremental join
-        // with disjoint id spaces (see Dedup.noveltyFilter)
+        // with disjoint id spaces (see Dedup.noveltyFilterManaged)
         Dedup.noveltyFilterManaged(
           spark.read.parquet(targetPath), inner, idCol, textCol,
           n, threshold, bands, rowsPerBand)

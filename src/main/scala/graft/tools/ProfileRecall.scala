@@ -37,15 +37,16 @@ import graft.operators.Similarity
   * ./recall_out.json) as JSONL.
   *
   * Env knobs: SPARK_GRAFT_RECALL_N (corpus size, default 50000),
-  * SPARK_GRAFT_RECALL_Q (query sample, default 20), SPARK_GRAFT_CPUS.
+  * SPARK_GRAFT_RECALL_Q (query sample, default 20),
+  * SPARK_GRAFT_RECALL_OUT (JSONL output path),
+  * SPARK_GRAFT_RECALL_CORPORA (default `clustered,uniform`; `scaled`
+  * adds the norm-varying corpus), SPARK_GRAFT_RECALL_FAMILIES (default
+  * `ivf,ivfpq,lsh`), SPARK_GRAFT_RECALL_PQCONFIGS (IVF-PQ `m:k` pairs,
+  * default `8:16,8:64,16:64`), SPARK_GRAFT_CPUS.
   */
 object ProfileRecall {
 
-  /** Shared with [[ProfileAdcMetric]] so the A/B cost profile measures
-    * EXACTLY the corpus the recall artifacts were taken on — a drifted
-    * copy-paste here would silently compare against different data.
-    */
-  private[tools] def synth(spark: SparkSession, n: Long, dim: Int, corpus: String,
+  private def synth(spark: SparkSession, n: Long, dim: Int, corpus: String,
       centers: Int): DataFrame = {
     val clusteredBase =
       // cluster c = hash(id) mod centers; component = cluster base +
@@ -89,16 +90,13 @@ object ProfileRecall {
     val scratchRoot = s"${System.getProperty("java.io.tmpdir")}/graft_recall_" +
       ProcessHandle.current().pid()
 
-    // SPARK_GRAFT_RECALL_CORPORA / _FAMILIES / _METRICS: comma lists to
-    // focus a run (e.g. CORPORA=scaled FAMILIES=ivfpq METRICS=dot,l2
-    // for the metric-sensitivity measurement) — defaults reproduce the
-    // standard grid
+    // SPARK_GRAFT_RECALL_CORPORA / _FAMILIES: comma lists to focus a
+    // run (e.g. CORPORA=scaled FAMILIES=ivfpq for the norm-sensitivity
+    // measurement) — defaults reproduce the standard grid
     val corpora = sys.env.getOrElse("SPARK_GRAFT_RECALL_CORPORA", "clustered,uniform")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val families = sys.env.getOrElse("SPARK_GRAFT_RECALL_FAMILIES", "ivf,ivfpq,lsh")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val metrics = sys.env.getOrElse("SPARK_GRAFT_RECALL_METRICS", "dot")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     // PQ (m, k) grid as "m:k" pairs — trim for focused scale runs
     val pqConfigs = sys.env.getOrElse("SPARK_GRAFT_RECALL_PQCONFIGS", "8:16,8:64,16:64")
       .split(",").map(_.trim).filter(_.nonEmpty)
@@ -167,16 +165,15 @@ object ProfileRecall {
         val shortlists =
           if (m == 16) Seq(10, 50, 200)
           else Seq(10, 50, 200) ++ popShort
-        for (metric <- metrics; nprobe <- nprobes; shortlist <- shortlists) {
+        for (nprobe <- nprobes; shortlist <- shortlists) {
           val t0 = System.nanoTime()
           val r = recallOf(q =>
             Similarity.ivfPqTopK(spark, pqIdx, "vec_id", queryVec(q),
               m = m, topK = topK, nprobe = nprobe, shortlist = shortlist,
-              rerank = emb, rerankVecCol = "embedding", excludeId = Some(q),
-              metric = metric)
+              rerank = emb, rerankVecCol = "embedding", excludeId = Some(q))
               .collect().map(_.getLong(0)).toSet)
           val sec = (System.nanoTime() - t0) / 1e9 / nQueries
-          emit(f"""{"corpus":"$corpusName","n":$n,"family":"ivfpq","metric":"$metric","nlist":$nlist,"m":$m,"k":$kCodes,"nprobe":$nprobe,"shortlist":$shortlist,"recall_at_10":$r%.4f,"sec_per_query":$sec%.3f}""")
+          emit(f"""{"corpus":"$corpusName","n":$n,"family":"ivfpq","metric":"dot","nlist":$nlist,"m":$m,"k":$kCodes,"nprobe":$nprobe,"shortlist":$shortlist,"recall_at_10":$r%.4f,"sec_per_query":$sec%.3f}""")
         }
       }
 

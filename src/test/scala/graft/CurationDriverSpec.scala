@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.CacheProbe
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -125,6 +126,34 @@ class CurationDriverSpec extends AnyFunSuite with SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(fullSurvivors == Set(1L, 3L, 12L))
     assert(incSurvivors == fullSurvivors -- Set(1L, 3L))
+  }
+
+  test("incremental mode: the novelty filter's caches are released after the dedup stage") {
+    val rootDay1 = Files.createTempDirectory("curcache1").toString
+    val day1 = Seq((1L, DocA), (2L, DocA), (3L, DocB)).toDF("doc_id", "text")
+    CurationDriver.run(spark, day1, benchDf, CurationDriver.Config(root = rootDay1))
+    val day2 = Seq((10L, DocANear), (11L, DocB), (12L, DocA + " again")).toDF("doc_id", "text")
+    def entriesAddedBy(run: => CurationDriver.RunResult): Int = {
+      val before = CacheProbe.entries(spark)
+      val r = run
+      assert(r.records.map(_.job_status).forall(_ == "SUCCESS"), r.records)
+      CacheProbe.entries(spark) - before
+    }
+    // control: the same batch curated from scratch — every cache the
+    // dedup stage's own self-dedup leaves behind, without the novelty
+    // filter
+    val fromScratch = entriesAddedBy(CurationDriver.run(
+      spark, day2, benchDf,
+      CurationDriver.Config(root = Files.createTempDirectory("curcache2").toString)))
+    // the incremental run adds the corpus and batch shingle tables and
+    // the candidate pairs; none of them may outlive the stage
+    val incremental = entriesAddedBy(CurationDriver.run(
+      spark, day2, benchDf,
+      CurationDriver.Config(
+        root = Files.createTempDirectory("curcache3").toString,
+        existingCorpusPath = Some(s"$rootDay1/stage_dedup"))))
+    assert(incremental == fromScratch,
+      s"incremental run left ${incremental - fromScratch} novelty-filter caches behind")
   }
 
   test("mix stage: composed policy reasons land in stage_mix, pack admits only kept") {

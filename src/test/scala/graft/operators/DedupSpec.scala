@@ -454,11 +454,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         (id, Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
       }.toDF("id", "text")
       for (t <- Seq(0.3, 0.5, 0.8)) {
-        val brute = Dedup.ngramJaccardPairs(corpus, "id", "text", 3, t,
-          persistIntermediate = false)
+        val brute = Dedup.ngramJaccardPairs(corpus, "id", "text", 3, t)
           .as[(Long, Long, Double)].collect().toSet
-        val fast = Dedup.prefixFilterJaccardPairs(corpus, "id", "text", 3, t,
-          persistIntermediate = false)
+        val fast = Dedup.prefixFilterJaccardPairs(corpus, "id", "text", 3, t)
           .as[(Long, Long, Double)].collect().toSet
         assert(fast == brute, s"trial=$trial t=$t")
       }
@@ -473,10 +471,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val corpus = ((1L to 7L).map(id => (id, famText)) ++
       Seq((8L, "solo a b c d e f g"), (9L, "other h i j k l m n"))).toDF("id", "text")
     val capped = Dedup.ngramJaccardPairsCapped(corpus, "id", "text", 3, 0.8,
-      maxDocsPerShingle = 5, persistIntermediate = false).count()
+      maxDocsPerShingle = 5).count()
     assert(capped == 0L)
-    val fast = Dedup.prefixFilterJaccardPairs(corpus, "id", "text", 3, 0.8,
-      persistIntermediate = false)
+    val fast = Dedup.prefixFilterJaccardPairs(corpus, "id", "text", 3, 0.8)
       .as[(Long, Long, Double)].collect().toSet
     val want = (for (x <- 1L to 7L; y <- (x + 1) to 7L) yield (x, y, 1.0)).toSet
     assert(fast == want)

@@ -645,30 +645,19 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     val clusterCodes = post.where(col("vec_id") % 2 === 0 && col("vec_id") =!= 0L)
       .select(col("codes").cast("string")).distinct().count()
     assert(clusterCodes == 1L, "fixture drifted: cluster-0 codes no longer tie")
-    // pinned to the L2 face: the dot face divides by the exact norm and
-    // unties the class on its own — this fixture guards the RANK-cut
-    // fix specifically
+    // the quantized-cosine score is a pure function of the codes (dot
+    // over the reconstruction norm, both cell-constant), so the whole
+    // cluster ties at one adc and only the RANK cut surfaces it whole
     val got = Similarity.ivfPqTopK(
       spark, idx, "vec_id", tiny.where(col("vec_id") === 0L).select("embedding"),
       m = 4, topK = 5, nprobe = 1, shortlist = 5,
-      rerank = tiny, rerankVecCol = "embedding", excludeId = Some(0L),
-      metric = "l2")
+      rerank = tiny, rerankVecCol = "embedding", excludeId = Some(0L))
       .collect().map(_.getLong(0)).toSeq
     val brute = Similarity.cosineTopK(tiny, "vec_id", "embedding", queryId = 0L, k = 5)
       .collect().map(_.getLong(0)).toSeq
     assert(got == brute, "tie-inclusive shortlist must recover brute force here")
     assert(got == Seq(198L, 196L, 194L, 192L, 190L),
       "expected the smallest-noise (largest even) ids — a row-count cut would return 2,4,6,8,10")
-    // the DOT face ties exactly the same way — its score is a pure
-    // function of the codes (dot over reconstruction norm, both
-    // cell-constant) — so the rank cut must surface the class whole
-    // here too and the re-rank recovers brute force
-    val gotDot = Similarity.ivfPqTopK(
-      spark, idx, "vec_id", tiny.where(col("vec_id") === 0L).select("embedding"),
-      m = 4, topK = 5, nprobe = 1, shortlist = 5,
-      rerank = tiny, rerankVecCol = "embedding", excludeId = Some(0L))
-      .collect().map(_.getLong(0)).toSeq
-    assert(gotDot == brute, "dot-face ADC must recover brute force on the code-tied cluster")
   }
 
   test("ivfPqShortlistFor: population-scaled sizing; 1x-population probe equals brute force") {
