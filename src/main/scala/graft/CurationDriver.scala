@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -97,6 +99,10 @@ object CurationDriver {
       mixMaxFresh: Long = 4L
   )
 
+  /** `stageCounts`: rows each stage table received in THIS run, observed
+    * on the write itself (no read-back); −1 for a stage that did not
+    * write (failed or suspended).
+    */
   final case class RunResult(
       records: Seq[JobRunRecord],
       stageCounts: Seq[(String, Long)],
@@ -122,9 +128,13 @@ object CurationDriver {
     val id = col(c.idCol)
     val text = col(c.textCol)
 
-    def write(df: DataFrame, stage: String): DataFrame = {
-      df.write.mode("overwrite").parquet(stagePath(c, stage))
-      spark.read.parquet(stagePath(c, stage))
+    // row counts ride the writes' own jobs; decontaminate ∥ mix write concurrently
+    val written = TrieMap.empty[String, Long]
+    def write(df: DataFrame, stage: String): Unit = {
+      val rows = Observation()
+      df.observe(rows, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(stagePath(c, stage))
+      written(stage) = rows.get("rows").asInstanceOf[Long]
     }
     def read(stage: String) = spark.read.parquet(stagePath(c, stage))
 
@@ -262,11 +272,8 @@ object CurationDriver {
       registry,
       record = recs => MetaStore.append(spark, recs, metaPath))
 
-    val counts = (if (links.isDefined) StagesWithMix else Stages).map { st =>
-      val p = new org.apache.hadoop.fs.Path(stagePath(c, st))
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      st -> (if (fs.exists(p)) read(st).count() else -1L)
-    }
+    val counts = (if (links.isDefined) StagesWithMix else Stages)
+      .map(st => st -> written.getOrElse(st, -1L))
     RunResult(records, counts, stagePath(c, "packed"))
   }
 }

@@ -11,8 +11,9 @@ import graft.sources.Lake
   *
   *   1. infra bootstrap — local dirs + session catalog stand in for the
   *      bucket / Glue database / crawler (O9, `infra_utils.py:15-128`);
-  *   2. job registry — named in-JVM `SparkSession => DataFrame` functions
-  *      instead of one Glue application per script;
+  *   2. job registry — named in-JVM `SparkSession => Unit` procedures,
+  *      each ending in its lake write, instead of one Glue application
+  *      per script;
   *   3. dependency layering from the dependency CSV (O1);
   *   4. layered execution, each layer in ≤`maxBatchSize` parallel batches
   *      (O2/O3), metadata appended per batch (O6);
@@ -58,7 +59,6 @@ object LakeDriver {
       case None => df
     }
     Lake.writeToDatalake(spark, filtered, root, tablePath, database)
-    spark.read.parquet(Lake.lakePath(root, tablePath))
   }
 
   def run(spark: SparkSession, config: Config, registry: Map[String, Job]): RunResult = {
@@ -129,7 +129,10 @@ object LakeDriver {
       }
     val counts = Recon.countReport(
       spark,
-      tables.map { case (n, d) => n -> (spark.read.parquet(d), spark.read.parquet(d)) }.toMap
+      tables.map { case (n, d) =>
+        val df = spark.read.parquet(d) // one schema inference serves both sides
+        n -> (df, df)
+      }.toMap
     )
     val sizes = Recon.sizeReport(spark, tables.toMap.view.mapValues(identity).toMap)
     val metaPath = s"${config.root}/${config.metaSubdir}"

@@ -42,23 +42,6 @@ object Text {
   def distinctTokenCount(text: Column): Column =
     size(array_distinct(tokens(text))).cast("long")
 
-  /** BPE-ish subword count: whitespace tokens further split at
-    * alnum/non-alnum boundaries (splitting whitespace and boundaries in a
-    * single regex would let zero-width matches leak whitespace tokens).
-    */
-  def subwordCount(text: Column): Column =
-    size(
-      filter(
-        flatten(
-          transform(
-            tokens(text),
-            t => split(t, "(?<=[a-zA-Z0-9])(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])(?=[a-zA-Z0-9])")
-          )
-        ),
-        t => length(t) > 0
-      )
-    ).cast("long")
-
   val DefaultStopwords: Seq[String] = Seq("the", "a", "and", "of", "to")
 
   def stopwordCount(text: Column, stops: Seq[String] = DefaultStopwords): Column =

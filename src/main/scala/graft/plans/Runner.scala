@@ -11,10 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Job runners + operational metadata, re-expressing the reference's
   * orchestration (`utils.py:340-498`) in-JVM: a "job" is a named
-  * `SparkSession => DataFrame` (counted to force execution) instead of a
-  * remote Glue run, the 0.5 s state-polling loop collapses into `Future`
-  * completion, and the metastore append keeps the exact reference schema
-  * and status vocabulary (SUCCESS / FAILURE / SUSPENDED).
+  * `SparkSession => Unit` procedure that runs its own action (a lake
+  * write) instead of a remote Glue run, the 0.5 s state-polling loop
+  * collapses into `Future` completion, and the metastore append keeps the
+  * exact reference schema and status vocabulary (SUCCESS / FAILURE /
+  * SUSPENDED). Like the reference, a run records whether each job
+  * succeeded, not what it wrote.
   */
 object Runner {
 
@@ -32,7 +34,12 @@ object Runner {
   val Failure_ = "FAILURE"
   val Suspended = "SUSPENDED"
 
-  type Job = SparkSession => DataFrame
+  /** A job runs its own action (every production job ends in a write);
+    * any exception, at plan or execution time, is FAILURE.
+    */
+  type Job = SparkSession => Unit
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def now(): Timestamp = new Timestamp(System.currentTimeMillis())
 
@@ -44,11 +51,11 @@ object Runner {
 
   private def runOne(spark: SparkSession, name: String, job: Job, args: String): JobRunRecord = {
     val start = now()
-    val status = Try {
-      job(spark).count() // force execution; result row count is the job's observable effect
-    } match {
+    val status = Try(job(spark)) match {
       case Success(_) => Success_
-      case Failure(_) => Failure_
+      case Failure(e) =>
+        log.warn(s"graft.Runner: job '$name' failed", e)
+        Failure_
     }
     val end = now()
     JobRunRecord(name, args, status, start, end, durationSecs(start, end))
@@ -136,16 +143,14 @@ object Runner {
     * would report SUCCESS on wrong data). This is the layered analogue of
     * the serial runner's cascade and the reference's stop-on-failure
     * driver loop; within the failing layer, already-launched parallel
-    * siblings still complete and are recorded individually. Set
-    * `suspendAfterFailure = false` to restore run-everything behavior.
+    * siblings still complete and are recorded individually.
     */
   def runLayers(
       spark: SparkSession,
       layers: Map[Int, Seq[String]],
       registry: Map[String, Job],
       maxBatchSize: Int = 25,
-      record: Seq[JobRunRecord] => Unit = _ => (),
-      suspendAfterFailure: Boolean = true
+      record: Seq[JobRunRecord] => Unit = _ => ()
   ): Seq[JobRunRecord] = {
     val all = Seq.newBuilder[JobRunRecord]
     var failed = false
@@ -153,7 +158,7 @@ object Runner {
       Dag.batches(layers(layer), maxBatchSize).foreach { batch =>
         val jobs = batch.flatMap(n => registry.get(n).map(n -> _))
         val recs =
-          if (failed && suspendAfterFailure) {
+          if (failed) {
             val t = now()
             jobs.map { case (name, _) => JobRunRecord(name, "", Suspended, t, t, 0) }
           } else runParallel(spark, jobs, maxParallel = maxBatchSize)

@@ -208,6 +208,18 @@ class CurationDriverSpec extends AnyFunSuite with SparkSpec {
     assert(res.stageCounts.toMap.apply("mix") == docs.count())
   }
 
+  test("a quality gate that drops every document: all stages SUCCESS, empty stages count 0") {
+    val root = Files.createTempDirectory("curationempty").toString
+    // three distinct, uncontaminated documents, all shorter than minTokens
+    val docs = Seq((1L, DocA), (2L, DocB), (3L, WithPii)).toDF("doc_id", "text")
+    val res = CurationDriver.run(
+      spark, docs, benchDf, CurationDriver.Config(root = root, minTokens = 100))
+    assert(res.records.map(_.job_status).forall(_ == "SUCCESS"), res.records)
+    assert(res.stageCounts == Seq(
+      "raw" -> 3L, "dedup" -> 3L, "clean" -> 3L, "quality" -> 0L, "packed" -> 0L))
+    assert(spark.read.parquet(res.finalPath).count() == 0L)
+  }
+
   test("a failed validation gate suspends every downstream stage") {
     val root = Files.createTempDirectory("curationfail").toString
     val bad = Seq((1L, DocA), (2L, null.asInstanceOf[String])).toDF("doc_id", "text")

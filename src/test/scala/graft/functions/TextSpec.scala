@@ -16,12 +16,6 @@ class TextSpec extends AnyFunSuite with SparkSpec {
     assert(df.select(Text.distinctTokenCount(col("text"))).head().getLong(0) == 4)
   }
 
-  test("subword count splits on alnum/non-alnum boundaries (BPE-ish)") {
-    val n = one("don't stop-me now123").select(Text.subwordCount(col("text"))).head().getLong(0)
-    // don | ' | t | stop | - | me | now123  → 7
-    assert(n == 7)
-  }
-
   test("stopword stats and langid heuristic") {
     val en = one("the cat and the dog of the house")
     assert(en.select(Text.stopwordCount(col("text"))).head().getLong(0) == 5)

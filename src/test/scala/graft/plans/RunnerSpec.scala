@@ -11,9 +11,12 @@ import graft.plans.Runner.Job
 class RunnerSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private val ok: Job = s => { import s.implicits._; Seq(1, 2).toDF("x") }
+  private val ok: Job = s => { import s.implicits._; Seq(1, 2).toDF("x").collect() }
   private val boom: Job = _ => throw new RuntimeException("boom")
-  private val okLazyFail: Job = s => { import s.implicits._; Seq(1).toDF("x").select(raise_error(lit("late"))) }
+  // plans fine, fails only once the job's own action executes it
+  private val okLazyFail: Job = s => {
+    import s.implicits._; Seq(1).toDF("x").select(raise_error(lit("late"))).collect()
+  }
 
   test("serial runner: cascade-suspend downstream with zero duration (O4, utils.py:379-381)") {
     val recs = Runner.runSerial(spark, Seq("a" -> ok, "b" -> boom, "c" -> ok, "d" -> ok))
@@ -90,10 +93,5 @@ class RunnerSpec extends AnyFunSuite with SparkSpec {
     val recs = Runner.runLayers(spark, Map(0 -> Seq("p"), 1 -> Seq("c")), registry)
     assert(recs.map(r => r.job_name -> r.job_status).toMap ==
       Map("p" -> "FAILURE", "c" -> "SUSPENDED"))
-    // opt-out restores run-everything
-    val loose = Runner.runLayers(spark, Map(0 -> Seq("p"), 1 -> Seq("c")), registry,
-      suspendAfterFailure = false)
-    assert(loose.map(r => r.job_name -> r.job_status).toMap ==
-      Map("p" -> "FAILURE", "c" -> "SUCCESS"))
   }
 }
