@@ -62,7 +62,7 @@ object CurationDriver {
       /** INCREMENTAL mode: path to an already-curated corpus (e.g. a
         * previous run's `stage_dedup`). When set, the dedup stage
         * self-dedups only the NEW batch and then novelty-filters it
-        * against this corpus ([[graft.operators.Dedup.noveltyFilterManaged]]:
+        * against this corpus ([[graft.operators.Dedup.noveltyFilter]]:
         * exact-digest guard + banded incremental near-dup — the corpus
         * never self-joins), so a daily run pays batch-scale shuffles
         * plus corpus SCANS instead of re-deduping the whole lake.
@@ -155,17 +155,16 @@ object CurationDriver {
         val exact = Dedup.exactDedup(raw, c.idCol, c.textCol)
         val pairs = Dedup.minhashLshPairsMd5(exact, c.idCol, c.textCol, c.n, c.threshold)
         val inner = Dedup.dedupByPairs(exact, c.idCol, pairs)
-        val (survivors, release) = c.existingCorpusPath match {
-          case None => (inner, () => ())
+        val survivors = c.existingCorpusPath match {
+          case None => inner
           case Some(p) =>
             // incremental: only the new batch self-joins; the existing
             // corpus streams past it (digest guard + banded near-dup)
-            Dedup.noveltyFilterManaged(
+            Dedup.noveltyFilter(
               spark.read.parquet(p).select(id, text), inner,
               c.idCol, c.textCol, c.n, c.threshold)
         }
-        try write(survivors, "dedup")
-        finally release()
+        write(survivors, "dedup")
       },
       "decontaminate" -> { _ =>
         val deduped = read("dedup")

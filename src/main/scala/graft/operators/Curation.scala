@@ -188,8 +188,8 @@ object Curation {
           m.keySet.iterator.asScala.map(t => (t, 0L))
       }
       .toDF("tok", "np")
-    val collected = sketch.persist()
-    try {
+    Checkpoints.scoped {
+      val collected = Checkpoints.cache(sketch)
       val n = collected.where(col("tok") === "").agg(sum(col("np"))).head().getLong(0)
       val candidates = collected.where(col("tok") =!= "").select("tok").distinct()
       // Pass 2: exact recount of candidates only. The broadcast semi-join
@@ -212,8 +212,6 @@ object Curation {
         (r.getString(0), r.getLong(1), i + 1L)
       }
       spark.createDataFrame(rows.toSeq).toDF("tok", "n", "rank")
-    } finally {
-      collected.unpersist()
     }
   }
 
@@ -293,8 +291,9 @@ object Curation {
     * inherently sequential: one k-row-bounded `limit(1).collect()` per
     * round (the same bounded-driver-traffic discipline as
     * [[Similarity.kmeansTrain]]'s centroid loop), with the word table
-    * localCheckpoint-truncated every round like
-    * [[Dedup.connectedComponents]].
+    * localCheckpoint-truncated every round and each superseded round
+    * released like [[Dedup.connectedComponents]]; the last round is
+    * released before the merges return.
     */
   def bpeTrain(
       docs: DataFrame,
@@ -304,12 +303,12 @@ object Curation {
   ): Seq[BpeMerge] = {
     require(numMerges >= 1, "bpeTrain: need numMerges >= 1")
     require(minCount >= 1, "bpeTrain: need minCount >= 1")
-    var words = docs
+    import Checkpoints.{checkpoint, release}
+    var words = checkpoint(docs
       .select(explode(graft.functions.Text.tokens(col(textCol))).as("tok"))
       .groupBy("tok")
       .agg(count(lit(1)).as("wc"))
-      .select(col("wc"), charSyms(col("tok")).as("syms"))
-      .localCheckpoint()
+      .select(col("wc"), charSyms(col("tok")).as("syms")))
     val out = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
     var done = false
     for (rank <- 1 to numMerges if !done) {
@@ -325,9 +324,12 @@ object Curation {
         val (l, r, n) =
           (top(0).getAs[String]("l"), top(0).getAs[String]("r"), top(0).getAs[Long]("n"))
         out += BpeMerge(rank, l, r, n)
-        words = words.withColumn("syms", mergeOnce(col("syms"), l, r)).localCheckpoint()
+        val next = checkpoint(words.withColumn("syms", mergeOnce(col("syms"), l, r)))
+        release(words)
+        words = next
       }
     }
+    release(words)
     out.toSeq
   }
 
@@ -361,7 +363,7 @@ object Curation {
       .select(col("tok"), charSyms(col("tok")).as("syms"))
     merges.zipWithIndex.foreach { case ((l, r), i) =>
       vocab = vocab.withColumn("syms", mergeOnce(col("syms"), l, r))
-      if ((i + 1) % 8 == 0) vocab = vocab.localCheckpoint()
+      if ((i + 1) % 8 == 0) vocab = Checkpoints.checkpoint(vocab)
     }
     toks
       .join(vocab, "tok")

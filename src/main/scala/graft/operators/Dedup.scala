@@ -53,7 +53,7 @@ object Dedup {
       n: Int,
       threshold: Double
   ): DataFrame = {
-    val sh = shingleTable(fanOut(docs), idCol, textCol, n).cache()
+    val sh = Checkpoints.cache(shingleTable(fanOut(docs), idCol, textCol, n))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val a = sh.as("a")
     val b = sh.as("b")
@@ -103,10 +103,9 @@ object Dedup {
       n: Int
   ): DataFrame = {
     import graft.functions.TextExpressions.word_shingles
-    fanOut(docs)
+    Checkpoints.cache(fanOut(docs)
       .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
-      .where(size(col("shs")) > 0)
-      .cache()
+      .where(size(col("shs")) > 0))
   }
 
   /** Frequency-capped shared-shingle candidate pairs over a
@@ -278,14 +277,13 @@ object Dedup {
     val toks = fanOut(docs)
       .select(col(idCol).as("doc_id"), Text.tokens(col(textCol)).as("_w"))
       .where(size(col("_w")) >= gramLen)
-    val grams = toks
+    val grams = Checkpoints.cache(toks
       .select(
         col("doc_id"),
         posexplode(expr(
           s"transform(sequence(1, size(_w) - ${gramLen - 1}), " +
             s"i -> md5(array_join(slice(_w, i, $gramLen), ' ')))")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("_g"))
-      .cache()
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("_g")))
     val dup = grams
       .select("_g", "doc_id").distinct()
       .groupBy("_g").agg(count(lit(1)).as("_nd"))
@@ -521,10 +519,9 @@ object Dedup {
   ): DataFrame = {
     import graft.functions.TextExpressions.word_shingles
     val numHashes = bands * rowsPerBand
-    val base = fanOut(docs)
+    val base = Checkpoints.cache(fanOut(docs)
       .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
-      .where(size(col("shs")) > 0)
-      .cache()
+      .where(size(col("shs")) > 0))
 
     val banded = bandedMd5(base, bands, rowsPerBand)
     val l = banded.as("l")
@@ -591,8 +588,9 @@ object Dedup {
     * BOTH shingle tables are cached: the batch side's cache is reused
     * by the measuring count, the banding, and the rescore; the corpus
     * side's cache trades a second scan for corpus-scale spillable
-    * storage. Long-lived callers (the streaming-ingest loop) use
-    * [[incrementalNearDupMd5Managed]] and release them per batch.
+    * storage. Like every pin, they live until the caller's release
+    * scope closes ([[Checkpoints.scoped]]: a runner job, or the
+    * streaming-ingest loop's per-batch scope).
     */
   def incrementalNearDupMd5(
       corpus: DataFrame,
@@ -604,35 +602,12 @@ object Dedup {
       bands: Int = 8,
       rowsPerBand: Int = 2,
       maxBroadcastBandedRows: Long = 2000000L
-  ): DataFrame =
-    incrementalNearDupMd5Managed(
-      corpus, batch, idCol, textCol, n, threshold, bands, rowsPerBand,
-      maxBroadcastBandedRows)._1
-
-  /** [[incrementalNearDupMd5]] with an explicit cache-release handle:
-    * returns `(pairs, release)` where `release()` unpersists the two
-    * internal shingle-table caches. Long-lived callers (the streaming
-    * ingest loop) call it after materializing the result, so each
-    * micro-batch gets the cached-reuse plan WITHOUT accumulating
-    * corpus-scale blocks in executor storage forever.
-    */
-  def incrementalNearDupMd5Managed(
-      corpus: DataFrame,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      threshold: Double,
-      bands: Int = 8,
-      rowsPerBand: Int = 2,
-      maxBroadcastBandedRows: Long = 2000000L
-  ): (DataFrame, () => Unit) = {
+  ): DataFrame = {
     import graft.functions.TextExpressions.word_shingles
     require(maxBroadcastBandedRows >= 0, s"bad maxBroadcastBandedRows $maxBroadcastBandedRows")
-    def baseOf(df: DataFrame) = fanOut(df)
+    def baseOf(df: DataFrame) = Checkpoints.cache(fanOut(df)
       .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
-      .where(size(col("shs")) > 0)
-      .cache()
+      .where(size(col("shs")) > 0))
     val corpusBase = baseOf(corpus)
     val batchBase = baseOf(batch)
     // measure before hinting: an oversized "batch" must not reach the
@@ -671,31 +646,26 @@ object Dedup {
     // corpus ∪ batch per ingest batch rather than once. Either bound
     // tripping degrades to the measured shuffle rescore over the
     // union, which is always safe.
-    val (rescored, releaseCand): (DataFrame, () => Unit) =
-      if (bandedRows <= maxBroadcastBandedRows) {
-        val cand = candidates.persist()
-        val candRows = cand.count()
-        if (candRows * 96L <= MaxBroadcastSetBytes &&
-            estimatedSetBytes(batchBase) <= MaxBroadcastBatchSetBytes &&
-            estimatedSetBytes(corpusBase) <= MaxStreamedCorpusSetBytes)
-          (rescoreExactJaccardSetsBroadcastBatch(cand, corpusBase, batchBase, threshold),
-            () => cand.unpersist(): Unit)
-        else {
-          org.slf4j.LoggerFactory
-            .getLogger(getClass)
-            .warn(
-              s"incrementalNearDupMd5: broadcast-scale batch but $candRows candidate " +
-                "pairs / batch set bytes exceed the broadcast bound — taking the " +
-                "measured shuffle rescore over the union instead")
-          (rescoreExactJaccardSets(
-            cand, corpusBase.union(batchBase).select(col("doc_id"), col("shs")), threshold),
-            () => cand.unpersist(): Unit)
-        }
-      } else
-        (rescoreExactJaccardSets(
-          candidates, corpusBase.union(batchBase).select(col("doc_id"), col("shs")), threshold),
-          () => ())
-    (rescored, () => { corpusBase.unpersist(); batchBase.unpersist(); releaseCand() })
+    if (bandedRows <= maxBroadcastBandedRows) {
+      val cand = Checkpoints.cache(candidates)
+      val candRows = cand.count()
+      if (candRows * 96L <= MaxBroadcastSetBytes &&
+          estimatedSetBytes(batchBase) <= MaxBroadcastBatchSetBytes &&
+          estimatedSetBytes(corpusBase) <= MaxStreamedCorpusSetBytes)
+        rescoreExactJaccardSetsBroadcastBatch(cand, corpusBase, batchBase, threshold)
+      else {
+        org.slf4j.LoggerFactory
+          .getLogger(getClass)
+          .warn(
+            s"incrementalNearDupMd5: broadcast-scale batch but $candRows candidate " +
+              "pairs / batch set bytes exceed the broadcast bound — taking the " +
+              "measured shuffle rescore over the union instead")
+        rescoreExactJaccardSets(
+          cand, corpusBase.union(batchBase).select(col("doc_id"), col("shs")), threshold)
+      }
+    } else
+      rescoreExactJaccardSets(
+        candidates, corpusBase.union(batchBase).select(col("doc_id"), col("shs")), threshold)
   }
 
   /** NOVELTY filter: the batch docs that are neither exact nor near
@@ -717,11 +687,10 @@ object Dedup {
     * the anti-join broadcasts) plus the banding/rescore scans of
     * [[incrementalNearDupMd5]]; everything else is batch-scale.
     *
-    * Returns `(survivors, release)`: call `release()` after
-    * materializing the survivors to unpersist the internal caches (see
-    * [[incrementalNearDupMd5Managed]]).
+    * The internal caches live until the caller's release scope closes
+    * (see [[incrementalNearDupMd5]]).
     */
-  def noveltyFilterManaged(
+  def noveltyFilter(
       corpus: DataFrame,
       batch: DataFrame,
       idCol: String,
@@ -730,7 +699,7 @@ object Dedup {
       threshold: Double,
       bands: Int = 8,
       rowsPerBand: Int = 2
-  ): (DataFrame, () => Unit) = {
+  ): DataFrame = {
     val batchDigests = batch.select(md5(col(textCol)).as("__h")).distinct()
     val dupDigests = corpus
       .select(md5(col(textCol)).as("__h"))
@@ -740,10 +709,10 @@ object Dedup {
       .withColumn("__h", md5(col(textCol)))
       .join(dupDigests, Seq("__h"), "left_anti")
       .drop("__h")
-    val (pairs, release) = incrementalNearDupMd5Managed(
+    val pairs = incrementalNearDupMd5(
       corpus, fresh, idCol, textCol, n, threshold, bands, rowsPerBand)
     val nearIds = pairs.select(col("doc_b").as(idCol)).distinct()
-    (fresh.join(nearIds, Seq(idCol), "left_anti"), release)
+    fresh.join(nearIds, Seq(idCol), "left_anti")
   }
 
   /** md5-derived 60-bit SimHash — the oracle-replicable variant of
@@ -791,7 +760,7 @@ object Dedup {
 
     // one row per doc: shingle set + minhash signature, computed in a
     // single scan with no shuffle
-    val base = fanOut(docs)
+    val base = Checkpoints.cache(fanOut(docs)
       .select(col(idCol).as("doc_id"), word_shingles(col(textCol), n).as("shs"))
       .where(size(col("shs")) > 0)
       .select(
@@ -799,8 +768,7 @@ object Dedup {
         col("shs"),
         size(col("shs")).as("n_sh"),
         minhash_signature(col("shs"), numHashes).as("sig")
-      )
-      .cache()
+      ))
 
     // band id + band hash, one row per (doc, band)
     val bandCols = (0 until bands).map { b =>
@@ -898,15 +866,16 @@ object Dedup {
   ): DataFrame = {
     // checkpoint lifecycle: see [[Checkpoints]] — every superseded
     // round's persisted copy is released, the live round's stays
-    import Checkpoints.{tracked => checkpointTracked, release}
+    import Checkpoints.{checkpoint, release}
 
-    val (sym, symRdds) = checkpointTracked(
+    val sym = checkpoint(
       pairs
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .distinct())
-    var (labels, prevRdds) = checkpointTracked(
+    var prev = checkpoint(
       sym.select(col("src").as("node")).distinct().withColumn("label", col("node")))
+    var labels = prev
     // label tables are vertex-scale: broadcast them under the measured
     // bound (the Graph.pageRankExact discipline — checkpointed frames
     // have no size stats, so AQE sort-merges the pair-scale sym side
@@ -921,20 +890,20 @@ object Dedup {
         .join(maybeBroadcast(labels.select(col("node").as("dst"), col("label"))), "dst")
         .groupBy(col("src").as("node"))
         .agg(min("label").as("nbr_min"))
-      val (updated, newRdds) = checkpointTracked( // eager: materialized before release
+      val updated = checkpoint( // eager: materialized before release
         labels
           .join(maybeBroadcast(nbrMin), Seq("node"), "left")
           .select(
             col("node"),
             least(col("label"), coalesce(col("nbr_min"), col("label"))).as("new_label"),
             col("label")))
-      release(prevRdds)
-      prevRdds = newRdds
+      release(prev)
+      prev = updated
       changed = updated.where(col("new_label") =!= col("label")).count()
       labels = updated.select(col("node"), col("new_label").as("label"))
       i += 1
     }
-    release(symRdds)
+    release(sym)
     if (changed > 0)
       // surface non-convergence rather than silently returning split
       // components (downstream dedupByPairs would keep extra "survivors")

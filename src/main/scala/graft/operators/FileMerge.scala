@@ -154,12 +154,10 @@ object FileMerge {
     // could write a key into the output while its old row survives in an
     // untouched file, breaking the one-file-per-key invariant. (Delta
     // materializes nondeterministic MERGE sources for the same reason.)
-    val batch = Incremental
-      .dedupByKey(source, pk)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoints.scoped {
+      val batch = Checkpoints.cache(Incremental.dedupByKey(source, pk))
       mergePinned(spark, batch, lakePath, pk, initialFiles, fs, live)
-    } finally batch.unpersist(blocking = false)
+    }
   }
 
   private def mergePinned(

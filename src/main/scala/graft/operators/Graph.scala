@@ -241,18 +241,16 @@ object Graph {
   ): DataFrame = {
     require(iterations >= 1,
       s"pageRankExact: iterations must be at least 1, got $iterations")
-    val verts = vertices
+    import Checkpoints.{checkpoint, release}
+    val verts = checkpoint(vertices
       .select(col(vertexCol).as("_v"))
       .where(col("_v").isNotNull)
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // the edge list and degrees are loop-INVARIANT but referenced every
     // iteration — pin them once instead of re-deriving the (for a
     // co-occurrence graph, corpus-self-join-sized) upstream per round
-    val e = edges.select(col("src").as("_src"), col("dst").as("_dst"))
-      .localCheckpoint()
-    val deg = e.groupBy(col("_src").as("_v")).agg(count(lit(1)).as("_deg"))
-      .localCheckpoint()
+    val e = checkpoint(edges.select(col("src").as("_src"), col("dst").as("_dst")))
+    val deg = checkpoint(e.groupBy(col("_src").as("_v")).agg(count(lit(1)).as("_deg")))
     // checkpointed frames lose their size stats, so AQE will NOT pick a
     // broadcast join on its own and every iteration would sort-merge
     // the full edge list against a vertex-scale table — TWICE. The
@@ -304,9 +302,11 @@ object Graph {
     // caveat) — i.e. the work would silently not run. The former
     // per-iteration checkpoints were eager for the same reason; one
     // final checkpoint keeps that contract at a fifth of the
-    // materializations.
-    pr.select(col("_v").as(vertexCol), col("_pr").as("rank_micro"))
-      .localCheckpoint()
+    // materializations. Once it has materialized, nothing reads the
+    // loop invariants any more: release them.
+    val result = checkpoint(pr.select(col("_v").as(vertexCol), col("_pr").as("rank_micro")))
+    release(e); release(deg); release(verts)
+    result
   }
 
   /** PERSONALIZED PageRank (Haveliwala 2002's topic-sensitive variant,
@@ -345,7 +345,7 @@ object Graph {
   ): DataFrame = {
     require(iterations >= 1,
       s"personalizedPageRankExact: iterations must be at least 1, got $iterations")
-    import Checkpoints.{tracked => checkpointTracked, release}
+    import Checkpoints.{checkpoint, release}
     val verts =
       vertices.select(col(vertexCol).as("_v")).where(col("_v").isNotNull).distinct()
     val seedSet = seeds.select(col(seedCol).as("_v")).where(col("_v").isNotNull).distinct()
@@ -353,7 +353,7 @@ object Graph {
     // flagged table subsumes the plain vertex set, so only IT is
     // checkpointed (the former separate verts checkpoint materialized
     // the same distinct twice: one extra job + one extra pinned copy).
-    val (flagged, flagRdds) = checkpointTracked(
+    val flagged = checkpoint(
       verts.join(seedSet.withColumn("_s", lit(1L)), Seq("_v"), "left")
         .select(col("_v"), coalesce(col("_s"), lit(0L)).as("_seed")))
     // one cached-scan job for both loop constants instead of two
@@ -362,10 +362,8 @@ object Graph {
     val nVerts = stats.getLong(0)
     val nSeeds = if (stats.isNullAt(1)) 0L else stats.getLong(1)
     require(nSeeds > 0, "personalizedPageRankExact: no seed vertex is in the vertex universe")
-    val (e, eRdds) = checkpointTracked(
-      edges.select(col("src").as("_src"), col("dst").as("_dst")))
-    val (deg, degRdds) = checkpointTracked(
-      e.groupBy(col("_src").as("_v")).agg(count(lit(1)).as("_deg")))
+    val e = checkpoint(edges.select(col("src").as("_src"), col("dst").as("_dst")))
+    val deg = checkpoint(e.groupBy(col("_src").as("_v")).agg(count(lit(1)).as("_deg")))
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (nVerts <= maxBroadcastVertices) broadcast(df) else df
     var pr = flagged.select(col("_v"), (col("_seed") * 1000000L).as("_pr"))
@@ -394,9 +392,8 @@ object Graph {
     // materialize once (the whole chain), then release every pin this
     // call made — the result checkpoint is the only storage that
     // outlives the call (the [[Checkpoints]] discipline)
-    val (result, _) = checkpointTracked(
-      pr.select(col("_v").as(vertexCol), col("_pr").as("rank_micro")))
-    release(eRdds); release(degRdds); release(flagRdds)
+    val result = checkpoint(pr.select(col("_v").as(vertexCol), col("_pr").as("rank_micro")))
+    release(e); release(deg); release(flagged)
     result
   }
 
@@ -427,22 +424,20 @@ object Graph {
   ): DataFrame = {
     // referenced by the degree count AND both keyed joins — pin once so
     // the upstream edge derivation runs once, not three times
-    val canon = edges
+    val canon = Checkpoints.checkpoint(edges
       .where(col("src").isNotNull && col("dst").isNotNull)
       .select(
         least(col("src"), col("dst")).as("_a"),
         greatest(col("src"), col("dst")).as("_b"))
       .where(col("_a") =!= col("_b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // the degree table is VERTEX-scale — pin it (it feeds two joins)
     // and broadcast it under the measured bound so the edge-scale canon
     // side is never shuffled for the orientation (two sort-merge
     // exchanges of the full edge list otherwise; guide §3.1)
-    val deg = canon.select(col("_a").as("_v"))
+    val deg = Checkpoints.checkpoint(canon.select(col("_a").as("_v"))
       .unionByName(canon.select(col("_b").as("_v")))
-      .groupBy("_v").agg(count(lit(1)).as("_d"))
-      .localCheckpoint()
+      .groupBy("_v").agg(count(lit(1)).as("_d")))
     val degSide =
       if (deg.count() <= maxBroadcastVertices) broadcast(deg) else deg
     // orient low (deg, id) -> high (deg, id); ties broken by id, so the
@@ -453,12 +448,11 @@ object Graph {
       .withColumn("_fwd", struct(col("_da"), col("_a")) < struct(col("_db"), col("_b")))
     // the oriented list feeds both wedge sides and the closing-edge
     // probe — pin it so orientation runs once
-    val o = keyed.select(
+    val o = Checkpoints.checkpoint(keyed.select(
       when(col("_fwd"), col("_a")).otherwise(col("_b")).as("_u"),
       when(col("_fwd"), col("_b")).otherwise(col("_a")).as("_w"),
       when(col("_fwd"), struct(col("_db").as("d"), col("_b").as("v")))
-        .otherwise(struct(col("_da").as("d"), col("_a").as("v"))).as("_kw"))
-      .localCheckpoint()
+        .otherwise(struct(col("_da").as("d"), col("_a").as("v"))).as("_kw")))
     val e1 = o.select(col("_u"), col("_w").as("_w1"), col("_kw").as("_k1"))
     val e2 = o.select(col("_u"), col("_w").as("_w2"), col("_kw").as("_k2"))
     val wedges = e1.join(e2, Seq("_u")).where(col("_k1") < col("_k2"))
@@ -595,7 +589,7 @@ object Graph {
     *
     * Checkpoint lifecycle: every intermediate this call pins — the
     * deduped EDGE LIST (data-scale!) and each step's frontier — is
-    * tracked via [[Checkpoints.tracked]] and released once the final
+    * tracked via [[Checkpoints.checkpoint]] and released once the final
     * union is materialized into its own checkpoint, so repeated
     * invocations (an ensemble's γ walks, a hash-family twin run) retain
     * exactly one result-scale RDD each instead of edges + walkLen
@@ -610,8 +604,7 @@ object Graph {
       maxBroadcastVertices: Long,
       edgesDistinct: Boolean = false
   ): DataFrame = {
-    import Checkpoints.{tracked => checkpointTracked, release}
-    val handles = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    import Checkpoints.{checkpoint, release}
     // the walk result is invariant to duplicate (src, dst) rows — the
     // per-step hash-argmin takes the min over candidates, and a
     // duplicated candidate contributes an identical struct — but each
@@ -622,11 +615,8 @@ object Graph {
     // edge-scale exchange per query, 239M rows at sf10).
     val eBase = edges.select(col("src").as("_cur"), col("dst").as("_nxt"))
       .where(col("_cur").isNotNull && col("_nxt").isNotNull)
-    val (e, eH) = checkpointTracked(
-      if (edgesDistinct) eBase else eBase.distinct())
-    handles ++= eH
-    val (frontierInit, fH) = checkpointTracked(frontier0)
-    handles ++= fH
+    val e = checkpoint(if (edgesDistinct) eBase else eBase.distinct())
+    val frontierInit = checkpoint(frontier0)
     var frontier = frontierInit
     val nFrontier = frontier.count()
     def maybeBroadcast(df: DataFrame): DataFrame =
@@ -655,8 +645,8 @@ object Graph {
     // materialize the result (eager checkpoint), then drop everything
     // else this call pinned — the frontiers' truncated-lineage RDDs are
     // only safe to unpersist once nothing can re-read them
-    val (result, _) = checkpointTracked(steps.reduce(_ unionByName _))
-    release(handles.toSeq)
+    val result = checkpoint(steps.reduce(_ unionByName _))
+    release(e); release(frontierInit)
     result
   }
 
@@ -703,10 +693,10 @@ object Graph {
       s"connectedComponentsStar: maxIter must be at least 1, got $maxIter")
     // checkpoint lifecycle: see [[Checkpoints]] — superseded rounds are
     // released, the live round's copy stays persisted
-    import Checkpoints.{tracked => checkpointTracked, release}
+    import Checkpoints.{checkpoint, release}
 
     // canonical form: distinct (hi, lo) pairs, self-loops dropped
-    var (canon, prevRdds) = checkpointTracked(
+    var canon = checkpoint(
       edges
         .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
         .select(
@@ -767,13 +757,12 @@ object Graph {
       // two consumers, so an unmaterialized previous round re-runs its
       // post-exchange distinct per consumer branch — the recompute
       // outweighs the saved driver round-trip (q145 warm 6.5 → 8.6 s).
-      val (next, nextRdds) = checkpointTracked(oneRound(canon))
+      val next = checkpoint(oneRound(canon))
       val nextCount = next.count()
       // canonical distinct sets: |A| = |B| ∧ A \ B = ∅ ⟹ A = B
       converged = nextCount == prevCount &&
         next.except(canon).limit(1).count() == 0L
-      release(prevRdds)
-      prevRdds = nextRdds
+      release(canon)
       canon = next
       prevCount = nextCount
       i += 1
@@ -835,8 +824,8 @@ object Graph {
   ): DataFrame = {
     require(k >= 1, s"kCoreMembers: k must be at least 1, got $k")
     require(maxIter >= 1, s"kCoreMembers: maxIter must be at least 1, got $maxIter")
-    import Checkpoints.{tracked => checkpointTracked, release}
-    var (canon, prevRdds) = checkpointTracked(
+    import Checkpoints.{checkpoint, release}
+    var canon = checkpoint(
       edges
         .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
         .select(
@@ -855,21 +844,19 @@ object Graph {
       // the degree aggregation's shuffle is paid once per round — the
       // former lazy `removed` recomputed the whole degree pass inside
       // the anti-join after the count had already paid it
-      val (removed, remRdds) = checkpointTracked(
-        degrees(canon).where(col("_d") < k).select("_v"))
+      val removed = checkpoint(degrees(canon).where(col("_d") < k).select("_v"))
       val nRemoved = removed.count()
-      if (nRemoved == 0L) { converged = true; release(remRdds) }
+      if (nRemoved == 0L) { converged = true; release(removed) }
       else {
         val r =
           if (nRemoved <= maxBroadcastVertices) broadcast(removed) else removed
-        val (next, nextRdds) = checkpointTracked(
+        val next = checkpoint(
           canon
             .join(r.select(col("_v").as("_a")), Seq("_a"), "left_anti")
             .join(r.select(col("_v").as("_b")), Seq("_b"), "left_anti")
             .select("_a", "_b"))
-        release(prevRdds)
-        release(remRdds)
-        prevRdds = nextRdds
+        release(canon)
+        release(removed)
         canon = next
         i += 1
       }
@@ -880,9 +867,9 @@ object Graph {
     // at the fixpoint every remaining endpoint has degree ≥ k; the
     // result is materialized (vertex-scale) so the final edge-set
     // checkpoint (edge-scale) can be released immediately
-    val (result, _) = checkpointTracked(
+    val result = checkpoint(
       degrees(canon).select(col("_v").as("node"), col("_d").as("deg_in_core")))
-    release(prevRdds)
+    release(canon)
     result
   }
 
@@ -904,8 +891,8 @@ object Graph {
       maxBroadcastVertices: Long = 2000000L
   ): DataFrame = {
     require(kMax >= 1, s"coreNumbers: kMax must be at least 1, got $kMax")
-    import Checkpoints.{tracked => checkpointTracked, release}
-    val handles = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    import Checkpoints.{checkpoint, release}
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // ONE merged peel loop instead of kMax independent kCoreMembers
     // phases: the old per-phase structure recomputed the degree table
     // at least three times per round-equivalent (the in-round check,
@@ -918,20 +905,20 @@ object Graph {
     // change pays exactly one degree aggregation. The peel semantics
     // are unchanged (same removals in the same order), so the output
     // is identical; GraphSpec pins it against per-k kCoreMembers peels.
-    var (canon, canonH) = checkpointTracked(
+    var canon = checkpoint(
       edges
         .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
         .select(
           least(col("src"), col("dst")).as("_a"),
           greatest(col("src"), col("dst")).as("_b"))
         .distinct())
-    handles ++= canonH
+    pins += canon
     def degreesOf(e: DataFrame): DataFrame =
       e.select(col("_a").as("_v"))
         .unionByName(e.select(col("_b").as("_v")))
         .groupBy("_v").agg(count(lit(1)).as("_d"))
-    var (degs, degsH) = checkpointTracked(degreesOf(canon))
-    handles ++= degsH
+    var degs = checkpoint(degreesOf(canon))
+    pins += degs
     var out: Option[DataFrame] = None
     var k = 1
     var rounds = 0
@@ -966,25 +953,20 @@ object Graph {
         // checkpoint right below materializes it as a side effect of
         // its own job, so one round pays ONE materialization job (plus
         // the cached-scan count above) instead of two
-        val next = canon
-          .join(r.select(col("_v").as("_a")), Seq("_a"), "left_anti")
-          .join(r.select(col("_v").as("_b")), Seq("_b"), "left_anti")
-          .select("_a", "_b")
-          .localCheckpoint(false)
-        handles ++= next.queryExecution.analyzed.collect {
-          case lr: org.apache.spark.sql.execution.LogicalRDD
-              if lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE =>
-            lr.rdd
-        }
-        canon = next
-        val (nd, ndH) = checkpointTracked(degreesOf(canon))
-        handles ++= ndH
-        degs = nd
+        canon = checkpoint(
+          canon
+            .join(r.select(col("_v").as("_a")), Seq("_a"), "left_anti")
+            .join(r.select(col("_v").as("_b")), Seq("_b"), "left_anti")
+            .select("_a", "_b"),
+          eager = false)
+        pins += canon
+        degs = checkpoint(degreesOf(canon))
+        pins += degs
         rounds += 1
       }
     }
-    val (result, _) = checkpointTracked(out.get.select(col("node"), col("core")))
-    release(handles.toSeq)
+    val result = checkpoint(out.get.select(col("node"), col("core")))
+    pins.foreach(release)
     result
   }
 
@@ -1032,19 +1014,19 @@ object Graph {
       maxBroadcastVertices: Long = 2000000L
   ): DataFrame = {
     require(rounds >= 1, s"labelPropagation: rounds must be at least 1, got $rounds")
-    import Checkpoints.{tracked => checkpointTracked, release}
+    import Checkpoints.{checkpoint, release}
     // undirected voting view: both directions of every edge, self-loops
     // and nulls dropped, deduped — loop-invariant, pinned once
     val canon = edges
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
       .select(col("src").as("_a"), col("dst").as("_b"))
-    val (und, edgeRdds) = checkpointTracked(
+    val und = checkpoint(
       canon.unionByName(canon.select(col("_b").as("_a"), col("_a").as("_b")))
         .distinct())
     // materialize the initial label table FIRST, then read the vertex
     // count off the checkpointed copy — the former separate
     // `distinct().count()` paid the same vertex-dedup shuffle twice
-    var (labels0, labelRdds) = checkpointTracked(
+    val labels0 = checkpoint(
       und.select(col("_a").as("_v")).distinct().withColumn("_lab", col("_v")))
     val nVerts = labels0.count()
     def maybeBroadcast(df: DataFrame): DataFrame =
@@ -1067,9 +1049,9 @@ object Graph {
         .select(col("_v"), col("_m.lab").as("_lab"))
     }
     val out = labels.select(col("_v").as("node"), col("_lab").as("label"))
-    val (result, _) = checkpointTracked(out)
-    release(labelRdds)
-    release(edgeRdds)
+    val result = checkpoint(out)
+    release(labels0)
+    release(und)
     result
   }
 
@@ -1107,8 +1089,8 @@ object Graph {
   ): DataFrame = {
     require(labels.columns.toSeq.contains("node") && labels.columns.toSeq.contains("label"),
       "modularityByCommunity: labels must have (node, label) columns")
-    import Checkpoints.{tracked => checkpointTracked, release}
-    val (canon, canonRdds) = checkpointTracked(
+    import Checkpoints.{checkpoint, release}
+    val canon = checkpoint(
       edges
         .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
         .select(
@@ -1168,7 +1150,7 @@ object Graph {
       .agg(
         count(lit(1)).as("n_members"),
         sum(coalesce(col("_d"), lit(0L))).as("d_total"))
-    val (result, _) = checkpointTracked(
+    val result = checkpoint(
       perCommunity
         .join(eInternal, Seq("label"), "left")
         .select(
@@ -1179,7 +1161,7 @@ object Graph {
           (lit(4L * m) * coalesce(col("e_internal"), lit(0L)) -
             col("d_total") * col("d_total")).as("q_num"))
         .orderBy("label"))
-    release(canonRdds)
+    release(canon)
     result
   }
 
@@ -1371,15 +1353,14 @@ object Graph {
     // just built — an item-scale groupBy per lifecycle query, 60M rows
     // at sf10). The item-scale membership the drift joins need derives
     // lazily below: a narrow explode over the pinned RDD.
-    val setsPinned = sets
+    val setsPinned = Checkpoints.checkpoint(sets
       .where(col("_tag").isNotNull)
       .select(col("_g"),
-        transform(col("_is"), x => x.cast(itemType)).as("_is"), col("_tag"))
-      .localCheckpoint()
+        transform(col("_is"), x => x.cast(itemType)).as("_is"), col("_tag")))
     val capped = setsPinned
       .select(col("_g"), explode(col("_is")).as("_i"), col("_tag"))
-    val touched = capped.where(col("_tag")).select(col("_i").as("_v")).distinct()
-      .localCheckpoint()
+    val touched =
+      Checkpoints.checkpoint(capped.where(col("_tag")).select(col("_i").as("_v")).distinct())
     val nTouched = touched.count()
     val touchedSide =
       if (nTouched <= maxBroadcastVertices) broadcast(touched) else touched

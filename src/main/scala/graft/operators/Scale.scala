@@ -132,17 +132,15 @@ object Scale {
     * so the two exchanges no longer canonicalize equal (measured: two
     * independent ShuffleQueryStages, each rescanning the source). The
     * checkpointed blocks distribute across executors (MEMORY_AND_DISK)
-    * and are reclaimed by the ContextCleaner once the plan is GC'd —
-    * the [[graft.operators.Similarity]] batch-probe discipline.
+    * and are released with the caller's scope ([[Checkpoints]]), or
+    * reclaimed by the ContextCleaner once the plan is GC'd.
     */
   private def rangeSortedCheckpoint(
       df: DataFrame,
       order: Seq[Column],
       parts: Int
   ): DataFrame =
-    df.repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-      .localCheckpoint()
+    Checkpoints.checkpoint(df.repartitionByRange(parts, order: _*).sortWithinPartitions(order: _*))
 
   /** Per-partition (rowCount, non-null value count, value sum) of the
     * checkpointed partitions, collected to the driver — ONE ROW PER

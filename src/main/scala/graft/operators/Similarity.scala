@@ -494,10 +494,8 @@ object Similarity {
     // nondeterministic source (sample/limit/changing input) could
     // re-roll between scans and silently drop vectors from the index,
     // the same failure class mergeFileGranular pins its batch against
-    val batch = newEmb
-      .select((idCol +: vecCol +: metaCols).map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoints.scoped {
+      val batch = Checkpoints.cache(newEmb.select((idCol +: vecCol +: metaCols).map(col): _*))
       val postings = batch
         .join(ivfAssign(batch, idCol, vecCol, cents, "centroid_id", "centroid"), idCol)
         .select(
@@ -505,7 +503,7 @@ object Similarity {
             metaCols.map(col)): _*)
       FileMerge.appendStaged(
         spark, postings, postingsPath(indexPath), "centroid_id", files, commitId)
-    } finally batch.unpersist(blocking = false)
+    }
   }
 
   /** Re-cluster the postings table after a run of [[ivfAppend]] batches:
@@ -820,9 +818,8 @@ object Similarity {
     val post = postingsPath(indexPath)
     Incremental.recoverAll(spark, post)
     Incremental.recoverAll(spark, centroidsPath(indexPath))
-    val q = queries
-      .select(col(qIdCol).as("query_id"), col(qVecCol).as("_qvec"))
-      .localCheckpoint()
+    val q = Checkpoints.checkpoint(
+      queries.select(col(qIdCol).as("query_id"), col(qVecCol).as("_qvec")))
     val cents = broadcast(spark.read.parquet(centroidsPath(indexPath)))
     val probeRank = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
@@ -955,9 +952,8 @@ object Similarity {
       .collect()
     if (first.isEmpty) return Array.empty
     val candidates = scala.collection.mutable.ArrayBuffer[Array[Float]](first(0))
-    var state = vecs
-      .withColumn("_minD", greatest(lit(0.0), lit(1.0) - cosine(col("_v"), typedLit(first(0)))))
-      .localCheckpoint()
+    var state = Checkpoints.checkpoint(vecs
+      .withColumn("_minD", greatest(lit(0.0), lit(1.0) - cosine(col("_v"), typedLit(first(0))))))
     for (r <- 1 to rounds) {
       val drawn = state
         .where(col("_minD") > 0)
@@ -979,13 +975,12 @@ object Similarity {
           .crossJoin(newC)
           .groupBy(col("_id"))
           .agg(max(cosine(col("_v"), col("_cv"))).as("_bestNew"))
-        state = state
+        state = Checkpoints.checkpoint(state
           .join(best, "_id")
           .select(
             col("_id"),
             col("_v"),
-            greatest(lit(0.0), least(col("_minD"), lit(1.0) - col("_bestNew"))).as("_minD"))
-          .localCheckpoint()
+            greatest(lit(0.0), least(col("_minD"), lit(1.0) - col("_bestNew"))).as("_minD")))
       }
     }
     // weight candidates by attracted corpus mass, then reduce on the
@@ -1339,7 +1334,7 @@ object Similarity {
     val dim = pqDim(emb, idCol, vecCol, "pqBuild")
     require(dim % m == 0, s"pqBuild: dim $dim not divisible into $m subspaces")
     val d = dim / m
-    val subs = subspaces(emb, idCol, vecCol, m, d).localCheckpoint()
+    val subs = Checkpoints.checkpoint(subspaces(emb, idCol, vecCol, m, d))
     // seeds: the k smallest ids (driver-side: k values, metadata scale)
     import spark.implicits._
     val seedIds = subs.select(col("_vid")).distinct()
@@ -1722,10 +1717,8 @@ object Similarity {
     val m = cb.agg(max(col("sub"))).head().getInt(0) + 1
     // pin the batch: it feeds the coding AND assignment joins and the
     // clustered write's range sampling (the ivfAppend argument)
-    val batch = newEmb
-      .select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoints.scoped {
+      val batch = Checkpoints.cache(newEmb.select(col(idCol), col(vecCol)))
       val codeArr = codesWithStats(batch, idCol, vecCol, cb, m)
       val postings = ivfAssign(batch, idCol, vecCol, cents, "centroid_id", "centroid")
         .join(codeArr, idCol)
@@ -1733,7 +1726,7 @@ object Similarity {
           col("codes"), col("nrm"), col("qn"), col("r"))
       FileMerge.appendStaged(
         spark, postings, postingsPath(indexPath), "centroid_id", files, commitId)
-    } finally batch.unpersist(blocking = false)
+    }
   }
 
   /** ANN against the persisted IVF-PQ index: rank the stored coarse
@@ -2062,9 +2055,8 @@ object Similarity {
       s"ivfPqTopKBatch: caller m=$m does not match the stored codebook's " +
         s"subspace count $storedM at $indexPath — a mismatched m would " +
         "silently filter every candidate")
-    val q = queries
-      .select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("_qvec"))
-      .localCheckpoint()
+    val q = Checkpoints.checkpoint(
+      queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("_qvec")))
     val dim = pqDim(q, "query_id", "_qvec", "ivfPqTopKBatch")
     require(dim % m == 0,
       s"ivfPqTopKBatch: query dim $dim not divisible into $m subspaces")

@@ -9,6 +9,8 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Checkpoints
+
 /** Job runners + operational metadata, re-expressing the reference's
   * orchestration (`utils.py:340-498`) in-JVM: a "job" is a named
   * `SparkSession => Unit` procedure that runs its own action (a lake
@@ -17,6 +19,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exact reference schema and status vocabulary (SUCCESS / FAILURE /
   * SUSPENDED). Like the reference, a run records whether each job
   * succeeded, not what it wrote.
+  *
+  * A job is a release scope ([[graft.operators.Checkpoints.scoped]]):
+  * every cache and checkpoint it makes is released when it returns or
+  * throws, as a reference job's caches die with its Glue application.
+  * A job returns nothing, so nothing can read its pins afterwards; and
+  * each job of a parallel batch runs on its own pool thread, so no job
+  * releases another's pins.
   */
 object Runner {
 
@@ -51,7 +60,7 @@ object Runner {
 
   private def runOne(spark: SparkSession, name: String, job: Job, args: String): JobRunRecord = {
     val start = now()
-    val status = Try(job(spark)) match {
+    val status = Try(Checkpoints.scoped(job(spark))) match {
       case Success(_) => Success_
       case Failure(e) =>
         log.warn(s"graft.Runner: job '$name' failed", e)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.operators.{Dedup, Multimodal, Pack, Scale, Similarity}
+import graft.operators.{Checkpoints, Dedup, Multimodal, Pack, Scale, Similarity}
 
 /** LLM-data-pipeline operator corpus (SURVEY.md §7 step 8, BASELINE.json
   * north star): dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash /
@@ -110,9 +110,8 @@ object PipelineQueries {
     cappedPairsCache.computeIfAbsent(
       (s, dir),
       { key =>
-        Dedup.ngramJaccardPairsCapped(
-          t(key._1, key._2, "documents"), "doc_id", "text", 3, 0.8, maxDocsPerShingle = 5)
-          .cache()
+        Checkpoints.cache(Dedup.ngramJaccardPairsCapped(
+          t(key._1, key._2, "documents"), "doc_id", "text", 3, 0.8, maxDocsPerShingle = 5))
       })
   }
 
@@ -2022,7 +2021,7 @@ object PipelineQueries {
       // canonicalized copy — pin the shared upstream once so the build
       // runs once, not four times (guide §2.4: remove repeated work
       // the per-operator checkpoints cannot see)
-      val edges = kcoreFixtureEdges(s, dir).localCheckpoint()
+      val edges = Checkpoints.checkpoint(kcoreFixtureEdges(s, dir))
       val und = edges.unionByName(
         edges.select(col("dst").as("src"), col("src").as("dst")))
       val quality = docs.select(col("doc_id"), Text.qualityScore(col("text")).as("quality"))
@@ -2185,7 +2184,7 @@ object PipelineQueries {
       val docs = t(s, dir, "documents")
       val ids = docs.select(col("doc_id")).where(col("doc_id").isNotNull).distinct()
       // shared-fixture pin, same rationale as q169
-      val edges = kcoreFixtureEdges(s, dir).localCheckpoint()
+      val edges = Checkpoints.checkpoint(kcoreFixtureEdges(s, dir))
       val und = edges.unionByName(
         edges.select(col("dst").as("src"), col("src").as("dst")))
       val quality = docs.select(col("doc_id"), Text.qualityScore(col("text")).as("quality"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Incremental
+import graft.operators.{Checkpoints, Incremental}
 
 /** Structured-Streaming face of the reference's incremental path
   * (SURVEY.md §7 step 9): the batch CDC-lite of `utils.py:212-246`
@@ -234,13 +234,12 @@ object Streams {
     * batch bands, [[graft.operators.Dedup.incrementalNearDupMd5]]), so
     * per-batch cost is a corpus digest scan plus one corpus shingle
     * scan (cached for the banding/rescore passes within the batch, then
-    * RELEASED — every cache this loop creates is unpersisted at the end
-    * of its micro-batch, so the loop runs indefinitely without
-    * accumulating executor storage) plus batch-scale shuffles,
-    * regardless of corpus size. Exactly-once via the `_commits` ledger;
-    * single writer per corpus, like every staged commit here. Ids must
-    * be globally unique across the stream AND disjoint from ingested
-    * ids (the banding join relies on it).
+    * RELEASED with the micro-batch's release scope, so the loop runs
+    * indefinitely without accumulating executor storage) plus
+    * batch-scale shuffles, regardless of corpus size. Exactly-once via
+    * the `_commits` ledger; single writer per corpus, like every staged
+    * commit here. Ids must be globally unique across the stream AND
+    * disjoint from ingested ids (the banding join relies on it).
     */
   def ingestStreamDeduped(
       spark: SparkSession,
@@ -283,6 +282,11 @@ object Streams {
     * exactly them (digest + banding guards) and appends only the docs the
     * crash lost — per-document exactly-once without a swap of the
     * (append-only, arbitrarily large) corpus directory.
+    *
+    * The batch runs in one release scope
+    * ([[graft.operators.Checkpoints.scoped]]): every cache and checkpoint
+    * it makes is released once its files are moved in, before the
+    * ledger commits.
     */
   def ingestBatchDeduped(
       spark: SparkSession,
@@ -303,33 +307,28 @@ object Streams {
     val committed = readLedger(fs, target)
     if (committed.contains(batchId)) return false
 
-    // within-batch: exact survivors, then near-dup cluster survivors.
-    // `inner` is cached HERE and every cache this batch creates —
-    // including the novelty filter's internal shingle tables, via its
-    // release handle — is unpersisted in the finally below, so this
-    // long-lived loop gets the cached-reuse plan per micro-batch
-    // WITHOUT accumulating corpus-scale blocks in executor storage.
-    val exact = Dedup.exactDedup(batch, idCol, textCol)
-    val innerPairs =
-      Dedup.minhashLshPairsMd5(exact, idCol, textCol, n, threshold, bands, rowsPerBand)
-    val inner = Dedup.dedupByPairs(exact, idCol, innerPairs).persist()
+    Checkpoints.scoped {
+      // within-batch: exact survivors, then near-dup cluster survivors
+      val exact = Dedup.exactDedup(batch, idCol, textCol)
+      val innerPairs =
+        Dedup.minhashLshPairsMd5(exact, idCol, textCol, n, threshold, bands, rowsPerBand)
+      val inner = Checkpoints.cache(Dedup.dedupByPairs(exact, idCol, innerPairs))
 
-    val hasData = fs.exists(target) &&
-      fs.listStatus(target).exists(!_.getPath.getName.startsWith("_"))
-    val (survivors, release) =
-      if (!hasData) (inner, () => ())
-      else
-        // the novelty filter's digest-before-banding ordering is the
-        // crash-replay keystone: docs an earlier crashed attempt already
-        // MOVED into the corpus are dropped from the batch before the
-        // banding join, so the replay re-enters the incremental join
-        // with disjoint id spaces (see Dedup.noveltyFilterManaged)
-        Dedup.noveltyFilterManaged(
-          spark.read.parquet(targetPath), inner, idCol, textCol,
-          n, threshold, bands, rowsPerBand)
+      val hasData = fs.exists(target) &&
+        fs.listStatus(target).exists(!_.getPath.getName.startsWith("_"))
+      val survivors =
+        if (!hasData) inner
+        else
+          // the novelty filter's digest-before-banding ordering is the
+          // crash-replay keystone: docs an earlier crashed attempt already
+          // MOVED into the corpus are dropped from the batch before the
+          // banding join, so the replay re-enters the incremental join
+          // with disjoint id spaces (see Dedup.noveltyFilter)
+          Dedup.noveltyFilter(
+            spark.read.parquet(targetPath), inner, idCol, textCol,
+            n, threshold, bands, rowsPerBand)
 
-    val staged = survivors.persist()
-    try {
+      val staged = Checkpoints.cache(survivors)
       if (staged.count() > 0) {
         val staging = new Path(targetPath + s"_ingest_staging_$batchId")
         fs.delete(staging, true) // orphan of a crashed earlier attempt
@@ -344,10 +343,6 @@ object Streams {
           }
         fs.delete(staging, true)
       } else if (!fs.exists(target)) fs.mkdirs(target)
-    } finally {
-      staged.unpersist()
-      inner.unpersist()
-      release()
     }
     writeLedger(fs, target, committed.add(batchId))
     true
@@ -1170,7 +1165,7 @@ object Streams {
         buildShard(spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rows.schema))
           .withColumn("batch_id", lit(0L))
-    val out = rollup(shards).localCheckpoint()
+    val out = Checkpoints.checkpoint(rollup(shards))
     if (!fs.delete(basePath, true))
       System.err.println(s"[streams] could not clean replay scratch $base")
     out

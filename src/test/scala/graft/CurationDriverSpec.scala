@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.CacheProbe
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -133,27 +132,27 @@ class CurationDriverSpec extends AnyFunSuite with SparkSpec {
     val day1 = Seq((1L, DocA), (2L, DocA), (3L, DocB)).toDF("doc_id", "text")
     CurationDriver.run(spark, day1, benchDf, CurationDriver.Config(root = rootDay1))
     val day2 = Seq((10L, DocANear), (11L, DocB), (12L, DocA + " again")).toDF("doc_id", "text")
-    def entriesAddedBy(run: => CurationDriver.RunResult): Int = {
-      val before = CacheProbe.entries(spark)
+    // (new cache entries, new persistent RDDs) a run leaves behind
+    def pinsLeftBy(run: => CurationDriver.RunResult): (Int, Set[Int]) = {
+      val pins = new PinMark
       val r = run
       assert(r.records.map(_.job_status).forall(_ == "SUCCESS"), r.records)
-      CacheProbe.entries(spark) - before
+      pins.left
     }
-    // control: the same batch curated from scratch — every cache the
-    // dedup stage's own self-dedup leaves behind, without the novelty
-    // filter
-    val fromScratch = entriesAddedBy(CurationDriver.run(
+    // the same batch curated from scratch: the self-dedup's shingle
+    // cache and closure checkpoints die with the dedup stage
+    val fromScratch = pinsLeftBy(CurationDriver.run(
       spark, day2, benchDf,
       CurationDriver.Config(root = Files.createTempDirectory("curcache2").toString)))
     // the incremental run adds the corpus and batch shingle tables and
     // the candidate pairs; none of them may outlive the stage
-    val incremental = entriesAddedBy(CurationDriver.run(
+    val incremental = pinsLeftBy(CurationDriver.run(
       spark, day2, benchDf,
       CurationDriver.Config(
         root = Files.createTempDirectory("curcache3").toString,
         existingCorpusPath = Some(s"$rootDay1/stage_dedup"))))
-    assert(incremental == fromScratch,
-      s"incremental run left ${incremental - fromScratch} novelty-filter caches behind")
+    assert(Seq(fromScratch, incremental).forall(_ == ((0, Set.empty[Int]))),
+      s"from-scratch run left $fromScratch, incremental run left $incremental")
   }
 
   test("mix stage: composed policy reasons land in stage_mix, pack admits only kept") {
@@ -182,6 +181,7 @@ class CurationDriverSpec extends AnyFunSuite with SparkSpec {
       (10L, 11L), (10L, 12L), (10L, 23L), (10L, 53L), (11L, 12L),
       (11L, 23L), (11L, 53L), (12L, 23L), (12L, 53L), (23L, 53L),
       (3L, 6L), (3L, 7L), (6L, 7L)).toDF("src", "dst")
+    val pins = new PinMark
     val res = CurationDriver.run(
       spark, docs, benchDf,
       CurationDriver.Config(root = root,
@@ -189,6 +189,8 @@ class CurationDriverSpec extends AnyFunSuite with SparkSpec {
         trustedSeedMod = 5L, mixMaxFresh = 2L),
       links = Some(links))
     assert(res.records.map(_.job_status).forall(_ == "SUCCESS"), res.records)
+    // the graph signals' checkpoints and the dedup caches die with their stages
+    assert(pins.left == ((0, Set.empty[Int])), s"mix run left ${pins.left}")
     assert(res.records.map(_.job_name).contains("mix"))
     // the audit table: one fail-closed decision per RAW document
     val mix = spark.read.parquet(s"$root/stage_mix")

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -10,27 +10,53 @@ import org.scalatest.funsuite.AnyFunSuite
   * behaviour switched by an environment variable is invisible at the
   * call site and untested by default. Only the mains (`Bench`,
   * `Verify`, `tools.ProfileRecall`) read the environment.
+  *
+  * The engine pins and releases data only through
+  * `operators/Checkpoints.scala`, so every pin has one lifecycle: a
+  * runner job is its release scope.
   */
 class EngineEnvSpec extends AnyFunSuite {
 
+  private val Root = Paths.get("src/main/scala/graft")
   private val EnginePackages = Seq("operators", "functions", "streaming", "sources", "plans")
   private val EnvRead = """sys\.env|System\.getenv""".r
+  private val PinCall = """\.(cache\(\)|persist\(|localCheckpoint\(|unpersist\()""".r
 
-  test("engine packages read no environment variables") {
-    val root = Paths.get("src/main/scala/graft")
-    val files = EnginePackages.flatMap { pkg =>
-      val dir = root.resolve(pkg)
+  private def scalaFiles(dirs: Seq[String]): Seq[Path] = {
+    val files = dirs.flatMap { pkg =>
+      val dir = Root.resolve(pkg)
       assert(Files.isDirectory(dir), s"missing package directory $dir")
       val walk = Files.walk(dir)
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
     }
     assert(files.nonEmpty)
-    val hits = for {
+    files
+  }
+
+  private def hits(files: Seq[Path])(bad: String => Boolean): Seq[String] =
+    for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if EnvRead.findFirstIn(line).isDefined
+      if bad(line)
     } yield s"$f:${i + 1}: ${line.trim}"
-    assert(hits.isEmpty, hits.mkString("environment reads in engine code:\n", "\n", ""))
+
+  test("engine packages read no environment variables") {
+    val found = hits(scalaFiles(EnginePackages))(EnvRead.findFirstIn(_).isDefined)
+    assert(found.isEmpty, found.mkString("environment reads in engine code:\n", "\n", ""))
+  }
+
+  test("engine code pins and releases data only through Checkpoints") {
+    val drivers = Seq("LakeDriver.scala", "CurationDriver.scala").map(Root.resolve)
+    val files = (scalaFiles(EnginePackages :+ "queries") ++ drivers)
+      .filterNot(_.endsWith(Paths.get("operators", "Checkpoints.scala")))
+    // a line's code: scaladoc and block-comment lines have none, and a
+    // trailing `//` comment is cut off
+    def codeOf(line: String): String = {
+      val t = line.trim
+      if (t.startsWith("*") || t.startsWith("/*")) "" else t.split("//", 2)(0)
+    }
+    val found = hits(files)(line => PinCall.findFirstIn(codeOf(line)).isDefined)
+    assert(found.isEmpty, found.mkString("pins outside operators/Checkpoints.scala:\n", "\n", ""))
   }
 }

@@ -36,11 +36,13 @@ class LakeDriverSpec extends AnyFunSuite with SparkSpec {
       )
     )
 
+    val pins = new PinMark
     val result = LakeDriver.run(
       spark,
       LakeDriver.Config(root, Some(depCsv), jobPrefix = "ing_", maxBatchSize = 2),
       registry
     )
+    assert(pins.left == ((0, Set.empty[Int])), s"lake run left ${pins.left}")
 
     // layering respected registry + CSV
     assert(result.layers(0).toSet == Set("ing_orders", "ing_customer"))

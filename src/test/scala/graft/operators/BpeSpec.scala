@@ -28,6 +28,12 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
       (3, "l", "o", 7L)))
   }
 
+  test("bpeTrain releases every words round it checkpointed") {
+    val pins = new PinMark
+    assert(Curation.bpeTrain(paperCorpus, "text", numMerges = 5).size == 5)
+    assert(pins.left == ((0, Set.empty[Int])))
+  }
+
   test("merge application is greedy left-to-right over non-overlapping pairs") {
     // word type 'aaa' (wc=2) has TWO overlapping (a,a) pairs → n=4; the
     // apply pass must produce ["aa","a"], never ["aa","aa"] or ["a","aa"]

@@ -81,21 +81,22 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       df.queryExecution.optimizedPlan.toString.linesIterator.exists(l =>
         (l.contains("strategy=broadcast") && l.contains("band")) ||
           l.contains("BroadcastHashJoin [band"))
-    // Managed variant + release between runs: CacheManager matches plans
-    // with hints canonicalized away, so without the release the degraded
-    // query would silently reuse the HINTED run's cached candidates and
-    // the plan inspection would see the wrong shape
-    val (hinted, rel1) =
-      Dedup.incrementalNearDupMd5Managed(corpus, batch, "doc_id", "text", 3, 0.8)
-    assert(bandJoinHinted(hinted), "default path lost its banding broadcast hint")
-    val a = hinted.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    rel1()
+    // one release scope per run: CacheManager matches plans with hints
+    // canonicalized away, so without the release the degraded query
+    // would silently reuse the HINTED run's cached candidates and the
+    // plan inspection would see the wrong shape
+    val a = Checkpoints.scoped {
+      val hinted = Dedup.incrementalNearDupMd5(corpus, batch, "doc_id", "text", 3, 0.8)
+      assert(bandJoinHinted(hinted), "default path lost its banding broadcast hint")
+      hinted.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    }
     // bound of 0 banded rows: every non-empty batch exceeds it
-    val (degraded, rel2) = Dedup.incrementalNearDupMd5Managed(
-      corpus, batch, "doc_id", "text", 3, 0.8, maxBroadcastBandedRows = 0L)
-    assert(!bandJoinHinted(degraded), "degraded path still hints the banding broadcast")
-    val b = degraded.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    rel2()
+    val b = Checkpoints.scoped {
+      val degraded = Dedup.incrementalNearDupMd5(
+        corpus, batch, "doc_id", "text", 3, 0.8, maxBroadcastBandedRows = 0L)
+      assert(!bandJoinHinted(degraded), "degraded path still hints the banding broadcast")
+      degraded.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    }
     assert(a.nonEmpty && a == b)
   }
 

@@ -50,6 +50,20 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     assert(a == b)
   }
 
+  test("pageRankExact: releases its loop invariants; only the result stays persisted") {
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val verts = Seq(1L, 2L, 3L, 4L, 9L).toDF("id")
+    val pins = new PinMark
+    val got = Graph.pageRankExact(edges, verts, "id", iterations = 3)
+    val own = got.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+    assert(own.size == 1)
+    assert(pins.left == ((0, own)))
+    assert(got.count() == 5L)
+  }
+
   test("triangleCounts: matches brute force, zero rows kept, input form irrelevant") {
     // K4 on 1-4 (every vertex in 3 triangles) + a pendant (5) + isolated (9)
     val und = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))

@@ -88,6 +88,28 @@ class RunnerSpec extends AnyFunSuite with SparkSpec {
     assert(Runner.durationSecs(t0, t0) == 0)
   }
 
+  test("a job is a release scope: its caches and checkpoints die with it, on failure too") {
+    val pins = new PinMark
+    val heldInside = scala.collection.mutable.ArrayBuffer[(Int, Set[Int])]()
+    def pin(s: org.apache.spark.sql.SparkSession): Unit = {
+      import s.implicits._
+      val df = Seq(1L, 2L, 3L).toDF("x")
+      graft.operators.Checkpoints.cache(df.where($"x" > 1L)).collect()
+      graft.operators.Checkpoints.checkpoint(df.select(($"x" * 2L).as("y"))).collect()
+      heldInside.synchronized(heldInside += pins.left)
+    }
+    val registry: Map[String, Job] = Map(
+      "pins" -> pin,
+      "pinsThenThrows" -> { s => pin(s); throw new RuntimeException("after pinning") })
+    val recs = Runner.runLayers(
+      spark, Map(0 -> Seq("pins"), 1 -> Seq("pinsThenThrows")), registry)
+    assert(recs.map(r => r.job_name -> r.job_status).toMap ==
+      Map("pins" -> "SUCCESS", "pinsThenThrows" -> "FAILURE"))
+    // each job held its cache entry and persisted RDDs while it ran
+    assert(heldInside.size == 2 && heldInside.forall { case (e, rdds) => e == 1 && rdds.nonEmpty })
+    assert(pins.left == ((0, Set.empty[Int])))
+  }
+
   test("layered runner suspends later layers after a failure (cascade across layers)") {
     val registry: Map[String, Job] = Map("p" -> boom, "c" -> ok)
     val recs = Runner.runLayers(spark, Map(0 -> Seq("p"), 1 -> Seq("c")), registry)
