@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.plans.{Dag, Recon, Runner}
@@ -64,7 +65,8 @@ object LakeDriver {
   def run(spark: SparkSession, config: Config, registry: Map[String, Job]): RunResult = {
     // 1. infra bootstrap: the "bucket" + the catalog database the
     //    reference's infra step creates (O9, infra_utils.py:41-53)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"${config.root}/datalake"))
+    val lakeDir = new Path(s"${config.root}/datalake")
+    lakeDir.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(lakeDir)
     config.database.foreach(db => spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`"))
 
     // 3. DAG layers (single layer 0 with every job when no CSV given)
@@ -96,36 +98,31 @@ object LakeDriver {
     * `Recon.countReport`.)
     *
     * Table discovery: a table is the nearest non-partition (`k=v`)
-    * ancestor directory of a parquet file; swap leftovers
-    * (`_old`/`_staging*`) are excluded. Names are lowercased so they join
+    * ancestor directory of a parquet file; a writer's `<table>_fmerge`
+    * staging is excluded. Names are lowercased so they join
     * the metastore's lowercased job-derived names (`Dag.jobNameFor`) —
     * mixed-case tablePaths would otherwise recon with NULL times.
     */
   private def reconReport(spark: SparkSession, config: Config): DataFrame = {
-    val lakeDir = java.nio.file.Paths.get(s"${config.root}/datalake")
-    def tableDirOf(file: java.nio.file.Path): Option[java.nio.file.Path] = {
+    val root = new Path(s"${config.root}/datalake")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lakeDir = fs.makeQualified(root)
+    def tableDirOf(file: Path): Option[Path] = {
       var d = file.getParent
-      while (d != null && d != lakeDir && d.getFileName.toString.contains("=")) d = d.getParent
-      val ok = d != null && d != lakeDir && {
-        val n = d.getFileName.toString
-        !n.endsWith("_old") && !n.contains("_staging")
-      }
-      if (ok) Some(d) else None
+      while (d != null && d != lakeDir && d.getName.contains("=")) d = d.getParent
+      if (d != null && d != lakeDir && !d.getName.endsWith("_fmerge")) Some(d) else None
     }
     val tables: Seq[(String, String)] =
-      if (!java.nio.file.Files.exists(lakeDir)) Nil
+      if (!fs.exists(lakeDir)) Nil
       else {
-        val stream = java.nio.file.Files.walk(lakeDir)
-        try {
-          import scala.jdk.CollectionConverters._
-          stream.iterator().asScala
-            .filter(p => java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-            .flatMap(tableDirOf(_))
-            .toSet
-            .map((d: java.nio.file.Path) => d.getFileName.toString.toLowerCase -> d.toString)
-            .toSeq
-            .sortBy(_._1)
-        } finally stream.close()
+        val files = fs.listFiles(lakeDir, true)
+        Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+          .filter(_.getName.endsWith(".parquet"))
+          .flatMap(tableDirOf(_))
+          .toSet
+          .map((d: Path) => d.getName.toLowerCase -> d.toString)
+          .toSeq
+          .sortBy(_._1)
       }
     val counts = Recon.countReport(
       spark,
@@ -137,7 +134,7 @@ object LakeDriver {
     val sizes = Recon.sizeReport(spark, tables.toMap.view.mapValues(identity).toMap)
     val metaPath = s"${config.root}/${config.metaSubdir}"
     val times =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(metaPath)))
+      if (fs.exists(new Path(metaPath)))
         Recon.ingestionTimeReport(plans.MetaStore.read(spark, metaPath), config.jobPrefix)
       else {
         import spark.implicits._

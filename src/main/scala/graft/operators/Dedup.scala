@@ -678,7 +678,7 @@ object Dedup {
     * load-bearing: it covers shingle-free short docs (< `n` tokens,
     * invisible to banding), and it removes any batch doc whose text
     * already exists verbatim in the corpus BEFORE the banding join —
-    * so a replayed half-ingested batch (same id/text on both sides)
+    * so a re-executed batch already in the corpus (same id/text on both sides)
     * re-enters [[incrementalNearDupMd5]] with disjoint id spaces
     * instead of double-counting its own shingles in the rescore.
     *

@@ -39,18 +39,29 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * rewrite — correct, just no longer file-granular. Files whose footer
   * lacks usable PK statistics are conservatively treated as touched.
   *
-  * Crash contract (single writer; like [[Incremental.swapInStaging]],
-  * concurrent readers may observe a torn listing during the commit
-  * window itself): replacement files are fully written to a staging
-  * directory first, then a manifest naming every file to be replaced is
-  * atomically renamed into place, and only then do live files move
-  * aside. A manifest present means staging is complete, so recovery
-  * ([[recoverFileMerge]]) always rolls FORWARD; no manifest means the
-  * batch never started committing, so staging is discarded and the
-  * caller's replay recomputes it. Both the commit and its recovery are
-  * idempotent, and a replayed batch re-merges the same data (source-wins
-  * merge is idempotent), so every crash point converges to a consistent
-  * table.
+  * Crash contract. This is the ONE commit protocol of every lake writer
+  * (merges, appends, compactions, index builds, the streaming ledgers),
+  * and [[recoverFileMerge]] is the one recovery. Single writer per
+  * table; a concurrent reader may observe a torn listing during the
+  * commit window itself:
+  *
+  *   1. the writer fully writes `<table>_fmerge`: data files, whole
+  *      `p=v`/sub-table directories, `_`-prefixed bookkeeping files;
+  *   2. the `_touched` manifest is published LAST (atomic rename); its
+  *      presence is the commit point. It names the live entries to hide
+  *      that no staged entry replaces;
+  *   3. the commit hides those entries as `_old_<name>`, then publishes
+  *      every staged entry; a staged entry whose name is already live
+  *      (a partition directory, an index's sub-table, `_commits`) moves
+  *      the live one to `_old_<name>` first;
+  *   4. the asides and the staging directory are deleted.
+  *
+  * Recovery rolls FORWARD when the manifest exists and discards the
+  * staging directory when it does not (the caller's replay recomputes
+  * the batch). A replacement is decided by the staged copy still being
+  * in staging, so a roll-forward after a partial publish never hides the
+  * new copy. Both the commit and its recovery are idempotent, so every
+  * crash point converges to either the old table or the new one.
   */
 object FileMerge {
 
@@ -136,12 +147,9 @@ object FileMerge {
       s"mergeFileGranular: integral PK required for footer min/max pruning, got ${pkType.sql}")
     val live = new Path(lakePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // ALL writers' recoveries, swap FIRST: a crashed whole-table swap
-    // (compaction) leaves the live dir absent, and rolling a torn file
-    // merge forward into a nonexistent directory would wedge — the
-    // ordering inside recoverAll restores the live dir before the
-    // file-scoped repair renames into it.
-    Incremental.recoverAll(spark, lakePath)
+    // every writer of this table commits through the same staging, so
+    // this one repair covers a torn merge, append or compaction
+    recoverFileMerge(spark, lakePath)
     require(
       !fs.exists(live) || !fs.listStatus(live).exists(st =>
         st.isDirectory && st.getPath.getName.contains("=")),
@@ -206,60 +214,18 @@ object FileMerge {
           batch,
           pk)
 
-    val staging = new Path(lakePath + "_fmerge")
-    clearStaging(fs, staging, "mergeFileGranular")
     merged
       .repartitionByRange(math.max(1, touched.size), col(pk))
       .sortWithinPartitions(pk)
       .write
       .mode("overwrite")
-      .parquet(staging.toString)
-
-    publishManifest(fs, staging, touched, "mergeFileGranular")
-    commitStaged(fs, live, staging)
+      .parquet(stagingPath(lakePath))
+    commit(spark, lakePath, touched)
     // evolved batches leave untouched files on the old schema — the
     // read-back must merge footers or it may drop the new column
     Incremental.readEvolved(spark, lakePath)
   }
 
-  /** Crash-safe APPEND to a range-clustered plain-parquet table via the
-    * same staging+manifest commit as [[mergeFileGranular]]: an append is
-    * a merge whose touched set is EMPTY — the batch is fully written to
-    * the staging directory range-clustered on `clusterCol` (so its files
-    * carry footer min/max stats and probes/merges keep per-file
-    * pruning), an empty manifest then certifies staging complete, and
-    * the commit publishes the staged files into the live directory
-    * without moving any existing file aside. Every crash point is
-    * covered by [[recoverFileMerge]]: staging without a manifest is
-    * discarded (the caller replays the batch), staging with one rolls
-    * forward. Appended file ranges may interleave with existing files'
-    * ranges — that widens later probes'/merges' touched sets but never
-    * their correctness; a clustered compaction
-    * ([[graft.sources.Lake.compact]] with `clusterBy`) restores
-    * disjoint ranges.
-    *
-    * REPLAY safety: unlike [[mergeFileGranular]] (source-wins merge —
-    * re-running a batch is idempotent), re-running an append duplicates
-    * its rows, and after a crash the caller cannot know whether the
-    * batch committed. Pass `commitId` (any stable per-batch id): a
-    * committed append records a `_append_committed_<id>` marker in the
-    * live directory AS PART OF the commit's roll-forward — before the
-    * staging dir disappears — and a replay of an already-committed id
-    * returns false having written nothing. Markers are `_`-prefixed
-    * (invisible to reads/merges) and survive file-granular merges, but a
-    * whole-table rewrite (compaction) drops them — retries must not
-    * straddle a compaction (same documented degradation as the streaming
-    * `_commits` ledger, except an undetected append replay DUPLICATES,
-    * so schedule compaction only when no append is in flight).
-    *
-    * The CALLER owns key uniqueness: appended rows' keys must be new.
-    * Verifying that here would cost a full-table anti-join — at lake
-    * scale exactly the scan this path exists to avoid; use
-    * [[mergeFileGranular]] when the batch may update existing keys.
-    *
-    * @return true if the batch was appended, false if `commitId` was
-    *         already committed (nothing written)
-    */
   private def appendMarkerName(id: String): String = s"_append_committed_$id"
 
   /** Whether `commitId` has already been durably appended to `lakePath` —
@@ -273,6 +239,37 @@ object FileMerge {
     fs.exists(new Path(live, appendMarkerName(commitId)))
   }
 
+  /** Crash-safe APPEND to a range-clustered plain-parquet table via the
+    * same staging+manifest commit as [[mergeFileGranular]]: an append is
+    * a merge whose touched set is EMPTY — the batch is fully written to
+    * the staging directory range-clustered on `clusterCol` (so its files
+    * carry footer min/max stats and probes/merges keep per-file
+    * pruning), an empty manifest then certifies staging complete, and
+    * the commit publishes the staged files into the live directory
+    * without moving any existing file aside. Appended file ranges may
+    * interleave with existing files' ranges — that widens later
+    * probes'/merges' touched sets but never their correctness; a
+    * clustered compaction ([[graft.sources.Lake.compact]] with
+    * `clusterBy`) restores disjoint ranges.
+    *
+    * REPLAY safety: unlike [[mergeFileGranular]] (source-wins merge —
+    * re-running a batch is idempotent), re-running an append duplicates
+    * its rows, and after a crash the caller cannot know whether the
+    * batch committed. Pass `commitId` (any stable per-batch id): the
+    * `_append_committed_<id>` marker is staged beside the data, so the
+    * commit publishes both or neither, and a replay of an
+    * already-committed id returns false having written nothing. Markers
+    * are `_`-prefixed (invisible to reads) and every writer's commit
+    * keeps them, compactions included.
+    *
+    * The CALLER owns key uniqueness: appended rows' keys must be new.
+    * Verifying that here would cost a full-table anti-join — at lake
+    * scale exactly the scan this path exists to avoid; use
+    * [[mergeFileGranular]] when the batch may update existing keys.
+    *
+    * @return true if the batch was appended, false if `commitId` was
+    *         already committed (nothing written)
+    */
   def appendStaged(
       spark: SparkSession,
       batch: DataFrame,
@@ -284,7 +281,7 @@ object FileMerge {
     commitId.foreach(id =>
       require(id.matches("[A-Za-z0-9._-]+"),
         s"appendStaged: commitId must match [A-Za-z0-9._-]+, got '$id'"))
-    Incremental.recoverAll(spark, lakePath)
+    recoverFileMerge(spark, lakePath)
     val live = new Path(lakePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(live),
@@ -297,111 +294,150 @@ object FileMerge {
       s"appendStaged: $lakePath has a Hive-partitioned layout — append into the partition directories instead")
     val marker = commitId.map(appendMarkerName)
     if (marker.exists(m => fs.exists(new Path(live, m)))) return false
-    val staging = new Path(lakePath + "_fmerge")
-    clearStaging(fs, staging, "appendStaged")
+    val staging = new Path(stagingPath(lakePath))
     val n = if (files > 0) files else math.max(1, spark.sparkContext.defaultParallelism)
     Scale.writeRangeClustered(batch, staging.toString, clusterCol, n)
     // staged names are job-UUID-unique, but a collision with a live file
-    // would make the publish rename fail mid-commit — fail BEFORE the
-    // manifest, while recovery still discards the staging cleanly
+    // would make the commit REPLACE that file — fail BEFORE the manifest,
+    // while recovery still discards the staging cleanly
     val liveNames = dataFiles(fs, live).map(_.getPath.getName).toSet
     val clash = dataFiles(fs, staging).map(_.getPath.getName).filter(liveNames)
     if (clash.nonEmpty)
       throw new java.io.IOException(
         s"appendStaged: staged file name(s) already live: ${clash.mkString(",")}")
-    // the replay marker rides INSIDE staging, before the manifest: the
-    // manifest certifies staging complete, and commitStaged makes the
-    // marker durable in the live dir before staging disappears — so every
-    // crash point either discards the batch (no manifest) or rolls both
-    // the data AND the marker forward together
-    marker.foreach { m =>
-      val out = fs.create(new Path(staging, AppendIdFile), true)
-      try out.write((m + "\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-    publishManifest(fs, staging, Nil, "appendStaged")
-    commitStaged(fs, live, staging)
+    marker.foreach(stageFile(spark, lakePath, _, ""))
+    commit(spark, lakePath, Nil)
     true
   }
 
-  private val AppendIdFile = "_append_id"
+  /** `<lakePath>_fmerge`, the staging directory every writer of
+    * `lakePath` fills before [[commit]]. [[recoverFileMerge]], which
+    * every writer runs first, leaves it absent.
+    */
+  private[graft] def stagingPath(lakePath: String): String = lakePath + "_fmerge"
 
-  private def clearStaging(fs: FileSystem, staging: Path, op: String): Unit =
-    if (fs.exists(staging) && !fs.delete(staging, true))
-      throw new java.io.IOException(s"$op: could not clear stale staging $staging")
+  private val Manifest = "_touched"
 
-  /** Manifest LAST, atomically: its presence certifies staging complete. */
-  private def publishManifest(fs: FileSystem, staging: Path, touched: Seq[String], op: String): Unit = {
-    val tmp = new Path(staging, "_touched.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(touched.mkString("", "\n", "\n").getBytes("UTF-8"))
+  /** Write a small bookkeeping file (a ledger, a marker) into staging;
+    * the commit publishes it with the data, replacing a live namesake.
+    */
+  private[graft] def stageFile(spark: SparkSession, lakePath: String, name: String, text: String): Unit = {
+    val p = new Path(stagingPath(lakePath), name)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(text.getBytes("UTF-8"))
     finally out.close()
-    if (!fs.rename(tmp, new Path(staging, "_touched")))
-      throw new java.io.IOException(s"$op: could not publish manifest in $staging")
   }
 
-  /** Phases A (hide touched) / B (publish staged) / C (clean) of the
-    * commit; idempotent, also the recovery roll-forward. Caller
-    * guarantees the manifest exists.
+  /** Prefix every staged data file's name — before the commit, so a
+    * crash here only leaves staging for recovery to discard.
+    */
+  private[graft] def prefixStaged(spark: SparkSession, lakePath: String, prefix: String): Unit = {
+    val staging = new Path(stagingPath(lakePath))
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    dataFiles(fs, staging).foreach { st =>
+      val dest = new Path(staging, prefix + st.getPath.getName)
+      if (!fs.rename(st.getPath, dest))
+        throw new java.io.IOException(s"FileMerge.prefixStaged: could not rename ${st.getPath}")
+    }
+  }
+
+  /** Commit the fully written staging of `lakePath`: publish the
+    * manifest naming the live entries in `hide` that no staged entry
+    * replaces, then roll the commit forward ([[commitStaged]]).
+    */
+  private[graft] def commit(spark: SparkSession, lakePath: String, hide: Seq[String]): Unit = {
+    val staging = new Path(stagingPath(lakePath))
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = stagedEntries(fs, staging).map(_.getPath.getName).toSet
+    val tmp = new Path(staging, Manifest + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(hide.filterNot(staged).mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+    if (!fs.rename(tmp, new Path(staging, Manifest)))
+      throw new java.io.IOException(s"FileMerge.commit: could not publish manifest in $staging")
+    commitStaged(fs, new Path(lakePath), staging)
+  }
+
+  /** [[commit]] of a whole-table rewrite: every live entry that is not
+    * `_`- or `.`-prefixed is replaced or hidden; bookkeeping files
+    * (ledgers, markers, floors) stay unless staging replaces them.
+    */
+  private[graft] def commitRewrite(spark: SparkSession, lakePath: String): Unit = {
+    val live = new Path(lakePath)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val entries =
+      if (!fs.exists(live)) Nil
+      else fs.listStatus(live).toSeq.map(_.getPath.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    commit(spark, lakePath, entries)
+  }
+
+  /** Every top-level staged entry the commit publishes: files and
+    * directories, `_`-files included; not the manifest, `_SUCCESS` or
+    * `.`-files.
+    */
+  private def stagedEntries(fs: FileSystem, staging: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(staging).toSeq.filter { st =>
+      val n = st.getPath.getName
+      n != Manifest && n != "_SUCCESS" && !n.startsWith(".")
+    }
+
+  /** Hide the manifest's entries, publish the staged ones, clean up.
+    * Idempotent: it is both the commit and the recovery roll-forward.
+    * Caller guarantees the manifest exists.
     */
   private def commitStaged(fs: FileSystem, live: Path, staging: Path): Unit = {
-    val manifest = new Path(staging, "_touched")
-    val touched = {
-      val in = fs.open(manifest)
+    val hidden = {
+      val in = fs.open(new Path(staging, Manifest))
       try new String(in.readAllBytes(), "UTF-8").split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
       finally in.close()
     }
-    touched.foreach { name =>
+    def moveAside(name: String): Unit = {
       val liveF = new Path(live, name)
       if (fs.exists(liveF) && !fs.rename(liveF, new Path(live, "_old_" + name)))
         throw new java.io.IOException(s"FileMerge.commitStaged: could not move $liveF aside")
     }
-    dataFiles(fs, staging).foreach { st =>
-      if (!fs.rename(st.getPath, new Path(live, st.getPath.getName)))
+    fs.mkdirs(live)
+    hidden.foreach(moveAside)
+    // an entry still in staging is unpublished: a live namesake is the
+    // OLD copy. One already published has left staging, so a replayed
+    // roll-forward never hides the new copy.
+    stagedEntries(fs, staging).foreach { st =>
+      val name = st.getPath.getName
+      moveAside(name)
+      if (!fs.rename(st.getPath, new Path(live, name)))
         throw new java.io.IOException(s"FileMerge.commitStaged: could not publish ${st.getPath}")
     }
-    // an append's replay marker becomes durable BEFORE staging (and its
-    // manifest) disappears: a crash right after this line re-runs the
-    // whole commit (idempotent), a crash right before it still leaves
-    // the manifest to roll forward from — no window where the data is
-    // live but a replay would go undetected
-    val idFile = new Path(staging, AppendIdFile)
-    if (fs.exists(idFile)) {
-      val in = fs.open(idFile)
-      val m = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      if (m.nonEmpty) fs.create(new Path(live, m), true).close()
-    }
-    fs.listStatus(live)
-      .filter(st => st.isFile && st.getPath.getName.startsWith("_old_"))
-      .foreach(st => fs.delete(st.getPath, false))
+    deleteAsides(fs, live)
     fs.delete(staging, true)
   }
 
-  /** Repair an interrupted [[mergeFileGranular]] commit. A staging
+  /** Delete a commit's `_old_` asides, files and directories. */
+  private def deleteAsides(fs: FileSystem, live: Path): Boolean = {
+    val asides = fs.listStatus(live).filter(_.getPath.getName.startsWith("_old_"))
+    asides.foreach(st => fs.delete(st.getPath, true))
+    asides.nonEmpty
+  }
+
+  /** Repair an interrupted commit of ANY writer of `lakePath`. A staging
     * directory WITH a manifest is a complete replacement — roll the
-    * commit forward (hide any still-live touched files, publish the
-    * remaining staged files, clean up). A staging directory WITHOUT a
-    * manifest never started committing — discard it (the caller replays
-    * the batch). Leftover `_old_` asides with no staging directory are a
-    * finished commit's debris — delete them. Returns true if anything
-    * was repaired.
+    * commit forward. A staging directory WITHOUT a manifest never
+    * started committing — discard it (the caller replays the batch).
+    * Leftover `_old_` asides with no staging directory are a finished
+    * commit's debris — delete them. Every writer and every reader that
+    * lists files runs this first. Returns true if anything was repaired.
     */
   def recoverFileMerge(spark: SparkSession, lakePath: String): Boolean = {
     val live = new Path(lakePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(lakePath + "_fmerge")
+    val staging = new Path(stagingPath(lakePath))
     var acted = false
     if (fs.exists(staging)) {
-      if (fs.exists(new Path(staging, "_touched"))) commitStaged(fs, live, staging)
+      if (fs.exists(new Path(staging, Manifest))) commitStaged(fs, live, staging)
       else fs.delete(staging, true)
       acted = true
     }
-    if (fs.exists(live)) {
-      val asides =
-        fs.listStatus(live).filter(st => st.isFile && st.getPath.getName.startsWith("_old_"))
-      asides.foreach(st => fs.delete(st.getPath, false))
-      acted ||= asides.nonEmpty
-    }
+    if (fs.exists(live)) acted |= deleteAsides(fs, live)
     acted
   }
 }

@@ -949,10 +949,11 @@ object Graph {
             "chain-cascade graph or budget too small; raise maxIter")
         val r =
           if (nRemoved <= maxBroadcastVertices) broadcast(removed) else removed
-        // LAZY checkpoint for the shrunken edge set: the eager degree
-        // checkpoint right below materializes it as a side effect of
-        // its own job, so one round pays ONE materialization job (plus
-        // the cached-scan count above) instead of two
+        // LAZY checkpoint for the shrunken edge set. Under AQE the call
+        // itself runs the adaptive plan's query stages (the anti-join
+        // shuffles and any broadcast), so those jobs run at this line;
+        // only the final stage's blocks are filled later, by the eager
+        // degree checkpoint's job right below
         canon = checkpoint(
           canon
             .join(r.select(col("_v").as("_a")), Seq("_a"), "left_anti")

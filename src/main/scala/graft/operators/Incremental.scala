@@ -13,26 +13,16 @@ import org.apache.spark.sql.functions._
   * the same observable semantics as `whenMatchedUpdateAll /
   * whenNotMatchedInsertAll` for a unique-keyed source. It is a single
   * shuffle-on-key join (no driver-side loops), so it scales with the data.
+  *
+  * Every writer here commits through [[FileMerge]]'s one protocol: stage
+  * beside the table at `<table>_fmerge`, publish the manifest, roll
+  * forward. A whole-table rewrite ([[ingestIncremental]]) hides every
+  * live data entry; [[mergePartitionPruned]] stages only the touched
+  * `p=v` directories, each replacing its live namesake. Both run
+  * [[FileMerge.recoverFileMerge]] before reading, so a torn commit of
+  * any writer heals before it could be baked into a rewrite.
   */
 object Incremental {
-
-  /** Run EVERY writer's crash recovery on `path`, in dependency order:
-    * the whole-table swap first (it restores an absent live directory,
-    * which the other recoveries rename INTO), then the partition-scoped
-    * and file-scoped merge repairs. Each is a cheap no-op when its writer
-    * left no residue, and each ignores the others' artifacts — so any
-    * read-then-rewrite of a table with an unknown writer history MUST
-    * call this, not its own writer's recovery alone: a real table's
-    * lifecycle mixes writers (merge variants + compaction), and a repair
-    * that only knows its own crash states bakes another writer's torn
-    * commit into the rewrite. Returns true if anything was repaired.
-    */
-  def recoverAll(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val swap = recoverInterruptedSwap(spark, path)
-    val part = recoverPartitionedMerge(spark, path)
-    val file = FileMerge.recoverFileMerge(spark, path)
-    swap || part || file
-  }
 
   /** A1 — global max of the primary key (`utils.py:219`). None on empty. */
   def highWatermark(existing: DataFrame, pk: String): Option[Long] = {
@@ -168,7 +158,7 @@ object Incremental {
       pk: String,
       updates: Boolean
   ): DataFrame = {
-    recoverAll(spark, lakePath)
+    FileMerge.recoverFileMerge(spark, lakePath)
     val exists = {
       val p = new org.apache.hadoop.fs.Path(lakePath)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -181,9 +171,8 @@ object Incremental {
       // after an evolved file-granular/partition-scoped merge, and the
       // batch itself may add columns (mergeUnique unions them)
       val merged = merge(readEvolved(spark, lakePath), source, pk)
-      val staging = lakePath + "_staging"
-      merged.write.mode("overwrite").parquet(staging)
-      swapInStaging(spark, lakePath, staging)
+      merged.write.mode("overwrite").parquet(FileMerge.stagingPath(lakePath))
+      FileMerge.commitRewrite(spark, lakePath)
     } else {
       appendIncrement(source, readEvolved(spark, lakePath), pk, lakePath)
     }
@@ -203,15 +192,14 @@ object Incremental {
     *   2. reads ONLY those partitions (partition pruning: the scan lists
     *      just the matching `col=value` directories),
     *   3. merges the batch into them (same [[merge]] semantics as q20),
-    *   4. writes the merged partitions to a staging root and swaps each
-    *      partition directory in via rename-aside.
+    *   4. stages the merged partitions at `<table>_fmerge` and commits
+    *      them in one [[FileMerge]] commit: each staged `p=v` directory
+    *      replaces its live namesake.
     *
     * IO per batch is proportional to the touched partitions, not the
-    * table. Crash-safety is per-partition: every crash point leaves each
-    * partition either fully old or fully new (see
-    * [[recoverPartitionedMerge]]); a torn batch (some partitions swapped,
-    * some not) is repaired by replaying the batch — the merge is
-    * idempotent.
+    * table. The batch commits as a unit: a crash before the manifest
+    * leaves every partition old (the caller replays the batch), a crash
+    * after it rolls every touched partition forward.
     *
     * REQUIREMENT: `partitionCol` must be stable per `pk` (a key never
     * moves between partitions). That is the standard contract for
@@ -230,10 +218,7 @@ object Incremental {
     import org.apache.hadoop.fs.Path
     val live = new Path(lakePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // ALL writers' recoveries: a crashed whole-table swap (compaction)
-    // leaves the live dir absent — without repairing it first, the
-    // hasData probe below would initial-load one batch as the table
-    recoverAll(spark, lakePath)
+    FileMerge.recoverFileMerge(spark, lakePath)
 
     // The NULL guard runs BEFORE any branch: a null partition value
     // admitted at initial load would land in __HIVE_DEFAULT_PARTITION__
@@ -251,8 +236,8 @@ object Incremental {
       s"mergePartitionPruned: partition column '$partitionCol' would produce " +
         "directories Spark's partition discovery ignores")
 
-    // "Table exists" = has at least one partition directory (`col=value`,
-    // excluding the `_old_` swap asides). A bare _SUCCESS marker (what a
+    // "Table exists" = has at least one partition directory (`col=value`).
+    // A bare _SUCCESS marker (what a
     // zero-row partitioned write leaves — dynamic partitioning emits one
     // file per partition VALUE, so zero rows emit zero data files) must
     // not count: reading it back throws, and treating it as a live table
@@ -261,7 +246,7 @@ object Incremental {
       if (!fs.exists(live)) Nil
       else fs.listStatus(live).toSeq.filter { st =>
         val n = st.getPath.getName
-        st.isDirectory && n.contains("=") && !n.startsWith("_old_")
+        st.isDirectory && n.contains("=") && !n.startsWith("_")
       }
     def hasData: Boolean = partitionDirs.nonEmpty
     // the ONLY directory state that may be silently cleared before an
@@ -325,192 +310,14 @@ object Incremental {
       .where(col(partitionCol).isin(touched.toIndexedSeq: _*))
     val merged = merge(existingTouched, source, pk)
 
-    val stagingRoot = new Path(lakePath + "_pstaging")
-    merged.write.mode("overwrite").partitionBy(partitionCol).parquet(stagingRoot.toString)
-
-    // Swap each staged partition dir into the live table. Dir names come
-    // from the staging listing, so Hive value escaping is already done by
-    // the writer; the rename-aside dirs get a '_' prefix, which partition
-    // discovery ignores (same convention as _SUCCESS/_temporary).
-    fs.listStatus(stagingRoot)
-      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      .foreach(st => swapPartitionDir(fs, live, st.getPath))
-    fs.delete(stagingRoot, true)
-    // post-swap files carry the merged schema — reuse it, don't re-infer
+    // staged dir names come from the writer, so Hive value escaping is
+    // already done; the commit's `_old_` asides are invisible to
+    // partition discovery (same convention as _SUCCESS/_temporary)
+    merged.write.mode("overwrite").partitionBy(partitionCol)
+      .parquet(FileMerge.stagingPath(lakePath))
+    FileMerge.commit(spark, lakePath, Nil)
+    // committed files carry the merged schema — reuse it, don't re-infer
     spark.read.schema(pinOf(merged.schema)).parquet(lakePath)
-  }
-
-  /** Rename-aside swap of ONE staged partition directory into the live
-    * table: live/p=v → live/_old_p=v, staging/p=v → live/p=v, delete the
-    * aside. Same crash contract as [[swapInStaging]], at partition scope.
-    */
-  private def swapPartitionDir(
-      fs: org.apache.hadoop.fs.FileSystem,
-      liveTable: org.apache.hadoop.fs.Path,
-      stagedPart: org.apache.hadoop.fs.Path
-  ): Unit = {
-    val name = stagedPart.getName
-    val livePart = new org.apache.hadoop.fs.Path(liveTable, name)
-    val aside = new org.apache.hadoop.fs.Path(liveTable, "_old_" + name)
-    if (fs.exists(aside) && !fs.delete(aside, true))
-      throw new java.io.IOException(s"swapPartitionDir: could not clear stale aside $aside")
-    val hadLive = fs.exists(livePart)
-    if (hadLive && !fs.rename(livePart, aside)) {
-      // partition intact; the batch will replay and recompute staging —
-      // drop the superseded staged copy so recovery can never restore it
-      fs.delete(stagedPart, true)
-      throw new java.io.IOException(
-        s"swapPartitionDir: rename $livePart -> $aside failed; partition untouched")
-    }
-    if (!fs.rename(stagedPart, livePart)) {
-      val rolledBack = hadLive && fs.rename(aside, livePart)
-      if (rolledBack) fs.delete(stagedPart, true)
-      throw new java.io.IOException(
-        s"swapPartitionDir: rename $stagedPart -> $livePart failed; " +
-          (if (rolledBack) "previous partition restored"
-           else if (hadLive) s"MANUAL RECOVERY NEEDED: previous data at $aside, new at $stagedPart"
-           else s"no previous partition existed; new data remains at $stagedPart"))
-    }
-    fs.delete(aside, true) // best effort; recovery deletes a leftover aside
-  }
-
-  /** Repair a [[mergePartitionPruned]] interrupted mid-swap. Per
-    * partition, in preference order: a staged copy with no live dir is
-    * the fully-written replacement (staging is complete before any swap
-    * starts) — rename it in; an `_old_` aside with no live dir is the
-    * pre-merge table stranded between the two renames — restore it; an
-    * aside WITH a live dir is a completed swap's leftover — delete it.
-    * Remaining staged dirs duplicate already-swapped partitions or belong
-    * to a batch the caller will replay; the staging root is dropped.
-    * Returns true if anything was repaired.
-    */
-  def recoverPartitionedMerge(
-      spark: org.apache.spark.sql.SparkSession,
-      lakePath: String
-  ): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(lakePath)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var acted = false
-    val stagingRoot = new Path(lakePath + "_pstaging")
-    if (fs.exists(stagingRoot)) {
-      fs.listStatus(stagingRoot)
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-        .foreach { st =>
-          val target = new Path(live, st.getPath.getName)
-          if (!fs.exists(target)) {
-            if (!fs.rename(st.getPath, target))
-              throw new java.io.IOException(
-                s"recoverPartitionedMerge: rename ${st.getPath} -> $target failed")
-            acted = true
-          }
-        }
-      fs.delete(stagingRoot, true)
-    }
-    if (fs.exists(live)) {
-      fs.listStatus(live)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("_old_"))
-        .foreach { st =>
-          val target = new Path(live, st.getPath.getName.stripPrefix("_old_"))
-          if (!fs.exists(target)) {
-            if (!fs.rename(st.getPath, target))
-              throw new java.io.IOException(
-                s"recoverPartitionedMerge: rename ${st.getPath} -> $target failed")
-            acted = true
-          } else {
-            fs.delete(st.getPath, true) // completed swap's leftover aside
-            acted = true
-          }
-        }
-    }
-    acted
-  }
-
-  /** Swap a fully-written staging directory into the live table path via
-    * rename-aside: live → live`_old`, staging → live, delete `_old`. A
-    * plain delete-then-rename leaves NO copy of the table if the process
-    * dies between the two steps; here every crash point leaves either the
-    * old table in place (before step 2) or the new one live, and a
-    * leftover `_old`/`_staging` directory is always a complete table, so
-    * recovery is a rename. (A table format's transaction log would make
-    * the flip truly atomic; this is the best a plain filesystem offers.)
-    */
-  def swapInStaging(
-      spark: org.apache.spark.sql.SparkSession,
-      livePath: String,
-      stagingPath: String
-  ): Unit = {
-    val live = new org.apache.hadoop.fs.Path(livePath)
-    val staging = new org.apache.hadoop.fs.Path(stagingPath)
-    val old = new org.apache.hadoop.fs.Path(livePath + "_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Hadoop rename signals most failures by RETURNING FALSE, not
-    // throwing — an unchecked rename would either bury staging inside a
-    // still-present live dir or delete the only surviving copy below.
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"swapInStaging: could not clear stale backup $old")
-    val hadLive = fs.exists(live)
-    if (hadLive && !fs.rename(live, old)) {
-      // the live table is intact and the caller will retry (recomputing
-      // staging), so the staging dir is superseded data — leaving it
-      // behind would let a LATER crash recovery restore this stale copy
-      // over a newer table (recoverInterruptedSwap globs _staging*)
-      fs.delete(staging, true)
-      throw new java.io.IOException(
-        s"swapInStaging: rename $live -> $old failed; table untouched at $live")
-    }
-    if (!fs.rename(staging, live)) {
-      // roll the old table back into place so readers never see a gap
-      val rolledBack = hadLive && fs.rename(old, live)
-      // same reasoning as above: once the previous table is restored the
-      // staging copy is superseded (the failed batch replays) — but if
-      // rollback ALSO failed, staging may be the only complete copy; keep it
-      if (rolledBack) fs.delete(staging, true)
-      throw new java.io.IOException(
-        s"swapInStaging: rename $staging -> $live failed; " +
-          (if (rolledBack) s"previous table restored at $live"
-           else if (hadLive) s"MANUAL RECOVERY NEEDED: previous table at $old, new data at $staging"
-           else s"no previous table existed; new data remains at $staging"))
-    }
-    fs.delete(old, true) // best effort; a leftover _old is a complete old copy
-  }
-
-  /** Recover from a crash that interrupted [[swapInStaging]]: if the live
-    * path is missing but a complete `_old` (pre-swap table) or `_staging`
-    * (fully-written replacement) directory survives, rename it back into
-    * place. Callers that treat "live path absent" as "table empty" MUST
-    * run this first — otherwise a replayed batch silently re-initializes
-    * the table from one micro-batch and strands the full history in the
-    * leftover directory. Returns true if a recovery rename happened.
-    */
-  def recoverInterruptedSwap(
-      spark: org.apache.spark.sql.SparkSession,
-      livePath: String
-  ): Boolean = {
-    val live = new org.apache.hadoop.fs.Path(livePath)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(live)) return false
-    // Prefer the NEWEST surviving copy. A lexicographic "first staging
-    // match" is wrong twice over: leftover staging dirs from older
-    // rolled-back batches would win over the batch that actually crashed
-    // mid-swap, and "_staging_10" sorts before "_staging_9". Rank all
-    // candidates by modification time (directory mtimes survive rename on
-    // every Hadoop FS we target), breaking ties in favor of staging —
-    // staging holds post-merge data, _old the pre-merge table.
-    val stagings = Option(fs.globStatus(new org.apache.hadoop.fs.Path(livePath + "_staging*")))
-      .map(_.toSeq).getOrElse(Nil)
-    val olds = Option(fs.globStatus(new org.apache.hadoop.fs.Path(livePath + "_old")))
-      .map(_.toSeq).getOrElse(Nil)
-    val ranked = (stagings.map(st => (st, 1)) ++ olds.map(st => (st, 0)))
-      .sortBy { case (st, isStaging) => (-st.getModificationTime, -isStaging) }
-    ranked.headOption match {
-      case Some((src, _)) =>
-        if (!fs.rename(src.getPath, live))
-          throw new java.io.IOException(
-            s"recoverInterruptedSwap: rename ${src.getPath} -> $live failed")
-        true
-      case None => false
-    }
   }
 
   /** One row per key, deterministically (greatest full-row struct wins). */

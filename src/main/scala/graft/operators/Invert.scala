@@ -112,8 +112,10 @@ object Invert {
       .orderBy(col("doc_id"))
   }
 
-  /** Persist a built index RANGE-CLUSTERED on `term` (crash-safe staged
-    * swap, the [[Similarity.ivfBuild]] protocol): each parquet file —
+  /** Persist a built index RANGE-CLUSTERED on `term`, committed as a
+    * whole-table rewrite through [[FileMerge]]'s protocol (every index
+    * file replaced at once; [[appendToIndex]]'s replay markers stay, so a
+    * replayed append id still skips): each parquet file —
     * and each row group inside it — holds a disjoint, sorted term
     * range, so a search's `term IN (…)` predicate, pushed to the scan
     * (`PushedFilters`), lets parquet's row-group statistics skip
@@ -131,23 +133,16 @@ object Invert {
   ): Unit = {
     val nFiles =
       if (files > 0) files else math.max(1, spark.sparkContext.defaultParallelism)
-    // heal a prior build's torn swap before replacing the index
-    Incremental.recoverAll(spark, indexPath)
-    val staging = indexPath + "_staging"
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(staging)) &&
-      !fs.delete(new org.apache.hadoop.fs.Path(staging), true))
-      throw new java.io.IOException(s"writeIndex: could not clear stale staging $staging")
-    Scale.writeRangeClustered(index, staging, "term", nFiles)
-    Incremental.swapInStaging(spark, indexPath, staging)
+    FileMerge.recoverFileMerge(spark, indexPath)
+    Scale.writeRangeClustered(index, FileMerge.stagingPath(indexPath), "term", nFiles)
+    FileMerge.commitRewrite(spark, indexPath)
   }
 
   /** Open a persisted index. Searches over this plan get the IN-list
     * term predicate pushed into the parquet scan (see [[writeIndex]]).
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String): DataFrame = {
-    Incremental.recoverAll(spark, indexPath)
+    FileMerge.recoverFileMerge(spark, indexPath)
     spark.read.parquet(indexPath)
   }
 
@@ -157,7 +152,7 @@ object Invert {
     * all exceed the indexed corpus's lands entirely in NEW blocks: its
     * posting rows cannot collide with any existing row, so maintenance
     * is a pure crash-safe file APPEND ([[FileMerge.appendStaged]]'s
-    * marker-last protocol, idempotent under `commitId` replay) — no
+    * staged-marker commit, idempotent under `commitId` replay) — no
     * read-modify-write of the index, ever. The appended files are
     * term-range-clustered within the batch, so seeks keep row-group
     * pruning; per-term postings simply span one more file per batch
@@ -183,7 +178,7 @@ object Invert {
       files: Int = 0,
       commitId: Option[String] = None
   ): Boolean = {
-    Incremental.recoverAll(spark, indexPath)
+    FileMerge.recoverFileMerge(spark, indexPath)
     // replay probe FIRST: a replayed batch is already part of the index,
     // so the monotone check below would (correctly) reject it — but a
     // replay must be a silent no-op, not an error

@@ -353,10 +353,10 @@ object Similarity {
   //       the coarse quantizer itself, tiny by construction, stored
   //       alongside so the index is self-contained.
   //
-  // Both tables commit via [[Incremental.swapInStaging]] and probes run
-  // [[Incremental.recoverAll]] first, like every other read-then-rewrite
-  // site — a crashed rebuild or compaction of the postings table heals
-  // before any file listing.
+  // A build commits both tables in one [[FileMerge]] commit of the index
+  // directory; appends and compactions commit into the postings table.
+  // Probes run [[FileMerge.recoverFileMerge]] on both paths first, so a
+  // crashed rebuild, append or compaction heals before any file listing.
   // ---------------------------------------------------------------------
 
   private def postingsPath(indexPath: String): String = s"$indexPath/postings"
@@ -367,9 +367,9 @@ object Similarity {
     * ([[ivfAssign]]), and the (centroid_id, id, vector) postings land
     * range-clustered on `centroid_id` across `files` files (0 = the
     * cluster's default parallelism). Crash-safe as a UNIT: postings and
-    * centroids are both written under one staging directory and the
-    * whole index directory is swapped in with a single
-    * [[Incremental.swapInStaging]] — two separate swaps would open a
+    * centroids are both staged at `<indexPath>_fmerge` and replace their
+    * live namesakes in ONE [[FileMerge]] commit (a whole-table rewrite
+    * of the index directory) — two separate commits would open a
     * window where new postings (bucketed against new centroids) pair
     * with old centroid vectors, a torn state no recovery could detect
     * because each half looks individually healthy.
@@ -398,17 +398,11 @@ object Similarity {
       .select(
         (col("centroid_id").cast("long").as("centroid_id") +: col(idCol) +: col(vecCol) +:
           metaCols.map(col)): _*)
-    // heal a prior build's torn whole-index swap before replacing it
-    Incremental.recoverAll(spark, indexPath)
-    val staging = indexPath + "_staging"
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(staging)) &&
-      !fs.delete(new org.apache.hadoop.fs.Path(staging), true))
-      throw new java.io.IOException(s"ivfBuild: could not clear stale staging $staging")
+    FileMerge.recoverFileMerge(spark, indexPath)
+    val staging = FileMerge.stagingPath(indexPath)
     // the two staged tables are independent jobs — write them
     // concurrently so the tiny centroid write rides the postings
-    // write's tail (guide §2.6); the swap still happens only after BOTH
+    // write's tail (guide §2.6); the commit still happens only after BOTH
     concurrentActions(
       () => Scale.writeRangeClustered(postings, postingsPath(staging), "centroid_id", nFiles),
       () => centroids
@@ -416,13 +410,13 @@ object Similarity {
         .write
         .mode("overwrite")
         .parquet(centroidsPath(staging)))
-    Incremental.swapInStaging(spark, indexPath, staging)
+    FileMerge.commitRewrite(spark, indexPath)
   }
 
   /** Run independent staged ACTIONS (parquet writes of unrelated
     * tables) from a small thread pool and wait for all — guide §2.6's
     * "overlap independent jobs" applied to the index builders' staging
-    * writes: the whole-index swap needs every table written, but
+    * writes: the whole-index commit needs every table written, but
     * nothing orders the writes among themselves. Failures propagate
     * unwrapped; the pool always shuts down.
     */
@@ -472,10 +466,9 @@ object Similarity {
       files: Int = 0,
       commitId: Option[String] = None
   ): Boolean = {
-    // whole-index swap first, then the sub-tables' writers (appendStaged
-    // runs the postings recovery itself) — same order as the probe
-    Incremental.recoverAll(spark, indexPath)
-    Incremental.recoverAll(spark, centroidsPath(indexPath))
+    // a crashed rebuild first (appendStaged runs the postings recovery
+    // itself) — same order as the probe
+    FileMerge.recoverFileMerge(spark, indexPath)
     val cents = spark.read.parquet(centroidsPath(indexPath))
     // the persisted postings schema is the contract: an index built
     // with metaCols (filtered probes) must keep receiving those
@@ -509,17 +502,17 @@ object Similarity {
   /** Re-cluster the postings table after a run of [[ivfAppend]] batches:
     * appended files' centroid ranges interleave with the initial
     * layout's, so probes read more files than the probed buckets strictly
-    * need. A clustered compaction ([[graft.sources.Lake.compact]], same
-    * crash-safe staging swap) restores disjoint per-file ranges — and
-    * probe IO proportional to the probed buckets. Returns the new file
-    * count.
+    * need. A clustered compaction ([[graft.sources.Lake.compact]], a
+    * whole-table rewrite of the postings table that keeps its append
+    * replay markers) restores disjoint per-file ranges — and probe IO
+    * proportional to the probed buckets. Returns the new file count.
     */
   def ivfCompact(
       spark: SparkSession,
       indexPath: String,
       targetFileBytes: Long = 128L * 1024 * 1024
   ): Int = {
-    Incremental.recoverAll(spark, indexPath)
+    FileMerge.recoverFileMerge(spark, indexPath)
     graft.sources.Lake.compact(
       spark, postingsPath(indexPath), targetFileBytes, clusterBy = Some("centroid_id"))
   }
@@ -659,12 +652,11 @@ object Similarity {
         throw new IllegalArgumentException(
           s"$caller: query column must be ARRAY<FLOAT>, got ${other.simpleString}")
     }
-    // whole-index swap recovery first (a crashed ivfBuild), then each
-    // sub-table's own writers (a future compaction/file merge on either)
-    Incremental.recoverAll(spark, indexPath)
+    // a crashed rebuild first, then the postings table's appends and
+    // compactions
+    FileMerge.recoverFileMerge(spark, indexPath)
     val post = postingsPath(indexPath)
-    Incremental.recoverAll(spark, post)
-    Incremental.recoverAll(spark, centroidsPath(indexPath))
+    FileMerge.recoverFileMerge(spark, post)
     // enforce the ONE-row contract: a multi-row query would silently
     // pair every candidate with every query vector and return a result
     // of mixed similarities (possibly the same id twice)
@@ -814,10 +806,9 @@ object Similarity {
       excludeSelf: Boolean
   ): DataFrame = {
     require(nprobe > 0, "indexed batch probe: nprobe must be positive")
-    Incremental.recoverAll(spark, indexPath)
+    FileMerge.recoverFileMerge(spark, indexPath)
     val post = postingsPath(indexPath)
-    Incremental.recoverAll(spark, post)
-    Incremental.recoverAll(spark, centroidsPath(indexPath))
+    FileMerge.recoverFileMerge(spark, post)
     val q = Checkpoints.checkpoint(
       queries.select(col(qIdCol).as("query_id"), col(qVecCol).as("_qvec")))
     val cents = broadcast(spark.read.parquet(centroidsPath(indexPath)))
@@ -1624,8 +1615,8 @@ object Similarity {
     *   centroids/ the coarse quantizer ([[ivfBuild]]'s table);
     *   codebook/  the PQ codebook ([[pqBuild]] output, m·k rows).
     *
-    * All three land under ONE staging directory and swap in with a
-    * single [[Incremental.swapInStaging]] — codes are only meaningful
+    * All three are staged at `<indexPath>_fmerge` and replace their live
+    * namesakes in ONE [[FileMerge]] commit — codes are only meaningful
     * against the codebook that trained them, so a torn state where new
     * codes pair with an old codebook must be unrepresentable (the
     * [[ivfBuild]] whole-index argument, now with three tables).
@@ -1662,13 +1653,8 @@ object Similarity {
       .join(codeArr, idCol)
       .select(col("centroid_id").cast("long").as("centroid_id"), col(idCol),
         col("codes"), col("nrm"), col("qn"), col("r"))
-    Incremental.recoverAll(spark, indexPath)
-    val staging = indexPath + "_staging"
-    val fs = new org.apache.hadoop.fs.Path(staging)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(staging)) &&
-      !fs.delete(new org.apache.hadoop.fs.Path(staging), true))
-      throw new java.io.IOException(s"ivfPqBuild: could not clear stale staging $staging")
+    FileMerge.recoverFileMerge(spark, indexPath)
+    val staging = FileMerge.stagingPath(indexPath)
     // three independent staged tables, three concurrent writes (the
     // ivfBuild move): the metadata-scale centroid/codebook writes ride
     // the postings write's tail instead of serializing after it
@@ -1678,7 +1664,7 @@ object Similarity {
         .select(col(centIdCol).cast("long").as("centroid_id"), col(centVecCol).as("centroid"))
         .write.mode("overwrite").parquet(centroidsPath(staging)),
       () => cb.write.mode("overwrite").parquet(codebookPath(staging)))
-    Incremental.swapInStaging(spark, indexPath, staging)
+    FileMerge.commitRewrite(spark, indexPath)
   }
 
   /** Incrementally extend the persisted IVF-PQ index with a batch of
@@ -1706,9 +1692,7 @@ object Similarity {
       files: Int = 0,
       commitId: Option[String] = None
   ): Boolean = {
-    Incremental.recoverAll(spark, indexPath)
-    Incremental.recoverAll(spark, centroidsPath(indexPath))
-    Incremental.recoverAll(spark, codebookPath(indexPath))
+    FileMerge.recoverFileMerge(spark, indexPath)
     val cents = spark.read.parquet(centroidsPath(indexPath))
     // m·k metadata scale: localize instead of checkpointing — the m
     // inference below is then job-free and the coding join broadcasts
@@ -1815,11 +1799,9 @@ object Similarity {
       case other => throw new IllegalArgumentException(
         s"ivfPqTopK: query column must be ARRAY<FLOAT>, got ${other.simpleString}")
     }
-    Incremental.recoverAll(spark, indexPath)
+    FileMerge.recoverFileMerge(spark, indexPath)
     val post = postingsPath(indexPath)
-    Incremental.recoverAll(spark, post)
-    Incremental.recoverAll(spark, centroidsPath(indexPath))
-    Incremental.recoverAll(spark, codebookPath(indexPath))
+    FileMerge.recoverFileMerge(spark, post)
     val qRows = query.limit(2).collect()
     require(qRows.length == 1,
       s"ivfPqTopK: query must have exactly one row, got ${qRows.length}")
@@ -1992,7 +1974,7 @@ object Similarity {
     require(topK >= 1 && nprobe >= 1 && minFactor >= 1 && frac > 0.0,
       s"ivfPqShortlistFor: need topK/nprobe/minFactor >= 1 and frac > 0, " +
         s"got topK=$topK nprobe=$nprobe minFactor=$minFactor frac=$frac")
-    Incremental.recoverAll(spark, indexPath)
+    FileMerge.recoverFileMerge(spark, indexPath)
     val nPost = spark.read.parquet(postingsPath(indexPath)).count()
     val nCent = spark.read.parquet(centroidsPath(indexPath)).count()
     require(nCent > 0, s"ivfPqShortlistFor: empty centroid table at $indexPath")
@@ -2044,11 +2026,9 @@ object Similarity {
     require(shortlist >= topK,
       s"ivfPqTopKBatch: shortlist ($shortlist) must be at least topK ($topK)")
     require(nprobe >= 1, s"ivfPqTopKBatch: nprobe must be at least 1, got $nprobe")
-    Incremental.recoverAll(spark, indexPath)
+    FileMerge.recoverFileMerge(spark, indexPath)
     val post = postingsPath(indexPath)
-    Incremental.recoverAll(spark, post)
-    Incremental.recoverAll(spark, centroidsPath(indexPath))
-    Incremental.recoverAll(spark, codebookPath(indexPath))
+    FileMerge.recoverFileMerge(spark, post)
     val storedCb = localized(spark.read.parquet(codebookPath(indexPath)))
     val storedM = storedCb.agg(max(col("sub"))).head().getInt(0) + 1
     require(m == storedM,
@@ -2232,9 +2212,8 @@ object Similarity {
       s"semDedupCandidates: threshold must be positive (the ub prune " +
         s"keeps every pair otherwise), got $threshold")
     require(subBlocks >= 1, "semDedupCandidates: subBlocks must be >= 1")
-    Incremental.recoverAll(spark, indexPath)
-    Incremental.recoverAll(spark, postingsPath(indexPath))
-    Incremental.recoverAll(spark, codebookPath(indexPath))
+    FileMerge.recoverFileMerge(spark, indexPath)
+    FileMerge.recoverFileMerge(spark, postingsPath(indexPath))
     val cb = localized(spark.read.parquet(codebookPath(indexPath)))
     val m = cb.agg(max(col("sub"))).head().getInt(0) + 1
     val kMax = cb.agg(max(col("cid"))).head().getLong(0) + 1
@@ -2365,9 +2344,8 @@ object Similarity {
       indexPath: String,
       relErrBound: Double = 0.5
   ): DataFrame = {
-    Incremental.recoverAll(spark, indexPath)
-    Incremental.recoverAll(spark, postingsPath(indexPath))
-    Incremental.recoverAll(spark, codebookPath(indexPath))
+    FileMerge.recoverFileMerge(spark, indexPath)
+    FileMerge.recoverFileMerge(spark, postingsPath(indexPath))
     val cb = localized(spark.read.parquet(codebookPath(indexPath)))
     val m = cb.agg(max(col("sub"))).head().getInt(0) + 1
     val batchStats = codesWithStats(

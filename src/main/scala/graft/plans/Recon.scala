@@ -1,16 +1,13 @@
 package graft.plans
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Reconciliation report, re-expressing `reporting_utils.py:31-89`:
   * per-table (source row count, lake row count, last-success ingestion
   * time, byte size), joined on `TableName` (J3) into one stakeholder
-  * sign-off table. Local filesystem stands in for S3 prefix walks.
+  * sign-off table. A Hadoop filesystem walk stands in for S3 prefix walks.
   */
 object Recon {
 
@@ -47,23 +44,26 @@ object Recon {
   }
 
   /** Per-table byte size: sum of file sizes under the table's directory
-    * (`reporting_utils.py:31-42`'s S3 prefix sum, locally).
+    * (`reporting_utils.py:31-42`'s S3 prefix sum), through the path's
+    * Hadoop filesystem. A checksummed local filesystem is read raw, so
+    * its `.crc` sidecars count as stored bytes. A missing directory
+    * reports 0.
     */
   def sizeReport(spark: SparkSession, tableDirs: Map[String, String]): DataFrame = {
     import spark.implicits._
+    def bytes(dir: String): Long = {
+      val p = new Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+        case c: ChecksumFileSystem => c.getRawFileSystem
+        case f                     => f
+      }
+      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    }
     tableDirs.toSeq
-      .map { case (name, dir) => (name, directoryBytes(Paths.get(dir))) }
+      .map { case (name, dir) => (name, bytes(dir)) }
       .sortBy(_._1)
       .toDF("TableName", "TableSize")
   }
-
-  def directoryBytes(dir: Path): Long =
-    if (!Files.exists(dir)) 0L
-    else
-      Files.walk(dir).iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .map(Files.size)
-        .sum
 
   /** Last-success execution time per table from the operational metastore
     * (`reporting_utils.py:45-60`): duration of the most recent SUCCESS run

@@ -668,7 +668,7 @@ object PipelineQueries {
     // as q75 — the physical index round trip must not change a single
     // neighbor. The index rebuilds per run (scratch dir) for determinism.
     "q76_ann_ivf_indexed" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q76", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q76", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfBuild(
         s, emb, "vec_id", "embedding",
@@ -705,7 +705,7 @@ object PipelineQueries {
     // probe. Must match q75/q76's oracle exactly — growing the index
     // incrementally may not change a single neighbor vs a full rebuild.
     "q78_ann_ivf_append" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q78", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q78", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfBuild(
         s, emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding",
@@ -726,7 +726,7 @@ object PipelineQueries {
     // replicates the whole per-query pipeline (probe rank, bucket
     // candidates, rounded-cosine re-rank) for each of the 4 queries.
     "q79_ann_ivf_batch" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q79", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q79", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfBuild(
         s, emb, "vec_id", "embedding",
@@ -790,7 +790,7 @@ object PipelineQueries {
     // wrong contract. Same index build as q76; same oracle pipeline but
     // a rounded-cosine threshold instead of LIMIT.
     "q83_ann_ivf_radius" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q83", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q83", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfBuild(
         s, emb, "vec_id", "embedding",
@@ -866,7 +866,7 @@ object PipelineQueries {
     // of the 4 queries, one pass over the persisted index — q79's batch
     // machinery with q83's radius predicate instead of the top-k window.
     "q87_ann_ivf_radius_batch" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q87", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q87", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfBuild(
         s, emb, "vec_id", "embedding",
@@ -960,7 +960,7 @@ object PipelineQueries {
         .orderBy("source")
     },
     "q93_ingest_dedup_e2e" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q93", Seq("_ingest_staging_0", "_ingest_staging_1"))
+      val tmp = freshScratch(s, dir, "q93", Seq("_fmerge"))
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       graft.streaming.Streams.ingestBatchDeduped(
         s, docs.where(col("doc_id") % 2 === 0), "doc_id", "text", tmp, 0L)
@@ -1110,14 +1110,14 @@ object PipelineQueries {
     },
     // The PERSISTED index lifecycle under the oracle (the q76 pattern
     // for the inverted index): build on the first half of the corpus,
-    // writeIndex to scratch (term-range-clustered staged swap),
+    // writeIndex to scratch (term-range-clustered staged commit),
     // appendToIndex the second half — deliberately starting mid-block,
     // exercising the doc-level max_doc watermark — then answer q105's
     // phrase search from readIndex. Matching q105's oracle proves the
     // whole physical round trip (write → footer watermark → append →
     // term-IN pushdown seek) changes no answer.
     "q108_index_persisted" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q108", Seq("_staging", "_fmerge"))
+      val tmp = freshScratch(s, dir, "q108", Seq("_fmerge"))
       val docs = t(s, dir, "documents")
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
       graft.operators.Invert.writeIndex(
@@ -1211,7 +1211,7 @@ object PipelineQueries {
     // pruning, and the filter runs BEFORE the top-k cut
     // (see Similarity.ivfTopKIndexedFiltered)
     "q116_ann_filtered" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q116", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q116", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfBuild(
         s, emb, "vec_id", "embedding",
@@ -1230,7 +1230,7 @@ object PipelineQueries {
     // persisted face q108 left spec-only (phrase search was oracled,
     // BM25 was not).
     "q118_bm25_persisted" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q118", Seq("_staging", "_fmerge"))
+      val tmp = freshScratch(s, dir, "q118", Seq("_fmerge"))
       val docs = t(s, dir, "documents")
       val cut = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
       graft.operators.Invert.writeIndex(
@@ -1711,7 +1711,7 @@ object PipelineQueries {
     // rebuilt per run (scratch dir); oracle = q150's training replay
     // composed with q75's coarse CTEs verbatim.
     "q152_ann_ivfpq" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q152", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q152", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfPqBuild(
         s, emb, "vec_id", "embedding",
@@ -1747,7 +1747,7 @@ object PipelineQueries {
     // incrementally may not change a single neighbor vs a full
     // rebuild, so q152's oracle gates it verbatim.
     "q155_ann_ivfpq_append" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q155", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q155", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfPqBuild(
         s, emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding",
@@ -1838,7 +1838,7 @@ object PipelineQueries {
     // — the index must be built with q89's centroids (vec_id < 16) for
     // the within-cluster pair spaces to coincide.
     "q158_semdedup_indexed" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q158", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q158", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfPqBuild(
         s, emb, "vec_id", "embedding",
@@ -1911,7 +1911,7 @@ object PipelineQueries {
     // path verbatim — the q76/q108 persisted-lifecycle discipline
     // applied to retrieval fusion.
     "q164_hybrid_rrf_indexed" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q164", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q164", Seq("_fmerge"))
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
       Similarity.ivfBuild(
@@ -2234,7 +2234,7 @@ object PipelineQueries {
     // — so the batch machinery (windows, dt join, union read) is under
     // the hash gate, not just spec-gated against the single face.
     "q174_ann_ivfpq_batch" -> { (s, dir) =>
-      val tmp = freshScratch(s, dir, "q174", Seq("_staging"))
+      val tmp = freshScratch(s, dir, "q174", Seq("_fmerge"))
       val emb = t(s, dir, "embeddings")
       Similarity.ivfPqBuild(
         s, emb, "vec_id", "embedding",

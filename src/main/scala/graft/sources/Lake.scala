@@ -172,10 +172,10 @@ object Lake {
     * egress), so `format("delta")` can never bind here. The reader
     * therefore tries Delta and falls back; deployments WITH
     * delta-spark on the classpath get the real transaction-log read,
-    * and the staging-swap upsert below covers merge semantics. The
+    * and the staged-commit upsert covers merge semantics. The
     * reader tries `format("delta")` and falls back to the parquet files
     * of the table directory (same rows for an append-only table; merge
-    * history is handled by our own staging-swap upsert, see
+    * history is handled by our own staged-commit upsert, see
     * graft.streaming.Streams). Errors surface as None — the reference's
     * `-1` sentinel (`utils.py:192`) made typed.
     */
@@ -356,9 +356,12 @@ object Lake {
   /** Small-file compaction (the OPTIMIZE of table formats, for a plain
     * parquet lake): incremental appends accumulate files far smaller than
     * a scan-efficient split, inflating task counts and file-listing cost.
-    * Rewrites the table into `ceil(bytes / targetFileBytes)` files via the
-    * crash-safe staging swap, returns the new file count. Readers never
-    * observe a missing table (see `Incremental.swapInStaging`).
+    * Rewrites the table into `ceil(bytes / targetFileBytes)` files and
+    * commits them with [[graft.operators.FileMerge]]'s protocol as a
+    * whole-table rewrite, returns the new file count. Every data file is
+    * replaced; `_`-prefixed bookkeeping (a streaming ledger, append
+    * replay markers) stays where it is, so redelivered batches and
+    * replayed appends keep skipping after a compaction.
     */
   def compact(
       spark: SparkSession,
@@ -368,20 +371,16 @@ object Lake {
       clusterBy: Option[String] = None
   ): Int = {
     require(targetFileBytes > 0)
-    // EVERY writer's interrupted state must be repaired first, not just
-    // the whole-table swap's: a torn file-granular or partition-pruned
-    // merge leaves rows only in hidden asides/staging that the read below
-    // skips — compacting over that bakes in the missing rows and the
-    // leftover staging would later roll forward ONTO the compacted table,
-    // resurrecting stale rows as duplicate keys.
-    graft.operators.Incremental.recoverAll(spark, path)
+    // a torn commit must be rolled forward first: it leaves rows only in
+    // hidden asides/staging that the read below skips — compacting over
+    // that bakes in the missing rows
+    graft.operators.FileMerge.recoverFileMerge(spark, path)
     // size via the Hadoop FS of the path itself — a local-filesystem walk
     // would read 0 bytes for hdfs://, s3a://, ... and compact to ONE file
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val staging = path + "_staging_compact"
     // the ON-DISK layout decides, not the arguments: compacting a
     // Hive-partitioned table without partitionCols would silently flatten
     // its directories (and partition-type inference corrupts
@@ -416,19 +415,8 @@ object Lake {
         df.repartition(nFiles, partitionCols.map(col): _*)
           .write.partitionBy(partitionCols: _*)
     }
-    writer.mode("overwrite").parquet(staging)
-    // a streaming-upsert target keeps its exactly-once ledger inside the
-    // table directory; the whole-dir swap below would drop it and every
-    // redelivered batch would re-merge (idempotent, but degraded) —
-    // carry it across
-    val ledger = new org.apache.hadoop.fs.Path(p, "_commits")
-    if (fs.exists(ledger)) {
-      val dest = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(staging), "_commits")
-      if (!org.apache.hadoop.fs.FileUtil
-          .copy(fs, ledger, fs, dest, false, spark.sparkContext.hadoopConfiguration))
-        throw new java.io.IOException(s"compact: could not carry ledger $ledger into $dest")
-    }
-    graft.operators.Incremental.swapInStaging(spark, path, staging)
+    writer.mode("overwrite").parquet(graft.operators.FileMerge.stagingPath(path))
+    graft.operators.FileMerge.commitRewrite(spark, path)
     nFiles
   }
 

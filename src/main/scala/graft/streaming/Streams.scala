@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Checkpoints, Incremental}
+import graft.operators.{Checkpoints, FileMerge, Incremental}
 
 /** Structured-Streaming face of the reference's incremental path
   * (SURVEY.md §7 step 9): the batch CDC-lite of `utils.py:212-246`
@@ -49,8 +49,8 @@ object Streams {
     * parquet table at `targetPath` (created on first batch) — the
     * streaming analogue of `utils.py:222-230`'s Delta MERGE. Since the
     * target is both input and output of the merge, each batch writes to a
-    * staging directory and atomically swaps it in (what a table format's
-    * transaction log would do for us).
+    * staging directory and commits it through [[graft.operators.FileMerge]]
+    * (what a table format's transaction log would do for us).
     */
   def upsertStream(
       spark: SparkSession,
@@ -272,21 +272,19 @@ object Streams {
     * to shingle (< `n` tokens) skip the banding but are still covered by
     * the exact-digest guard, so they ingest once and never twice.
     *
-    * Commit protocol: survivors are staged beside the corpus, data files
-    * are MOVED in under batch-tagged names (Spark part names carry a task
-    * UUID, so a replayed attempt cannot collide with files an earlier
-    * crashed attempt already moved), and the ledger commits last. A
-    * replayed id in the ledger returns false having written nothing. A
-    * crash mid-move is healed by the replay itself: the docs already
-    * moved in ARE corpus now, so the deterministic recompute drops
-    * exactly them (digest + banding guards) and appends only the docs the
-    * crash lost — per-document exactly-once without a swap of the
-    * (append-only, arbitrarily large) corpus directory.
+    * Commit protocol: survivors are staged at `<corpus>_fmerge` under
+    * batch-tagged names (`ingest_<batchId>_<part>`), the updated
+    * `_commits` ledger is staged beside them, and ONE
+    * [[graft.operators.FileMerge]] commit publishes both — no existing
+    * corpus file is touched, so the commit costs the batch, never the
+    * (append-only, arbitrarily large) corpus. A crash before the manifest
+    * discards the staging and the replay recomputes the batch; a crash
+    * after it rolls data and ledger forward together, and the replay's
+    * id is then in the ledger: it returns false having written nothing.
     *
     * The batch runs in one release scope
     * ([[graft.operators.Checkpoints.scoped]]): every cache and checkpoint
-    * it makes is released once its files are moved in, before the
-    * ledger commits.
+    * it makes is released once its files are staged.
     */
   def ingestBatchDeduped(
       spark: SparkSession,
@@ -303,7 +301,7 @@ object Streams {
     import graft.operators.Dedup
     val target = new Path(targetPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Incremental.recoverAll(spark, targetPath)
+    FileMerge.recoverFileMerge(spark, targetPath)
     val committed = readLedger(fs, target)
     if (committed.contains(batchId)) return false
 
@@ -319,32 +317,22 @@ object Streams {
       val survivors =
         if (!hasData) inner
         else
-          // the novelty filter's digest-before-banding ordering is the
-          // crash-replay keystone: docs an earlier crashed attempt already
-          // MOVED into the corpus are dropped from the batch before the
-          // banding join, so the replay re-enters the incremental join
-          // with disjoint id spaces (see Dedup.noveltyFilter)
+          // the novelty filter's digest-before-banding ordering keeps a
+          // re-executed batch whose docs are already corpus (its ledger
+          // entry lost) from double-counting them in the banding join
+          // (see Dedup.noveltyFilter)
           Dedup.noveltyFilter(
             spark.read.parquet(targetPath), inner, idCol, textCol,
             n, threshold, bands, rowsPerBand)
 
       val staged = Checkpoints.cache(survivors)
       if (staged.count() > 0) {
-        val staging = new Path(targetPath + s"_ingest_staging_$batchId")
-        fs.delete(staging, true) // orphan of a crashed earlier attempt
-        staged.write.mode("overwrite").parquet(staging.toString)
-        if (!fs.exists(target)) fs.mkdirs(target)
-        fs.listStatus(staging)
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-          .foreach { st =>
-            val dest = new Path(target, s"ingest_${batchId}_${st.getPath.getName}")
-            if (!fs.rename(st.getPath, dest))
-              throw new java.io.IOException(s"ingest commit: could not move ${st.getPath} to $dest")
-          }
-        fs.delete(staging, true)
-      } else if (!fs.exists(target)) fs.mkdirs(target)
+        staged.write.mode("overwrite").parquet(FileMerge.stagingPath(targetPath))
+        FileMerge.prefixStaged(spark, targetPath, s"ingest_${batchId}_")
+      }
     }
-    writeLedger(fs, target, committed.add(batchId))
+    stageLedger(spark, targetPath, committed.add(batchId))
+    FileMerge.commit(spark, targetPath, Nil)
     true
   }
 
@@ -363,7 +351,7 @@ object Streams {
   def corpusAsOf(spark: SparkSession, targetPath: String, maxBatchId: Long): DataFrame = {
     val target = new Path(targetPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Incremental.recoverAll(spark, targetPath)
+    FileMerge.recoverFileMerge(spark, targetPath)
     // refuse, never fabricate: below the squash floor the per-batch
     // files no longer exist, so a filter there would silently return a
     // WRONG snapshot (the squashed base aggregates every batch <= floor)
@@ -424,15 +412,14 @@ object Streams {
     * squash point is recorded in the `_asof_floor` marker and
     * [[corpusAsOf]] refuses snapshots below it: squashed history is
     * DECLARED gone, never silently wrong (the same trade a table
-    * format's checkpoint-plus-vacuum makes). The `_commits` ledger
-    * rides along, so redelivered batch ids still skip.
+    * format's checkpoint-plus-vacuum makes).
     *
-    * Crash-safe via the same staging swap as every whole-table writer
-    * here ([[graft.operators.Incremental.swapInStaging]]): kept batch
-    * files are COPIED into staging (the live table stays intact until
-    * the atomic flip), so size `upToBatchId` near the head of the
-    * stream — the copy cost is the unsquashed tail, the rewrite cost
-    * the squashed base. Single writer per corpus, as everywhere.
+    * Crash-safe via [[graft.operators.FileMerge]]'s commit: the squashed
+    * base and the new `_asof_floor` are staged, and the commit hides
+    * only the squashed files (the floor replaces its live namesake).
+    * Kept batch files and the `_commits` ledger are never touched, so
+    * redelivered batch ids still skip and the cost is the squashed base
+    * alone. Single writer per corpus, as everywhere.
     *
     * Returns the number of squashed base files written.
     */
@@ -445,48 +432,24 @@ object Streams {
     require(upToBatchId >= 0, s"upToBatchId must be a committed batch id, got $upToBatchId")
     require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
     val target = new Path(targetPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = target.getFileSystem(conf)
-    Incremental.recoverAll(spark, targetPath)
-    val files = fs.listStatus(target)
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-    val (squash, keep) =
-      files.partition(st => batchTagOf(st.getPath.getName).forall(_ <= upToBatchId))
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    FileMerge.recoverFileMerge(spark, targetPath)
+    val squash = fs.listStatus(target).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && batchTagOf(n).forall(_ <= upToBatchId)
+    }
     if (squash.isEmpty) return 0
     val newFloor = math.max(upToBatchId, readAsOfFloor(fs, target))
-    val staging = new Path(targetPath + "_staging_compactingest")
-    fs.delete(staging, true) // orphan of a crashed earlier attempt
     val bytes = squash.map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     spark.read.parquet(squash.map(_.getPath.toString).toIndexedSeq: _*)
       .repartition(nFiles)
-      .write.mode("overwrite").parquet(staging.toString)
+      .write.mode("overwrite").parquet(FileMerge.stagingPath(targetPath))
     // tag the squashed base with the squash-point id: member of every
     // snapshot >= upToBatchId, and snapshots below are floor-refused
-    fs.listStatus(staging)
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-      .foreach { st =>
-        val dest = new Path(staging, s"ingest_${upToBatchId}_${st.getPath.getName}")
-        if (!fs.rename(st.getPath, dest))
-          throw new java.io.IOException(s"compactIngestCorpus: rename ${st.getPath} -> $dest failed")
-      }
-    // COPY (not move) newer batches and the ledger: live must stay
-    // complete until the swap flips
-    keep.foreach { st =>
-      val dest = new Path(staging, st.getPath.getName)
-      if (!org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs, dest, false, conf))
-        throw new java.io.IOException(s"compactIngestCorpus: copy ${st.getPath} -> $dest failed")
-    }
-    val ledger = new Path(target, CommitsLedger)
-    if (fs.exists(ledger)) {
-      val dest = new Path(staging, CommitsLedger)
-      if (!org.apache.hadoop.fs.FileUtil.copy(fs, ledger, fs, dest, false, conf))
-        throw new java.io.IOException(s"compactIngestCorpus: copy $ledger -> $dest failed")
-    }
-    val out = fs.create(new Path(staging, AsOfFloor), true)
-    try out.write(s"$newFloor\n".getBytes("UTF-8"))
-    finally out.close()
-    Incremental.swapInStaging(spark, targetPath, staging.toString)
+    FileMerge.prefixStaged(spark, targetPath, s"ingest_${upToBatchId}_")
+    FileMerge.stageFile(spark, targetPath, AsOfFloor, s"$newFloor\n")
+    FileMerge.commit(spark, targetPath, squash.map(_.getPath.getName).toIndexedSeq)
     nFiles
   }
 
@@ -528,43 +491,28 @@ object Streams {
     }
   }
 
-  private def writeLedger(
-      fs: org.apache.hadoop.fs.FileSystem,
-      table: Path,
-      ledger: CommitLedger
-  ): Unit = {
+  /** Stage the updated ledger beside the batch's data: the commit that
+    * publishes the data replaces the live `_commits` in the same step.
+    */
+  private def stageLedger(spark: SparkSession, targetPath: String, ledger: CommitLedger): Unit = {
     val c = ledger.compacted
-    val tmp = new Path(table, CommitsLedger + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(
-      (s"floor:${c.floor}" +: c.ids.toSeq.sorted.map(_.toString))
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    val target = new Path(table, CommitsLedger)
-    // rename-over-existing returns false on most Hadoop FSs: clear first.
-    // A crash between delete and rename loses the ledger — replayed
-    // batches then re-merge, which is idempotent (degraded, not wrong).
-    if (fs.exists(target) && !fs.delete(target, false))
-      throw new java.io.IOException(s"writeLedger: could not clear $target")
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"writeLedger: could not publish $target")
+    FileMerge.stageFile(spark, targetPath, CommitsLedger,
+      (s"floor:${c.floor}" +: c.ids.toSeq.sorted.map(_.toString)).mkString("", "\n", "\n"))
   }
 
   /** One micro-batch of the upsert; also usable directly in tests.
     *
     * EXACTLY-ONCE, not just replay-idempotent: committed batch ids live
-    * in a `_commits` ledger file INSIDE the table directory, and each
-    * batch writes the updated ledger (including its own id) into the
-    * staging copy BEFORE the swap — the swap rename is the single commit
-    * point covering data and ledger together. A redelivered batch whose
-    * id is already in the ledger returns false having written NOTHING
-    * (the merge-recompute-and-swap of the pre-ledger design is skipped
-    * entirely). A crash before the swap leaves the old table + old
-    * ledger, so the replay re-executes; a crash after the swap leaves
-    * the id committed, so the replay is a no-op. Writers that rebuild
-    * the directory wholesale without carrying `_`-files forward (e.g. a
-    * compaction) drop the ledger — replayed batches then fall back to
-    * the idempotent re-merge, degraded but never wrong.
+    * in a `_commits` ledger file INSIDE the table directory. Each batch
+    * stages the merged table AND the updated ledger (including its own
+    * id) at `<table>_fmerge`, and one whole-table
+    * [[graft.operators.FileMerge]] commit publishes both — the manifest
+    * is the single commit point covering data and ledger together. A
+    * redelivered batch whose id is already in the ledger returns false
+    * having written NOTHING. A crash before the manifest leaves the old
+    * table + old ledger, so the replay re-executes; a crash after it
+    * rolls both forward, so the replay is a no-op. Every other writer's
+    * commit keeps `_`-files, so the ledger survives compactions too.
     */
   def upsertBatch(
       spark: SparkSession,
@@ -575,11 +523,9 @@ object Streams {
   ): Boolean = {
     val target = new Path(targetPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // EVERY writer's recovery, not just the swap's: a crash between swap
-    // renames leaves the table only in _old/_staging (one replayed batch
-    // would silently become the whole table), and a torn file-granular
-    // merge hides rows in _-prefixed asides this read would skip
-    Incremental.recoverAll(spark, targetPath)
+    // a torn commit of any writer hides rows in `_`-prefixed asides this
+    // read would skip: roll it forward first
+    FileMerge.recoverFileMerge(spark, targetPath)
     val committed = readLedger(fs, target)
     if (committed.contains(batchId)) return false
     val hasData = fs.exists(target) && fs.listStatus(target).nonEmpty
@@ -590,20 +536,19 @@ object Streams {
       // make the dropped column permanent
       if (hasData) Incremental.merge(Incremental.readEvolved(spark, targetPath), batch, pk)
       else Incremental.dedupByKey(batch, pk)
-    val staging = targetPath + s"_staging_$batchId"
-    merged.write.mode("overwrite").parquet(staging)
-    writeLedger(fs, new Path(staging), committed.add(batchId))
-    Incremental.swapInStaging(spark, targetPath, staging)
+    merged.write.mode("overwrite").parquet(FileMerge.stagingPath(targetPath))
+    stageLedger(spark, targetPath, committed.add(batchId))
+    FileMerge.commitRewrite(spark, targetPath)
     true
   }
 
   /** [[upsertBatch]]'s exactly-once skip for the FILE-granular merge
     * path ([[upsertStreamFileGranular]]): same `_commits` ledger, but
-    * the merge commits file-by-file in place (no whole-directory swap to
-    * piggyback on), so the ledger is updated AFTER the merge's own
-    * manifest commit. A crash in between re-executes the merge on replay
-    * — idempotent, so the effect is still exactly-once; a recorded id
-    * skips the batch with zero file writes.
+    * the merge commits first with its own manifest, and the ledger
+    * follows in a second [[graft.operators.FileMerge]] commit. A crash
+    * in between re-executes the merge on replay — idempotent, so the
+    * effect is still exactly-once; a recorded id skips the batch with
+    * zero file writes.
     */
   def upsertBatchFileGranular(
       spark: SparkSession,
@@ -614,16 +559,14 @@ object Streams {
   ): Boolean = {
     val target = new Path(targetPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // EVERY writer's recovery BEFORE the ledger read: after a crashed
-    // whole-table swap (compaction) the table — ledger included — sits
-    // in _staging/_old; a file-merge-only repair would read an absent
-    // ledger here and the final writeLedger would then overwrite the
-    // recovered one with a single id, discarding committed history
-    Incremental.recoverAll(spark, targetPath)
+    // recovery BEFORE the ledger read: a torn commit may carry the ledger
+    // that this batch's commit would otherwise overwrite
+    FileMerge.recoverFileMerge(spark, targetPath)
     val committed = readLedger(fs, target)
     if (committed.contains(batchId)) return false
-    graft.operators.FileMerge.mergeFileGranular(spark, batch, targetPath, pk)
-    writeLedger(fs, target, committed.add(batchId))
+    FileMerge.mergeFileGranular(spark, batch, targetPath, pk)
+    stageLedger(spark, targetPath, committed.add(batchId))
+    FileMerge.commit(spark, targetPath, Nil)
     true
   }
 

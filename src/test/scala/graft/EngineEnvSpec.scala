@@ -14,6 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The engine pins and releases data only through
   * `operators/Checkpoints.scala`, so every pin has one lifecycle: a
   * runner job is its release scope.
+  *
+  * Every lake write commits through `operators/FileMerge.scala`, the
+  * only file that renames, and the engine and its drivers reach the
+  * filesystem only through Hadoop `FileSystem`.
   */
 class EngineEnvSpec extends AnyFunSuite {
 
@@ -21,6 +25,7 @@ class EngineEnvSpec extends AnyFunSuite {
   private val EnginePackages = Seq("operators", "functions", "streaming", "sources", "plans")
   private val EnvRead = """sys\.env|System\.getenv""".r
   private val PinCall = """\.(cache\(\)|persist\(|localCheckpoint\(|unpersist\()""".r
+  private val Drivers = Seq("LakeDriver.scala", "CurationDriver.scala").map(Root.resolve)
 
   private def scalaFiles(dirs: Seq[String]): Seq[Path] = {
     val files = dirs.flatMap { pkg =>
@@ -47,8 +52,7 @@ class EngineEnvSpec extends AnyFunSuite {
   }
 
   test("engine code pins and releases data only through Checkpoints") {
-    val drivers = Seq("LakeDriver.scala", "CurationDriver.scala").map(Root.resolve)
-    val files = (scalaFiles(EnginePackages :+ "queries") ++ drivers)
+    val files = (scalaFiles(EnginePackages :+ "queries") ++ Drivers)
       .filterNot(_.endsWith(Paths.get("operators", "Checkpoints.scala")))
     // a line's code: scaladoc and block-comment lines have none, and a
     // trailing `//` comment is cut off
@@ -58,5 +62,18 @@ class EngineEnvSpec extends AnyFunSuite {
     }
     val found = hits(files)(line => PinCall.findFirstIn(codeOf(line)).isDefined)
     assert(found.isEmpty, found.mkString("pins outside operators/Checkpoints.scala:\n", "\n", ""))
+  }
+
+  test("only the commit protocol renames files") {
+    val files = scalaFiles(Seq("."))
+      .filterNot(_.endsWith(Paths.get("operators", "FileMerge.scala")))
+    val found = hits(files)(_.contains(".rename("))
+    assert(found.isEmpty, found.mkString("renames outside operators/FileMerge.scala:\n", "\n", ""))
+  }
+
+  test("engine and drivers reach the filesystem through Hadoop FileSystem only") {
+    val files = scalaFiles(Seq("operators", "plans", "sources")) ++ Drivers
+    val found = hits(files)(_.contains("java.nio.file"))
+    assert(found.isEmpty, found.mkString("java.nio.file in engine or driver code:\n", "\n", ""))
   }
 }

@@ -94,8 +94,11 @@ class LakeDriverSpec extends AnyFunSuite with SparkSpec {
       "a" -> (s => s.read.parquet(s"$sf/region.parquet")),
       "b" -> (_ => throw new RuntimeException("ingest exploded"))
     )
+    // a writer's leftover staging is not a table
+    spark.range(1).write.parquet(s"$root/datalake/t_fmerge")
     val result = LakeDriver.run(spark, LakeDriver.Config(root), registry)
     val byName = result.records.map(r => r.job_name -> r.job_status).toMap
     assert(byName("a") == "SUCCESS" && byName("b") == "FAILURE")
+    assert(result.recon.collect().isEmpty)
   }
 }

@@ -184,12 +184,27 @@ class FileMergeSpec extends AnyFunSuite with SparkSpec {
     val dir = tmp()
     FileMerge.mergeFileGranular(spark, base(50), dir, "id", initialFiles = 2)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crashed compact: live renamed aside, replacement never moved in
-    assert(fs.rename(new Path(dir), new Path(dir + "_old")))
-    // the next merge must restore the table, NOT initial-load the batch
+    // crashed compact: manifest published, every live file hidden, the
+    // compacted replacement not yet published
+    val live = snapshot(dir).keys.toSeq
+    spark.read.parquet(dir).coalesce(1).write.parquet(dir + "_fmerge")
+    val out = fs.create(new Path(dir + "_fmerge", "_touched"), true)
+    out.write(live.mkString("", "\n", "\n").getBytes("UTF-8")); out.close()
+    live.foreach(n => assert(fs.rename(new Path(dir, n), new Path(dir, "_old_" + n))))
+    // the next merge must roll the table forward, NOT initial-load the batch
     FileMerge.mergeFileGranular(spark, Seq((5L, "up")).toDF("id", "v"), dir, "id")
     val expected = (0L until 50L).map(i => if (i == 5L) (i, "up") else (i, s"v$i")).toSet
     assert(content(dir) === expected)
+  }
+
+  test("a replayed appendStaged after compact writes nothing") {
+    val dir = tmp()
+    FileMerge.mergeFileGranular(spark, base(20), dir, "id", initialFiles = 2)
+    val batch = (100L until 110L).map(i => (i, s"v$i")).toDF("id", "v")
+    assert(FileMerge.appendStaged(spark, batch, dir, "id", files = 1, commitId = Some("b1")))
+    graft.sources.Lake.compact(spark, dir, targetFileBytes = 4096, clusterBy = Some("id"))
+    assert(!FileMerge.appendStaged(spark, batch, dir, "id", files = 1, commitId = Some("b1")))
+    assert(spark.read.parquet(dir).count() == 30)
   }
 
   test("clustered compaction refuses a Hive-partitioned layout") {
@@ -230,8 +245,11 @@ class FileMergeSpec extends AnyFunSuite with SparkSpec {
     val t0 = Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("id", "v", "p")
     Incremental.mergePartitionPruned(spark, t0, dir, "id", "p")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crashed compact: live renamed aside, replacement never moved in
-    assert(fs.rename(new Path(dir), new Path(dir + "_old")))
+    // crashed partitioned compact: manifest published, live p=p1 moved
+    // aside, no staged partition published yet
+    spark.read.parquet(dir).repartition(1).write.partitionBy("p").parquet(dir + "_fmerge")
+    fs.create(new Path(dir + "_fmerge", "_touched"), true).close()
+    assert(fs.rename(new Path(dir, "p=p1"), new Path(dir, "_old_p=p1")))
     Incremental.mergePartitionPruned(
       spark, Seq((2L, "b2", "p2")).toDF("id", "v", "p"), dir, "id", "p")
     val rows = spark.read.parquet(dir).select("id", "v", "p")

@@ -89,21 +89,45 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
     assert(out(1).isNullAt(1), "matched source row with NULL must null-out the target value")
   }
 
-  test("swapInStaging: staging becomes live, no _old/_staging residue") {
-    val base = Files.createTempDirectory("swap").toString
-    val live = base + "/t"
-    val staging = live + "_staging"
-    df(1L -> "old").write.parquet(live)
-    df(2L -> "new").write.parquet(staging)
-    Incremental.swapInStaging(spark, live, staging)
-    assert(spark.read.parquet(live).as[(Long, String)].collect().toSeq == Seq(2L -> "new"))
-    assert(!Files.exists(java.nio.file.Paths.get(live + "_old")))
-    assert(!Files.exists(java.nio.file.Paths.get(staging)))
-    // also works when no live directory exists yet
-    val live2 = base + "/t2"
-    df(3L -> "x").write.parquet(live2 + "_staging")
-    Incremental.swapInStaging(spark, live2, live2 + "_staging")
-    assert(spark.read.parquet(live2).count() == 1)
+  private def liveNames(live: String): Set[String] = {
+    val path = new org.apache.hadoop.fs.Path(live)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(path).map(_.getPath.getName).toSet
+  }
+
+  test("whole-table rewrite commit: new data live, no staging residue") {
+    val live = Files.createTempDirectory("rewrite").toString + "/t"
+    Incremental.ingestIncremental(spark, df(1L -> "old"), live, "id", updates = true)
+    Files.writeString(java.nio.file.Paths.get(live, "_commits"), "floor:0\n")
+    Incremental.ingestIncremental(spark, df(2L -> "new"), live, "id", updates = true)
+    assert(spark.read.parquet(live).as[(Long, String)].collect().toSet ==
+      Set(1L -> "old", 2L -> "new"))
+    assert(!Files.exists(java.nio.file.Paths.get(live + "_fmerge")))
+    assert(!liveNames(live).exists(_.startsWith("_old_")))
+    assert(liveNames(live)("_commits"), "a whole-table rewrite keeps bookkeeping files")
+  }
+
+  test("whole-table rewrite: a crash after the manifest rolls forward") {
+    val live = Files.createTempDirectory("rewrite").toString + "/t"
+    val fs = new org.apache.hadoop.fs.Path(live)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def names = liveNames(live)
+    Incremental.ingestIncremental(spark, df(1L -> "old"), live, "id", updates = true)
+    Incremental.ingestIncremental(spark, df(2L -> "new"), live, "id", updates = true)
+
+    // crash after the manifest: every live data file hidden, the staged
+    // replacement not yet published — the table reads empty until the
+    // next writer rolls the commit forward
+    val dataFiles = names.filterNot(n => n.startsWith("_") || n.startsWith("."))
+    spark.read.parquet(live).union(df(3L -> "x")).write.parquet(live + "_fmerge")
+    Files.writeString(java.nio.file.Paths.get(live + "_fmerge", "_touched"),
+      dataFiles.mkString("", "\n", "\n"))
+    dataFiles.foreach(n => assert(fs.rename(
+      new org.apache.hadoop.fs.Path(live, n), new org.apache.hadoop.fs.Path(live, "_old_" + n))))
+    val after = Incremental.ingestIncremental(spark, df(4L -> "y"), live, "id", updates = true)
+    assert(after.as[(Long, String)].collect().toSet ==
+      Set(1L -> "old", 2L -> "new", 3L -> "x", 4L -> "y"))
+    assert(!names.exists(_.startsWith("_old_")))
   }
 
   test("merge fails fast if an input already carries the reserved marker column") {
@@ -177,8 +201,9 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
       "untouched partitions must keep identical file paths AND mtimes (no rewrite)")
     assert(now.keys.filter(_.startsWith("p=1")).toSet !=
       before.keys.filter(_.startsWith("p=1")).toSet, "touched partition must be rewritten")
-    assert(!now.keys.exists(_.contains("_pstaging")) && !now.keys.exists(_.contains("_old_")),
-      "no staging/aside residue after a clean swap")
+    assert(!now.keys.exists(_.contains("_old_")) &&
+      !Files.exists(java.nio.file.Paths.get(dir + "_fmerge")),
+      "no staging/aside residue after a clean commit")
   }
 
   test("partition-pruned merge: a batch with a NEW partition value only adds that directory") {
@@ -276,74 +301,42 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
     assert(out.as[(Long, String, Int)].collect().toSeq == Seq((1L, "a", 0)))
   }
 
-  test("recoverPartitionedMerge repairs a crash between the per-partition renames") {
+  test("partition-pruned merge: a torn commit rolls forward on recovery") {
     val dir = Files.createTempDirectory("pmerge-recov").toString + "/t"
     Incremental.mergePartitionPruned(spark, pdf((1L, "a", 0), (2L, "b", 1)), dir, "id", "p")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate: crash after live p=1 was renamed aside but before the
-    // staged replacement moved in — live p=1 missing, staged copy complete
-    val liveP1 = new org.apache.hadoop.fs.Path(dir + "/p=1")
-    assert(fs.rename(liveP1, new org.apache.hadoop.fs.Path(dir + "/_old_p=1")))
-    pdf((2L, "B", 1)).drop("p").write.parquet(dir + "_pstaging/p=1")
-    assert(Incremental.recoverPartitionedMerge(spark, dir))
-    // staged (newest) copy wins; aside and staging cleaned up
+    // crash after the manifest, between moving live p=1 aside and
+    // publishing its staged replacement
+    pdf((2L, "B", 1)).drop("p").write.parquet(dir + "_fmerge/p=1")
+    fs.create(new org.apache.hadoop.fs.Path(dir + "_fmerge/_touched"), true).close()
+    assert(fs.rename(new org.apache.hadoop.fs.Path(dir + "/p=1"),
+      new org.apache.hadoop.fs.Path(dir + "/_old_p=1")))
+    assert(FileMerge.recoverFileMerge(spark, dir))
     val rows = spark.read.parquet(dir).as[(Long, String, Int)].collect().sortBy(_._1).toSeq
     assert(rows == Seq((1L, "a", 0), (2L, "B", 1)))
-    assert(!Files.exists(java.nio.file.Paths.get(dir + "_pstaging")))
+    assert(!Files.exists(java.nio.file.Paths.get(dir + "_fmerge")))
     assert(!Files.exists(java.nio.file.Paths.get(dir + "/_old_p=1")))
-    // crash AFTER the staged copy moved in: only the aside is left — delete it
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir + "/p=0"),
-      new org.apache.hadoop.fs.Path(dir + "/_old_p=0")))
-    pdf((1L, "a", 0)).drop("p").write.parquet(dir + "/p=0")
-    assert(Incremental.recoverPartitionedMerge(spark, dir))
-    assert(!Files.exists(java.nio.file.Paths.get(dir + "/_old_p=0")))
-    assert(spark.read.parquet(dir).count() == 2)
+    assert(!FileMerge.recoverFileMerge(spark, dir))
   }
 
-  test("recoverInterruptedSwap picks the NEWEST staging, not the lexicographic first") {
-    val base = Files.createTempDirectory("recov-mtime").toString
-    val live = base + "/t"
-    // "_staging_10" sorts lexicographically BEFORE "_staging_9"; the crash
-    // we recover from is the most recent swap, so mtime must decide
-    df(1L -> "older-batch").write.parquet(live + "_staging_10")
-    df(2L -> "newer-batch").write.parquet(live + "_staging_9")
-    val fs = new org.apache.hadoop.fs.Path(live)
+  test("roll-forward after a partial publish keeps a new partition live") {
+    val dir = Files.createTempDirectory("pmerge-partial").toString + "/t"
+    Incremental.mergePartitionPruned(spark, pdf((1L, "a", 0), (2L, "b", 1)), dir, "id", "p")
+    val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.setTimes(new org.apache.hadoop.fs.Path(live + "_staging_10"), 1000L, -1)
-    fs.setTimes(new org.apache.hadoop.fs.Path(live + "_staging_9"), 2000L, -1)
-    assert(Incremental.recoverInterruptedSwap(spark, live))
-    assert(spark.read.parquet(live).as[(Long, String)].collect().toSeq == Seq(2L -> "newer-batch"))
-  }
-
-  test("recoverInterruptedSwap prefers a newer _old over a stale leftover staging") {
-    val base = Files.createTempDirectory("recov-old").toString
-    val live = base + "/t"
-    // stale staging from a long-rolled-back batch vs the _old stranded by
-    // the crash we are actually recovering from: _old is newer → wins
-    df(1L -> "stale-staging").write.parquet(live + "_staging_3")
-    df(2L -> "current-table").write.parquet(live + "_old")
-    val fs = new org.apache.hadoop.fs.Path(live)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.setTimes(new org.apache.hadoop.fs.Path(live + "_staging_3"), 1000L, -1)
-    fs.setTimes(new org.apache.hadoop.fs.Path(live + "_old"), 2000L, -1)
-    assert(Incremental.recoverInterruptedSwap(spark, live))
-    assert(
-      spark.read.parquet(live).as[(Long, String)].collect().toSeq == Seq(2L -> "current-table"))
-  }
-
-  test("recoverInterruptedSwap restores a table stranded mid-swap") {
-    val base = Files.createTempDirectory("recov").toString
-    val live = base + "/t"
-    // simulate a crash between the two swap renames: live missing,
-    // complete new data left in _staging, old copy in _old
-    df(1L -> "old").write.parquet(live + "_old")
-    df(2L -> "new").write.parquet(live + "_staging_7")
-    assert(Incremental.recoverInterruptedSwap(spark, live))
-    // staging (the fully-written replacement) wins
-    assert(spark.read.parquet(live).as[(Long, String)].collect().toSeq == Seq(2L -> "new"))
-    // no-op when live exists
-    assert(!Incremental.recoverInterruptedSwap(spark, live))
+    def hp(s: String) = new org.apache.hadoop.fs.Path(s)
+    // a batch touching both partitions crashed mid-publish: p=1 already
+    // replaced (its old copy still aside), p=0 still staged
+    pdf((1L, "A", 0)).drop("p").write.parquet(dir + "_fmerge/p=0")
+    pdf((2L, "B", 1)).drop("p").write.parquet(dir + "_fmerge/p=1")
+    fs.create(hp(dir + "_fmerge/_touched"), true).close()
+    assert(fs.rename(hp(dir + "/p=1"), hp(dir + "/_old_p=1")))
+    assert(fs.rename(hp(dir + "_fmerge/p=1"), hp(dir + "/p=1")))
+    val out = Incremental.mergePartitionPruned(spark, pdf((3L, "c", 1)), dir, "id", "p")
+    assert(out.as[(Long, String, Int)].collect().sortBy(_._1).toSeq ==
+      Seq((1L, "A", 0), (2L, "B", 1), (3L, "c", 1)))
+    assert(!fs.listStatus(hp(dir)).exists(_.getPath.getName.startsWith("_old_")))
   }
 
   test("snapshotDiff: added/removed/changed classified; unchanged rows dropped") {

@@ -175,14 +175,19 @@ class InvertSpec extends AnyFunSuite with SparkSpec {
     val idx = Invert.postingLists(docs, "doc_id", "text")
     Invert.writeIndex(spark, idx, dir, files = 2)
     val expected = Invert.readIndex(spark, dir).count()
-    // simulate a crash between the two renames of the staged swap:
-    // live moved aside to _old, staging's promotion never happened
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + "_old")))
+    // simulate a rebuild whose commit crashed after the manifest: the
+    // new index fully staged, every live index file moved aside, none
+    // of the staged ones published yet
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Invert.writeIndex(spark, idx, s"$root/rebuilt", files = 2)
+    assert(fs.rename(new Path(s"$root/rebuilt"), new Path(dir + "_fmerge")))
+    val live = fs.listStatus(new Path(dir)).map(_.getPath.getName).filterNot(_.startsWith("_"))
+    val out = fs.create(new Path(dir + "_fmerge", "_touched"), true)
+    try out.write(live.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+    live.foreach(n => assert(fs.rename(new Path(dir, n), new Path(dir, "_old_" + n))))
     assert(Invert.readIndex(spark, dir).count() == expected)
+    assert(!fs.exists(new Path(dir + "_fmerge")))
   }
 
   test("index build has no window operator in the plan") {

@@ -129,21 +129,36 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** The crash state of a rebuild of `idx` into identical content: the
+    * staged index (a copy of the live one) and its empty manifest are
+    * written — the sub-tables replace their namesakes — then `hide`
+    * sub-tables are moved aside and `publish` staged ones moved in.
+    */
+  private def crashRebuild(idx: String, hide: Seq[String], publish: Seq[String]): Unit = {
+    val live = new Path(idx)
+    val staging = new Path(idx + "_fmerge")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = live.getFileSystem(conf)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, live, fs, staging, false, conf))
+    fs.create(new Path(staging, "_touched"), true).close()
+    hide.foreach(n => assert(fs.rename(new Path(live, n), new Path(live, "_old_" + n))))
+    publish.foreach(n => assert(fs.rename(new Path(staging, n), new Path(live, n))))
+  }
+
   test("a crashed index rebuild heals before the probe (recoverAll plumbing)") {
     val idx = buildCorpusIndex("recovery", files = 4)
     val before = Similarity
       .ivfTopKIndexed(spark, idx, "vec_id", "embedding", queryVec, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // simulate a swap crashed between rename-aside and publish: live
-    // postings dir gone, complete _old copy left behind
-    val post = new Path(s"$idx/postings")
-    val fs = post.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(post, new Path(s"$idx/postings_old")))
+    // live postings moved aside, its staged replacement not yet published
+    crashRebuild(idx, hide = Seq("postings"), publish = Nil)
     val after = Similarity
       .ivfTopKIndexed(spark, idx, "vec_id", "embedding", queryVec, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(after == before)
-    assert(fs.exists(post), "recovery should have restored the live postings dir")
+    val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new Path(s"$idx/postings")), "recovery should have published the postings")
+    assert(!fs.exists(new Path(s"$idx/_old_postings")) && !fs.exists(new Path(idx + "_fmerge")))
   }
 
   test("a build that crashed mid-swap of the WHOLE index heals before the probe") {
@@ -151,16 +166,25 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     val before = Similarity
       .ivfTopKIndexed(spark, idx, "vec_id", "embedding", queryVec, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // simulate ivfBuild's single swap crashing between rename-aside and
-    // publish: the index dir (postings AND centroids together) is gone,
-    // a complete _old copy remains
-    val p = new Path(idx)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(p, new Path(idx + "_old")))
+    // ivfBuild's single commit crashed mid-publish: both sub-tables
+    // moved aside, the new postings published, the new centroids not
+    crashRebuild(idx, hide = Seq("postings", "centroids"), publish = Seq("postings"))
     val after = Similarity
       .ivfTopKIndexed(spark, idx, "vec_id", "embedding", queryVec, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(after == before)
+  }
+
+  test("a replayed ivfAppend after ivfCompact writes nothing") {
+    val idx = halfCorpusIndex("appendcompact")
+    val odd = emb.where(col("vec_id") % 2 === 1)
+    assert(Similarity.ivfAppend(spark, odd, "vec_id", "embedding", idx, files = 2,
+      commitId = Some("b1")))
+    Similarity.ivfCompact(spark, idx, targetFileBytes = 64L * 1024)
+    val rows = spark.read.parquet(s"$idx/postings").count()
+    assert(!Similarity.ivfAppend(spark, odd, "vec_id", "embedding", idx, files = 2,
+      commitId = Some("b1")))
+    assert(spark.read.parquet(s"$idx/postings").count() == rows)
   }
 
   test("a multi-row query is rejected instead of silently mixing similarities") {
@@ -221,13 +245,11 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(probe(idx) == baseline)
     assert(!fs.exists(staging), "discarded staging should be gone")
 
-    // crash AFTER the manifest (and the replay marker): staged files +
-    // _append_id + _touched, commit never ran — the next probe must roll
-    // the whole append forward, data AND marker together
+    // crash AFTER the manifest: staged files + the staged replay marker
+    // + _touched, commit never ran — the next probe must roll the whole
+    // append forward, data AND marker together
     stageOddBatch(idx, staging)
-    val idOut = fs.create(new Path(staging, "_append_id"), true)
-    try idOut.write("_append_committed_batch1\n".getBytes("UTF-8"))
-    finally idOut.close()
+    fs.create(new Path(staging, "_append_committed_batch1"), true).close()
     fs.create(new Path(staging, "_touched"), true).close() // empty manifest
     val appended = probe(idx)
     assert(appended != baseline)
@@ -583,9 +605,8 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
       rerank = emb, rerankVecCol = "embedding", excludeId = Some(0L))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
     val before = probe()
-    val p = new Path(idx)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(p, new Path(idx + "_old")))
+    // all three sub-tables moved aside, only the codebook published
+    crashRebuild(idx, hide = Seq("postings", "centroids", "codebook"), publish = Seq("codebook"))
     assert(probe() == before)
   }
 
@@ -598,9 +619,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(Similarity.ivfPqAppend(
       spark, emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding", idx,
       files = 2, commitId = Some("b1")))
-    // replaying the committed id writes nothing — checked BEFORE the
-    // compaction, which is a whole-table rewrite and (documented)
-    // drops replay markers
+    // replaying the committed id writes nothing
     assert(!Similarity.ivfPqAppend(
       spark, emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding", idx,
       files = 2, commitId = Some("b1")))

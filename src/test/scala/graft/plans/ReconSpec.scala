@@ -38,7 +38,8 @@ class ReconSpec extends AnyFunSuite with SparkSpec {
     Files.writeString(dir.resolve("f2"), "67")
     val rep = Recon.sizeReport(spark, Map("t" -> dir.toString)).collect().head
     assert(rep.getAs[Long]("TableSize") == 7)
-    assert(Recon.directoryBytes(java.nio.file.Paths.get("/nonexistent-xyz")) == 0)
+    assert(Recon.sizeReport(spark, Map("gone" -> "/nonexistent-xyz")).collect().head
+      .getAs[Long]("TableSize") == 0)
   }
 
   test("ingestion time = duration of last SUCCESS run per job; full join on TableName") {

@@ -56,7 +56,8 @@ class LakeSpec extends AnyFunSuite with SparkSpec {
     assert(dataFiles() == 1) // tiny table → one file
     val after = spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1)
     assert(after.toSeq == before.toSeq)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir + "_staging_compact")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir + "_fmerge")))
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_old_")))
   }
 
   test("compaction carries a streaming-upsert ledger across the swap") {

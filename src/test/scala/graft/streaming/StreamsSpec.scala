@@ -680,6 +680,29 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     assert(Streams.upsertBatch(spark, Seq((13L, "h")).toDF("id", "v"), "id", target, 13L))
   }
 
+  test("roll-forward after a partial publish keeps the new ledger") {
+    val target = Files.createTempDirectory("ledgerpartial").toString + "/t"
+    assert(Streams.upsertBatch(spark, Seq((1L, "a")).toDF("id", "v"), "id", target, 0L))
+    val fs = new org.apache.hadoop.fs.Path(target)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hp(p: String) = new org.apache.hadoop.fs.Path(p)
+    val live = fs.listStatus(hp(target)).map(_.getPath.getName).filterNot(_.startsWith("_"))
+    // batch 1's commit crashed mid-publish: the staged ledger already
+    // replaced the live one (old copy still aside), the data not yet
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(target + "_fmerge")
+    Files.writeString(java.nio.file.Paths.get(target + "_fmerge", "_commits"), "floor:1\n")
+    Files.writeString(java.nio.file.Paths.get(target + "_fmerge", "_touched"),
+      live.mkString("", "\n", "\n"))
+    assert(fs.rename(hp(s"$target/_commits"), hp(s"$target/_old__commits")))
+    assert(fs.rename(hp(s"${target}_fmerge/_commits"), hp(s"$target/_commits")))
+    // the replay rolls forward and finds batch 1 committed
+    assert(!Streams.upsertBatch(spark, Seq((2L, "b")).toDF("id", "v"), "id", target, 1L))
+    assert(spark.read.parquet(target).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b")))
+    val in = fs.open(hp(s"$target/_commits"))
+    try assert(new String(in.readAllBytes(), "UTF-8") == "floor:1\n") finally in.close()
+  }
+
   test("upsertBatch preserves a column evolved by an earlier file-granular merge") {
     val target = Files.createTempDirectory("evostream").toString + "/t"
     assert(Streams.upsertBatch(spark, (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v"),
@@ -873,8 +896,12 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     def ids(asOf: Long) =
       Streams.corpusAsOf(spark, target, asOf).as[(Long, String)].collect().map(_._1).toSet
 
-    // squash batches 0..1 into a tagged base; batch 2 keeps its own files
+    // squash batches 0..1 into a tagged base; batch 2 keeps its own files,
+    // untouched: same names, sizes and mtimes
+    val kept = fileState(target).filter(_._1.startsWith("ingest_2_"))
+    assert(kept.nonEmpty)
     assert(Streams.compactIngestCorpus(spark, target, upToBatchId = 1L) >= 1)
+    assert(fileState(target).filter(_._1.startsWith("ingest_2_")) == kept)
     assert(spark.read.parquet(target).as[(Long, String)].collect().toSet == full,
       "full corpus content must survive compaction")
     assert(ids(1L) == Set(1L, 2L), "the squash-point snapshot must be intact")
