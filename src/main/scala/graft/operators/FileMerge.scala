@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -42,8 +42,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * Crash contract. This is the ONE commit protocol of every lake writer
   * (merges, appends, compactions, index builds, the streaming ledgers),
   * and [[recoverFileMerge]] is the one recovery. Single writer per
-  * table; a concurrent reader may observe a torn listing during the
-  * commit window itself:
+  * table:
   *
   *   1. the writer fully writes `<table>_fmerge`: data files, whole
   *      `p=v`/sub-table directories, `_`-prefixed bookkeeping files;
@@ -56,76 +55,96 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   *      the live one to `_old_<name>` first;
   *   4. the asides and the staging directory are deleted.
   *
-  * Recovery rolls FORWARD when the manifest exists and discards the
-  * staging directory when it does not (the caller's replay recomputes
-  * the batch). A replacement is decided by the staged copy still being
-  * in staging, so a roll-forward after a partial publish never hides the
+  * Writers recover: each runs [[recoverFileMerge]] before it writes,
+  * which rolls a published commit FORWARD and discards a staging
+  * directory without a manifest (the caller's replay recomputes the
+  * batch). A replacement is decided by the staged copy still being in
+  * staging, so a roll-forward after a partial publish never hides the
   * new copy. Both the commit and its recovery are idempotent, so every
   * crash point converges to either the old table or the new one.
+  *
+  * Readers resolve: [[snapshot]] applies the same rule to the listings
+  * and moves nothing, so a read sees the last published commit and
+  * never changes the table; staging without a manifest may belong to a
+  * write still running, and only a writer discards it. A reader inside
+  * the commit window may still observe a torn listing.
   */
 object FileMerge {
 
-  /** Per-file PK interval from the parquet footer. `known = false` means
-    * the footer carried no usable statistics for `pk` — the file must be
-    * treated as intersecting every batch.
+  /** One file's footer: its row count and the [lo, hi] interval of an
+    * integral column's non-null values. `known = false` means the
+    * footer carried no usable statistics for the column — the file must
+    * be treated as intersecting every batch. A file with zero rows keeps
+    * lo > hi: it intersects nothing.
     */
-  final case class FileRange(file: String, lo: Long, hi: Long, known: Boolean)
+  final case class FileRange(file: String, rows: Long, lo: Long, hi: Long, known: Boolean)
 
-  private def dataFiles(fs: FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(dir)) Nil
-    else
-      fs.listStatus(dir).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+  /** A data file: a top-level file that is not `_`- or `.`-prefixed. */
+  private def isData(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    st.isFile && !n.startsWith("_") && !n.startsWith(".")
+  }
 
-  /** Distributed footer scan: one task per slice of the file list, each
+  /** Distributed footer scan: one task per slice of `files`, each
     * reading only footers (a few KB per file) — the same metadata-scale
     * pass a table format does against its transaction log. Returns one
-    * [[FileRange]] per data file.
+    * [[FileRange]] per file, named by its full path. A `strict` scan
+    * fails on a footer that cannot bound `column` instead of marking it
+    * unknown, and lets an all-null chunk bound nothing.
     */
-  def fileRanges(spark: SparkSession, lakePath: String, pk: String): Seq[FileRange] = {
-    val live = new Path(lakePath)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = dataFiles(fs, live).map(_.getPath.toString)
+  private[graft] def footers(
+      spark: SparkSession, files: Seq[String], column: String, strict: Boolean): Seq[FileRange] = {
     if (files.isEmpty) return Nil
     val confBc = org.apache.spark.sql.graftbridge.ConfBridge.broadcast(spark.sparkContext)
     val slices = math.min(files.size, math.max(1, spark.sparkContext.defaultParallelism))
     spark.sparkContext
       .parallelize(files, slices)
       .map { f =>
-        val p = new Path(f)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            p, org.apache.spark.sql.graftbridge.ConfBridge.value(confBc)))
+            new Path(f), org.apache.spark.sql.graftbridge.ConfBridge.value(confBc)))
         try {
+          var rows = 0L
           var lo = Long.MaxValue
           var hi = Long.MinValue
           var known = true
-          reader.getFooter.getBlocks.asScala.foreach { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == pk) match {
+          def unusable(why: String): Unit =
+            if (strict) throw new IllegalArgumentException(s"footerStats: $why") else known = false
+          reader.getFooter.getBlocks.asScala.filter(_.getRowCount > 0).foreach { b =>
+            rows += b.getRowCount
+            b.getColumns.asScala.find(_.getPath.toDotString == column) match {
+              case None => unusable(s"column $column absent from $f")
               case Some(c) =>
                 val st = c.getStatistics
-                if (st == null || !st.hasNonNullValue) {
-                  // all-null or stats-less chunk: no key bound derivable
-                  known = known && b.getRowCount == 0
+                if (st == null)
+                  unusable(s"$f carries no statistics for $column — " +
+                    "metadata-only bounds would be a guess, not an answer")
+                else if (!st.hasNonNullValue) {
+                  // an all-null chunk bounds nothing; a merge must still
+                  // treat its file as touched
+                  if (!strict) known = false
                 } else
                   (st.genericGetMin, st.genericGetMax) match {
                     case (mn: Number, mx: Number) =>
                       lo = math.min(lo, mn.longValue)
                       hi = math.max(hi, mx.longValue)
-                    case _ => known = false
+                    case other => unusable(s"non-integral statistics for $column in $f: $other")
                   }
-              case None => known = false
             }
           }
-          // a file with zero rows keeps lo > hi: intersects nothing
-          FileRange(p.getName, lo, hi, known)
+          FileRange(f, rows, lo, hi, known)
         } finally reader.close()
       }
       .collect()
       .toSeq
   }
+
+  /** [[footers]] of the table's data files, each named by its file
+    * name.
+    */
+  def fileRanges(spark: SparkSession, lakePath: String, pk: String): Seq[FileRange] =
+    footers(spark, snapshot(spark, lakePath).dataFiles.map(_.getPath.toString), pk, strict = false)
+      .map(r => r.copy(file = new Path(r.file).getName))
 
   /** The merge itself. `source` may carry duplicate keys (last-write-wins
     * reduction, as [[Incremental.merge]]); `pk` must be an integral
@@ -145,14 +164,10 @@ object FileMerge {
     require(
       Seq(LongType, IntegerType, ShortType, ByteType).contains(pkType),
       s"mergeFileGranular: integral PK required for footer min/max pruning, got ${pkType.sql}")
-    val live = new Path(lakePath)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // every writer of this table commits through the same staging, so
     // this one repair covers a torn merge, append or compaction
     recoverFileMerge(spark, lakePath)
-    require(
-      !fs.exists(live) || !fs.listStatus(live).exists(st =>
-        st.isDirectory && st.getPath.getName.contains("=")),
+    require(!snapshot(spark, lakePath).hivePartitioned,
       s"mergeFileGranular: $lakePath has a Hive-partitioned layout — use mergePartitionPruned")
 
     // The batch is evaluated by THREE actions (emptiness probe, touched-
@@ -164,7 +179,7 @@ object FileMerge {
     // materializes nondeterministic MERGE sources for the same reason.)
     Checkpoints.scoped {
       val batch = Checkpoints.cache(Incremental.dedupByKey(source, pk))
-      mergePinned(spark, batch, lakePath, pk, initialFiles, fs, live)
+      mergePinned(spark, batch, lakePath, pk, initialFiles)
     }
   }
 
@@ -173,11 +188,9 @@ object FileMerge {
       batch: DataFrame,
       lakePath: String,
       pk: String,
-      initialFiles: Int,
-      fs: FileSystem,
-      live: Path
+      initialFiles: Int
   ): DataFrame = {
-    if (dataFiles(fs, live).isEmpty) {
+    if (snapshot(spark, lakePath).dataFiles.isEmpty) {
       // initial load (or bare-marker dir): lay the table out range-
       // clustered so every later batch can prune on footer stats
       val files =
@@ -289,8 +302,8 @@ object FileMerge {
     // same guard as mergeFileGranular: flat staged files published into a
     // Hive-partitioned root would break partition discovery for EVERY
     // reader, and the bad commit would already be durable
-    require(
-      !fs.listStatus(live).exists(st => st.isDirectory && st.getPath.getName.contains("=")),
+    val table = snapshot(spark, lakePath)
+    require(!table.hivePartitioned,
       s"appendStaged: $lakePath has a Hive-partitioned layout — append into the partition directories instead")
     val marker = commitId.map(appendMarkerName)
     if (marker.exists(m => fs.exists(new Path(live, m)))) return false
@@ -300,8 +313,8 @@ object FileMerge {
     // staged names are job-UUID-unique, but a collision with a live file
     // would make the commit REPLACE that file — fail BEFORE the manifest,
     // while recovery still discards the staging cleanly
-    val liveNames = dataFiles(fs, live).map(_.getPath.getName).toSet
-    val clash = dataFiles(fs, staging).map(_.getPath.getName).filter(liveNames)
+    val liveNames = table.dataFiles.map(_.getPath.getName).toSet
+    val clash = stagedEntries(fs, staging).filter(isData).map(_.getPath.getName).filter(liveNames)
     if (clash.nonEmpty)
       throw new java.io.IOException(
         s"appendStaged: staged file name(s) already live: ${clash.mkString(",")}")
@@ -334,7 +347,7 @@ object FileMerge {
   private[graft] def prefixStaged(spark: SparkSession, lakePath: String, prefix: String): Unit = {
     val staging = new Path(stagingPath(lakePath))
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dataFiles(fs, staging).foreach { st =>
+    stagedEntries(fs, staging).filter(isData).foreach { st =>
       val dest = new Path(staging, prefix + st.getPath.getName)
       if (!fs.rename(st.getPath, dest))
         throw new java.io.IOException(s"FileMerge.prefixStaged: could not rename ${st.getPath}")
@@ -362,15 +375,9 @@ object FileMerge {
     * `_`- or `.`-prefixed is replaced or hidden; bookkeeping files
     * (ledgers, markers, floors) stay unless staging replaces them.
     */
-  private[graft] def commitRewrite(spark: SparkSession, lakePath: String): Unit = {
-    val live = new Path(lakePath)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries =
-      if (!fs.exists(live)) Nil
-      else fs.listStatus(live).toSeq.map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-    commit(spark, lakePath, entries)
-  }
+  private[graft] def commitRewrite(spark: SparkSession, lakePath: String): Unit =
+    commit(spark, lakePath,
+      snapshot(spark, lakePath).entries.map(_.getPath.getName).filterNot(_.startsWith("_")))
 
   /** Every top-level staged entry the commit publishes: files and
     * directories, `_`-files included; not the manifest, `_SUCCESS` or
@@ -382,23 +389,25 @@ object FileMerge {
       n != Manifest && n != "_SUCCESS" && !n.startsWith(".")
     }
 
+  /** The live entries the manifest in `staging` names to hide. */
+  private def readManifest(fs: FileSystem, staging: Path): Set[String] = {
+    val in = fs.open(new Path(staging, Manifest))
+    try new String(in.readAllBytes(), "UTF-8").split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSet
+    finally in.close()
+  }
+
   /** Hide the manifest's entries, publish the staged ones, clean up.
     * Idempotent: it is both the commit and the recovery roll-forward.
     * Caller guarantees the manifest exists.
     */
   private def commitStaged(fs: FileSystem, live: Path, staging: Path): Unit = {
-    val hidden = {
-      val in = fs.open(new Path(staging, Manifest))
-      try new String(in.readAllBytes(), "UTF-8").split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-      finally in.close()
-    }
     def moveAside(name: String): Unit = {
       val liveF = new Path(live, name)
       if (fs.exists(liveF) && !fs.rename(liveF, new Path(live, "_old_" + name)))
         throw new java.io.IOException(s"FileMerge.commitStaged: could not move $liveF aside")
     }
     fs.mkdirs(live)
-    hidden.foreach(moveAside)
+    readManifest(fs, staging).foreach(moveAside)
     // an entry still in staging is unpublished: a live namesake is the
     // OLD copy. One already published has left staging, so a replayed
     // roll-forward never hides the new copy.
@@ -424,10 +433,11 @@ object FileMerge {
     * commit forward. A staging directory WITHOUT a manifest never
     * started committing — discard it (the caller replays the batch).
     * Leftover `_old_` asides with no staging directory are a finished
-    * commit's debris — delete them. Every writer and every reader that
-    * lists files runs this first. Returns true if anything was repaired.
+    * commit's debris — delete them. Every writer runs this before it
+    * writes; readers never do (they resolve a [[snapshot]]). Returns
+    * true if anything was repaired.
     */
-  def recoverFileMerge(spark: SparkSession, lakePath: String): Boolean = {
+  private[graft] def recoverFileMerge(spark: SparkSession, lakePath: String): Boolean = {
     val live = new Path(lakePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new Path(stagingPath(lakePath))
@@ -439,5 +449,59 @@ object FileMerge {
     }
     if (fs.exists(live)) acted |= deleteAsides(fs, live)
     acted
+  }
+
+  /** A table's committed top-level entries, live or still staged, as
+    * [[snapshot]] resolves them. `torn` is true while a published
+    * commit has not finished its moves.
+    */
+  private[graft] final case class Snapshot(path: String, entries: Seq[FileStatus], torn: Boolean) {
+
+    /** The resolved location of entry `name` (a sub-table, a
+      * bookkeeping file), or its live location when there is none.
+      */
+    def pathOf(name: String): String =
+      entries.find(_.getPath.getName == name).fold(s"$path/$name")(_.getPath.toString)
+
+    def dataFiles: Seq[FileStatus] = entries.filter(isData)
+
+    def hivePartitioned: Boolean =
+      entries.exists(st => st.isDirectory && st.getPath.getName.contains("="))
+
+    /** The table's rows. A clean read plans the directory; only a torn
+      * commit reads its resolved files by name, because Spark lists more
+      * than 32 explicit paths with a job.
+      */
+    def read(spark: SparkSession): DataFrame =
+      if (torn) spark.read.parquet(dataFiles.map(_.getPath.toString): _*)
+      else spark.read.parquet(path)
+  }
+
+  /** Resolve `lakePath` from listings alone, with [[commitStaged]]'s
+    * rule and none of its moves. With no manifest the table is its live
+    * entries: data files, sub-table directories and `_`-bookkeeping, but
+    * not `_old_` asides, `_SUCCESS` or `.`-files. With a manifest it is
+    * the live entries minus the ones the manifest names and the asides,
+    * with every staged entry taking the place of a live namesake. A
+    * sub-table resolved here has its own snapshot. Never renames,
+    * deletes or creates anything.
+    */
+  private[graft] def snapshot(spark: SparkSession, lakePath: String): Snapshot = {
+    val live = new Path(lakePath)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new Path(stagingPath(lakePath))
+    val liveEntries =
+      if (!fs.exists(live)) Nil
+      else fs.listStatus(live).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith("_old_") || n == "_SUCCESS" || n.startsWith(".")
+      }
+    if (!fs.exists(new Path(staging, Manifest))) Snapshot(lakePath, liveEntries, torn = false)
+    else {
+      val staged = stagedEntries(fs, staging)
+      val replaced = readManifest(fs, staging) ++ staged.map(_.getPath.getName)
+      Snapshot(lakePath, liveEntries.filterNot(st => replaced(st.getPath.getName)) ++ staged,
+        torn = true)
+    }
   }
 }

@@ -159,11 +159,7 @@ object Incremental {
       updates: Boolean
   ): DataFrame = {
     FileMerge.recoverFileMerge(spark, lakePath)
-    val exists = {
-      val p = new org.apache.hadoop.fs.Path(lakePath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).nonEmpty
-    }
+    val exists = FileMerge.snapshot(spark, lakePath).entries.nonEmpty
     if (!exists) {
       dedupByKey(source, pk).write.mode("overwrite").parquet(lakePath)
     } else if (updates) {
@@ -242,13 +238,9 @@ object Incremental {
     // file per partition VALUE, so zero rows emit zero data files) must
     // not count: reading it back throws, and treating it as a live table
     // would wedge every later batch.
-    def partitionDirs: Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(live)) Nil
-      else fs.listStatus(live).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isDirectory && n.contains("=") && !n.startsWith("_")
-      }
-    def hasData: Boolean = partitionDirs.nonEmpty
+    def hasData: Boolean = FileMerge.snapshot(spark, lakePath).entries.exists { st =>
+      st.isDirectory && st.getPath.getName.contains("=") && !st.getPath.getName.startsWith("_")
+    }
     // the ONLY directory state that may be silently cleared before an
     // initial load: writer residue invisible to Spark reads — '_'/'.'
     // prefixed entries, files OR directories (_SUCCESS markers, and the

@@ -141,10 +141,8 @@ object Invert {
   /** Open a persisted index. Searches over this plan get the IN-list
     * term predicate pushed into the parquet scan (see [[writeIndex]]).
     */
-  def readIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String): DataFrame = {
-    FileMerge.recoverFileMerge(spark, indexPath)
-    spark.read.parquet(indexPath)
-  }
+  def readIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String): DataFrame =
+    FileMerge.snapshot(spark, indexPath).read(spark)
 
   /** Incrementally extend a persisted index with NEWLY INGESTED documents
     * — the maintenance half of build-once/search-many. Because posting

@@ -355,12 +355,35 @@ object Similarity {
   //
   // A build commits both tables in one [[FileMerge]] commit of the index
   // directory; appends and compactions commit into the postings table.
-  // Probes run [[FileMerge.recoverFileMerge]] on both paths first, so a
-  // crashed rebuild, append or compaction heals before any file listing.
+  // Writers run [[FileMerge.recoverFileMerge]] first. Probes never repair:
+  // each reads one [[FileMerge.snapshot]] of the index root, and the
+  // snapshot of the postings it resolves, so a crashed rebuild, append or
+  // compaction reads as its last published commit.
   // ---------------------------------------------------------------------
 
   private def postingsPath(indexPath: String): String = s"$indexPath/postings"
   private def centroidsPath(indexPath: String): String = s"$indexPath/centroids"
+
+  /** The snapshot of the postings table that the index snapshot `index`
+    * resolves: a torn build's staged postings, or the live ones with
+    * their own appends and compactions resolved.
+    */
+  private def postingsOf(spark: SparkSession, index: FileMerge.Snapshot): FileMerge.Snapshot =
+    FileMerge.snapshot(spark, index.pathOf("postings"))
+
+  /** What a probe of `buckets` scans: the postings files whose footer
+    * centroid range covers a probed bucket (stats-less files always), or
+    * the schema-stable empty frame when no file does.
+    */
+  private def probedPostings(
+      spark: SparkSession, post: FileMerge.Snapshot, buckets: Seq[Long]): DataFrame = {
+    val selected = FileMerge
+      .footers(spark, post.dataFiles.map(_.getPath.toString), "centroid_id", strict = false)
+      .filter(r => !r.known || buckets.exists(c => c >= r.lo && c <= r.hi))
+      .map(_.file)
+    if (selected.isEmpty) post.read(spark).where(lit(false))
+    else spark.read.parquet(selected: _*)
+  }
 
   /** Build (or rebuild) the persisted IVF index at `indexPath`: one
     * corpus scan assigns every vector to its nearest centroid
@@ -467,7 +490,7 @@ object Similarity {
       commitId: Option[String] = None
   ): Boolean = {
     // a crashed rebuild first (appendStaged runs the postings recovery
-    // itself) — same order as the probe
+    // itself) — the order in which a snapshot resolves the index
     FileMerge.recoverFileMerge(spark, indexPath)
     val cents = spark.read.parquet(centroidsPath(indexPath))
     // the persisted postings schema is the contract: an index built
@@ -599,7 +622,7 @@ object Similarity {
     * fixed cutoff is the wrong contract: k too small silently drops true
     * matches, k too large pads with noise.
     *
-    * Same probe physics as [[ivfTopKIndexed]] (recovery, centroid
+    * Same probe physics as [[ivfTopKIndexed]] (snapshot, centroid
     * ranking, footer-stats file selection, row-group pruning) — only the
     * final predicate differs: a `cos_sim >= minSim` filter that Spark
     * pushes into the candidate scan, instead of a global sort+limit. At
@@ -627,7 +650,7 @@ object Similarity {
   }
 
   /** Shared single-query probe path of [[ivfTopKIndexed]] /
-    * [[ivfRadiusIndexed]]: heal the index, validate the one-row
+    * [[ivfRadiusIndexed]]: snapshot the index, validate the one-row
     * ARRAY<FLOAT> query contract, rank stored centroids, footer-select
     * only the probed buckets' postings files, and return every candidate
     * exact-cosine-scored as `(idCol, cos_sim)` — unsorted, uncapped; the
@@ -652,11 +675,8 @@ object Similarity {
         throw new IllegalArgumentException(
           s"$caller: query column must be ARRAY<FLOAT>, got ${other.simpleString}")
     }
-    // a crashed rebuild first, then the postings table's appends and
-    // compactions
-    FileMerge.recoverFileMerge(spark, indexPath)
-    val post = postingsPath(indexPath)
-    FileMerge.recoverFileMerge(spark, post)
+    val index = FileMerge.snapshot(spark, indexPath)
+    val post = postingsOf(spark, index)
     // enforce the ONE-row contract: a multi-row query would silently
     // pair every candidate with every query vector and return a result
     // of mixed similarities (possibly the same id twice)
@@ -667,13 +687,12 @@ object Similarity {
       // a NULL query vector has no defined neighbours: schema-stable
       // empty result, matching the cosine-NULL-filter behaviour of the
       // non-indexed paths
-      return spark.read
-        .parquet(post)
+      return post.read(spark)
         .where(lit(false))
         .select(col(idCol), lit(null).cast("double").as("cos_sim"))
     val qVec = typedLit(qRows.head.getSeq[Float](0).toArray)
     val probed = spark.read
-      .parquet(centroidsPath(indexPath))
+      .parquet(index.pathOf("centroids"))
       .select(col("centroid_id"), cosine(col("centroid"), qVec).as("_cs"))
       .where(col("_cs").isNotNull)
       .orderBy(col("_cs").desc, col("centroid_id"))
@@ -682,15 +701,7 @@ object Similarity {
       .collect()
       .map(_.getLong(0))
       .sorted
-    val selected = FileMerge
-      .fileRanges(spark, post, "centroid_id")
-      .filter(r => !r.known || probed.exists(c => c >= r.lo && c <= r.hi))
-      .map(r => s"$post/${r.file}")
-    val cand =
-      if (selected.isEmpty)
-        // schema-stable empty result: no bucket holds any vector
-        spark.read.parquet(post).where(lit(false))
-      else spark.read.parquet(selected: _*)
+    val cand = probedPostings(spark, post, probed)
     val excluded = excludeId match {
       case Some(id) => cand.where(col(idCol) =!= id)
       case None     => cand
@@ -789,7 +800,7 @@ object Similarity {
   }
 
   /** Shared batch probe path of [[ivfTopKIndexedBatch]] /
-    * [[ivfRadiusIndexedBatch]]: heal the index, rank buckets per query,
+    * [[ivfRadiusIndexedBatch]]: snapshot the index, rank buckets per query,
     * footer-select the batch's probed-bucket union, equi-join candidates
     * to their queries, exact cosine — unsorted, uncapped; the callers
     * apply their own final predicate (top-k window vs radius filter).
@@ -806,12 +817,11 @@ object Similarity {
       excludeSelf: Boolean
   ): DataFrame = {
     require(nprobe > 0, "indexed batch probe: nprobe must be positive")
-    FileMerge.recoverFileMerge(spark, indexPath)
-    val post = postingsPath(indexPath)
-    FileMerge.recoverFileMerge(spark, post)
+    val index = FileMerge.snapshot(spark, indexPath)
+    val post = postingsOf(spark, index)
     val q = Checkpoints.checkpoint(
       queries.select(col(qIdCol).as("query_id"), col(qVecCol).as("_qvec")))
-    val cents = broadcast(spark.read.parquet(centroidsPath(indexPath)))
+    val cents = broadcast(spark.read.parquet(index.pathOf("centroids")))
     val probeRank = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("_pcs").desc, col("centroid_id"))
@@ -828,14 +838,7 @@ object Similarity {
     // never per query or per row
     val probedIds = probeTable
       .select("centroid_id").distinct().collect().map(_.getLong(0)).sorted
-    val selected = FileMerge
-      .fileRanges(spark, post, "centroid_id")
-      .filter(r => !r.known || probedIds.exists(c => c >= r.lo && c <= r.hi))
-      .map(r => s"$post/${r.file}")
-    val cand =
-      if (selected.isEmpty) spark.read.parquet(post).where(lit(false))
-      else spark.read.parquet(selected: _*)
-    val scored = cand
+    val scored = probedPostings(spark, post, probedIds)
       .join(probeTable, "centroid_id")
       .join(q, "query_id")
       .select(
@@ -1799,14 +1802,13 @@ object Similarity {
       case other => throw new IllegalArgumentException(
         s"ivfPqTopK: query column must be ARRAY<FLOAT>, got ${other.simpleString}")
     }
-    FileMerge.recoverFileMerge(spark, indexPath)
-    val post = postingsPath(indexPath)
-    FileMerge.recoverFileMerge(spark, post)
+    val index = FileMerge.snapshot(spark, indexPath)
+    val post = postingsOf(spark, index)
     val qRows = query.limit(2).collect()
     require(qRows.length == 1,
       s"ivfPqTopK: query must have exactly one row, got ${qRows.length}")
     if (qRows.head.isNullAt(0))
-      return spark.read.parquet(post)
+      return post.read(spark)
         .where(lit(false))
         .select(col(idCol),
           lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos_sim"))
@@ -1818,7 +1820,7 @@ object Similarity {
     // every size(codes)===m filter and return an empty frame instead of
     // erroring. The stored subspace count is max(sub)+1, exactly how
     // ivfPqAppend infers it.
-    val storedCb = localized(spark.read.parquet(codebookPath(indexPath)))
+    val storedCb = localized(spark.read.parquet(index.pathOf("codebook")))
     val storedM = storedCb.agg(max(col("sub"))).head().getInt(0) + 1
     require(m == storedM,
       s"ivfPqTopK: caller m=$m does not match the stored codebook's " +
@@ -1826,7 +1828,7 @@ object Similarity {
         "silently filter every candidate")
     // 1. bucket ranking against the stored coarse quantizer
     val probed = spark.read
-      .parquet(centroidsPath(indexPath))
+      .parquet(index.pathOf("centroids"))
       .select(col("centroid_id"), cosine(col("centroid"), qVec).as("_cs"))
       .where(col("_cs").isNotNull)
       .orderBy(col("_cs").desc, col("centroid_id"))
@@ -1836,13 +1838,7 @@ object Similarity {
       .map(_.getLong(0))
       .sorted
     // 2. footer-stats file selection: only the probed buckets' files
-    val selected = FileMerge
-      .fileRanges(spark, post, "centroid_id")
-      .filter(r => !r.known || probed.exists(c => c >= r.lo && c <= r.hi))
-      .map(r => s"$post/${r.file}")
-    val cand =
-      if (selected.isEmpty) spark.read.parquet(post).where(lit(false))
-      else spark.read.parquet(selected: _*)
+    val cand = probedPostings(spark, post, probed)
     val excluded = excludeId match {
       case Some(id) => cand.where(col(idCol) =!= id)
       case None     => cand
@@ -1914,7 +1910,7 @@ object Similarity {
     val cutRow = scored.orderBy(col("_adcr").desc, col(idCol)).limit(shortlist)
       .agg(min(col("_adcr"))).head()
     if (cutRow.isNullAt(0))
-      return spark.read.parquet(post)
+      return post.read(spark)
         .where(lit(false))
         .select(col(idCol),
           lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos_sim"))
@@ -1974,9 +1970,9 @@ object Similarity {
     require(topK >= 1 && nprobe >= 1 && minFactor >= 1 && frac > 0.0,
       s"ivfPqShortlistFor: need topK/nprobe/minFactor >= 1 and frac > 0, " +
         s"got topK=$topK nprobe=$nprobe minFactor=$minFactor frac=$frac")
-    FileMerge.recoverFileMerge(spark, indexPath)
-    val nPost = spark.read.parquet(postingsPath(indexPath)).count()
-    val nCent = spark.read.parquet(centroidsPath(indexPath)).count()
+    val index = FileMerge.snapshot(spark, indexPath)
+    val nPost = postingsOf(spark, index).read(spark).count()
+    val nCent = spark.read.parquet(index.pathOf("centroids")).count()
     require(nCent > 0, s"ivfPqShortlistFor: empty centroid table at $indexPath")
     val perBucket = math.ceil(nPost.toDouble / nCent)
     math.min(
@@ -2026,10 +2022,9 @@ object Similarity {
     require(shortlist >= topK,
       s"ivfPqTopKBatch: shortlist ($shortlist) must be at least topK ($topK)")
     require(nprobe >= 1, s"ivfPqTopKBatch: nprobe must be at least 1, got $nprobe")
-    FileMerge.recoverFileMerge(spark, indexPath)
-    val post = postingsPath(indexPath)
-    FileMerge.recoverFileMerge(spark, post)
-    val storedCb = localized(spark.read.parquet(codebookPath(indexPath)))
+    val index = FileMerge.snapshot(spark, indexPath)
+    val post = postingsOf(spark, index)
+    val storedCb = localized(spark.read.parquet(index.pathOf("codebook")))
     val storedM = storedCb.agg(max(col("sub"))).head().getInt(0) + 1
     require(m == storedM,
       s"ivfPqTopKBatch: caller m=$m does not match the stored codebook's " +
@@ -2073,7 +2068,7 @@ object Similarity {
         "the quantized cosine is undefined for them and those query ids would " +
         "silently vanish from the batch answer")
     // 1. per-query bucket ranking (the indexedBatchCandidates shape)
-    val cents = broadcast(spark.read.parquet(centroidsPath(indexPath)))
+    val cents = broadcast(spark.read.parquet(index.pathOf("centroids")))
     val probeRank = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("_pcs").desc, col("centroid_id"))
@@ -2090,14 +2085,7 @@ object Similarity {
     // (bounded collect: ≤ centroid count rows)
     val probedIds = probeTable
       .select("centroid_id").distinct().collect().map(_.getLong(0)).sorted
-    val selected = FileMerge
-      .fileRanges(spark, post, "centroid_id")
-      .filter(r => !r.known || probedIds.exists(c => c >= r.lo && c <= r.hi))
-      .map(r => s"$post/${r.file}")
-    val cand =
-      if (selected.isEmpty) spark.read.parquet(post).where(lit(false))
-      else spark.read.parquet(selected: _*)
-    val probedCand = cand
+    val probedCand = probedPostings(spark, post, probedIds)
       .join(probeTable, "centroid_id")
       .where(size(col("codes")) === m)
     val excluded =
@@ -2208,13 +2196,18 @@ object Similarity {
       boundSlack: Double = 1e-9,
       subBlocks: Int = 8
   ): DataFrame = {
+    val index = FileMerge.snapshot(spark, indexPath)
+    semDedupCandidates(spark, index, postingsOf(spark, index), idCol, threshold, boundSlack, subBlocks)
+  }
+
+  private def semDedupCandidates(spark: SparkSession, index: FileMerge.Snapshot,
+      postings: FileMerge.Snapshot, idCol: String,
+      threshold: Double, boundSlack: Double, subBlocks: Int): DataFrame = {
     require(threshold > 0.0,
       s"semDedupCandidates: threshold must be positive (the ub prune " +
         s"keeps every pair otherwise), got $threshold")
     require(subBlocks >= 1, "semDedupCandidates: subBlocks must be >= 1")
-    FileMerge.recoverFileMerge(spark, indexPath)
-    FileMerge.recoverFileMerge(spark, postingsPath(indexPath))
-    val cb = localized(spark.read.parquet(codebookPath(indexPath)))
+    val cb = localized(spark.read.parquet(index.pathOf("codebook")))
     val m = cb.agg(max(col("sub"))).head().getInt(0) + 1
     val kMax = cb.agg(max(col("cid"))).head().getLong(0) + 1
     require(m.toLong * kMax * kMax <= 262144L,
@@ -2236,7 +2229,7 @@ object Similarity {
         if (sub.isEmpty) lit(null).cast("double")
         else denseLookup(sub, ca.getItem(s) * kMax + cbc.getItem(s))
       }.reduce(_ + _)
-    val post = spark.read.parquet(postingsPath(indexPath))
+    val post = postings.read(spark)
       .where(size(col("codes")) === m && col("nrm") > 0)
       .select(col(idCol).as("id"), col("centroid_id").as("blk"),
         col("codes"), col("nrm"), col("qn"), col("r"),
@@ -2285,8 +2278,9 @@ object Similarity {
       boundSlack: Double = 1e-9,
       subBlocks: Int = 8
   ): DataFrame = {
-    val cand = semDedupCandidates(
-      spark, indexPath, idCol, threshold, boundSlack, subBlocks)
+    val index = FileMerge.snapshot(spark, indexPath)
+    val post = postingsOf(spark, index)
+    val cand = semDedupCandidates(spark, index, post, idCol, threshold, boundSlack, subBlocks)
     val vecs = emb.select(
       col(idCol), col(vecCol).as("_v"), sqrt(norm2(col(vecCol))).as("_n"))
     val dropped = cand
@@ -2299,7 +2293,7 @@ object Similarity {
       .where(col("_cs") >= threshold)
       .select(col("id_b").as("_dropId"))
       .distinct()
-    spark.read.parquet(postingsPath(indexPath))
+    post.read(spark)
       .select(col(idCol), col("centroid_id"))
       .join(dropped, col(idCol) === col("_dropId"), "left")
       .select(
@@ -2344,9 +2338,8 @@ object Similarity {
       indexPath: String,
       relErrBound: Double = 0.5
   ): DataFrame = {
-    FileMerge.recoverFileMerge(spark, indexPath)
-    FileMerge.recoverFileMerge(spark, postingsPath(indexPath))
-    val cb = localized(spark.read.parquet(codebookPath(indexPath)))
+    val index = FileMerge.snapshot(spark, indexPath)
+    val cb = localized(spark.read.parquet(index.pathOf("codebook")))
     val m = cb.agg(max(col("sub"))).head().getInt(0) + 1
     val batchStats = codesWithStats(
       batch.select(col(idCol), col(vecCol)), idCol, vecCol, cb, m)
@@ -2354,7 +2347,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_batch"), avg(col("r")).as("batch_mean_err"),
         avg(when(col("r") / col("nrm") > relErrBound, 1.0).otherwise(0.0))
           .as("frac_above"))
-    val indexStats = spark.read.parquet(postingsPath(indexPath))
+    val indexStats = postingsOf(spark, index).read(spark)
       .where(col("nrm") > 0)
       .agg(avg(col("r")).as("index_mean_err"))
     batchStats.crossJoin(indexStats)

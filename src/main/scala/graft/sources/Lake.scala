@@ -375,6 +375,7 @@ object Lake {
     // hidden asides/staging that the read below skips — compacting over
     // that bakes in the missing rows
     graft.operators.FileMerge.recoverFileMerge(spark, path)
+    val table = graft.operators.FileMerge.snapshot(spark, path)
     // size via the Hadoop FS of the path itself — a local-filesystem walk
     // would read 0 bytes for hdfs://, s3a://, ... and compact to ONE file
     val p = new org.apache.hadoop.fs.Path(path)
@@ -385,18 +386,15 @@ object Lake {
     // Hive-partitioned table without partitionCols would silently flatten
     // its directories (and partition-type inference corrupts
     // non-canonical values like '01' → 1 on the way)
-    require(
-      partitionCols.nonEmpty || !fs.listStatus(p).exists(st =>
-        st.isDirectory && st.getPath.getName.contains("=")),
+    require(partitionCols.nonEmpty || !table.hivePartitioned,
       s"compact: $path has a Hive-partitioned layout — pass partitionCols to preserve it")
     // a deduped-ingest corpus carries time-travel state IN ITS FILE
     // NAMES (ingest_<batch>_ tags): a name-blind rewrite would make
     // every corpusAsOf snapshot silently return the full corpus. Refuse
     // and point at the batch-aware compaction instead of destroying it.
     require(
-      !fs.listStatus(p).exists(st =>
-        st.isFile && st.getPath.getName.startsWith("ingest_") &&
-          st.getPath.getName.stripPrefix("ingest_").headOption.exists(_.isDigit)),
+      !table.dataFiles.map(_.getPath.getName).exists(n =>
+        n.startsWith("ingest_") && n.stripPrefix("ingest_").headOption.exists(_.isDigit)),
       s"compact: $path is a deduped-ingest corpus (ingest_<batch>_ tagged files) — " +
         "its batch tags carry corpusAsOf time travel; use Streams.compactIngestCorpus")
     val df = spark.read.parquet(path)
@@ -420,93 +418,46 @@ object Lake {
     nFiles
   }
 
-  /** K6 — CSV-to-lake ingestion pipeline (`utils.py:194-197`):
-    * read (inferred or DDL-declared) → sanitize column names → overwrite.
-    */
   /** METADATA-ONLY table statistics: row count and an integral column's
     * min/max computed purely from parquet footers — no data pages are
     * read. At 100 TB a `count(*)` that schedules tasks over every data
     * split pays a full listing-and-scan plan; the footers alone (a few
     * KB per file) carry exact row counts and column chunk min/max, the
-    * same metadata a table format serves from its manifest. The footer
-    * sweep is DISTRIBUTED (one task per slice of the file list, the
-    * [[graft.operators.FileMerge.fileRanges]] pattern) so a
+    * same metadata a table format serves from its manifest. It folds
+    * the records of [[graft.operators.FileMerge.footers]], the one
+    * distributed footer scan, over the table's snapshot, so a
     * million-file table does not bottleneck on the driver.
     *
     * Exactness contract: row count is always exact (every footer states
     * its block row counts). min/max are exact only when every non-empty
-    * block carries statistics for `statsCol`; a stats-less or non-
-    * numeric chunk fails fast with the file name rather than returning
-    * silently-wrong bounds. NULLs don't count toward min/max (parquet
-    * stats are over non-null values), matching SQL aggregate semantics;
-    * an all-null or empty table reports NULL bounds.
+    * block carries statistics for `statsCol`; the scan is strict, so a
+    * stats-less or non-numeric chunk fails fast with the file name
+    * rather than returning silently-wrong bounds. NULLs don't count
+    * toward min/max (parquet stats are over non-null values), matching
+    * SQL aggregate semantics; an all-null or empty table reports NULL
+    * bounds.
     *
     * Accepts a single parquet file or a directory of data files.
     */
   def footerStats(spark: SparkSession, path: String, statsCol: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import scala.jdk.CollectionConverters._
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files: Seq[String] =
-      if (fs.getFileStatus(p).isFile) Seq(p.toString)
-      else
-        fs.listStatus(p)
-          .toSeq
-          .filter { st =>
-            val n = st.getPath.getName
-            st.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-          .map(_.getPath.toString)
+    import graft.operators.FileMerge
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files =
+      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isFile)
+        Seq(path)
+      else FileMerge.snapshot(spark, path).dataFiles.map(_.getPath.toString)
     require(files.nonEmpty, s"footerStats: no data files under $path")
-    val confBc = org.apache.spark.sql.graftbridge.ConfBridge.broadcast(spark.sparkContext)
-    val slices = math.min(files.size, math.max(1, spark.sparkContext.defaultParallelism))
-    // (rows, lo, hi, sawValue) per file; reduced associatively
-    val (rows, lo, hi, saw) = spark.sparkContext
-      .parallelize(files, slices)
-      .map { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new Path(f), org.apache.spark.sql.graftbridge.ConfBridge.value(confBc)))
-        try {
-          var rows = 0L
-          var lo = Long.MaxValue
-          var hi = Long.MinValue
-          var saw = false
-          reader.getFooter.getBlocks.asScala.foreach { b =>
-            rows += b.getRowCount
-            if (b.getRowCount > 0) {
-              val c = b.getColumns.asScala
-                .find(_.getPath.toDotString == statsCol)
-                .getOrElse(throw new IllegalArgumentException(
-                  s"footerStats: column $statsCol absent from $f"))
-              val st = c.getStatistics
-              require(
-                st != null,
-                s"footerStats: $f carries no statistics for $statsCol — " +
-                  "metadata-only bounds would be a guess, not an answer")
-              if (st.hasNonNullValue) (st.genericGetMin, st.genericGetMax) match {
-                case (mn: Number, mx: Number) =>
-                  lo = math.min(lo, mn.longValue)
-                  hi = math.max(hi, mx.longValue)
-                  saw = true
-                case other =>
-                  throw new IllegalArgumentException(
-                    s"footerStats: non-integral statistics for $statsCol in $f: $other")
-              }
-            }
-          }
-          (rows, lo, hi, saw)
-        } finally reader.close()
-      }
-      .reduce { (a, b) =>
-        (a._1 + b._1, math.min(a._2, b._2), math.max(a._3, b._3), a._4 || b._4)
-      }
+    val stats = FileMerge.footers(spark, files, statsCol, strict = true)
+    val (lo, hi) = (stats.map(_.lo).min, stats.map(_.hi).max)
+    val saw = lo <= hi
     import spark.implicits._
-    Seq((rows, if (saw) Some(lo) else None, if (saw) Some(hi) else None))
+    Seq((stats.map(_.rows).sum, if (saw) Some(lo) else None, if (saw) Some(hi) else None))
       .toDF("n_rows", "min_" + statsCol, "max_" + statsCol)
   }
 
+  /** K6 — CSV-to-lake ingestion pipeline (`utils.py:194-197`):
+    * read (inferred or DDL-declared) → sanitize column names → overwrite.
+    */
   def ingestCsvToDatalake(
       spark: SparkSession,
       csvPath: String,

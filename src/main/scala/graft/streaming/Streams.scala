@@ -312,8 +312,8 @@ object Streams {
         Dedup.minhashLshPairsMd5(exact, idCol, textCol, n, threshold, bands, rowsPerBand)
       val inner = Checkpoints.cache(Dedup.dedupByPairs(exact, idCol, innerPairs))
 
-      val hasData = fs.exists(target) &&
-        fs.listStatus(target).exists(!_.getPath.getName.startsWith("_"))
+      val hasData =
+        FileMerge.snapshot(spark, targetPath).entries.exists(!_.getPath.getName.startsWith("_"))
       val survivors =
         if (!hasData) inner
         else
@@ -345,27 +345,25 @@ object Streams {
     * convention because files are only ever ADDED under a
     * monotonically-committed batch id). Files not written by the ingest
     * protocol (a pre-existing corpus the stream appended onto) carry no
-    * batch tag and belong to every snapshot. Metadata-scale: one
-    * directory listing; the read plans only the selected files.
+    * batch tag and belong to every snapshot. Metadata-scale: the file
+    * list and the floor come from one [[FileMerge.snapshot]], which
+    * also resolves a torn commit's staged floor; the read plans only the
+    * selected files.
     */
   def corpusAsOf(spark: SparkSession, targetPath: String, maxBatchId: Long): DataFrame = {
-    val target = new Path(targetPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    FileMerge.recoverFileMerge(spark, targetPath)
+    val corpus = FileMerge.snapshot(spark, targetPath)
     // refuse, never fabricate: below the squash floor the per-batch
     // files no longer exist, so a filter there would silently return a
     // WRONG snapshot (the squashed base aggregates every batch <= floor)
-    val floor = readAsOfFloor(fs, target)
+    val floor = readAsOfFloor(spark, corpus)
     require(
       maxBatchId >= floor,
       s"corpusAsOf: history below batch $floor of $targetPath was squashed by " +
         s"compactIngestCorpus — snapshot $maxBatchId is no longer reconstructible")
-    val selected = fs.listStatus(target)
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-      .map(_.getPath)
+    val selected = corpus.dataFiles.map(_.getPath)
       .filter(p => batchTagOf(p.getName).forall(_ <= maxBatchId))
-    if (selected.isEmpty) spark.read.parquet(targetPath).where(lit(false))
-    else spark.read.parquet(selected.map(_.toString).toIndexedSeq: _*)
+    if (selected.isEmpty) corpus.read(spark).where(lit(false))
+    else spark.read.parquet(selected.map(_.toString): _*)
   }
 
   /** Batch id carried by an ingest-protocol file name
@@ -386,8 +384,9 @@ object Streams {
     */
   private val AsOfFloor = "_asof_floor"
 
-  private def readAsOfFloor(fs: org.apache.hadoop.fs.FileSystem, table: Path): Long = {
-    val p = new Path(table, AsOfFloor)
+  private def readAsOfFloor(spark: SparkSession, corpus: FileMerge.Snapshot): Long = {
+    val p = new Path(corpus.pathOf(AsOfFloor))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Long.MinValue
     else {
       val in = fs.open(p)
@@ -431,15 +430,12 @@ object Streams {
   ): Int = {
     require(upToBatchId >= 0, s"upToBatchId must be a committed batch id, got $upToBatchId")
     require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    val target = new Path(targetPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     FileMerge.recoverFileMerge(spark, targetPath)
-    val squash = fs.listStatus(target).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && batchTagOf(n).forall(_ <= upToBatchId)
-    }
+    val corpus = FileMerge.snapshot(spark, targetPath)
+    val squash = corpus.dataFiles
+      .filter(st => batchTagOf(st.getPath.getName).forall(_ <= upToBatchId))
     if (squash.isEmpty) return 0
-    val newFloor = math.max(upToBatchId, readAsOfFloor(fs, target))
+    val newFloor = math.max(upToBatchId, readAsOfFloor(spark, corpus))
     val bytes = squash.map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     spark.read.parquet(squash.map(_.getPath.toString).toIndexedSeq: _*)
@@ -528,7 +524,7 @@ object Streams {
     FileMerge.recoverFileMerge(spark, targetPath)
     val committed = readLedger(fs, target)
     if (committed.contains(batchId)) return false
-    val hasData = fs.exists(target) && fs.listStatus(target).nonEmpty
+    val hasData = FileMerge.snapshot(spark, targetPath).entries.nonEmpty
     val merged =
       // schema-merging read: the target may carry heterogeneous footers
       // (an evolved file-granular merge ran on it earlier), and this

@@ -18,6 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every lake write commits through `operators/FileMerge.scala`, the
   * only file that renames, and the engine and its drivers reach the
   * filesystem only through Hadoop `FileSystem`.
+  *
+  * Writers recover and readers resolve: only a writer repairs a torn
+  * commit (`FileMerge.recoverFileMerge`), and a read function, with
+  * everything it calls, never changes the table it reads.
   */
 class EngineEnvSpec extends AnyFunSuite {
 
@@ -54,12 +58,6 @@ class EngineEnvSpec extends AnyFunSuite {
   test("engine code pins and releases data only through Checkpoints") {
     val files = (scalaFiles(EnginePackages :+ "queries") ++ Drivers)
       .filterNot(_.endsWith(Paths.get("operators", "Checkpoints.scala")))
-    // a line's code: scaladoc and block-comment lines have none, and a
-    // trailing `//` comment is cut off
-    def codeOf(line: String): String = {
-      val t = line.trim
-      if (t.startsWith("*") || t.startsWith("/*")) "" else t.split("//", 2)(0)
-    }
     val found = hits(files)(line => PinCall.findFirstIn(codeOf(line)).isDefined)
     assert(found.isEmpty, found.mkString("pins outside operators/Checkpoints.scala:\n", "\n", ""))
   }
@@ -69,6 +67,84 @@ class EngineEnvSpec extends AnyFunSuite {
       .filterNot(_.endsWith(Paths.get("operators", "FileMerge.scala")))
     val found = hits(files)(_.contains(".rename("))
     assert(found.isEmpty, found.mkString("renames outside operators/FileMerge.scala:\n", "\n", ""))
+  }
+
+  /** Every `def` in `files`, by name: its lines, from the `def` line to
+    * the last line indented deeper than it (closing brackets included).
+    */
+  private def defs(files: Seq[Path]): Map[String, Seq[Seq[String]]] = {
+    val Def = """^(\s*)(?:(?:private|protected|final|override)(?:\[\w+\])?\s+)*def\s+(\w+)""".r
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    val found = for {
+      f <- files
+      lines = Files.readAllLines(f).asScala.toIndexedSeq
+      (line, i) <- lines.zipWithIndex
+      m <- Def.findPrefixMatchOf(line).toSeq
+    } yield {
+      val k = m.group(1).length
+      val rest = lines.drop(i + 1).takeWhile { l =>
+        val t = l.trim
+        t.isEmpty || indent(l) > k || (indent(l) == k && (t.startsWith(")") || t.startsWith("}")))
+      }
+      m.group(2) -> (line +: rest)
+    }
+    found.groupMap(_._1)(_._2)
+  }
+
+  /** A line's code: scaladoc and block-comment lines have none, and a
+    * trailing `//` comment is cut off.
+    */
+  private def codeOf(line: String): String = {
+    val t = line.trim
+    if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) "" else t.split("//", 2)(0)
+  }
+
+  private val Writers = Set(
+    "mergeFileGranular", "appendStaged", "ingestIncremental", "mergePartitionPruned",
+    "writeIndex", "appendToIndex", "ivfBuild", "ivfAppend", "ivfCompact", "ivfPqBuild",
+    "ivfPqAppend", "compact", "ingestBatchDeduped", "compactIngestCorpus", "upsertBatch",
+    "upsertBatchFileGranular")
+
+  private val Readers = Seq(
+    "readIndex", "corpusAsOf", "indexedProbeCandidates", "indexedBatchCandidates",
+    "ivfPqTopK", "ivfPqTopKBatch", "ivfPqShortlistFor", "semDedupCandidates",
+    "ivfPqDriftReport", "snapshot")
+
+  test("only writers run the commit recovery") {
+    val files = scalaFiles(Seq("."))
+    val all = defs(files)
+    val callers = for {
+      (name, bodies) <- all.toSeq
+      body <- bodies
+      if body.tail.exists(l => codeOf(l).contains("recoverFileMerge("))
+    } yield name
+    assert(callers.nonEmpty)
+    val strays = callers.filterNot(Writers)
+    assert(strays.isEmpty, strays.mkString("recoverFileMerge called outside the writers: ", ", ", ""))
+  }
+
+  test("read functions never change the table they read") {
+    val all = defs(scalaFiles(EnginePackages))
+    Readers.foreach(r => assert(all.contains(r), s"read function $r not found"))
+    // every engine def a reader reaches by name, the reader included
+    var reached = Set.empty[String]
+    var next = Readers.toSet
+    while (next.nonEmpty) {
+      reached ++= next
+      next = (for {
+        name <- next.toSeq
+        line <- all(name).flatten
+        callee <- """\b(\w+)\s*\(""".r.findAllMatchIn(codeOf(line)).map(_.group(1))
+        if all.contains(callee) && !reached(callee)
+      } yield callee).toSet
+    }
+    val Mutation = """recoverFileMerge\(|\.delete\(|\.rename\(|\.create\(""".r
+    val found = for {
+      name <- reached.toSeq.sorted
+      line <- all(name).flatten
+      if Mutation.findFirstIn(codeOf(line)).isDefined
+    } yield s"$name: ${line.trim}"
+    assert(found.isEmpty, found.mkString("a read function reaches a table change:\n", "\n", ""))
   }
 
   test("engine and drivers reach the filesystem through Hadoop FileSystem only") {

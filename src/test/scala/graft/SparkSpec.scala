@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{CacheProbe, SparkSession}
 
 /** Shared session for all suites (getOrCreate → one JVM-wide session). */
@@ -18,5 +19,22 @@ trait SparkSpec {
     def left: (Int, Set[Int]) = (
       CacheProbe.entries(spark) - entries,
       spark.sparkContext.getPersistentRDDs.keySet.filter(_ > maxRddId).toSet)
+  }
+
+  /** Every file and directory under `roots`, recursively, as (path,
+    * length, modification time): a read must leave all of it as it
+    * found it.
+    */
+  def tree(roots: String*): Set[(String, Long, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def walk(p: Path): Seq[(String, Long, Long)] = {
+      val fs = p.getFileSystem(conf)
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.flatMap { st =>
+        (st.getPath.toString, st.getLen, st.getModificationTime) +:
+          (if (st.isDirectory) walk(st.getPath) else Nil)
+      }
+    }
+    roots.flatMap(r => walk(new Path(r))).toSet
   }
 }

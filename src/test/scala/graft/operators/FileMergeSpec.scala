@@ -156,6 +156,22 @@ class FileMergeSpec extends AnyFunSuite with SparkSpec {
     assert(content(dir).size == 502)
   }
 
+  test("a read between an append's staged data and its marker loses no rows") {
+    val dir = tmp()
+    FileMerge.mergeFileGranular(spark, base(50), dir, "id", initialFiles = 2)
+    val batch = (1000L until 1010L).map(i => (i, s"n$i")).toDF("id", "v")
+    // appendStaged step by step, with a reader between its staged data
+    // and its staged marker: the staging has no manifest yet, and the
+    // reader must leave it alone
+    Scale.writeRangeClustered(batch, FileMerge.stagingPath(dir), "id", 1)
+    assert(Invert.readIndex(spark, dir).count() == 50)
+    FileMerge.stageFile(spark, dir, "_append_committed_b1", "")
+    FileMerge.commit(spark, dir, Nil)
+    assert(FileMerge.appendCommitted(spark, dir, "b1"))
+    assert(content(dir) == (base(50).as[(Long, String)].collect() ++
+      batch.as[(Long, String)].collect()).toSet, "the committed append lost rows")
+  }
+
   test("compact repairs a torn file-merge commit instead of baking it in") {
     val dir = tmp()
     FileMerge.mergeFileGranular(spark, base(100), dir, "id", initialFiles = 2)

@@ -169,7 +169,7 @@ class InvertSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains("rebuild it with writeIndex"), e.getMessage)
   }
 
-  test("a torn index swap heals on the next read") {
+  test("a torn index swap reads as committed; the next writer heals it") {
     val root = java.nio.file.Files.createTempDirectory("invert_heal").toString
     val dir = s"$root/index"
     val idx = Invert.postingLists(docs, "doc_id", "text")
@@ -186,8 +186,43 @@ class InvertSpec extends AnyFunSuite with SparkSpec {
     val out = fs.create(new Path(dir + "_fmerge", "_touched"), true)
     try out.write(live.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
     live.foreach(n => assert(fs.rename(new Path(dir, n), new Path(dir, "_old_" + n))))
+    val torn = tree(dir, dir + "_fmerge")
     assert(Invert.readIndex(spark, dir).count() == expected)
+    assert(tree(dir, dir + "_fmerge") == torn, "the read changed the index or its staging")
+    // the next writer rolls the commit forward before its own append
+    val more = Seq((200L, "zeta")).toDF("doc_id", "text")
+    assert(Invert.appendToIndex(spark, more, "doc_id", "text", dir))
     assert(!fs.exists(new Path(dir + "_fmerge")))
+    assert(!fs.listStatus(new Path(dir)).exists(_.getPath.getName.startsWith("_old_")))
+    assert(Invert.readIndex(spark, dir).count() == expected + 1)
+  }
+
+  test("a read of an index commit torn mid-publish returns the new index and changes nothing") {
+    val root = java.nio.file.Files.createTempDirectory("invert_torn").toString
+    val dir = s"$root/index"
+    Invert.writeIndex(spark, Invert.postingLists(docs, "doc_id", "text"), dir, files = 2)
+    val grown = docs.union(Seq((300L, "zeta eta theta")).toDF("doc_id", "text"))
+    Invert.writeIndex(spark, Invert.postingLists(grown, "doc_id", "text"), s"$root/rebuilt", files = 2)
+    val expected = Invert.readIndex(spark, s"$root/rebuilt")
+      .select("term", "block").as[(String, Long)].collect().sorted.toSeq
+    // the rebuild's commit crashed mid-publish: its manifest names
+    // every live file, all of them are moved aside, and one of the
+    // staged files is already published
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(s"$root/rebuilt"), new Path(dir + "_fmerge")))
+    val live = fs.listStatus(new Path(dir)).map(_.getPath.getName).filterNot(_.startsWith("_"))
+    val out = fs.create(new Path(dir + "_fmerge", "_touched"), true)
+    try out.write(live.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+    live.foreach(n => assert(fs.rename(new Path(dir, n), new Path(dir, "_old_" + n))))
+    val first = fs.listStatus(new Path(dir + "_fmerge")).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet")).min
+    assert(fs.rename(new Path(dir + "_fmerge", first), new Path(dir, first)))
+    val torn = tree(dir, dir + "_fmerge")
+    val got = Invert.readIndex(spark, dir)
+      .select("term", "block").as[(String, Long)].collect().sorted.toSeq
+    assert(got == expected)
+    assert(tree(dir, dir + "_fmerge") == torn, "the read changed the index or its staging")
   }
 
   test("index build has no window operator in the plan") {

@@ -129,33 +129,40 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  /** The crash state of a rebuild of `idx` into identical content: the
-    * staged index (a copy of the live one) and its empty manifest are
-    * written — the sub-tables replace their namesakes — then `hide`
-    * sub-tables are moved aside and `publish` staged ones moved in.
+  /** The crash state of a rebuild of `idx` into the content of `from`
+    * (by default, identical content): the staged index (a copy of
+    * `from`) and its empty manifest are written — the sub-tables
+    * replace their namesakes — then `hide` sub-tables are moved aside
+    * and `publish` staged ones moved in.
     */
-  private def crashRebuild(idx: String, hide: Seq[String], publish: Seq[String]): Unit = {
+  private def crashRebuild(
+      idx: String, hide: Seq[String], publish: Seq[String], from: Option[String] = None): Unit = {
     val live = new Path(idx)
     val staging = new Path(idx + "_fmerge")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = live.getFileSystem(conf)
-    assert(org.apache.hadoop.fs.FileUtil.copy(fs, live, fs, staging, false, conf))
+    assert(org.apache.hadoop.fs.FileUtil.copy(
+      fs, new Path(from.getOrElse(idx)), fs, staging, false, conf))
     fs.create(new Path(staging, "_touched"), true).close()
     hide.foreach(n => assert(fs.rename(new Path(live, n), new Path(live, "_old_" + n))))
     publish.foreach(n => assert(fs.rename(new Path(staging, n), new Path(live, n))))
   }
 
-  test("a crashed index rebuild heals before the probe (recoverAll plumbing)") {
+  test("a crashed index rebuild reads as committed; the next writer heals it") {
     val idx = buildCorpusIndex("recovery", files = 4)
     val before = Similarity
       .ivfTopKIndexed(spark, idx, "vec_id", "embedding", queryVec, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // live postings moved aside, its staged replacement not yet published
     crashRebuild(idx, hide = Seq("postings"), publish = Nil)
+    val torn = tree(idx, idx + "_fmerge")
     val after = Similarity
       .ivfTopKIndexed(spark, idx, "vec_id", "embedding", queryVec, k = 5, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(after == before)
+    assert(tree(idx, idx + "_fmerge") == torn, "the probe changed the index or its staging")
+    // the next writer rolls the rebuild forward before its own commit
+    Similarity.ivfCompact(spark, idx, targetFileBytes = 64L * 1024)
     val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new Path(s"$idx/postings")), "recovery should have published the postings")
     assert(!fs.exists(new Path(s"$idx/_old_postings")) && !fs.exists(new Path(idx + "_fmerge")))
@@ -231,7 +238,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
       .selectExpr("CAST(centroid_id AS LONG) AS centroid_id", "vec_id", "embedding")
       .write.mode("overwrite").parquet(staging.toString)
 
-  test("an append that crashed before its manifest is discarded; after it, rolled forward") {
+  test("an append that crashed before its manifest is unseen, after it seen; writers heal both") {
     val idx = halfCorpusIndex("appendcrash")
     val baseline = probe(idx)
     val post = s"$idx/postings"
@@ -239,31 +246,39 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     // crash BEFORE the manifest: staged data files, no _touched — the
-    // batch never started committing; the probe must discard it and
-    // return the pre-append result
+    // batch never started committing; the probe must ignore it, leave
+    // it in place, and return the pre-append result
     stageOddBatch(idx, staging)
+    val unstarted = tree(idx)
     assert(probe(idx) == baseline)
+    assert(tree(idx) == unstarted, "the probe changed the index or the append's staging")
+    // the next writer discards it
+    Similarity.ivfCompact(spark, idx, targetFileBytes = 64L * 1024)
     assert(!fs.exists(staging), "discarded staging should be gone")
+    assert(probe(idx) == baseline)
 
     // crash AFTER the manifest: staged files + the staged replay marker
-    // + _touched, commit never ran — the next probe must roll the whole
-    // append forward, data AND marker together
+    // + _touched, commit never ran — the probe must already see the
+    // whole append, data AND marker together
     stageOddBatch(idx, staging)
     fs.create(new Path(staging, "_append_committed_batch1"), true).close()
     fs.create(new Path(staging, "_touched"), true).close() // empty manifest
+    val published = tree(idx)
     val appended = probe(idx)
     assert(appended != baseline)
     assert(appended == probe(buildCorpusIndex("appendcrashfull", files = 4)))
-    assert(!fs.exists(staging), "rolled-forward staging should be gone")
-    assert(fs.exists(new Path(post, "_append_committed_batch1")),
-      "roll-forward must record the replay marker")
+    assert(tree(idx) == published, "the probe changed the index or the append's staging")
 
-    // the caller's retry of that same batch id is now a detected replay:
-    // nothing written, still one posting per vector
+    // the caller's retry of that same batch id rolls the append forward
+    // and is then a detected replay: nothing written, still one posting
+    // per vector
     val applied = Similarity.ivfAppend(
       spark, emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding", idx,
       files = 2, commitId = Some("batch1"))
     assert(!applied)
+    assert(!fs.exists(staging), "rolled-forward staging should be gone")
+    assert(fs.exists(new Path(post, "_append_committed_batch1")),
+      "roll-forward must record the replay marker")
     assert(probe(idx) == appended)
   }
 
@@ -608,6 +623,29 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     // all three sub-tables moved aside, only the codebook published
     crashRebuild(idx, hide = Seq("postings", "centroids", "codebook"), publish = Seq("codebook"))
     assert(probe() == before)
+  }
+
+  test("ivfPq: a probe of a rebuild torn mid-publish returns the new index and changes nothing") {
+    val idx = scratch("pqtornnew")
+    Similarity.ivfPqBuild(
+      spark, emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding",
+      emb.where(col("vec_id") < 16), "vec_id", "embedding",
+      m = 4, k = 8, indexPath = idx, files = 4)
+    val full = buildIvfPq("pqtornfull", files = 4)
+    def probe(path: String) = Similarity.ivfPqTopK(
+      spark, path, "vec_id", queryVec,
+      m = 4, topK = 5, nprobe = 4, shortlist = 40,
+      rerank = emb, rerankVecCol = "embedding", excludeId = Some(0L))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    val expected = probe(full)
+    assert(probe(idx) != expected)
+    // the rebuild into the full corpus crashed mid-publish: all three
+    // sub-tables moved aside, only the new codebook published
+    crashRebuild(idx, hide = Seq("postings", "centroids", "codebook"), publish = Seq("codebook"),
+      from = Some(full))
+    val torn = tree(idx, idx + "_fmerge")
+    assert(probe(idx) == expected)
+    assert(tree(idx, idx + "_fmerge") == torn, "the probe changed the index or its staging")
   }
 
   test("ivfPqAppend: appended vectors probe identically to a full build; exactly-once replay") {

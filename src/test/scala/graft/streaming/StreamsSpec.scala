@@ -932,6 +932,41 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     assert(refuse.getMessage.contains("compactIngestCorpus"))
   }
 
+  test("corpusAsOf over a torn compactIngestCorpus refuses below the staged floor, changes nothing") {
+    import graft.operators.FileMerge
+    import org.apache.hadoop.fs.Path
+    val target = Files.createTempDirectory("ingesttorn").toString + "/corpus"
+    assert(Streams.ingestBatchDeduped(
+      spark, Seq((1L, DocA)).toDF("doc_id", "text"), "doc_id", "text", target, 0L))
+    assert(Streams.ingestBatchDeduped(
+      spark, Seq((2L, DocC)).toDF("doc_id", "text"), "doc_id", "text", target, 1L))
+    assert(Streams.ingestBatchDeduped(
+      spark, Seq((3L, DocD)).toDF("doc_id", "text"), "doc_id", "text", target, 2L))
+    // compactIngestCorpus(upToBatchId = 1) crashed after its manifest:
+    // the squashed base and the new floor are staged, batch 0's files
+    // are moved aside, batch 1's are still live, nothing is published
+    val tp = new Path(target)
+    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val squash = fs.listStatus(tp).map(_.getPath.getName)
+      .filter(n => n.startsWith("ingest_0_") || n.startsWith("ingest_1_"))
+    spark.read.parquet(squash.map(n => s"$target/$n").toIndexedSeq: _*)
+      .write.parquet(FileMerge.stagingPath(target))
+    FileMerge.prefixStaged(spark, target, "ingest_1_")
+    FileMerge.stageFile(spark, target, "_asof_floor", "1\n")
+    FileMerge.stageFile(spark, target, "_touched", squash.mkString("", "\n", "\n"))
+    squash.filter(_.startsWith("ingest_0_"))
+      .foreach(n => assert(fs.rename(new Path(tp, n), new Path(tp, "_old_" + n))))
+    val torn = tree(target, FileMerge.stagingPath(target))
+    def ids(asOf: Long) =
+      Streams.corpusAsOf(spark, target, asOf).as[(Long, String)].collect().map(_._1).toSet
+    val ex = intercept[IllegalArgumentException](Streams.corpusAsOf(spark, target, 0L))
+    assert(ex.getMessage.contains("squashed"))
+    assert(ids(1L) == Set(1L, 2L))
+    assert(ids(2L) == Set(1L, 2L, 3L))
+    assert(tree(target, FileMerge.stagingPath(target)) == torn,
+      "the read changed the corpus or its staging")
+  }
+
   test("replayed ingest batch skips; a lost ledger degrades to a zero-row re-ingest") {
     val target = Files.createTempDirectory("ingestreplay").toString + "/corpus"
     val b = Seq((1L, DocA), (2L, DocC), (3L, "hi there")).toDF("doc_id", "text")
