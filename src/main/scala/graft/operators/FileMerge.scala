@@ -468,9 +468,9 @@ object FileMerge {
     def hivePartitioned: Boolean =
       entries.exists(st => st.isDirectory && st.getPath.getName.contains("="))
 
-    /** The table's rows. A clean read plans the directory; only a torn
-      * commit reads its resolved files by name, because Spark lists more
-      * than 32 explicit paths with a job.
+    /** The rows of a flat table. A clean read plans the directory; only
+      * a torn commit reads its resolved files by name, because Spark
+      * lists more than 32 explicit paths with a job.
       */
     def read(spark: SparkSession): DataFrame =
       if (torn) spark.read.parquet(dataFiles.map(_.getPath.toString): _*)

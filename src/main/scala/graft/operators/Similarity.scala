@@ -376,7 +376,7 @@ object Similarity {
     * the schema-stable empty frame when no file does.
     */
   private def probedPostings(
-      spark: SparkSession, post: FileMerge.Snapshot, buckets: Seq[Long]): DataFrame = {
+      spark: SparkSession, post: FileMerge.Snapshot, buckets: Array[Long]): DataFrame = {
     val selected = FileMerge
       .footers(spark, post.dataFiles.map(_.getPath.toString), "centroid_id", strict = false)
       .filter(r => !r.known || buckets.exists(c => c >= r.lo && c <= r.hi))
