@@ -3,6 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -85,16 +86,16 @@ object FileMerge {
     st.isFile && !n.startsWith("_") && !n.startsWith(".")
   }
 
-  /** Distributed footer scan: one task per slice of `files`, each
-    * reading only footers (a few KB per file) — the same metadata-scale
-    * pass a table format does against its transaction log. Returns one
-    * [[FileRange]] per file, named by its full path. A `strict` scan
-    * fails on a footer that cannot bound `column` instead of marking it
-    * unknown, and lets an all-null chunk bound nothing.
+  /** Distributed footer scan: one task per slice of `files` (at least
+    * one file), each reading only footers (a few KB per file) — the same
+    * metadata-scale pass a table format does against its transaction
+    * log. Yields one [[FileRange]] per file, named by its full path, when
+    * the caller collects it. A `strict` scan fails on a footer that
+    * cannot bound `column` instead of marking it unknown, and lets an
+    * all-null chunk bound nothing.
     */
   private[graft] def footers(
-      spark: SparkSession, files: Seq[String], column: String, strict: Boolean): Seq[FileRange] = {
-    if (files.isEmpty) return Nil
+      spark: SparkSession, files: Seq[String], column: String, strict: Boolean): RDD[FileRange] = {
     val confBc = org.apache.spark.sql.graftbridge.ConfBridge.broadcast(spark.sparkContext)
     val slices = math.min(files.size, math.max(1, spark.sparkContext.defaultParallelism))
     spark.sparkContext
@@ -135,15 +136,22 @@ object FileMerge {
           FileRange(f, rows, lo, hi, known)
         } finally reader.close()
       }
-      .collect()
-      .toSeq
   }
 
-  /** [[footers]] of the table's data files, each named by its file
-    * name.
+  /** The lenient [[footers]] of `table`'s data files: one job, none for
+    * a table without data files.
+    */
+  private[graft] def footerRanges(
+      spark: SparkSession, table: Snapshot, column: String): Seq[FileRange] = {
+    val files = table.dataFiles.map(_.getPath.toString)
+    if (files.isEmpty) Nil else footers(spark, files, column, strict = false).collect().toSeq
+  }
+
+  /** [[footerRanges]] of the table at `lakePath`, each file named by its
+    * file name.
     */
   def fileRanges(spark: SparkSession, lakePath: String, pk: String): Seq[FileRange] =
-    footers(spark, snapshot(spark, lakePath).dataFiles.map(_.getPath.toString), pk, strict = false)
+    footerRanges(spark, snapshot(spark, lakePath), pk)
       .map(r => r.copy(file = new Path(r.file).getName))
 
   /** The merge itself. `source` may carry duplicate keys (last-write-wins
@@ -468,13 +476,11 @@ object FileMerge {
     def hivePartitioned: Boolean =
       entries.exists(st => st.isDirectory && st.getPath.getName.contains("="))
 
-    /** The rows of a flat table. A clean read plans the directory; only
-      * a torn commit reads its resolved files by name, because Spark
-      * lists more than 32 explicit paths with a job.
+    /** What a read of a flat table plans: its directory while no commit
+      * is torn, the resolved data files otherwise (Spark lists more than
+      * 32 explicit paths with a job, so a clean read keeps the directory).
       */
-    def read(spark: SparkSession): DataFrame =
-      if (torn) spark.read.parquet(dataFiles.map(_.getPath.toString): _*)
-      else spark.read.parquet(path)
+    def paths: Seq[String] = if (torn) dataFiles.map(_.getPath.toString) else Seq(path)
   }
 
   /** Resolve `lakePath` from listings alone, with [[commitStaged]]'s

@@ -142,7 +142,7 @@ object Invert {
     * term predicate pushed into the parquet scan (see [[writeIndex]]).
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String): DataFrame =
-    FileMerge.snapshot(spark, indexPath).read(spark)
+    spark.read.parquet(FileMerge.snapshot(spark, indexPath).paths: _*)
 
   /** Incrementally extend a persisted index with NEWLY INGESTED documents
     * — the maintenance half of build-once/search-many. Because posting

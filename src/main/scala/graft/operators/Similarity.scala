@@ -378,10 +378,10 @@ object Similarity {
   private def probedPostings(
       spark: SparkSession, post: FileMerge.Snapshot, buckets: Array[Long]): DataFrame = {
     val selected = FileMerge
-      .footers(spark, post.dataFiles.map(_.getPath.toString), "centroid_id", strict = false)
+      .footerRanges(spark, post, "centroid_id")
       .filter(r => !r.known || buckets.exists(c => c >= r.lo && c <= r.hi))
       .map(_.file)
-    if (selected.isEmpty) post.read(spark).where(lit(false))
+    if (selected.isEmpty) spark.read.parquet(post.paths: _*).where(lit(false))
     else spark.read.parquet(selected: _*)
   }
 
@@ -687,7 +687,7 @@ object Similarity {
       // a NULL query vector has no defined neighbours: schema-stable
       // empty result, matching the cosine-NULL-filter behaviour of the
       // non-indexed paths
-      return post.read(spark)
+      return spark.read.parquet(post.paths: _*)
         .where(lit(false))
         .select(col(idCol), lit(null).cast("double").as("cos_sim"))
     val qVec = typedLit(qRows.head.getSeq[Float](0).toArray)
@@ -1808,7 +1808,7 @@ object Similarity {
     require(qRows.length == 1,
       s"ivfPqTopK: query must have exactly one row, got ${qRows.length}")
     if (qRows.head.isNullAt(0))
-      return post.read(spark)
+      return spark.read.parquet(post.paths: _*)
         .where(lit(false))
         .select(col(idCol),
           lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos_sim"))
@@ -1910,7 +1910,7 @@ object Similarity {
     val cutRow = scored.orderBy(col("_adcr").desc, col(idCol)).limit(shortlist)
       .agg(min(col("_adcr"))).head()
     if (cutRow.isNullAt(0))
-      return post.read(spark)
+      return spark.read.parquet(post.paths: _*)
         .where(lit(false))
         .select(col(idCol),
           lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos_sim"))
@@ -1971,7 +1971,7 @@ object Similarity {
       s"ivfPqShortlistFor: need topK/nprobe/minFactor >= 1 and frac > 0, " +
         s"got topK=$topK nprobe=$nprobe minFactor=$minFactor frac=$frac")
     val index = FileMerge.snapshot(spark, indexPath)
-    val nPost = postingsOf(spark, index).read(spark).count()
+    val nPost = spark.read.parquet(postingsOf(spark, index).paths: _*).count()
     val nCent = spark.read.parquet(index.pathOf("centroids")).count()
     require(nCent > 0, s"ivfPqShortlistFor: empty centroid table at $indexPath")
     val perBucket = math.ceil(nPost.toDouble / nCent)
@@ -2197,7 +2197,8 @@ object Similarity {
       subBlocks: Int = 8
   ): DataFrame = {
     val index = FileMerge.snapshot(spark, indexPath)
-    semDedupCandidates(spark, index, postingsOf(spark, index), idCol, threshold, boundSlack, subBlocks)
+    semDedupCandidates(
+      spark, index, postingsOf(spark, index), idCol, threshold, boundSlack, subBlocks)
   }
 
   private def semDedupCandidates(spark: SparkSession, index: FileMerge.Snapshot,
@@ -2229,7 +2230,7 @@ object Similarity {
         if (sub.isEmpty) lit(null).cast("double")
         else denseLookup(sub, ca.getItem(s) * kMax + cbc.getItem(s))
       }.reduce(_ + _)
-    val post = postings.read(spark)
+    val post = spark.read.parquet(postings.paths: _*)
       .where(size(col("codes")) === m && col("nrm") > 0)
       .select(col(idCol).as("id"), col("centroid_id").as("blk"),
         col("codes"), col("nrm"), col("qn"), col("r"),
@@ -2293,7 +2294,7 @@ object Similarity {
       .where(col("_cs") >= threshold)
       .select(col("id_b").as("_dropId"))
       .distinct()
-    post.read(spark)
+    spark.read.parquet(post.paths: _*)
       .select(col(idCol), col("centroid_id"))
       .join(dropped, col(idCol) === col("_dropId"), "left")
       .select(
@@ -2347,7 +2348,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_batch"), avg(col("r")).as("batch_mean_err"),
         avg(when(col("r") / col("nrm") > relErrBound, 1.0).otherwise(0.0))
           .as("frac_above"))
-    val indexStats = postingsOf(spark, index).read(spark)
+    val indexStats = spark.read.parquet(postingsOf(spark, index).paths: _*)
       .where(col("nrm") > 0)
       .agg(avg(col("r")).as("index_mean_err"))
     batchStats.crossJoin(indexStats)

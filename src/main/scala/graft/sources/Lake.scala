@@ -447,7 +447,7 @@ object Lake {
         Seq(path)
       else FileMerge.snapshot(spark, path).dataFiles.map(_.getPath.toString)
     require(files.nonEmpty, s"footerStats: no data files under $path")
-    val stats = FileMerge.footers(spark, files, statsCol, strict = true)
+    val stats = FileMerge.footers(spark, files, statsCol, strict = true).collect()
     val (lo, hi) = (stats.map(_.lo).min, stats.map(_.hi).max)
     val saw = lo <= hi
     import spark.implicits._

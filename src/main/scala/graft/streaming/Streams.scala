@@ -362,7 +362,7 @@ object Streams {
         s"compactIngestCorpus — snapshot $maxBatchId is no longer reconstructible")
     val selected = corpus.dataFiles.map(_.getPath)
       .filter(p => batchTagOf(p.getName).forall(_ <= maxBatchId))
-    if (selected.isEmpty) corpus.read(spark).where(lit(false))
+    if (selected.isEmpty) spark.read.parquet(corpus.paths: _*).where(lit(false))
     else spark.read.parquet(selected.map(_.toString): _*)
   }
 
