@@ -313,8 +313,7 @@ object FileMerge {
     val table = snapshot(spark, lakePath)
     require(!table.hivePartitioned,
       s"appendStaged: $lakePath has a Hive-partitioned layout — append into the partition directories instead")
-    val marker = commitId.map(appendMarkerName)
-    if (marker.exists(m => fs.exists(new Path(live, m)))) return false
+    if (commitId.exists(appendCommitted(spark, lakePath, _))) return false
     val staging = new Path(stagingPath(lakePath))
     val n = if (files > 0) files else math.max(1, spark.sparkContext.defaultParallelism)
     Scale.writeRangeClustered(batch, staging.toString, clusterCol, n)
@@ -326,7 +325,7 @@ object FileMerge {
     if (clash.nonEmpty)
       throw new java.io.IOException(
         s"appendStaged: staged file name(s) already live: ${clash.mkString(",")}")
-    marker.foreach(stageFile(spark, lakePath, _, ""))
+    commitId.map(appendMarkerName).foreach(stageFile(spark, lakePath, _, ""))
     commit(spark, lakePath, Nil)
     true
   }

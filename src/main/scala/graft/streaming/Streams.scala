@@ -384,16 +384,12 @@ object Streams {
     */
   private val AsOfFloor = "_asof_floor"
 
-  private def readAsOfFloor(spark: SparkSession, corpus: FileMerge.Snapshot): Long = {
-    val p = new Path(corpus.pathOf(AsOfFloor))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Long.MinValue
-    else {
-      val in = fs.open(p)
+  private def readAsOfFloor(spark: SparkSession, corpus: FileMerge.Snapshot): Long =
+    corpus.entries.find(_.getPath.getName == AsOfFloor).fold(Long.MinValue) { st =>
+      val in = st.getPath.getFileSystem(spark.sparkContext.hadoopConfiguration).open(st.getPath)
       try new String(in.readAllBytes(), "UTF-8").trim.toLong
       finally in.close()
     }
-  }
 
   /** Small-file compaction for a DEDUPED-INGEST corpus — the ingest
     * analogue of [[graft.sources.Lake.compact]], which refuses these
