@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ConfBridge, SchemaBridge}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** FILE-granular MERGE on a plain-parquet, PK-range-clustered table —
@@ -17,13 +18,14 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   *   - the table's files are kept PK-range-clustered
   *     ([[Scale.writeRangeClustered]] layout), so each parquet footer's
   *     min/max statistics describe a narrow PK interval;
-  *   - a merge batch reads ONLY footers (distributed, metadata-sized) to
-  *     learn per-file key ranges, then range-joins its keys against the
-  *     broadcast range table to find the files it intersects;
-  *   - intersecting files are read, merged ([[Incremental.merge]]
-  *     source-wins semantics), and rewritten range-clustered; every
-  *     other file is NEVER read, copied, or rewritten — byte-identical
-  *     after the batch;
+  *   - a merge batch reads ONLY footers (distributed, metadata-sized)
+  *     to learn each file's key range and schema, then stabs every batch
+  *     key against the ranges in one pass that also counts the batch;
+  *   - intersecting files are read under their footers' merged schema
+  *     (no inference job), merged ([[Incremental.merge]] source-wins
+  *     semantics), and rewritten range-clustered; every other file is
+  *     NEVER read, copied, or rewritten — byte-identical after the
+  *     batch;
   *   - batch keys inside no file's range are pure inserts and land in
   *     the rewritten output (ranges may then interleave with untouched
   *     files' ranges, which weakens pruning but never correctness — a
@@ -72,13 +74,15 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   */
 object FileMerge {
 
-  /** One file's footer: its row count and the [lo, hi] interval of an
-    * integral column's non-null values. `known = false` means the
-    * footer carried no usable statistics for the column — the file must
-    * be treated as intersecting every batch. A file with zero rows keeps
-    * lo > hi: it intersects nothing.
+  /** One file's footer: its row count, the [lo, hi] interval of an
+    * integral column's non-null values, and its schema as
+    * [[SchemaBridge.footerSchema]] gives it, unparsed until a merge reads
+    * the file. `known = false` means the footer carried no usable
+    * statistics for the column — the file must be treated as
+    * intersecting every batch. A file with zero rows keeps lo > hi: it
+    * intersects nothing.
     */
-  final case class FileRange(file: String, rows: Long, lo: Long, hi: Long, known: Boolean)
+  final case class FileRange(file: String, rows: Long, lo: Long, hi: Long, known: Boolean, schema: String)
 
   /** A data file: a top-level file that is not `_`- or `.`-prefixed. */
   private def isData(st: FileStatus): Boolean = {
@@ -96,14 +100,13 @@ object FileMerge {
     */
   private[graft] def footers(
       spark: SparkSession, files: Seq[String], column: String, strict: Boolean): RDD[FileRange] = {
-    val confBc = org.apache.spark.sql.graftbridge.ConfBridge.broadcast(spark.sparkContext)
+    val confBc = ConfBridge.broadcast(spark.sparkContext)
     val slices = math.min(files.size, math.max(1, spark.sparkContext.defaultParallelism))
     spark.sparkContext
       .parallelize(files, slices)
       .map { f =>
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new Path(f), org.apache.spark.sql.graftbridge.ConfBridge.value(confBc)))
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), ConfBridge.value(confBc)))
         try {
           var rows = 0L
           var lo = Long.MaxValue
@@ -133,7 +136,7 @@ object FileMerge {
                   }
             }
           }
-          FileRange(f, rows, lo, hi, known)
+          FileRange(f, rows, lo, hi, known, SchemaBridge.footerSchema(reader.getFooter.getFileMetaData))
         } finally reader.close()
       }
   }
@@ -150,7 +153,7 @@ object FileMerge {
   /** [[footerRanges]] of the table at `lakePath`, each file named by its
     * file name.
     */
-  def fileRanges(spark: SparkSession, lakePath: String, pk: String): Seq[FileRange] =
+  private[graft] def fileRanges(spark: SparkSession, lakePath: String, pk: String): Seq[FileRange] =
     footerRanges(spark, snapshot(spark, lakePath), pk)
       .map(r => r.copy(file = new Path(r.file).getName))
 
@@ -159,7 +162,8 @@ object FileMerge {
     * column (the footer-statistics comparison is done in BIGINT).
     * `initialFiles` sizes the range-clustered INITIAL load (0 = the
     * cluster's default parallelism); later batches rewrite about as many
-    * files as they touch. Returns the post-merge table.
+    * files as they touch. The merge is one commit; callers that want the
+    * table read it themselves.
     */
   def mergeFileGranular(
       spark: SparkSession,
@@ -167,71 +171,78 @@ object FileMerge {
       lakePath: String,
       pk: String,
       initialFiles: Int = 0
-  ): DataFrame = {
+  ): Unit = {
+    // every writer of this table commits through the same staging, so
+    // this one repair covers a torn merge, append or compaction
+    recoverFileMerge(spark, lakePath)
+    stageFileGranular(spark, source, lakePath, pk, initialFiles).foreach(commit(spark, lakePath, _))
+  }
+
+  /** [[mergeFileGranular]] up to its commit: stage the merged files and
+    * return the names of the live files the commit must hide, or None
+    * for an empty batch on an existing table (nothing staged). The
+    * caller has run [[recoverFileMerge]], and may stage bookkeeping
+    * beside the data before it commits, so both ride one manifest.
+    */
+  private[graft] def stageFileGranular(
+      spark: SparkSession,
+      source: DataFrame,
+      lakePath: String,
+      pk: String,
+      initialFiles: Int = 0
+  ): Option[Seq[String]] = {
     val pkType = source.schema(pk).dataType
     require(
       Seq(LongType, IntegerType, ShortType, ByteType).contains(pkType),
       s"mergeFileGranular: integral PK required for footer min/max pruning, got ${pkType.sql}")
-    // every writer of this table commits through the same staging, so
-    // this one repair covers a torn merge, append or compaction
-    recoverFileMerge(spark, lakePath)
-    require(!snapshot(spark, lakePath).hivePartitioned,
+    val table = snapshot(spark, lakePath)
+    require(!table.hivePartitioned,
       s"mergeFileGranular: $lakePath has a Hive-partitioned layout — use mergePartitionPruned")
 
-    // The batch is evaluated by THREE actions (emptiness probe, touched-
-    // file probe, merged write): pin it so a nondeterministic source
-    // (sample/limit/changing input) cannot yield a touched set that
-    // disagrees with the rows actually written — an unpinned re-roll
-    // could write a key into the output while its old row survives in an
-    // untouched file, breaking the one-file-per-key invariant. (Delta
-    // materializes nondeterministic MERGE sources for the same reason.)
+    // The batch is evaluated by TWO actions (touched-set pass, merged
+    // write): pin it so a nondeterministic source (sample/limit/changing
+    // input) cannot yield a touched set that disagrees with the rows
+    // actually written — an unpinned re-roll could write a key into the
+    // output while its old row survives in an untouched file, breaking
+    // the one-file-per-key invariant. (Delta materializes
+    // nondeterministic MERGE sources for the same reason.)
     Checkpoints.scoped {
       val batch = Checkpoints.cache(Incremental.dedupByKey(source, pk))
-      mergePinned(spark, batch, lakePath, pk, initialFiles)
+      stagePinned(spark, batch, table, pk, initialFiles)
     }
   }
 
-  private def mergePinned(
+  private def stagePinned(
       spark: SparkSession,
       batch: DataFrame,
-      lakePath: String,
+      table: Snapshot,
       pk: String,
       initialFiles: Int
-  ): DataFrame = {
-    if (snapshot(spark, lakePath).dataFiles.isEmpty) {
+  ): Option[Seq[String]] = {
+    val staging = stagingPath(table.path)
+    if (table.dataFiles.isEmpty) {
       // initial load (or bare-marker dir): lay the table out range-
       // clustered so every later batch can prune on footer stats
       val files =
         if (initialFiles > 0) initialFiles
         else math.max(1, spark.sparkContext.defaultParallelism)
-      Scale.writeRangeClustered(batch, lakePath, pk, files)
-      return spark.read.parquet(lakePath)
+      Scale.writeRangeClustered(batch, staging, pk, files)
+      return Some(Nil)
     }
-    if (batch.isEmpty) return Incremental.readEvolved(spark, lakePath)
-
-    val ranges = fileRanges(spark, lakePath, pk)
-    val statless = ranges.filter(!_.known).map(_.file)
-    val rangeDf = spark.createDataFrame(ranges.filter(_.known))
-    // bounded collect: one row per INTERSECTED FILE, never per key/row
-    val hit = batch
-      .select(col(pk).cast("long").as("_k"))
-      .where(col("_k").isNotNull)
-      .join(broadcast(rangeDf), col("_k") >= col("lo") && col("_k") <= col("hi"))
-      .select("file")
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-    val touched = (hit ++ statless).distinct.sorted
+    val (rows, touched) = touchedBy(batch, pk, footerRanges(spark, table, pk))
+    if (rows == 0) return None
 
     val merged =
       if (touched.isEmpty) batch // pure insert: no live file intersects
       else
-        // schema-merging read: the touched set can mix pre- and
-        // post-evolution footers, and the batch may add columns —
-        // mergeUnique unions both sides (additive evolution; old rows
-        // surface the new column as NULL)
+        // the touched set can mix pre- and post-evolution footers: read
+        // it under their merged schema (what a mergeSchema read infers,
+        // without its inference job); mergeUnique unions the batch's
+        // columns in (additive evolution; old rows surface a new column
+        // as NULL)
         Incremental.mergeUnique(
-          Incremental.readEvolved(spark, touched.map(f => s"$lakePath/$f"): _*),
+          spark.read.schema(SchemaBridge.merge(spark, touched.map(_.schema)))
+            .parquet(touched.map(_.file): _*),
           batch,
           pk)
 
@@ -240,11 +251,49 @@ object FileMerge {
       .sortWithinPartitions(pk)
       .write
       .mode("overwrite")
-      .parquet(stagingPath(lakePath))
-    commit(spark, lakePath, touched)
-    // evolved batches leave untouched files on the old schema — the
-    // read-back must merge footers or it may drop the new column
-    Incremental.readEvolved(spark, lakePath)
+      .parquet(staging)
+    Some(touched.map(r => new Path(r.file).getName))
+  }
+
+  /** The batch's row count and the files its keys touch, sorted by
+    * name, in one pass over the batch: each non-null key is stabbed
+    * against the known ranges sorted by `lo`, walking down from the last
+    * range with `lo <= key` while the prefix maximum of `hi` still
+    * reaches the key, so overlapping ranges stay correct (disjoint ones
+    * cost a binary search per key). Files without usable statistics are
+    * always touched.
+    */
+  private def touchedBy(batch: DataFrame, pk: String, ranges: Seq[FileRange]): (Long, Seq[FileRange]) = {
+    val known = ranges.filter(r => r.known && r.lo <= r.hi).sortBy(_.lo).toArray
+    val lo = known.map(_.lo)
+    val hi = known.map(_.hi)
+    val reach = hi.scanLeft(Long.MinValue)(math.max).tail
+    val parts = batch.select(col(pk).cast("long")).rdd.mapPartitions { keys =>
+      val hit = new java.util.BitSet(lo.length)
+      var n = 0L
+      keys.foreach { r =>
+        n += 1
+        if (!r.isNullAt(0)) {
+          val k = r.getLong(0)
+          var a = 0
+          var b = lo.length
+          while (a < b) {
+            val m = (a + b) >>> 1
+            if (lo(m) <= k) a = m + 1 else b = m
+          }
+          var i = a - 1
+          while (i >= 0 && reach(i) >= k) {
+            if (hi(i) >= k) hit.set(i)
+            i -= 1
+          }
+        }
+      }
+      Iterator((n, hit))
+    }.collect()
+    val hit = new java.util.BitSet(lo.length)
+    parts.foreach(p => hit.or(p._2))
+    val touched = known.indices.filter(hit.get).map(known) ++ ranges.filterNot(_.known)
+    (parts.map(_._1).sum, touched.sortBy(r => new Path(r.file).getName))
   }
 
   private def appendMarkerName(id: String): String = s"_append_committed_$id"

@@ -149,7 +149,7 @@ object Incremental {
     * rows above its PK high watermark, then either append them or
     * PK-merge the full source batch (`updates = true` ⇒ merge path,
     * matching the reference's flag), and overwrite-write the result.
-    * Returns the new lake state.
+    * Callers that want the new lake state read it themselves.
     */
   def ingestIncremental(
       spark: org.apache.spark.sql.SparkSession,
@@ -157,7 +157,7 @@ object Incremental {
       lakePath: String,
       pk: String,
       updates: Boolean
-  ): DataFrame = {
+  ): Unit = {
     FileMerge.recoverFileMerge(spark, lakePath)
     val exists = FileMerge.snapshot(spark, lakePath).entries.nonEmpty
     if (!exists) {
@@ -172,7 +172,6 @@ object Incremental {
     } else {
       appendIncrement(source, readEvolved(spark, lakePath), pk, lakePath)
     }
-    readEvolved(spark, lakePath)
   }
 
   /** K4 at 100 TB — partition-pruned MERGE into a Hive-partitioned lake
@@ -195,7 +194,9 @@ object Incremental {
     * IO per batch is proportional to the touched partitions, not the
     * table. The batch commits as a unit: a crash before the manifest
     * leaves every partition old (the caller replays the batch), a crash
-    * after it rolls every touched partition forward.
+    * after it rolls every touched partition forward. Callers that want
+    * the table read it themselves, pinning the partition column's type
+    * as this merge does.
     *
     * REQUIREMENT: `partitionCol` must be stable per `pk` (a key never
     * moves between partitions). That is the standard contract for
@@ -210,7 +211,7 @@ object Incremental {
       lakePath: String,
       pk: String,
       partitionCol: String
-  ): DataFrame = {
+  ): Unit = {
     import org.apache.hadoop.fs.Path
     val live = new Path(lakePath)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -253,28 +254,9 @@ object Incremental {
         n.startsWith("_") || n.startsWith(".")
       }
 
-    // Read-back schema with the partition column PINNED to the source's
-    // type. Bare partition-type inference corrupts non-canonical string
-    // values ('01' infers as int 1, and the rewrite would emit a NEW p=1
-    // directory alongside the replaced p=01); pinning makes the dir
-    // string cast to the declared type instead. Built from a known schema
-    // where one is available — footer inference re-lists the whole table,
-    // which a metadata-scale merge must not do more than once per batch.
-    def pinOf(sch: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
-      val others = sch.fields.filterNot(_.name == partitionCol)
-      val p = sch.fields.find(_.name == partitionCol)
-        .getOrElse(source.schema(partitionCol))
-      org.apache.spark.sql.types.StructType(
-        others :+ p.copy(dataType = source.schema(partitionCol).dataType))
-    }
-
-    if (touched.isEmpty) {
-      // empty batch: nothing to merge, and an initial load must NOT
-      // create the unreadable zero-data-file directory described above
-      return if (hasData)
-        spark.read.schema(pinOf(spark.read.parquet(lakePath).schema)).parquet(lakePath)
-      else dedupByKey(source, pk)
-    }
+    // empty batch: nothing to merge, and an initial load must NOT create
+    // the unreadable zero-data-file directory described above
+    if (touched.isEmpty) return
     if (!hasData) {
       if (fs.exists(live)) {
         // the only state cleared silently is marker files alone; anything
@@ -285,9 +267,7 @@ object Incremental {
         fs.delete(live, true)
       }
       dedupByKey(source, pk).write.mode("overwrite").partitionBy(partitionCol).parquet(lakePath)
-      // the just-written table's schema is the (deduped) source's — no
-      // footer inference needed
-      return spark.read.schema(pinOf(source.schema)).parquet(lakePath)
+      return
     }
 
     // the scan prunes to the touched `col=value` directories — the only
@@ -298,7 +278,16 @@ object Incremental {
     // from the partitions this batch rewrites. (Footer reads are
     // distributed and tiny; the data scan below stays pruned.)
     val inferred = spark.read.option("mergeSchema", "true").parquet(lakePath).schema
-    val existingTouched = spark.read.schema(pinOf(inferred)).parquet(lakePath)
+    // the partition column PINNED to the source's type: bare partition-
+    // type inference corrupts non-canonical string values ('01' infers
+    // as int 1, and the rewrite would emit a NEW p=1 directory alongside
+    // the replaced p=01); pinning makes the dir string cast to the
+    // declared type instead
+    val pinned = org.apache.spark.sql.types.StructType(
+      inferred.fields.filterNot(_.name == partitionCol) :+
+        inferred.fields.find(_.name == partitionCol).getOrElse(source.schema(partitionCol))
+          .copy(dataType = source.schema(partitionCol).dataType))
+    val existingTouched = spark.read.schema(pinned).parquet(lakePath)
       .where(col(partitionCol).isin(touched.toIndexedSeq: _*))
     val merged = merge(existingTouched, source, pk)
 
@@ -308,8 +297,6 @@ object Incremental {
     merged.write.mode("overwrite").partitionBy(partitionCol)
       .parquet(FileMerge.stagingPath(lakePath))
     FileMerge.commit(spark, lakePath, Nil)
-    // committed files carry the merged schema — reuse it, don't re-infer
-    spark.read.schema(pinOf(merged.schema)).parquet(lakePath)
   }
 
   /** One row per key, deterministically (greatest full-row struct wins). */
@@ -320,7 +307,7 @@ object Incremental {
       val packed = df
         .groupBy(col(pk))
         .agg(max(struct(others.map(col).toIndexedSeq: _*)).as("_row"))
-      packed.select(col(pk) +: others.map(c => col(s"_row.$c").as(c)): _*)
+      packed.select(col(pk) +: others.toIndexedSeq.map(c => col(s"_row.$c").as(c)): _*)
     }
   }
 

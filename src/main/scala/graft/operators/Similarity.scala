@@ -710,7 +710,7 @@ object Similarity {
     // pushed to parquet next to the exclude/bucket predicates
     val filtered = metaFilter.fold(excluded)(excluded.where)
     filtered
-      .where(col("centroid_id").isin(probed.map(Long.box): _*))
+      .where(col("centroid_id").isin(probed.toIndexedSeq.map(Long.box): _*))
       .select(col(idCol), round(cosine(col(vecCol), qVec), 6).as("cos_sim"))
       .where(col("cos_sim").isNotNull)
   }
@@ -1856,7 +1856,7 @@ object Similarity {
     // zero recall change. Only the OUTPUT adc is 6dp-rounded (the
     // cross-engine hash grain).
     val inProbed = excluded
-      .where(col("centroid_id").isin(probed.map(Long.box): _*))
+      .where(col("centroid_id").isin(probed.toIndexedSeq.map(Long.box): _*))
       .where(size(col("codes")) === m)
     val qv = query.select(col(query.columns.head).as("_qv"))
     // quantized cosine cos(q, q(v)) = dot(q, q(v)) / (|q|·‖q(v)‖):

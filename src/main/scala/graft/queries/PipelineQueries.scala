@@ -616,8 +616,8 @@ object PipelineQueries {
     },
     // FILE-granular merge, end-to-end against the oracle: initial-load a
     // range-clustered orders slice, merge a doctored update+insert batch
-    // through the footer-stats path (distributed footer scan → broadcast
-    // range join → only intersected files rewritten → manifest commit),
+    // through the footer-stats path (distributed footer scan → one-pass
+    // key stab → only intersected files rewritten → manifest commit),
     // read the table back. The oracle is the same source-wins FULL OUTER
     // merge in SQL — so the whole physical machinery must reproduce the
     // declarative semantics exactly. The scratch table rebuilds per run
@@ -632,9 +632,8 @@ object PipelineQueries {
       val batch = orders
         .where(col("o_orderkey") % 97 === 0)
         .withColumn("o_orderstatus", lit("X"))
-      FileMerge
-        .mergeFileGranular(s, batch, tmp, "o_orderkey")
-        .orderBy("o_orderkey")
+      FileMerge.mergeFileGranular(s, batch, tmp, "o_orderkey")
+      s.read.parquet(tmp).orderBy("o_orderkey")
     },
     // Deterministic mixture sampling (data-mixing weights): per-source
     // keep rates decided by a content hash — reproducible across engines

@@ -85,7 +85,7 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        Incremental.mergePartitionPruned(spark, batch, targetPath, pk, partitionCol): Unit
+        Incremental.mergePartitionPruned(spark, batch, targetPath, pk, partitionCol)
       }
       .start()
 
@@ -535,12 +535,13 @@ object Streams {
   }
 
   /** [[upsertBatch]]'s exactly-once skip for the FILE-granular merge
-    * path ([[upsertStreamFileGranular]]): same `_commits` ledger, but
-    * the merge commits first with its own manifest, and the ledger
-    * follows in a second [[graft.operators.FileMerge]] commit. A crash
-    * in between re-executes the merge on replay — idempotent, so the
-    * effect is still exactly-once; a recorded id skips the batch with
-    * zero file writes.
+    * path ([[upsertStreamFileGranular]]): same `_commits` ledger, staged
+    * beside the merge's rewritten files, and one
+    * [[graft.operators.FileMerge]] commit publishes both and hides the
+    * files the batch touched. A crash before the manifest leaves the old
+    * table and ledger, so the replay re-executes; a crash after it rolls
+    * both forward, so the replay finds the id committed. A recorded id
+    * skips the batch with zero file writes.
     */
   def upsertBatchFileGranular(
       spark: SparkSession,
@@ -556,9 +557,9 @@ object Streams {
     FileMerge.recoverFileMerge(spark, targetPath)
     val committed = readLedger(fs, target)
     if (committed.contains(batchId)) return false
-    FileMerge.mergeFileGranular(spark, batch, targetPath, pk)
+    val hide = FileMerge.stageFileGranular(spark, batch, targetPath, pk).getOrElse(Nil)
     stageLedger(spark, targetPath, committed.add(batchId))
-    FileMerge.commit(spark, targetPath, Nil)
+    FileMerge.commit(spark, targetPath, hide)
     true
   }
 

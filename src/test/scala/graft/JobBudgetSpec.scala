@@ -115,11 +115,22 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     assert(rows.length == 2)
   }
 
+  test("one upsertBatch batch") {
+    val target = scratch("swap") + "/t"
+    assert(Streams.upsertBatch(spark,
+      (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"), "id", target, batchId = 0L))
+    val applied = within("upsertBatch", 4) {
+      Streams.upsertBatch(spark,
+        Seq((5L, "v5x"), (500L, "new")).toDF("id", "v"), "id", target, batchId = 1L)
+    }
+    assert(applied)
+  }
+
   test("one upsertBatchFileGranular batch") {
     val target = scratch("upsert") + "/t"
     assert(Streams.upsertBatchFileGranular(spark,
       (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"), "id", target, batchId = 0L))
-    val applied = within("upsertBatchFileGranular", 12) {
+    val applied = within("upsertBatchFileGranular", 7) {
       Streams.upsertBatchFileGranular(spark,
         Seq((5L, "v5x"), (500L, "new")).toDF("id", "v"), "id", target, batchId = 1L)
     }

@@ -280,7 +280,8 @@ class FileMergeSpec extends AnyFunSuite with SparkSpec {
     // low-id updates + one pure insert, all carrying a NEW column
     val batch = Seq((1L, "v1x", "w1"), (3L, "v3x", "w3"), (500L, "v500", "w500"))
       .toDF("id", "v", "w")
-    val out = FileMerge.mergeFileGranular(spark, batch, t, "id")
+    FileMerge.mergeFileGranular(spark, batch, t, "id")
+    val out = Incremental.readEvolved(spark, t)
     assert(out.columns.sorted.toSeq == Seq("id", "v", "w"))
     val got = out.select("id", "v", "w").as[(Long, String, Option[String])]
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap
@@ -298,6 +299,78 @@ class FileMergeSpec extends AnyFunSuite with SparkSpec {
       .select("id", "v", "w").as[(Long, String, Option[String])]
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(again(2L) == (("v2y", None)) && again(1L) == (("v1x", Some("w1"))))
+  }
+
+  test("a key inside overlapping ranges after appendStaged touches every covering file") {
+    val dir = tmp()
+    FileMerge.mergeFileGranular(spark, (0L until 100L by 2).map(i => (i, s"v$i")).toDF("id", "v"),
+      dir, "id", initialFiles = 2)
+    // odd keys appended as one file whose range spans both even files
+    assert(FileMerge.appendStaged(spark, (1L until 100L by 2).map(i => (i, s"v$i")).toDF("id", "v"),
+      dir, "id", files = 1))
+    val ranges = FileMerge.fileRanges(spark, dir, "id")
+    val covering = ranges.filter(r => r.lo <= 61L && r.hi >= 61L).map(_.file)
+    assert(covering.size == 2, s"61 should lie in two files' ranges: $ranges")
+    val before = snapshot(dir)
+    FileMerge.mergeFileGranular(spark, Seq((61L, "up")).toDF("id", "v"), dir, "id")
+    val after = snapshot(dir)
+    covering.foreach(f => assert(!after.contains(f), s"covering file $f not touched"))
+    ranges.map(_.file).filterNot(covering.contains).foreach(f => assert(after.get(f) == before.get(f)))
+    val ids = spark.read.parquet(dir).select("id").as[Long].collect()
+    assert(ids.length == 100 && ids.distinct.length == 100, "a key lives in two files")
+    assert(content(dir)((61L, "up")))
+  }
+
+  test("a stat-less file is always touched") {
+    val dir = tmp()
+    FileMerge.mergeFileGranular(spark, base(100), dir, "id", initialFiles = 2)
+    (200L until 210L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1).write.mode("append")
+      .option("parquet.column.statistics.enabled", "false").parquet(dir)
+    val statless = FileMerge.fileRanges(spark, dir, "id").filterNot(_.known).map(_.file)
+    assert(statless.size == 1)
+    val before = snapshot(dir)
+    // 205 lives in the stat-less file; 1000 lies in no file's range
+    FileMerge.mergeFileGranular(spark, Seq((205L, "up"), (1000L, "x")).toDF("id", "v"), dir, "id")
+    val after = snapshot(dir)
+    assert(!after.contains(statless.head), "the stat-less file was not touched")
+    assert(before.keySet.filterNot(_ == statless.head).forall(f => after.get(f) == before.get(f)))
+    assert(content(dir) == ((0L until 100L) ++ (200L until 210L)).map(i =>
+      (i, if (i == 205L) "up" else s"v$i")).toSet + ((1000L, "x")))
+  }
+
+  test("a batch without an evolved column keeps it across evolved and old touched files") {
+    val t = tmp()
+    FileMerge.mergeFileGranular(spark, base(200), t, "id", initialFiles = 8)
+    FileMerge.mergeFileGranular(spark, Seq((1L, "v1x", "w1")).toDF("id", "v", "w"), t, "id")
+    val schemas = FileMerge.footerRanges(spark, FileMerge.snapshot(spark, t), "id")
+    def hasW(key: Long) = schemas.filter(r => r.lo <= key && r.hi >= key)
+      .forall(_.schema.contains("\"w\""))
+    // key 2 lies in the evolved file, key 199 in an old one
+    assert(hasW(2L) && !hasW(199L))
+    FileMerge.mergeFileGranular(spark, Seq((2L, "v2y"), (199L, "v199y")).toDF("id", "v"), t, "id")
+    val got = Incremental.readEvolved(spark, t)
+      .select("id", "v", "w").as[(Long, String, Option[String])]
+      .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(got.size == 200)
+    assert(got(1L) == (("v1x", Some("w1"))), "the evolved column was dropped")
+    assert(got(2L) == (("v2y", None)) && got(199L) == (("v199y", None)) && got(0L) == (("v0", None)))
+  }
+
+  test("footer schemas merge to what mergeSchema infers, with or without Spark row metadata") {
+    val t = tmp()
+    FileMerge.mergeFileGranular(spark, base(100), t, "id", initialFiles = 2)
+    FileMerge.mergeFileGranular(spark, Seq((1L, "v1x", "w1")).toDF("id", "v", "w"), t, "id")
+    val written = FileMerge.footerRanges(spark, FileMerge.snapshot(spark, t), "id")
+    // a file another engine wrote carries no Spark row metadata
+    val foreign = FileMerge.footers(spark, Seq(s"$sf/orders.parquet"), "o_orderkey", strict = false)
+      .collect().toSeq
+    assert(written.forall(_.schema.startsWith("{")) && !foreign.head.schema.startsWith("{"))
+    def fields(s: org.apache.spark.sql.types.StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
+    val sb = org.apache.spark.sql.graftbridge.SchemaBridge
+    assert(fields(sb.merge(spark, written.map(_.schema))) ==
+      fields(Incremental.readEvolved(spark, t).schema))
+    assert(fields(sb.merge(spark, foreign.map(_.schema))) ==
+      fields(Incremental.readEvolved(spark, s"$sf/orders.parquet").schema))
   }
 
   test("stat-less or non-integral inputs are rejected or handled conservatively") {

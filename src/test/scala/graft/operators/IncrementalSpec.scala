@@ -75,9 +75,8 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1).toSeq ==
       Seq(1L -> "a", 2L -> "b", 3L -> "c"))
     // updates run: matched keys rewritten, new keys inserted
-    val after = Incremental.ingestIncremental(
-      spark, df(2L -> "B2", 4L -> "d"), dir, "id", updates = true)
-    assert(after.as[(Long, String)].collect().sortBy(_._1).toSeq ==
+    Incremental.ingestIncremental(spark, df(2L -> "B2", 4L -> "d"), dir, "id", updates = true)
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1).toSeq ==
       Seq(1L -> "a", 2L -> "B2", 3L -> "c", 4L -> "d"))
   }
 
@@ -124,8 +123,8 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
       dataFiles.mkString("", "\n", "\n"))
     dataFiles.foreach(n => assert(fs.rename(
       new org.apache.hadoop.fs.Path(live, n), new org.apache.hadoop.fs.Path(live, "_old_" + n))))
-    val after = Incremental.ingestIncremental(spark, df(4L -> "y"), live, "id", updates = true)
-    assert(after.as[(Long, String)].collect().toSet ==
+    Incremental.ingestIncremental(spark, df(4L -> "y"), live, "id", updates = true)
+    assert(spark.read.parquet(live).as[(Long, String)].collect().toSet ==
       Set(1L -> "old", 2L -> "new", 3L -> "x", 4L -> "y"))
     assert(!names.exists(_.startsWith("_old_")))
   }
@@ -189,9 +188,8 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
     assert(before.keys.exists(_.startsWith("p=0")) && before.keys.exists(_.startsWith("p=2")))
 
     // batch touches ONLY p=1: update id=2, insert id=9
-    val after = Incremental.mergePartitionPruned(
-      spark, pdf((2L, "B", 1), (9L, "z", 1)), dir, "id", "p")
-    assert(after.as[(Long, String, Int)].collect().sortBy(_._1).toSeq ==
+    Incremental.mergePartitionPruned(spark, pdf((2L, "B", 1), (9L, "z", 1)), dir, "id", "p")
+    assert(spark.read.parquet(dir).as[(Long, String, Int)].collect().sortBy(_._1).toSeq ==
       Seq((1L, "a", 0), (2L, "B", 1), (3L, "c", 2), (4L, "d", 1), (9L, "z", 1)))
 
     val now = fileState(dir)
@@ -232,14 +230,14 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
     val dir = Files.createTempDirectory("pmerge-empty").toString + "/t"
     val empty = pdf().where(lit(false))
     // empty initial batch: no unreadable zero-data-file directory created
-    val out0 = Incremental.mergePartitionPruned(spark, empty, dir, "id", "p")
-    assert(out0.count() == 0)
+    Incremental.mergePartitionPruned(spark, empty, dir, "id", "p")
+    assert(!Files.exists(java.nio.file.Paths.get(dir)))
     // a real first batch afterwards initializes normally
     Incremental.mergePartitionPruned(spark, pdf((1L, "a", 0)), dir, "id", "p")
     assert(spark.read.parquet(dir).count() == 1)
     // an empty LATER batch is a no-op, not an error
-    val after = Incremental.mergePartitionPruned(spark, empty, dir, "id", "p")
-    assert(after.count() == 1)
+    Incremental.mergePartitionPruned(spark, empty, dir, "id", "p")
+    assert(spark.read.parquet(dir).count() == 1)
   }
 
   test("partition-pruned merge preserves non-canonical STRING partition values") {
@@ -248,10 +246,11 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
     // '01' would infer as int 1 on read-back; the pinned-schema read keeps
     // it a string so the rewrite lands in the SAME p=01 directory
     Incremental.mergePartitionPruned(spark, sdf((1L, "a", "01"), (2L, "b", "02")), dir, "id", "month")
-    // the merge's returned DataFrame reads with the pinned schema (a bare
-    // spark.read would itself re-infer '01' as int — the user-facing reads
-    // of a string-partitioned table must pin the schema the same way)
-    val out = Incremental.mergePartitionPruned(spark, sdf((1L, "A", "01")), dir, "id", "month")
+    Incremental.mergePartitionPruned(spark, sdf((1L, "A", "01")), dir, "id", "month")
+    // read with the pinned schema: a bare spark.read would itself re-infer
+    // '01' as int — the user-facing reads of a string-partitioned table
+    // must pin the schema the way the merge does
+    val out = spark.read.schema(sdf().schema).parquet(dir)
       .as[(Long, String, String)].collect().sortBy(_._1).toSeq
     assert(out == Seq((1L, "A", "01"), (2L, "b", "02")),
       s"partition values must survive verbatim, got $out")
@@ -281,10 +280,10 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
   test("ingestIncremental evolves the schema when the batch adds a column") {
     val lake = Files.createTempDirectory("evolve").toString + "/t"
     Incremental.ingestIncremental(spark, df(1L -> "a", 2L -> "b"), lake, "id", updates = true)
-    val out = Incremental.ingestIncremental(
+    Incremental.ingestIncremental(
       spark, Seq((2L, "b2", "x2"), (3L, "c", "x3")).toDF("id", "v", "w"),
       lake, "id", updates = true)
-    val got = out.select("id", "v", "w").as[(Long, String, Option[String])]
+    val got = spark.read.parquet(lake).select("id", "v", "w").as[(Long, String, Option[String])]
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got == Map(
       1L -> (("a", None)), // pre-evolution row: NULL in the new column
@@ -297,8 +296,8 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
     // the replay must clear it and initialize, not wedge on the guard
     val dir = Files.createTempDirectory("pmerge-tmpres").toString + "/t"
     Files.createDirectories(java.nio.file.Paths.get(dir + "/_temporary/0"))
-    val out = Incremental.mergePartitionPruned(spark, pdf((1L, "a", 0)), dir, "id", "p")
-    assert(out.as[(Long, String, Int)].collect().toSeq == Seq((1L, "a", 0)))
+    Incremental.mergePartitionPruned(spark, pdf((1L, "a", 0)), dir, "id", "p")
+    assert(spark.read.parquet(dir).as[(Long, String, Int)].collect().toSeq == Seq((1L, "a", 0)))
   }
 
   test("partition-pruned merge: a torn commit rolls forward on recovery") {
@@ -333,8 +332,8 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
     fs.create(hp(dir + "_fmerge/_touched"), true).close()
     assert(fs.rename(hp(dir + "/p=1"), hp(dir + "/_old_p=1")))
     assert(fs.rename(hp(dir + "_fmerge/p=1"), hp(dir + "/p=1")))
-    val out = Incremental.mergePartitionPruned(spark, pdf((3L, "c", 1)), dir, "id", "p")
-    assert(out.as[(Long, String, Int)].collect().sortBy(_._1).toSeq ==
+    Incremental.mergePartitionPruned(spark, pdf((3L, "c", 1)), dir, "id", "p")
+    assert(spark.read.parquet(dir).as[(Long, String, Int)].collect().sortBy(_._1).toSeq ==
       Seq((1L, "A", 0), (2L, "B", 1), (3L, "c", 1)))
     assert(!fs.listStatus(hp(dir)).exists(_.getPath.getName.startsWith("_old_")))
   }

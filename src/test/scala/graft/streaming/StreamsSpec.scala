@@ -738,6 +738,28 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     assert(got(1L) == "v1x" && got(2L) == "v2" && got.size == 50)
   }
 
+  test("file-granular batch: a crash after its one manifest rolls forward with the id committed") {
+    val target = Files.createTempDirectory("crashfg").toString + "/t"
+    assert(Streams.upsertBatchFileGranular(
+      spark, (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v"), "id", target, batchId = 0L))
+    val b1 = Seq((3L, "v3x"), (100L, "new")).toDF("id", "v")
+    // batch 1 crashed inside its commit: merge and ledger staged, the one
+    // manifest published, none of its moves run
+    val hide = graft.operators.FileMerge.stageFileGranular(spark, b1, target, "id").get
+    assert(hide.nonEmpty)
+    graft.operators.FileMerge.stageFile(spark, target, "_commits", "floor:1\n")
+    Files.writeString(java.nio.file.Paths.get(target + "_fmerge", "_touched"),
+      hide.mkString("", "\n", "\n"))
+    // the redelivery rolls the commit forward and finds batch 1 committed
+    assert(!Streams.upsertBatchFileGranular(spark, b1, "id", target, batchId = 1L))
+    assert(!Files.exists(java.nio.file.Paths.get(target + "_fmerge")))
+    val got = spark.read.parquet(target).as[(Long, String)].collect().toMap
+    assert(got.size == 51 && got(3L) == "v3x" && got(100L) == "new" && got(4L) == "v4")
+    val state = fileState(target)
+    assert(!Streams.upsertBatchFileGranular(spark, b1, "id", target, batchId = 1L))
+    assert(fileState(target) == state, "redelivery wrote files")
+  }
+
   // --- deduped corpus ingestion ---------------------------------------
 
   // 12-token sentences; near-dup twins change ONLY the final token, so
