@@ -2,7 +2,11 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,7 +74,9 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * and moves nothing, so a read sees the last published commit and
   * never changes the table; staging without a manifest may belong to a
   * write still running, and only a writer discards it. A reader inside
-  * the commit window may still observe a torn listing.
+  * the commit window may still observe a torn listing. [[readTable]]
+  * reads a snapshot typed from a footer the driver reads, so opening a
+  * table runs no schema-inference job.
   */
 object FileMerge {
 
@@ -105,16 +111,14 @@ object FileMerge {
     spark.sparkContext
       .parallelize(files, slices)
       .map { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), ConfBridge.value(confBc)))
-        try {
+        withFooter(new Path(f), ConfBridge.value(confBc)) { footer =>
           var rows = 0L
           var lo = Long.MaxValue
           var hi = Long.MinValue
           var known = true
           def unusable(why: String): Unit =
             if (strict) throw new IllegalArgumentException(s"footerStats: $why") else known = false
-          reader.getFooter.getBlocks.asScala.filter(_.getRowCount > 0).foreach { b =>
+          footer.getBlocks.asScala.filter(_.getRowCount > 0).foreach { b =>
             rows += b.getRowCount
             b.getColumns.asScala.find(_.getPath.toDotString == column) match {
               case None => unusable(s"column $column absent from $f")
@@ -136,9 +140,15 @@ object FileMerge {
                   }
             }
           }
-          FileRange(f, rows, lo, hi, known, SchemaBridge.footerSchema(reader.getFooter.getFileMetaData))
-        } finally reader.close()
+          FileRange(f, rows, lo, hi, known, SchemaBridge.footerSchema(footer.getFileMetaData))
+        }
       }
+  }
+
+  private def withFooter[T](file: Path, conf: Configuration)(f: ParquetMetadata => T): T = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try f(reader.getFooter)
+    finally reader.close()
   }
 
   /** The lenient [[footers]] of `table`'s data files: one job, none for
@@ -156,6 +166,28 @@ object FileMerge {
   private[graft] def fileRanges(spark: SparkSession, lakePath: String, pk: String): Seq[FileRange] =
     footerRanges(spark, snapshot(spark, lakePath), pk)
       .map(r => r.copy(file = new Path(r.file).getName))
+
+  /** Read `table` as `spark.read.parquet(table.paths)` reads it, typed
+    * from one footer that the driver reads: the footer of its first data
+    * file by path, the one Spark's inference without `mergeSchema` reads
+    * too, but in a job. A table without data files, or with data
+    * directories (partitions, sub-tables), is read with inference,
+    * exactly as before.
+    */
+  private[graft] def readTable(spark: SparkSession, table: Snapshot): DataFrame =
+    table.dataFiles.map(_.getPath).sortBy(_.toString).headOption match {
+      case Some(first) if table.flat =>
+        val footer = withFooter(first, spark.sparkContext.hadoopConfiguration)(
+          m => SchemaBridge.footerSchema(m.getFileMetaData))
+        spark.read.schema(SchemaBridge.merge(spark, Seq(footer))).parquet(table.paths: _*)
+      case _ => spark.read.parquet(table.paths: _*)
+    }
+
+  /** Read the `files` of a footer scan under their footers' merged
+    * schema (what a `mergeSchema` read infers, without its job).
+    */
+  private[graft] def readFiles(spark: SparkSession, files: Seq[FileRange]): DataFrame =
+    spark.read.schema(SchemaBridge.merge(spark, files.map(_.schema))).parquet(files.map(_.file): _*)
 
   /** The merge itself. `source` may carry duplicate keys (last-write-wins
     * reduction, as [[Incremental.merge]]); `pk` must be an integral
@@ -240,11 +272,7 @@ object FileMerge {
         // without its inference job); mergeUnique unions the batch's
         // columns in (additive evolution; old rows surface a new column
         // as NULL)
-        Incremental.mergeUnique(
-          spark.read.schema(SchemaBridge.merge(spark, touched.map(_.schema)))
-            .parquet(touched.map(_.file): _*),
-          batch,
-          pk)
+        Incremental.mergeUnique(readFiles(spark, touched), batch, pk)
 
     merged
       .repartitionByRange(math.max(1, touched.size), col(pk))
@@ -509,7 +537,8 @@ object FileMerge {
 
   /** A table's committed top-level entries, live or still staged, as
     * [[snapshot]] resolves them. `torn` is true while a published
-    * commit has not finished its moves.
+    * commit has not finished its moves. [[readTable]] reads it, typed
+    * from its first data file's footer.
     */
   private[graft] final case class Snapshot(path: String, entries: Seq[FileStatus], torn: Boolean) {
 
@@ -523,6 +552,9 @@ object FileMerge {
 
     def hivePartitioned: Boolean =
       entries.exists(st => st.isDirectory && st.getPath.getName.contains("="))
+
+    /** No data directory (a partition, a sub-table) beside the files. */
+    def flat: Boolean = !entries.exists(st => st.isDirectory && !st.getPath.getName.startsWith("_"))
 
     /** What a read of a flat table plans: its directory while no commit
       * is torn, the resolved data files otherwise (Spark lists more than

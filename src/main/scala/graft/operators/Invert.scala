@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.Text
 
@@ -138,11 +139,13 @@ object Invert {
     FileMerge.commitRewrite(spark, indexPath)
   }
 
-  /** Open a persisted index. Searches over this plan get the IN-list
-    * term predicate pushed into the parquet scan (see [[writeIndex]]).
+  /** Open a persisted index: its snapshot, typed from a footer that the
+    * driver reads ([[FileMerge.readTable]]), so opening runs no job.
+    * Searches over this plan get the IN-list term predicate pushed into
+    * the parquet scan (see [[writeIndex]]).
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(FileMerge.snapshot(spark, indexPath).paths: _*)
+    FileMerge.readTable(spark, FileMerge.snapshot(spark, indexPath))
 
   /** Incrementally extend a persisted index with NEWLY INGESTED documents
     * — the maintenance half of build-once/search-many. Because posting
@@ -187,7 +190,7 @@ object Invert {
     // footer-stats lookup with an opaque missing-column error and no
     // hint that a rebuild is the (only) migration path
     require(
-      spark.read.parquet(indexPath).columns.contains("max_doc"),
+      readIndex(spark, indexPath).columns.contains("max_doc"),
       s"appendToIndex: index at $indexPath predates the doc-granularity append " +
         "watermark (no top-level max_doc column) — rebuild it with writeIndex " +
         "before appending")
@@ -237,7 +240,8 @@ object Invert {
     * distinct counts (blocks partition the doc space); `tf` comes from
     * the same postings rows; the per-doc sum is one partial-aggregable
     * groupBy and the top-k is a TakeOrdered, never a global sort. The
-    * query, per-term df table, and corpus stats are broadcast literals.
+    * query terms are a literal IN-list; the per-term df table and the
+    * one-row corpus stats join as broadcast joins.
     */
   def bm25TopK(
       index: DataFrame,
@@ -456,7 +460,7 @@ object Invert {
       .limit(k)
   }
 
-  private def rrfContributions(ranked: DataFrame, rrfK: Int): DataFrame = {
+  private[graft] def rrfContributions(ranked: DataFrame, rrfK: Int): DataFrame = {
     // fractional-part gap ≥ 1/(rrfK+rank); bound both so the floor-of-
     // double argument in the scaladoc holds with 2^22 headroom
     val checked = ranked.withColumn(
@@ -467,6 +471,16 @@ object Invert {
     checked.withColumn(
       "_contrib",
       floor(lit(1.0e12) / (lit(rrfK.toDouble) + col("_rk").cast("double"))).cast("long"))
+  }
+
+  /** [[rrfContributions]]'s contribution of leg rank `rank` on the
+    * driver, with the same rank guard: the same double quotient and
+    * floor, so the same BIGINT.
+    */
+  private[graft] def rrfContribution(rank: Long, rrfK: Int): Long = {
+    require(rank >= 1L && rank + rrfK <= (1L << 20),
+      s"rrfFuse: rank out of [1, ${(1L << 20)} - rrfK]: $rank")
+    math.floor(1.0e12 / (rrfK.toDouble + rank.toDouble)).toLong
   }
 
   /** Tag-and-rank one retrieval leg for [[rrfFuse]]: `topList` must
@@ -501,8 +515,9 @@ object Invert {
     * down) + TakeOrdered; the dense leg here is brute-force
     * [[Similarity.cosineTopK]] for the oracle-exact baseline — at 10⁹
     * vectors swap in [[Similarity.ivfTopKIndexed]] for the same
-    * (doc_id, rank) contract; the fusion never sees more than
-    * 2·kPerLeg rows either way.
+    * (doc_id, rank) contract. Each leg runs as its own collect, and
+    * the fusion of their 2·kPerLeg rows runs on the driver
+    * ([[hybridRrfFuseLegs]]).
     */
   def hybridRrfTopK(
       index: DataFrame,
@@ -530,6 +545,13 @@ object Invert {
     * probe [[graft.operators.Similarity.ivfTopKIndexed]] share — so the
     * production composition (index seek ⊕ index probe ⊕ fusion) is the
     * same code path as the oracle-exact brute baseline.
+    *
+    * Scale shape: both legs are top-k lists by contract, so the fusion
+    * is driver arithmetic over their 2·k rows. It collects each leg
+    * (no job for a leg that is already a local relation), ranks it as
+    * [[rankedLeg]] does (score DESC NULLS LAST, then id), sums the
+    * [[rrfContribution]]s per id and returns the top `k` as a local
+    * relation with the schema of the [[rrfFuse]] plan it replaces.
     */
   def hybridRrfFuseLegs(
       sparseTop: DataFrame,
@@ -539,19 +561,50 @@ object Invert {
       rrfK: Int = 60
   ): DataFrame = {
     require(k > 0, s"hybridRrfFuseLegs: k must be positive, got $k")
-    val sparse = rankedLeg(
-      sparseTop, "sparse", "doc_id",
-      Seq(col("score_scaled").desc, col("doc_id")))
-    val dense = rankedLeg(
-      denseTop, "dense", denseIdCol,
-      Seq(col("cos_sim").desc, col(denseIdCol)))
-    rrfContributions(sparse.unionByName(dense), rrfK)
-      .groupBy(col("doc_id"))
-      .agg(
-        max(when(col("leg") === "sparse", 1L).otherwise(0L)).as("in_sparse"),
-        max(when(col("leg") === "dense", 1L).otherwise(0L)).as("in_dense"),
-        sum(col("_contrib")).as("rrf_scaled"))
-      .orderBy(col("rrf_scaled").desc, col("doc_id"))
-      .limit(k)
+    require(rrfK >= 0, s"hybridRrfFuseLegs: rrfK must be non-negative, got $rrfK")
+    // the fused id column: the two legs' ids unioned by name (analysis
+    // only), as the grouped union typed it
+    val idField = sparseTop.select(col("doc_id"))
+      .unionByName(denseTop.select(col(denseIdCol).as("doc_id"))).schema.head
+    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idField.dataType),
+      s"hybridRrfFuseLegs: integral ids required, got ${idField.dataType.sql}")
+    val ranked =
+      legRanks(sparseTop.select(col("doc_id").cast(idField.dataType), col("score_scaled")),
+        Ordering.Long).map { case (id, rk) => (id, rk, true) } ++
+      legRanks(denseTop.select(col(denseIdCol).cast(idField.dataType), col("cos_sim").cast("double")),
+        SqlDoubleOrdering).map { case (id, rk) => (id, rk, false) }
+    val top = ranked.groupBy(_._1).toSeq
+      .map { case (id, hits) =>
+        Row(id,
+          if (hits.exists(_._3)) 1L else 0L,
+          if (hits.exists(!_._3)) 1L else 0L,
+          hits.map(h => rrfContribution(h._2, rrfK)).sum)
+      }
+      .sortBy(r => (r.getLong(3), r.get(0)))(Ordering.Tuple2(Ordering.Long.reverse, IdOrdering))
+      .take(k)
+    val schema = StructType(Seq(idField,
+      StructField("in_sparse", LongType), StructField("in_dense", LongType),
+      StructField("rrf_scaled", LongType)))
+    sparseTop.sparkSession.createDataFrame(java.util.Arrays.asList(top: _*), schema)
+  }
+
+  /** A collected top list `(id, score)` ranked 1..n in [[rankedLeg]]'s
+    * window order: score DESC NULLS LAST, then id ASC NULLS FIRST.
+    */
+  private def legRanks[S](top: DataFrame, order: Ordering[S]): Seq[(Any, Long)] =
+    top.collect().toSeq
+      .map(r => (Option(r.get(1)).map(_.asInstanceOf[S]), r.get(0)))
+      .sorted(Ordering.Tuple2(Ordering.Option(order).reverse, IdOrdering))
+      .zipWithIndex.map { case ((_, id), i) => (id, i + 1L) }
+
+  /** Integral ids ascending, NULL first: Spark's ascending sort. */
+  private val IdOrdering: Ordering[Any] =
+    Ordering.by((id: Any) => Option(id).map(_.asInstanceOf[Number].longValue))
+
+  /** Spark's DOUBLE order: -0.0 equals 0.0, NaN equals NaN and exceeds
+    * every other value.
+    */
+  private val SqlDoubleOrdering: Ordering[Double] = new Ordering[Double] {
+    def compare(x: Double, y: Double): Int = if (x == y) 0 else java.lang.Double.compare(x, y)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an `ARRAY<FLOAT>` embedding column.
@@ -358,7 +358,9 @@ object Similarity {
   // Writers run [[FileMerge.recoverFileMerge]] first. Probes never repair:
   // each reads one [[FileMerge.snapshot]] of the index root, and the
   // snapshot of the postings it resolves, so a crashed rebuild, append or
-  // compaction reads as its last published commit.
+  // compaction reads as its last published commit. Every sub-table is
+  // read through [[FileMerge.readTable]], typed from a footer the driver
+  // reads, so no read runs a schema-inference job.
   // ---------------------------------------------------------------------
 
   private def postingsPath(indexPath: String): String = s"$indexPath/postings"
@@ -371,18 +373,24 @@ object Similarity {
   private def postingsOf(spark: SparkSession, index: FileMerge.Snapshot): FileMerge.Snapshot =
     FileMerge.snapshot(spark, index.pathOf("postings"))
 
+  /** The sub-table `name` (centroids, codebook) that the index
+    * snapshot `index` resolves, typed from its footer.
+    */
+  private def subTable(spark: SparkSession, index: FileMerge.Snapshot, name: String): DataFrame =
+    FileMerge.readTable(spark, FileMerge.snapshot(spark, index.pathOf(name)))
+
   /** What a probe of `buckets` scans: the postings files whose footer
-    * centroid range covers a probed bucket (stats-less files always), or
-    * the schema-stable empty frame when no file does.
+    * centroid range covers a probed bucket (stats-less files always),
+    * read under their footers' merged schema, or the schema-stable empty
+    * frame when no file does.
     */
   private def probedPostings(
       spark: SparkSession, post: FileMerge.Snapshot, buckets: Array[Long]): DataFrame = {
     val selected = FileMerge
       .footerRanges(spark, post, "centroid_id")
       .filter(r => !r.known || buckets.exists(c => c >= r.lo && c <= r.hi))
-      .map(_.file)
-    if (selected.isEmpty) spark.read.parquet(post.paths: _*).where(lit(false))
-    else spark.read.parquet(selected: _*)
+    if (selected.isEmpty) FileMerge.readTable(spark, post).where(lit(false))
+    else FileMerge.readFiles(spark, selected)
   }
 
   /** Build (or rebuild) the persisted IVF index at `indexPath`: one
@@ -492,13 +500,13 @@ object Similarity {
     // a crashed rebuild first (appendStaged runs the postings recovery
     // itself) — the order in which a snapshot resolves the index
     FileMerge.recoverFileMerge(spark, indexPath)
-    val cents = spark.read.parquet(centroidsPath(indexPath))
+    val index = FileMerge.snapshot(spark, indexPath)
+    val cents = subTable(spark, index, "centroids")
     // the persisted postings schema is the contract: an index built
     // with metaCols (filtered probes) must keep receiving those
     // columns, or appended vectors would carry NULL metadata and
     // silently vanish from every filtered probe. Footer-only read.
-    val metaCols = spark.read
-      .parquet(postingsPath(indexPath))
+    val metaCols = FileMerge.readTable(spark, postingsOf(spark, index))
       .schema.fieldNames.toSeq
       .filterNot(Set("centroid_id", idCol, vecCol))
     val missing = metaCols.filterNot(newEmb.columns.contains)
@@ -687,12 +695,11 @@ object Similarity {
       // a NULL query vector has no defined neighbours: schema-stable
       // empty result, matching the cosine-NULL-filter behaviour of the
       // non-indexed paths
-      return spark.read.parquet(post.paths: _*)
+      return FileMerge.readTable(spark, post)
         .where(lit(false))
         .select(col(idCol), lit(null).cast("double").as("cos_sim"))
     val qVec = typedLit(qRows.head.getSeq[Float](0).toArray)
-    val probed = spark.read
-      .parquet(index.pathOf("centroids"))
+    val probed = subTable(spark, index, "centroids")
       .select(col("centroid_id"), cosine(col("centroid"), qVec).as("_cs"))
       .where(col("_cs").isNotNull)
       .orderBy(col("_cs").desc, col("centroid_id"))
@@ -821,7 +828,7 @@ object Similarity {
     val post = postingsOf(spark, index)
     val q = Checkpoints.checkpoint(
       queries.select(col(qIdCol).as("query_id"), col(qVecCol).as("_qvec")))
-    val cents = broadcast(spark.read.parquet(index.pathOf("centroids")))
+    val cents = broadcast(subTable(spark, index, "centroids"))
     val probeRank = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("_pcs").desc, col("centroid_id"))
@@ -1290,10 +1297,10 @@ object Similarity {
     * run on codebook-scale data, where interpreted lambdas cost
     * nothing.
     */
-  private def dotD(a: Column, b: Column): Column =
+  private[graft] def dotD(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  private def norm2D(a: Column): Column =
+  private[graft] def norm2D(a: Column): Column =
     aggregate(a, lit(0.0), (acc, x) => acc + x * x)
 
   /** Per-subspace codebooks: split every vector into `m` contiguous
@@ -1366,12 +1373,29 @@ object Similarity {
   /** Collect a METADATA-SCALE frame (codebooks: m·k rows by contract)
     * into a driver-local relation with the identical schema: consumers
     * scan the local rows instead of re-running the producing plan, and
-    * `collect()`/`head()` on it are job-free (LocalTableScan).
+    * `collect()`/`head()` on it are job-free (LocalTableScan). An
+    * aggregate over it still runs a job, so facts about the rows (a
+    * stored codebook's `m`) come from the rows ([[StoredCodebook]]).
     */
-  private def localized(df: DataFrame): DataFrame = {
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    df.collect().foreach(rows.add)
-    df.sparkSession.createDataFrame(rows, df.schema)
+  private def localized(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** A persisted PQ codebook `(sub, cid, cvec)`, collected once: its
+    * rows, the same rows as a driver-local relation ([[localized]]), its
+    * subspace count `m` = max(sub)+1 and its code span `kMax` =
+    * max(cid)+1, both taken from the rows without a job.
+    */
+  private final class StoredCodebook(val rows: Array[Row], val local: DataFrame) {
+    val m: Int = rows.map(_.getAs[Int]("sub")).max + 1
+    val kMax: Long = rows.map(_.getAs[Long]("cid")).max + 1
+  }
+
+  /** The codebook that the index snapshot `index` resolves. */
+  private def storedCodebook(spark: SparkSession, index: FileMerge.Snapshot): StoredCodebook = {
+    val local = localized(subTable(spark, index, "codebook"))
+    val rows = local.collect() // job-free: a local relation
+    require(rows.nonEmpty, s"empty PQ codebook in the index at ${index.path}")
+    new StoredCodebook(rows, local)
   }
 
   /** PQ codes: each vector's per-subspace nearest-centroid ids under a
@@ -1429,32 +1453,28 @@ object Similarity {
       .limit(topK)
   }
 
-  /** Bounded collect of the m·k (dot, ‖c_s‖²) PAIR table [[ivfPqTopK]]
-    * consumes — the ADC DOT table (`dot(q_s, c_s)`, exact per subspace
-    * because PQ subspaces are disjoint coordinate blocks, the FAISS
-    * IVFADC inner-product variant's [[adcDistanceTable]] analogue) and
-    * the centroid NORM² table (‖q(v)‖² = Σ_s ‖c_s‖² exactly) in ONE job
-    * over the m·k codebook instead of two collects of the same tiny
-    * table. Values are the identical expressions the two separate
-    * tables computed, so every downstream fold is bit-unchanged.
+  /** The m·k (dot, ‖c_s‖²) PAIR table [[ivfPqTopK]] consumes — the ADC
+    * DOT table (`dot(q_s, c_s)`, exact per subspace because PQ subspaces
+    * are disjoint coordinate blocks, the FAISS IVFADC inner-product
+    * variant's [[adcDistanceTable]] analogue) and the centroid NORM²
+    * table (‖q(v)‖² = Σ_s ‖c_s‖² exactly), folded on the driver from the
+    * codebook rows and the query vector `q` of dimension m·d. Each value
+    * is [[dotD]]'s or [[norm2D]]'s left-to-right double fold over the
+    * same float→double subvector [[subspaces]] slices (a codebook row
+    * joins the query subvector of its `sub`), so it is bit-identical to
+    * the Spark fold.
     */
-  private def adcDotNorm2Table(
-      codebook: DataFrame,
-      query: DataFrame,
-      queryVecCol: String,
-      m: Int,
-      d: Int
-  ): Map[(Int, Long), (Double, Double)] = {
-    val qsubs = subspaces(query.select(lit(0L).as("_qid"), col(queryVecCol)),
-      "_qid", queryVecCol, m, d)
-    codebook
-      .join(broadcast(qsubs.select(col("sub"), col("subvec").as("_qv"))), "sub")
-      .select(col("sub"), col("cid"),
-        dotD(col("cvec"), col("_qv")).as("_d"), norm2D(col("cvec")).as("_n2"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> ((r.getDouble(2), r.getDouble(3))))
-      .toMap
-  }
+  private[graft] def adcDotNorm2Table(
+      codebook: Seq[Row], q: Array[Float], m: Int, d: Int): Map[(Int, Long), (Double, Double)] =
+    codebook.filter(r => r.getAs[Int]("sub") >= 0 && r.getAs[Int]("sub") < m).map { r =>
+      val (s, cid) = (r.getAs[Int]("sub"), r.getAs[Long]("cid"))
+      val c = r.getSeq[Double](r.fieldIndex("cvec"))
+      val qs = q.slice(s * d, s * d + d).map(_.toDouble)
+      require(c.length == d,
+        s"ivfPqTopK: codebook vector ($s, $cid) has ${c.length} dimensions, query subvectors $d")
+      val dot = c.indices.foldLeft(0.0)((acc, i) => acc + c(i) * qs(i))
+      (s, cid) -> ((dot, c.foldLeft(0.0)((acc, x) => acc + x * x)))
+    }.toMap
 
   /** Bounded collect of the m·k ADC distance table (the probedIds move):
     * squared L2 from each codebook centroid to the query's matching
@@ -1696,17 +1716,16 @@ object Similarity {
       commitId: Option[String] = None
   ): Boolean = {
     FileMerge.recoverFileMerge(spark, indexPath)
-    val cents = spark.read.parquet(centroidsPath(indexPath))
-    // m·k metadata scale: localize instead of checkpointing — the m
-    // inference below is then job-free and the coding join broadcasts
-    // local rows
-    val cb = localized(spark.read.parquet(codebookPath(indexPath)))
-    val m = cb.agg(max(col("sub"))).head().getInt(0) + 1
+    val index = FileMerge.snapshot(spark, indexPath)
+    val cents = subTable(spark, index, "centroids")
+    // m·k metadata scale: collected once, so m costs no job and the
+    // coding join broadcasts local rows
+    val cb = storedCodebook(spark, index)
     // pin the batch: it feeds the coding AND assignment joins and the
     // clustered write's range sampling (the ivfAppend argument)
     Checkpoints.scoped {
       val batch = Checkpoints.cache(newEmb.select(col(idCol), col(vecCol)))
-      val codeArr = codesWithStats(batch, idCol, vecCol, cb, m)
+      val codeArr = codesWithStats(batch, idCol, vecCol, cb.local, cb.m)
       val postings = ivfAssign(batch, idCol, vecCol, cents, "centroid_id", "centroid")
         .join(codeArr, idCol)
         .select(col("centroid_id").cast("long").as("centroid_id"), col(idCol),
@@ -1804,31 +1823,35 @@ object Similarity {
     }
     val index = FileMerge.snapshot(spark, indexPath)
     val post = postingsOf(spark, index)
+    def empty = FileMerge.readTable(spark, post)
+      .where(lit(false))
+      .select(col(idCol),
+        lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos_sim"))
+    // jobs: the query collect, the codebook collect, the centroid rank
+    // (1.), the footer scan (2.), the shortlist cut (3.) and the gate
+    // count and the re-rank (4.); the rest is driver arithmetic
     val qRows = query.limit(2).collect()
     require(qRows.length == 1,
       s"ivfPqTopK: query must have exactly one row, got ${qRows.length}")
-    if (qRows.head.isNullAt(0))
-      return spark.read.parquet(post.paths: _*)
-        .where(lit(false))
-        .select(col(idCol),
-          lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos_sim"))
-    val qVec = typedLit(qRows.head.getSeq[Float](0).toArray)
-    val dim = qRows.head.getSeq[Float](0).length
+    if (qRows.head.isNullAt(0)) return empty
+    require(!qRows.head.getSeq[Any](0).contains(null),
+      "ivfPqTopK: the query vector has NULL elements")
+    val qArr = qRows.head.getSeq[Float](0).toArray
+    val qVec = typedLit(qArr)
+    val dim = qArr.length
     require(dim % m == 0, s"ivfPqTopK: query dim $dim not divisible into $m subspaces")
     // Guard the caller's m against the STORED codebook (the advisor's
     // silent-empty trap): a wrong m that still divides dim would fail
     // every size(codes)===m filter and return an empty frame instead of
     // erroring. The stored subspace count is max(sub)+1, exactly how
     // ivfPqAppend infers it.
-    val storedCb = localized(spark.read.parquet(index.pathOf("codebook")))
-    val storedM = storedCb.agg(max(col("sub"))).head().getInt(0) + 1
-    require(m == storedM,
+    val storedCb = storedCodebook(spark, index)
+    require(m == storedCb.m,
       s"ivfPqTopK: caller m=$m does not match the stored codebook's " +
-        s"subspace count $storedM at $indexPath — a mismatched m would " +
+        s"subspace count ${storedCb.m} at $indexPath — a mismatched m would " +
         "silently filter every candidate")
     // 1. bucket ranking against the stored coarse quantizer
-    val probed = spark.read
-      .parquet(index.pathOf("centroids"))
+    val probed = subTable(spark, index, "centroids")
       .select(col("centroid_id"), cosine(col("centroid"), qVec).as("_cs"))
       .where(col("_cs").isNotNull)
       .orderBy(col("_cs").desc, col("centroid_id"))
@@ -1843,8 +1866,8 @@ object Similarity {
       case Some(id) => cand.where(col(idCol) =!= id)
       case None     => cand
     }
-    // 3. ADC over codes (bounded m·k table collected once), then the
-    // tie-inclusive shortlist cut: one distributed TakeOrdered finds
+    // 3. ADC over codes (bounded m·k table folded on the driver), then
+    // the tie-inclusive shortlist cut: one distributed TakeOrdered finds
     // the shortlist-th best adc (a single scalar collected — the
     // probed-centroids discipline), and the filter keeps every
     // candidate at or past it. The cut compares RAW doubles: code-tied
@@ -1858,7 +1881,6 @@ object Similarity {
     val inProbed = excluded
       .where(col("centroid_id").isin(probed.toIndexedSeq.map(Long.box): _*))
       .where(size(col("codes")) === m)
-    val qv = query.select(col(query.columns.head).as("_qv"))
     // quantized cosine cos(q, q(v)) = dot(q, q(v)) / (|q|·‖q(v)‖):
     // BOTH factors are pure functions of the CODES (per-subspace dot
     // and centroid-norm² map literals, summed in fixed subspace order),
@@ -1871,12 +1893,10 @@ object Similarity {
     // constant, so 1/‖v‖ — pure norm noise, uncorrelated with cosine —
     // did the ranking. ‖q(v)‖ is cell-constant, so the quantized
     // signal, not the noise, ranks. |q| is driver-computed with the
-    // same left-to-right fold as the oracle's sum.
-    // one collect for both per-(sub,cid) factors — identical values,
-    // one fewer driver round-trip per probe
-    val dtn2 = adcDotNorm2Table(storedCb, qv, "_qv", m, dim / m)
-    val qNorm = math.sqrt(
-      qRows.head.getSeq[Float](0).foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble))
+    // same left-to-right fold as the oracle's sum, and so are both
+    // per-(sub,cid) factors, from the collected codebook rows
+    val dtn2 = adcDotNorm2Table(storedCb.rows, qArr, m, dim / m)
+    val qNorm = math.sqrt(qArr.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble))
     require(qNorm > 0.0, "ivfPqTopK: needs a non-zero query vector")
     // ONE map lookup per subspace (cid → (dot, cn2) pair), not two:
     // the measured cost of a second element_at chain was ~2.5× per
@@ -1909,11 +1929,7 @@ object Similarity {
       nanvl(coalesce(qdot / (lit(qNorm) * sqrt(rec2)), lit(-2.0)), lit(-2.0)).as("_adcr"))
     val cutRow = scored.orderBy(col("_adcr").desc, col(idCol)).limit(shortlist)
       .agg(min(col("_adcr"))).head()
-    if (cutRow.isNullAt(0))
-      return spark.read.parquet(post.paths: _*)
-        .where(lit(false))
-        .select(col(idCol),
-          lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos_sim"))
+    if (cutRow.isNullAt(0)) return empty
     val short = scored.where(col("_adcr") >= cutRow.getDouble(0) && col("_adcr") >= lit(-1.5))
     // 4. exact re-rank of the tie-inclusive shortlist against the
     // source-of-truth vector table: broadcast while the set is
@@ -1955,9 +1971,9 @@ object Similarity {
     *                   ceil(frac · nprobe · nPostings / nCentroids))
     *
     * `frac` 0.25 is the measured knee on clustered corpora; pass 1.0
-    * to buy the exhaustive-probe guarantee. Two metadata-scale counts
-    * against the persisted index — call once per (index, nprobe), not
-    * per query.
+    * to buy the exhaustive-probe guarantee. Both counts are footer row
+    * counts of the persisted postings and centroids, from one footer
+    * scan — call once per (index, nprobe), not per query.
     */
   def ivfPqShortlistFor(
       spark: SparkSession,
@@ -1971,8 +1987,15 @@ object Similarity {
       s"ivfPqShortlistFor: need topK/nprobe/minFactor >= 1 and frac > 0, " +
         s"got topK=$topK nprobe=$nprobe minFactor=$minFactor frac=$frac")
     val index = FileMerge.snapshot(spark, indexPath)
-    val nPost = spark.read.parquet(postingsOf(spark, index).paths: _*).count()
-    val nCent = spark.read.parquet(index.pathOf("centroids")).count()
+    def files(t: FileMerge.Snapshot) = t.dataFiles.map(_.getPath.toString)
+    val postFiles = files(postingsOf(spark, index))
+    val centFiles = files(FileMerge.snapshot(spark, index.pathOf("centroids")))
+    val rows =
+      if (postFiles.isEmpty && centFiles.isEmpty) Map.empty[String, Long]
+      else FileMerge.footers(spark, postFiles ++ centFiles, "centroid_id", strict = false)
+        .collect().map(r => r.file -> r.rows).toMap
+    val nPost = postFiles.map(rows).sum
+    val nCent = centFiles.map(rows).sum
     require(nCent > 0, s"ivfPqShortlistFor: empty centroid table at $indexPath")
     val perBucket = math.ceil(nPost.toDouble / nCent)
     math.min(
@@ -1998,9 +2021,10 @@ object Similarity {
     * (cos_sim desc, id).
     *
     * Scale shape: no per-query job, no driver loop — the only collects
-    * are the probed-bucket union (≤ centroid count) and the stored-m
-    * guard; windows partition by query_id (batch-parallel); the
-    * re-rank join broadcasts only under [[MaxBroadcastShortlist]].
+    * are the probed-bucket union (≤ centroid count) and the m·k
+    * codebook, whose rows give the stored-m guard and the dt broadcast
+    * gate; windows partition by query_id (batch-parallel); the re-rank
+    * join broadcasts only under [[MaxBroadcastShortlist]].
     */
   def ivfPqTopKBatch(
       spark: SparkSession,
@@ -2024,11 +2048,10 @@ object Similarity {
     require(nprobe >= 1, s"ivfPqTopKBatch: nprobe must be at least 1, got $nprobe")
     val index = FileMerge.snapshot(spark, indexPath)
     val post = postingsOf(spark, index)
-    val storedCb = localized(spark.read.parquet(index.pathOf("codebook")))
-    val storedM = storedCb.agg(max(col("sub"))).head().getInt(0) + 1
-    require(m == storedM,
+    val storedCb = storedCodebook(spark, index)
+    require(m == storedCb.m,
       s"ivfPqTopKBatch: caller m=$m does not match the stored codebook's " +
-        s"subspace count $storedM at $indexPath — a mismatched m would " +
+        s"subspace count ${storedCb.m} at $indexPath — a mismatched m would " +
         "silently filter every candidate")
     val q = Checkpoints.checkpoint(
       queries.select(col(qIdCol).cast("long").as("query_id"), col(qVecCol).as("_qvec")))
@@ -2068,7 +2091,7 @@ object Similarity {
         "the quantized cosine is undefined for them and those query ids would " +
         "silently vanish from the batch answer")
     // 1. per-query bucket ranking (the indexedBatchCandidates shape)
-    val cents = broadcast(spark.read.parquet(index.pathOf("centroids")))
+    val cents = broadcast(subTable(spark, index, "centroids"))
     val probeRank = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("_pcs").desc, col("centroid_id"))
@@ -2094,11 +2117,11 @@ object Similarity {
     // per-(query, sub, cid) dot plus the query-independent centroid
     // norm² riding the same row — one join serves both folds
     val dt = subspaces(q, "query_id", "_qvec", m, dim / m)
-      .join(broadcast(storedCb.select(col("sub"), col("cid"), col("cvec"))), "sub")
+      .join(broadcast(storedCb.local.select(col("sub"), col("cid"), col("cvec"))), "sub")
       .select(col("_vid").as("query_id"), col("sub"), col("cid"),
         dotD(col("subvec"), col("cvec")).as("_dt"),
         norm2D(col("cvec")).as("_cn2"))
-    val nDtRows = nQueries * storedCb.count()
+    val nDtRows = nQueries * storedCb.rows.length
     val dtSide = if (nDtRows <= maxBroadcastDtRows) broadcast(dt) else dt
     val qNorms = broadcast(q.select(col("query_id"), sqrt(norm2(col("_qvec"))).as("_qn")))
     // 4. per-candidate sums in FIXED subspace order (sort-then-fold —
@@ -2208,9 +2231,8 @@ object Similarity {
       s"semDedupCandidates: threshold must be positive (the ub prune " +
         s"keeps every pair otherwise), got $threshold")
     require(subBlocks >= 1, "semDedupCandidates: subBlocks must be >= 1")
-    val cb = localized(spark.read.parquet(index.pathOf("codebook")))
-    val m = cb.agg(max(col("sub"))).head().getInt(0) + 1
-    val kMax = cb.agg(max(col("cid"))).head().getLong(0) + 1
+    val stored = storedCodebook(spark, index)
+    val (cb, m, kMax) = (stored.local, stored.m, stored.kMax)
     require(m.toLong * kMax * kMax <= 262144L,
       s"semDedupCandidates: SDC table m*k^2 = ${m.toLong * kMax * kMax} exceeds the " +
         "map-literal budget (262144) — this face covers the practical PQ regimes " +
@@ -2230,7 +2252,7 @@ object Similarity {
         if (sub.isEmpty) lit(null).cast("double")
         else denseLookup(sub, ca.getItem(s) * kMax + cbc.getItem(s))
       }.reduce(_ + _)
-    val post = spark.read.parquet(postings.paths: _*)
+    val post = FileMerge.readTable(spark, postings)
       .where(size(col("codes")) === m && col("nrm") > 0)
       .select(col(idCol).as("id"), col("centroid_id").as("blk"),
         col("codes"), col("nrm"), col("qn"), col("r"),
@@ -2294,7 +2316,7 @@ object Similarity {
       .where(col("_cs") >= threshold)
       .select(col("id_b").as("_dropId"))
       .distinct()
-    spark.read.parquet(post.paths: _*)
+    FileMerge.readTable(spark, post)
       .select(col(idCol), col("centroid_id"))
       .join(dropped, col(idCol) === col("_dropId"), "left")
       .select(
@@ -2340,15 +2362,14 @@ object Similarity {
       relErrBound: Double = 0.5
   ): DataFrame = {
     val index = FileMerge.snapshot(spark, indexPath)
-    val cb = localized(spark.read.parquet(index.pathOf("codebook")))
-    val m = cb.agg(max(col("sub"))).head().getInt(0) + 1
+    val cb = storedCodebook(spark, index)
     val batchStats = codesWithStats(
-      batch.select(col(idCol), col(vecCol)), idCol, vecCol, cb, m)
+      batch.select(col(idCol), col(vecCol)), idCol, vecCol, cb.local, cb.m)
       .where(col("nrm") > 0)
       .agg(count(lit(1)).as("n_batch"), avg(col("r")).as("batch_mean_err"),
         avg(when(col("r") / col("nrm") > relErrBound, 1.0).otherwise(0.0))
           .as("frac_above"))
-    val indexStats = spark.read.parquet(postingsOf(spark, index).paths: _*)
+    val indexStats = FileMerge.readTable(spark, postingsOf(spark, index))
       .where(col("nrm") > 0)
       .agg(avg(col("r")).as("index_mean_err"))
     batchStats.crossJoin(indexStats)
@@ -2378,7 +2399,7 @@ object Similarity {
   /** Shared subspace decomposition: `(_vid, sub, subvec ARRAY<DOUBLE>)`,
     * rows with a wrong-length vector dropped (they cannot be coded).
     */
-  private def subspaces(
+  private[graft] def subspaces(
       emb: DataFrame, idCol: String, vecCol: String, m: Int, d: Int): DataFrame =
     emb
       .where(col(vecCol).isNotNull && size(col(vecCol)) === m * d)

@@ -21,7 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Writers recover and readers resolve: only a writer repairs a torn
   * commit (`FileMerge.recoverFileMerge`), and a read function, with
-  * everything it calls, never changes the table it reads.
+  * everything it calls, never changes the table it reads. The index
+  * operators read a table only through `FileMerge.readTable` (or
+  * `readFiles`), which types it from footers the driver reads.
   */
 class EngineEnvSpec extends AnyFunSuite {
 
@@ -145,6 +147,13 @@ class EngineEnvSpec extends AnyFunSuite {
       if Mutation.findFirstIn(codeOf(line)).isDefined
     } yield s"$name: ${line.trim}"
     assert(found.isEmpty, found.mkString("a read function reaches a table change:\n", "\n", ""))
+  }
+
+  test("the index operators read tables only through the snapshot reader") {
+    val files = Seq("Similarity.scala", "Invert.scala").map(Root.resolve("operators").resolve(_))
+    val found = hits(files)(line => """\.read\b""".r.findFirstIn(codeOf(line)).isDefined)
+    assert(found.isEmpty,
+      found.mkString("reads past FileMerge.readTable/readFiles in the index operators:\n", "\n", ""))
   }
 
   test("engine and drivers reach the filesystem through Hadoop FileSystem only") {

@@ -70,7 +70,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     Invert.writeIndex(spark, Invert.postingLists(docs, "doc_id", "text"), s"$dir/inv", files = 4)
     Invert.docLengths(docs, "doc_id", "text").write.parquet(s"$dir/doclen")
     val lens = spark.read.parquet(s"$dir/doclen")
-    val top = within("readIndex + bm25TopK", 11) {
+    val top = within("readIndex + bm25TopK", 10) {
       Invert.bm25TopK(Invert.readIndex(spark, s"$dir/inv"), lens, Seq("w3", "common"), 10)
         .collect()
     }
@@ -81,7 +81,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     val idx = scratch("ivf")
     Similarity.ivfBuild(spark, emb, "vec_id", "embedding",
       emb.where(col("vec_id") < 16), "vec_id", "embedding", idx, files = 4)
-    val top = within("ivfTopKIndexed", 6) {
+    val top = within("ivfTopKIndexed", 4) {
       Similarity.ivfTopKIndexed(spark, idx, "vec_id", "embedding", queryVec,
         k = 5, nprobe = 2, excludeId = Some(0L)).collect()
     }
@@ -93,12 +93,40 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     Similarity.ivfPqBuild(spark, emb, "vec_id", "embedding",
       emb.where(col("vec_id") < 16), "vec_id", "embedding",
       m = 4, k = 8, indexPath = idx, files = 4)
-    val top = within("ivfPqTopK", 16) {
+    val top = within("ivfPqTopK", 9) {
       Similarity.ivfPqTopK(spark, idx, "vec_id", queryVec,
         m = 4, topK = 5, nprobe = 4, shortlist = 40,
         rerank = emb, rerankVecCol = "embedding", excludeId = Some(0L)).collect()
     }
     assert(top.length == 5)
+  }
+
+  test("one ivfPqAppend batch") {
+    val idx = scratch("ivfpqappend")
+    Similarity.ivfPqBuild(spark, emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding",
+      emb.where(col("vec_id") < 16), "vec_id", "embedding",
+      m = 4, k = 8, indexPath = idx, files = 4)
+    val appended = within("ivfPqAppend", 14) {
+      Similarity.ivfPqAppend(spark, emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding",
+        idx, files = 2, commitId = Some("b1"))
+    }
+    assert(appended)
+  }
+
+  test("hybridRrfFuseLegs over two collected legs") {
+    val dir = scratch("rrf")
+    val docs = (0L until 200L).map(i => (i, s"w${i % 7} w${i % 11} common w${i % 13}"))
+      .toDF("doc_id", "text")
+    Invert.writeIndex(spark, Invert.postingLists(docs, "doc_id", "text"), s"$dir/inv", files = 4)
+    def collected(d: org.apache.spark.sql.DataFrame) =
+      spark.createDataFrame(java.util.Arrays.asList(d.collect(): _*), d.schema)
+    val sparse = collected(Invert.bm25TopK(Invert.readIndex(spark, s"$dir/inv"),
+      Invert.docLengths(docs, "doc_id", "text"), Seq("w3", "common"), 10))
+    val dense = collected(Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10))
+    val fused = within("hybridRrfFuseLegs", 0) {
+      Invert.hybridRrfFuseLegs(sparse, dense, "vec_id", 10).collect()
+    }
+    assert(fused.length == 10)
   }
 
   test("one corpusAsOf") {

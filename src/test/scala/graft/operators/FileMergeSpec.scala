@@ -373,6 +373,27 @@ class FileMergeSpec extends AnyFunSuite with SparkSpec {
       fields(Incremental.readEvolved(spark, s"$sf/orders.parquet").schema))
   }
 
+  test("readTable types a table as inference does; without row metadata too; empty still fails") {
+    def typedAsInference(path: String): Unit = {
+      val snap = FileMerge.snapshot(spark, path)
+      assert(FileMerge.readTable(spark, snap).schema == spark.read.parquet(snap.paths: _*).schema, path)
+    }
+    val t = tmp()
+    FileMerge.mergeFileGranular(spark, base(100), t, "id", initialFiles = 2)
+    typedAsInference(t)
+    // evolved: the files' footers disagree, and inference reads the first
+    FileMerge.mergeFileGranular(spark, Seq((1L, "v1x", "w1")).toDF("id", "v", "w"), t, "id")
+    typedAsInference(t)
+    // a file another engine wrote carries no Spark row metadata
+    typedAsInference(s"$sf/orders.parquet")
+    // no data files: inference fails, and so does the reader, alike
+    val empty = new Path(tmp())
+    empty.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(empty)
+    val want = intercept[Exception](spark.read.parquet(empty.toString))
+    val got = intercept[Exception](FileMerge.readTable(spark, FileMerge.snapshot(spark, empty.toString)))
+    assert(got.getClass == want.getClass && got.getMessage == want.getMessage)
+  }
+
   test("stat-less or non-integral inputs are rejected or handled conservatively") {
     val dir = tmp()
     val err = intercept[IllegalArgumentException] {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -402,5 +403,74 @@ class InvertSpec extends AnyFunSuite with SparkSpec {
       "vec_id", k = 5, rrfK = 60)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(viaLegs == fused)
+  }
+
+  test("readIndex is typed as inference types the index, after writeIndex and appendToIndex") {
+    val dir = java.nio.file.Files.createTempDirectory("invert_reader").toString + "/index"
+    def typedAsInference(): Unit = {
+      val paths = FileMerge.snapshot(spark, dir).paths
+      assert(Invert.readIndex(spark, dir).schema == spark.read.parquet(paths: _*).schema)
+    }
+    val first = (0L until 50L).map(i => (i, s"alpha w${i % 5}")).toDF("doc_id", "text")
+    Invert.writeIndex(spark, Invert.postingLists(first, "doc_id", "text", 100L), dir, files = 2)
+    typedAsInference()
+    val batch = (100L until 120L).map(i => (i, "beta gamma")).toDF("doc_id", "text")
+    assert(Invert.appendToIndex(spark, batch, "doc_id", "text", dir, blockDocs = 100L))
+    typedAsInference()
+  }
+
+  /** [[Invert.hybridRrfFuseLegs]] as the Spark plan it replaced: each
+    * leg ranked by [[Invert.rankedLeg]], the union's
+    * [[Invert.rrfContributions]] summed per id.
+    */
+  private def sparkFusion(sparseTop: DataFrame, denseTop: DataFrame, k: Int, rrfK: Int): DataFrame = {
+    val sparse = Invert.rankedLeg(
+      sparseTop, "sparse", "doc_id", Seq(col("score_scaled").desc, col("doc_id")))
+    val dense = Invert.rankedLeg(
+      denseTop, "dense", "vec_id", Seq(col("cos_sim").desc, col("vec_id")))
+    Invert.rrfContributions(sparse.unionByName(dense), rrfK)
+      .groupBy(col("doc_id"))
+      .agg(
+        max(when(col("leg") === "sparse", 1L).otherwise(0L)).as("in_sparse"),
+        max(when(col("leg") === "dense", 1L).otherwise(0L)).as("in_dense"),
+        sum(col("_contrib")).as("rrf_scaled"))
+      .orderBy(col("rrf_scaled").desc, col("doc_id"))
+      .limit(k)
+  }
+
+  test("hybridRrfFuseLegs equals the Spark fusion on tied and NULL scores: rows, order, schema") {
+    // a bm25TopK-shaped leg with tied scores
+    val sparse = Seq((7L, 2L, 500L), (3L, 1L, 500L), (9L, 2L, 900L), (4L, 1L, 100L), (12L, 1L, 500L))
+      .toDF("doc_id", "n_terms_hit", "score_scaled")
+    // a (vec_id, cos_sim) leg with ties, a NULL, a NaN and both zeros
+    // (-0.0 on the lower id: Spark ranks the two zeros as a tie)
+    val dense = Seq((3L, Some(0.5)), (8L, Some(0.5)), (1L, None), (9L, Some(0.9)),
+      (5L, Some(Double.NaN)), (2L, Some(-0.0)), (6L, Some(0.0)), (10L, Some(0.5)))
+      .toDF("vec_id", "cos_sim")
+    def same(s: DataFrame, d: DataFrame, k: Int, rrfK: Int): Unit = {
+      val got = Invert.hybridRrfFuseLegs(s, d, "vec_id", k, rrfK)
+      val want = sparkFusion(s, d, k, rrfK)
+      assert(got.schema == want.schema)
+      assert(got.collect().toSeq == want.collect().toSeq, s"k=$k rrfK=$rrfK")
+    }
+    Seq((20, 60), (10, 0), (3, 1)).foreach { case (k, rrfK) => same(sparse, dense, k, rrfK) }
+    // an INT sparse leg: the ids widen to BIGINT as the union widens them
+    same(sparse.withColumn("doc_id", col("doc_id").cast("int")), dense, 20, 60)
+    // lazy legs fuse as local ones do
+    same(sparse.where(col("doc_id") > 0), dense.where(col("vec_id") > 0), 20, 60)
+  }
+
+  test("rrfContribution is rrfContributions' BIGINT, with its rank guard") {
+    Seq(0, 1, 60, 1000).foreach { rrfK =>
+      val ranks = (1L to 3000L) :+ ((1L << 20) - rrfK)
+      val ranked = ranks.map(r => ("leg", r, r)).toDF("leg", "doc_id", "rank")
+      val viaSpark = Invert.rrfContributions(ranked, rrfK)
+        .select("rank", "_contrib").as[(Long, Long)].collect().toMap
+      ranks.foreach(r => assert(Invert.rrfContribution(r, rrfK) == viaSpark(r), s"rank $r rrfK $rrfK"))
+    }
+    Seq(0L, -1L, (1L << 20) - 59).foreach { r =>
+      val e = intercept[IllegalArgumentException](Invert.rrfContribution(r, 60))
+      assert(e.getMessage.contains("rrfFuse: rank out of"), e.getMessage)
+    }
   }
 }

@@ -672,6 +672,74 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(grown == probe(full), "incremental growth must not change a neighbor")
   }
 
+  /** Every sub-table of the index at `idx`, as its snapshot resolves
+    * it: the snapshot reader's schema is what inference gives the same
+    * paths, nullability and metadata included.
+    */
+  private def assertTypedAsInference(idx: String): Unit = {
+    val index = FileMerge.snapshot(spark, idx)
+    val subs = Seq("postings", "centroids", "codebook")
+      .filter(n => index.entries.exists(_.getPath.getName == n))
+    assert(subs.contains("postings") && subs.contains("centroids"))
+    subs.foreach { n =>
+      val t = FileMerge.snapshot(spark, index.pathOf(n))
+      assert(FileMerge.readTable(spark, t).schema == spark.read.parquet(t.paths: _*).schema, s"$idx: $n")
+    }
+  }
+
+  test("the snapshot reader types IVF and IVF-PQ sub-tables as inference does, torn ones included") {
+    val odd = emb.where(col("vec_id") % 2 === 1)
+    val ivf = halfCorpusIndex("readerivf")
+    assertTypedAsInference(ivf)
+    Similarity.ivfAppend(spark, odd, "vec_id", "embedding", ivf, files = 2)
+    assertTypedAsInference(ivf)
+    val pq = scratch("readerpq")
+    Similarity.ivfPqBuild(spark, emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding",
+      emb.where(col("vec_id") < 16), "vec_id", "embedding", m = 4, k = 8, indexPath = pq, files = 4)
+    assertTypedAsInference(pq)
+    Similarity.ivfPqAppend(spark, odd, "vec_id", "embedding", pq, files = 2)
+    assertTypedAsInference(pq)
+    // a rebuild torn mid-publish: the sub-tables resolve into staging
+    crashRebuild(pq, hide = Seq("postings", "centroids", "codebook"), publish = Seq("codebook"))
+    assert(FileMerge.snapshot(spark, pq).torn)
+    assertTypedAsInference(pq)
+    // an append torn after its manifest: the postings list their files
+    val post = s"$ivf/postings"
+    val staging = new Path(post + "_fmerge")
+    stageOddBatch(ivf, staging)
+    staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(new Path(staging, "_touched"), true).close()
+    assert(FileMerge.snapshot(spark, post).torn)
+    assertTypedAsInference(ivf)
+  }
+
+  test("the driver (dot, norm2) table is the Spark dotD/norm2D fold, bit for bit") {
+    val m = 4
+    val cb = Similarity.pqBuild(emb, "vec_id", "embedding", m, k = 8)
+    val rows = cb.collect().toSeq
+    val queries = emb.where(col("vec_id") < 5).orderBy("vec_id").select("embedding")
+      .as[Array[Float]].collect()
+    assert(queries.length == 5)
+    queries.foreach { q =>
+      val d = q.length / m
+      val qsubs = Similarity.subspaces(Seq(Tuple2(0L, q)).toDF("_qid", "q"), "_qid", "q", m, d)
+      val viaSpark = cb
+        .join(broadcast(qsubs.select(col("sub"), col("subvec").as("_qv"))), "sub")
+        .select(col("sub"), col("cid"),
+          Similarity.dotD(col("cvec"), col("_qv")), Similarity.norm2D(col("cvec")))
+        .collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> ((r.getDouble(2), r.getDouble(3))))
+        .toMap
+      val driver = Similarity.adcDotNorm2Table(rows, q, m, d)
+      assert(driver.nonEmpty && driver.keySet == viaSpark.keySet)
+      // == on the doubles: no tolerance
+      driver.foreach { case (key, (dt, n2)) =>
+        val (sdt, sn2) = viaSpark(key)
+        assert(dt == sdt && n2 == sn2, s"$key: driver ($dt, $n2) vs Spark ($sdt, $sn2)")
+      }
+    }
+  }
+
   test("ivfPq: tie-inclusive shortlist hands whole code-equivalence classes to the re-rank") {
     // the RECALL_r15 regression shape, miniaturized: two tight clusters
     // whose members all CODE identically (codebook trained on the two
