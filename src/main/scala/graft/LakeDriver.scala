@@ -92,10 +92,15 @@ object LakeDriver {
   }
 
   /** Recon for all tables under the lake root: lake counts, sizes, and
-    * last-success ingestion times joined on TableName. (Source counts
-    * equal lake counts when sources are the lake inputs themselves; the
-    * JDBC-source variant plugs its own source frames into
-    * `Recon.countReport`.)
+    * last-success ingestion times joined on TableName. The sources are
+    * the lake inputs themselves, so source counts equal lake counts; a
+    * JDBC-source variant counts its source frames and passes both sides
+    * to `Recon.countReport`.
+    *
+    * Counts are one footer scan over every table's committed data files
+    * (`Recon.lakeRowCounts`), and the metastore is read typed from a
+    * footer, so recon infers no schema and reads no data page but the
+    * metastore's.
     *
     * Table discovery: a table is the nearest non-partition (`k=v`)
     * ancestor directory of a parquet file; a writer's `<table>_fmerge`
@@ -112,26 +117,19 @@ object LakeDriver {
       while (d != null && d != lakeDir && d.getName.contains("=")) d = d.getParent
       if (d != null && d != lakeDir && !d.getName.endsWith("_fmerge")) Some(d) else None
     }
-    val tables: Seq[(String, String)] =
-      if (!fs.exists(lakeDir)) Nil
+    val tables: Map[String, String] =
+      if (!fs.exists(lakeDir)) Map.empty
       else {
         val files = fs.listFiles(lakeDir, true)
         Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
           .filter(_.getName.endsWith(".parquet"))
           .flatMap(tableDirOf(_))
-          .toSet
-          .map((d: Path) => d.getName.toLowerCase -> d.toString)
-          .toSeq
-          .sortBy(_._1)
+          .map(d => d.getName.toLowerCase -> d.toString)
+          .toMap
       }
     val counts = Recon.countReport(
-      spark,
-      tables.map { case (n, d) =>
-        val df = spark.read.parquet(d) // one schema inference serves both sides
-        n -> (df, df)
-      }.toMap
-    )
-    val sizes = Recon.sizeReport(spark, tables.toMap.view.mapValues(identity).toMap)
+      spark, Recon.lakeRowCounts(spark, tables).map { case (n, c) => n -> (c, c) })
+    val sizes = Recon.sizeReport(spark, tables)
     val metaPath = s"${config.root}/${config.metaSubdir}"
     val times =
       if (fs.exists(new Path(metaPath)))

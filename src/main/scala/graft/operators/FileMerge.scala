@@ -84,9 +84,9 @@ object FileMerge {
     * integral column's non-null values, and its schema as
     * [[SchemaBridge.footerSchema]] gives it, unparsed until a merge reads
     * the file. `known = false` means the footer carried no usable
-    * statistics for the column — the file must be treated as
-    * intersecting every batch. A file with zero rows keeps lo > hi: it
-    * intersects nothing.
+    * statistics for the column, or the scan bounded no column — the file
+    * must be treated as intersecting every batch. A file with zero rows
+    * keeps lo > hi: it intersects nothing.
     */
   final case class FileRange(file: String, rows: Long, lo: Long, hi: Long, known: Boolean, schema: String)
 
@@ -102,10 +102,11 @@ object FileMerge {
     * log. Yields one [[FileRange]] per file, named by its full path, when
     * the caller collects it. A `strict` scan fails on a footer that
     * cannot bound `column` instead of marking it unknown, and lets an
-    * all-null chunk bound nothing.
+    * all-null chunk bound nothing. Without a `column` the scan reads row
+    * counts and schemas only, and every range is unknown.
     */
   private[graft] def footers(
-      spark: SparkSession, files: Seq[String], column: String, strict: Boolean): RDD[FileRange] = {
+      spark: SparkSession, files: Seq[String], column: Option[String], strict: Boolean): RDD[FileRange] = {
     val confBc = ConfBridge.broadcast(spark.sparkContext)
     val slices = math.min(files.size, math.max(1, spark.sparkContext.defaultParallelism))
     spark.sparkContext
@@ -115,17 +116,17 @@ object FileMerge {
           var rows = 0L
           var lo = Long.MaxValue
           var hi = Long.MinValue
-          var known = true
+          var known = column.isDefined
           def unusable(why: String): Unit =
             if (strict) throw new IllegalArgumentException(s"footerStats: $why") else known = false
           footer.getBlocks.asScala.filter(_.getRowCount > 0).foreach { b =>
             rows += b.getRowCount
-            b.getColumns.asScala.find(_.getPath.toDotString == column) match {
-              case None => unusable(s"column $column absent from $f")
+            for (name <- column) b.getColumns.asScala.find(_.getPath.toDotString == name) match {
+              case None => unusable(s"column $name absent from $f")
               case Some(c) =>
                 val st = c.getStatistics
                 if (st == null)
-                  unusable(s"$f carries no statistics for $column — " +
+                  unusable(s"$f carries no statistics for $name — " +
                     "metadata-only bounds would be a guess, not an answer")
                 else if (!st.hasNonNullValue) {
                   // an all-null chunk bounds nothing; a merge must still
@@ -136,7 +137,7 @@ object FileMerge {
                     case (mn: Number, mx: Number) =>
                       lo = math.min(lo, mn.longValue)
                       hi = math.max(hi, mx.longValue)
-                    case other => unusable(s"non-integral statistics for $column in $f: $other")
+                    case other => unusable(s"non-integral statistics for $name in $f: $other")
                   }
             }
           }
@@ -157,7 +158,7 @@ object FileMerge {
   private[graft] def footerRanges(
       spark: SparkSession, table: Snapshot, column: String): Seq[FileRange] = {
     val files = table.dataFiles.map(_.getPath.toString)
-    if (files.isEmpty) Nil else footers(spark, files, column, strict = false).collect().toSeq
+    if (files.isEmpty) Nil else footers(spark, files, Some(column), strict = false).collect().toSeq
   }
 
   /** [[footerRanges]] of the table at `lakePath`, each file named by its
@@ -182,6 +183,10 @@ object FileMerge {
         spark.read.schema(SchemaBridge.merge(spark, Seq(footer))).parquet(table.paths: _*)
       case _ => spark.read.parquet(table.paths: _*)
     }
+
+  /** [[readTable]] of the [[snapshot]] of `lakePath`. */
+  private[graft] def readTable(spark: SparkSession, lakePath: String): DataFrame =
+    readTable(spark, snapshot(spark, lakePath))
 
   /** Read the `files` of a footer scan under their footers' merged
     * schema (what a `mergeSchema` read infers, without its job).

@@ -145,7 +145,7 @@ object Invert {
     * the parquet scan (see [[writeIndex]]).
     */
   def readIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String): DataFrame =
-    FileMerge.readTable(spark, FileMerge.snapshot(spark, indexPath))
+    FileMerge.readTable(spark, indexPath)
 
   /** Incrementally extend a persisted index with NEWLY INGESTED documents
     * — the maintenance half of build-once/search-many. Because posting

@@ -377,7 +377,7 @@ object Similarity {
     * snapshot `index` resolves, typed from its footer.
     */
   private def subTable(spark: SparkSession, index: FileMerge.Snapshot, name: String): DataFrame =
-    FileMerge.readTable(spark, FileMerge.snapshot(spark, index.pathOf(name)))
+    FileMerge.readTable(spark, index.pathOf(name))
 
   /** What a probe of `buckets` scans: the postings files whose footer
     * centroid range covers a probed bucket (stats-less files always),
@@ -1992,7 +1992,7 @@ object Similarity {
     val centFiles = files(FileMerge.snapshot(spark, index.pathOf("centroids")))
     val rows =
       if (postFiles.isEmpty && centFiles.isEmpty) Map.empty[String, Long]
-      else FileMerge.footers(spark, postFiles ++ centFiles, "centroid_id", strict = false)
+      else FileMerge.footers(spark, postFiles ++ centFiles, None, strict = false)
         .collect().map(r => r.file -> r.rows).toMap
     val nPost = postFiles.map(rows).sum
     val nCent = centFiles.map(rows).sum

@@ -1,62 +1,76 @@
 package graft.plans
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.operators.FileMerge
 
 /** Reconciliation report, re-expressing `reporting_utils.py:31-89`:
   * per-table (source row count, lake row count, last-success ingestion
   * time, byte size), joined on `TableName` (J3) into one stakeholder
-  * sign-off table. A Hadoop filesystem walk stands in for S3 prefix walks.
+  * sign-off table. A Hadoop filesystem walk stands in for S3 prefix walks,
+  * and lake row counts come from parquet footers.
   */
 object Recon {
 
-  /** Source-vs-lake row counts (`reporting_utils.py:63-74`) as ONE
-    * distributed union-aggregate job: each table contributes zero-column
-    * scans tagged with its name and side, a single groupBy sums both
-    * sides. The naive per-table `src.count(); lake.count()` loop is 2N
-    * serial Spark jobs — at 100 tables that is 200 scheduler round-trips
-    * vs one. A seed row per table keeps empty tables in the report.
+  private val CountSchema = StructType(Seq(
+    StructField("OnpremTableName", StringType), StructField("OnpremRowCounts", LongType),
+    StructField("TableName", StringType), StructField("TableRowCounts", LongType)))
+
+  /** Source-vs-lake row counts (`reporting_utils.py:63-74`), counted by
+    * the caller (name -> (source, lake)) and lifted into a report on the
+    * driver, sorted by table name (S9). Every count column is nullable,
+    * as the sum of a distributed count is.
     */
-  def countReport(
-      spark: SparkSession,
-      tables: Map[String, (DataFrame, DataFrame)] // name -> (source, lake)
-  ): DataFrame = {
-    import spark.implicits._
-    val schema = Seq.empty[(String, Long, Long)].toDF("t", "src_n", "lake_n")
-    if (tables.isEmpty)
-      return schema.select(
-        col("t").as("OnpremTableName"), col("src_n").as("OnpremRowCounts"),
-        col("t").as("TableName"), col("lake_n").as("TableRowCounts"))
-    val seed = tables.keys.toSeq.map(n => (n, 0L, 0L)).toDF("t", "src_n", "lake_n")
-    val pieces = tables.toSeq.map { case (name, (src, lake)) =>
-      src.select(lit(name).as("t"), lit(1L).as("src_n"), lit(0L).as("lake_n"))
-        .unionByName(lake.select(lit(name).as("t"), lit(0L).as("src_n"), lit(1L).as("lake_n")))
+  def countReport(spark: SparkSession, counts: Map[String, (Long, Long)]): DataFrame = {
+    val rows = counts.toSeq.sortBy(_._1).map { case (t, (src, lake)) => Row(t, src, t, lake) }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), CountSchema)
+  }
+
+  /** Exact row counts of the tables at `tableDirs` from their parquet
+    * footers: ONE distributed footer scan over the committed data files
+    * of every table (none when no table has a data file), summed per
+    * table on the driver. No data page is read and no schema inferred —
+    * the reference's per-table `count()`, answered from file metadata.
+    * A table is what [[FileMerge.snapshot]] resolves: its top-level data
+    * files, and every file under its `k=v` partition directories, with
+    * `_`- and `.`-named entries skipped below them as Spark's file index
+    * skips them. A table without data files counts 0.
+    */
+  def lakeRowCounts(spark: SparkSession, tableDirs: Map[String, String]): Map[String, Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def files(dir: String): Seq[String] = {
+      val table = FileMerge.snapshot(spark, dir)
+      val fs = new Path(dir).getFileSystem(conf)
+      def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+      def under(st: FileStatus): Seq[FileStatus] =
+        if (st.isFile) Seq(st)
+        else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(under)
+      val partitions = table.entries.filter(st => st.isDirectory && st.getPath.getName.contains("="))
+      (table.dataFiles ++ partitions.flatMap(under)).map(_.getPath.toString)
     }
-    (seed +: pieces)
-      .reduce(_ unionByName _)
-      .groupBy(col("t"))
-      .agg(sum("src_n").as("src_cnt"), sum("lake_n").as("lake_cnt"))
-      .select(
-        col("t").as("OnpremTableName"), col("src_cnt").as("OnpremRowCounts"),
-        col("t").as("TableName"), col("lake_cnt").as("TableRowCounts"))
-      .orderBy("OnpremTableName")
+    val byTable = tableDirs.map { case (name, dir) => name -> files(dir) }
+    val all = byTable.values.flatten.toSeq
+    val rows =
+      if (all.isEmpty) Map.empty[String, Long]
+      else FileMerge.footers(spark, all, None, strict = false).map(r => r.file -> r.rows)
+        .collect().toMap
+    byTable.map { case (name, paths) => name -> paths.map(rows).sum }
   }
 
   /** Per-table byte size: sum of file sizes under the table's directory
     * (`reporting_utils.py:31-42`'s S3 prefix sum), through the path's
-    * Hadoop filesystem. A checksummed local filesystem is read raw, so
-    * its `.crc` sidecars count as stored bytes. A missing directory
-    * reports 0.
+    * Hadoop filesystem. A checksummed filesystem (the local one) hides
+    * its `.crc` sidecars, so a local lake sums the bytes an S3 prefix
+    * holds. A missing directory reports 0.
     */
   def sizeReport(spark: SparkSession, tableDirs: Map[String, String]): DataFrame = {
     import spark.implicits._
     def bytes(dir: String): Long = {
       val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
-        case c: ChecksumFileSystem => c.getRawFileSystem
-        case f                     => f
-      }
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     }
     tableDirs.toSeq

@@ -9,7 +9,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.Checkpoints
+import graft.operators.{Checkpoints, FileMerge}
 
 /** Job runners + operational metadata, re-expressing the reference's
   * orchestration (`utils.py:340-498`) in-JVM: a "job" is a named
@@ -193,8 +193,11 @@ object MetaStore {
       records.toDS().toDF().write.mode("append").parquet(path)
   }
 
+  /** The metastore as written, typed from one footer the driver reads:
+    * no schema-inference job.
+    */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    FileMerge.readTable(spark, path)
 
   def appendJdbc(
       spark: SparkSession,

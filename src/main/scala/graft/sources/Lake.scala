@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Sanitize
+import graft.operators.FileMerge
 
 /** Lake + source I/O, re-expressing the reference's reader/writer surface
   * (`utils.py:83-209`) Spark-first. Local `file:/` paths stand in for
@@ -280,12 +281,15 @@ object Lake {
 
   /** O8 — catalog sync standing in for the Glue crawler
     * (`utils.py:250-328`): register the files as a queryable view named
-    * after the table and refresh any cached metadata for the path.
+    * after the table and refresh any cached metadata for the path. The
+    * view is read through [[FileMerge.readTable]]: a flat table is typed
+    * from a footer the driver reads, so its sync runs no Spark job; a
+    * partitioned one is inferred.
     */
   def syncCatalog(spark: SparkSession, path: String): Unit = {
     spark.catalog.refreshByPath(path)
     val name = tableNameFromPath(path)
-    spark.read.parquet(path).createOrReplaceTempView(name)
+    FileMerge.readTable(spark, path).createOrReplaceTempView(name)
   }
 
   /** O8, durable variant — register the parquet directory as an EXTERNAL
@@ -317,7 +321,7 @@ object Lake {
     // every sync — churning the catalog and opening the not-found window
     // this branch exists to avoid.
     val schemaChanged =
-      exists && !sameStructure(spark.table(fq).schema, spark.read.parquet(path).schema)
+      exists && !sameStructure(spark.table(fq).schema, FileMerge.readTable(spark, path).schema)
     if (schemaChanged) spark.sql(s"DROP TABLE IF EXISTS $fq")
     if (!exists || schemaChanged)
       spark.sql(s"CREATE TABLE $fq USING parquet LOCATION '$path'")
@@ -374,8 +378,8 @@ object Lake {
     // a torn commit must be rolled forward first: it leaves rows only in
     // hidden asides/staging that the read below skips — compacting over
     // that bakes in the missing rows
-    graft.operators.FileMerge.recoverFileMerge(spark, path)
-    val table = graft.operators.FileMerge.snapshot(spark, path)
+    FileMerge.recoverFileMerge(spark, path)
+    val table = FileMerge.snapshot(spark, path)
     // size via the Hadoop FS of the path itself — a local-filesystem walk
     // would read 0 bytes for hdfs://, s3a://, ... and compact to ONE file
     val p = new org.apache.hadoop.fs.Path(path)
@@ -413,8 +417,8 @@ object Lake {
         df.repartition(nFiles, partitionCols.map(col): _*)
           .write.partitionBy(partitionCols: _*)
     }
-    writer.mode("overwrite").parquet(graft.operators.FileMerge.stagingPath(path))
-    graft.operators.FileMerge.commitRewrite(spark, path)
+    writer.mode("overwrite").parquet(FileMerge.stagingPath(path))
+    FileMerge.commitRewrite(spark, path)
     nFiles
   }
 
@@ -440,14 +444,13 @@ object Lake {
     * Accepts a single parquet file or a directory of data files.
     */
   def footerStats(spark: SparkSession, path: String, statsCol: String): DataFrame = {
-    import graft.operators.FileMerge
     val p = new org.apache.hadoop.fs.Path(path)
     val files =
       if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isFile)
         Seq(path)
       else FileMerge.snapshot(spark, path).dataFiles.map(_.getPath.toString)
     require(files.nonEmpty, s"footerStats: no data files under $path")
-    val stats = FileMerge.footers(spark, files, statsCol, strict = true).collect()
+    val stats = FileMerge.footers(spark, files, Some(statsCol), strict = true).collect()
     val (lo, hi) = (stats.map(_.lo).min, stats.map(_.hi).max)
     val saw = lo <= hi
     import spark.implicits._

@@ -110,7 +110,7 @@ class EngineEnvSpec extends AnyFunSuite {
   private val Readers = Seq(
     "readIndex", "corpusAsOf", "indexedProbeCandidates", "indexedBatchCandidates",
     "ivfPqTopK", "ivfPqTopKBatch", "ivfPqShortlistFor", "semDedupCandidates",
-    "ivfPqDriftReport", "snapshot")
+    "ivfPqDriftReport", "snapshot", "lakeRowCounts")
 
   test("only writers run the commit recovery") {
     val files = scalaFiles(Seq("."))

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Invert, Similarity}
+import graft.plans.Runner
 import graft.streaming.Streams
 
 /** Spark-job budgets of the per-query and per-batch engine calls. At
@@ -152,6 +153,27 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
         Seq((5L, "v5x"), (500L, "new")).toDF("id", "v"), "id", target, batchId = 1L)
     }
     assert(applied)
+  }
+
+  test("one LakeDriver.run migration") {
+    val root = scratch("lakedriver")
+    val deps = java.nio.file.Paths.get(root, "deps.csv")
+    java.nio.file.Files.createDirectories(deps.getParent)
+    java.nio.file.Files.writeString(deps,
+      "Table,Parent Table,Layer\nOrders,,0\nCustomer,,0\nFlagship,Orders,1\n")
+    val registry: Map[String, Runner.Job] = Map(
+      "ing_orders" -> LakeDriver.ingestJob(
+        s => s.read.parquet(s"$sf/orders.parquet"), "orders", root),
+      "ing_customer" -> LakeDriver.ingestJob(
+        s => s.read.parquet(s"$sf/customer.parquet"), "customer", root),
+      "ing_flagship" -> LakeDriver.ingestJob(
+        s => s.read.parquet(s"$root/datalake/orders"), "flagship", root,
+        filterSql = Some("SELECT * FROM flagship WHERE o_orderstatus = 'F'")))
+    val result = within("LakeDriver.run", 15) {
+      LakeDriver.run(spark,
+        LakeDriver.Config(root, Some(deps.toString), jobPrefix = "ing_", maxBatchSize = 2), registry)
+    }
+    assert(result.records.map(_.job_status) == Seq("SUCCESS", "SUCCESS", "SUCCESS"))
   }
 
   test("one upsertBatchFileGranular batch") {

@@ -362,7 +362,7 @@ class FileMergeSpec extends AnyFunSuite with SparkSpec {
     FileMerge.mergeFileGranular(spark, Seq((1L, "v1x", "w1")).toDF("id", "v", "w"), t, "id")
     val written = FileMerge.footerRanges(spark, FileMerge.snapshot(spark, t), "id")
     // a file another engine wrote carries no Spark row metadata
-    val foreign = FileMerge.footers(spark, Seq(s"$sf/orders.parquet"), "o_orderkey", strict = false)
+    val foreign = FileMerge.footers(spark, Seq(s"$sf/orders.parquet"), Some("o_orderkey"), strict = false)
       .collect().toSeq
     assert(written.forall(_.schema.startsWith("{")) && !foreign.head.schema.startsWith("{"))
     def fields(s: org.apache.spark.sql.types.StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
