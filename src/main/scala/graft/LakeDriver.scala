@@ -100,7 +100,9 @@ object LakeDriver {
     * Counts are one footer scan over every table's committed data files
     * (`Recon.lakeRowCounts`), and the metastore is read typed from a
     * footer, so recon infers no schema and reads no data page but the
-    * metastore's.
+    * metastore's. Its SUCCESS rows come to the driver in one scan, and
+    * the times, the sizes and the joins are folded there: the report is
+    * a local relation, and its write is recon's only other job.
     *
     * Table discovery: a table is the nearest non-partition (`k=v`)
     * ancestor directory of a parquet file; a writer's `<table>_fmerge`

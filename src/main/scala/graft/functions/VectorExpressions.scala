@@ -275,16 +275,29 @@ case class HyperplaneBucketExpr(child: Expression, planes: Array[Double], dim: I
   * ColumnNodes; `ExpressionUtils` is the classic-backend bridge).
   */
 object VectorFunctions {
+  import org.apache.spark.sql.functions.{lit, sqrt, typedLit, when}
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
   def vec_dot(a: Column, b: Column): Column =
     column(DotProductExpr(expression(a), expression(b)))
   def vec_norm2(a: Column): Column = column(Norm2Expr(expression(a)))
-  def vec_cosine(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.{lit, sqrt, when}
-    // a zero-norm (corrupt/padded) vector must yield NULL, not an ANSI
-    // division-by-zero error that kills the whole scan
-    val denom = sqrt(vec_norm2(a)) * sqrt(vec_norm2(b))
+  def vec_cosine(a: Column, b: Column): Column = cosineOver(a, b, sqrt(vec_norm2(b)))
+
+  /** `vec_cosine(a, typedLit(q))` for a per-call vector `q`, with ‖q‖
+    * bound as a [[Param]]: constant folding would turn
+    * `sqrt(vec_norm2(typedLit(q)))` into a double literal inlined into
+    * the generated code, so each query vector would compile new classes.
+    * ‖q‖ is the same fold on the driver (`Norm2Expr`'s loop, then
+    * `Math.sqrt`), so the value is bit-identical; `q` itself is an array
+    * literal, which generated code already reads through a reference.
+    */
+  def vec_cosine_to(a: Column, q: Array[Float]): Column =
+    cosineOver(a, typedLit(q), Params.param(math.sqrt(VectorOps.norm2(ArrayData.toArrayData(q)))))
+
+  // a zero-norm (corrupt/padded) vector must yield NULL, not an ANSI
+  // division-by-zero error that kills the whole scan
+  private def cosineOver(a: Column, b: Column, bNorm: Column): Column = {
+    val denom = sqrt(vec_norm2(a)) * bNorm
     when(denom === 0, lit(null).cast("double")).otherwise(vec_dot(a, b) / denom)
   }
   def hyperplane_bucket(a: Column, planes: Seq[Array[Double]]): Column = {

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -124,7 +125,7 @@ object FileMerge {
             for (name <- column) b.getColumns.asScala.find(_.getPath.toDotString == name) match {
               case None => unusable(s"column $name absent from $f")
               case Some(c) =>
-                val st = c.getStatistics
+                val st: Statistics[_] = c.getStatistics
                 if (st == null)
                   unusable(s"$f carries no statistics for $name — " +
                     "metadata-only bounds would be a guess, not an answer")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Params.isIn
 import graft.functions.Text
 
 /** Inverted index over a document corpus: term → posting lists (doc, pos),
@@ -240,8 +241,14 @@ object Invert {
     * distinct counts (blocks partition the doc space); `tf` comes from
     * the same postings rows; the per-doc sum is one partial-aggregable
     * groupBy and the top-k is a TakeOrdered, never a global sort. The
-    * query terms are a literal IN-list; the per-term df table and the
-    * one-row corpus stats join as broadcast joins.
+    * query terms are an `InSet` ([[graft.functions.Params.isIn]]), so a
+    * query compiles no class that a query with other terms, or another
+    * term count, already compiled. The one-row corpus stats join the
+    * per-term df table, and that table, carrying `avgdl`, joins the
+    * postings: both are broadcast joins, and the stats are one
+    * aggregate, not one per use. Each broadcast then waits on the one
+    * before it, so adaptive execution creates the query's stages, and
+    * numbers their generated classes, in the same order on every call.
     */
   def bm25TopK(
       index: DataFrame,
@@ -257,24 +264,24 @@ object Invert {
     val stats = docLens.agg(
       count(lit(1)).as("n_docs"),
       (sum(col("doc_len")).cast("double") / count(lit(1))).as("avgdl"))
-    val hits = index.where(col("term").isin(terms: _*))
+    // an InSet: one compiled plan whatever the term count
+    val hits = index.where(isIn(col("term"), terms))
     val tf = hits
       .select(col("term"), explode(col("postings")).as("p"))
       .groupBy(col("term"), col("p.doc_id").as("doc_id"))
       .agg(count(lit(1)).as("tf"))
     val dfq = hits.groupBy(col("term")).agg(sum(col("df")).as("df"))
     val idf = dfq
-      .crossJoin(stats.select(col("n_docs")))
+      .crossJoin(broadcast(stats))
       .withColumn(
         "idf_scaled",
         round(
           log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)) *
             lit(1000000.0)).cast("long"))
-      .select(col("term"), col("idf_scaled"))
+      .select(col("term"), col("idf_scaled"), col("avgdl"))
     tf
       .join(broadcast(idf), "term")
       .join(docLens, "doc_id")
-      .crossJoin(broadcast(stats))
       .withColumn(
         "_s",
         round(

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Params.{isIn, param}
+import graft.functions.VectorFunctions.vec_cosine_to
+
 /** Similarity search over an `ARRAY<FLOAT>` embedding column.
   *
   * All math is `zip_with` + `aggregate` column expressions in double
@@ -40,9 +43,13 @@ object Similarity {
       queryId: Long,
       k: Int
   ): DataFrame = {
-    val q = emb.where(col(idCol) === queryId).select(col(vecCol).as("q_vec"))
+    // the id is bound as a reference, so every query shares one compiled
+    // plan; the query row is selected through an InSet, which a parquet
+    // scan still prunes on (an InSet is not coerced, hence the cast, a
+    // no-op on a BIGINT id)
+    val q = emb.where(isIn(col(idCol).cast("long"), Seq(queryId))).select(col(vecCol).as("q_vec"))
     emb
-      .where(col(idCol) =!= queryId)
+      .where(col(idCol) =!= param(queryId))
       .crossJoin(broadcast(q))
       .select(
         col(idCol),
@@ -698,9 +705,9 @@ object Similarity {
       return FileMerge.readTable(spark, post)
         .where(lit(false))
         .select(col(idCol), lit(null).cast("double").as("cos_sim"))
-    val qVec = typedLit(qRows.head.getSeq[Float](0).toArray)
+    val qArr = qRows.head.getSeq[Float](0).toArray
     val probed = subTable(spark, index, "centroids")
-      .select(col("centroid_id"), cosine(col("centroid"), qVec).as("_cs"))
+      .select(col("centroid_id"), vec_cosine_to(col("centroid"), qArr).as("_cs"))
       .where(col("_cs").isNotNull)
       .orderBy(col("_cs").desc, col("centroid_id"))
       .limit(nprobe)
@@ -710,15 +717,15 @@ object Similarity {
       .sorted
     val cand = probedPostings(spark, post, probed)
     val excluded = excludeId match {
-      case Some(id) => cand.where(col(idCol) =!= id)
+      case Some(id) => cand.where(col(idCol) =!= param(id))
       case None     => cand
     }
     // metadata predicate directly on the scanned postings columns —
-    // pushed to parquet next to the exclude/bucket predicates
+    // pushed to parquet next to the bucket predicate
     val filtered = metaFilter.fold(excluded)(excluded.where)
     filtered
-      .where(col("centroid_id").isin(probed.toIndexedSeq.map(Long.box): _*))
-      .select(col(idCol), round(cosine(col(vecCol), qVec), 6).as("cos_sim"))
+      .where(isIn(col("centroid_id"), probed))
+      .select(col(idCol), round(vec_cosine_to(col(vecCol), qArr), 6).as("cos_sim"))
       .where(col("cos_sim").isNotNull)
   }
 
@@ -1385,7 +1392,7 @@ object Similarity {
     * subspace count `m` = max(sub)+1 and its code span `kMax` =
     * max(cid)+1, both taken from the rows without a job.
     */
-  private final class StoredCodebook(val rows: Array[Row], val local: DataFrame) {
+  private final class StoredCodebook(val rows: IndexedSeq[Row], val local: DataFrame) {
     val m: Int = rows.map(_.getAs[Int]("sub")).max + 1
     val kMax: Long = rows.map(_.getAs[Long]("cid")).max + 1
   }
@@ -1393,7 +1400,8 @@ object Similarity {
   /** The codebook that the index snapshot `index` resolves. */
   private def storedCodebook(spark: SparkSession, index: FileMerge.Snapshot): StoredCodebook = {
     val local = localized(subTable(spark, index, "codebook"))
-    val rows = local.collect() // job-free: a local relation
+    // job-free: a local relation
+    val rows = scala.collection.immutable.ArraySeq.unsafeWrapArray(local.collect())
     require(rows.nonEmpty, s"empty PQ codebook in the index at ${index.path}")
     new StoredCodebook(rows, local)
   }
@@ -1837,7 +1845,6 @@ object Similarity {
     require(!qRows.head.getSeq[Any](0).contains(null),
       "ivfPqTopK: the query vector has NULL elements")
     val qArr = qRows.head.getSeq[Float](0).toArray
-    val qVec = typedLit(qArr)
     val dim = qArr.length
     require(dim % m == 0, s"ivfPqTopK: query dim $dim not divisible into $m subspaces")
     // Guard the caller's m against the STORED codebook (the advisor's
@@ -1852,7 +1859,7 @@ object Similarity {
         "silently filter every candidate")
     // 1. bucket ranking against the stored coarse quantizer
     val probed = subTable(spark, index, "centroids")
-      .select(col("centroid_id"), cosine(col("centroid"), qVec).as("_cs"))
+      .select(col("centroid_id"), vec_cosine_to(col("centroid"), qArr).as("_cs"))
       .where(col("_cs").isNotNull)
       .orderBy(col("_cs").desc, col("centroid_id"))
       .limit(nprobe)
@@ -1863,7 +1870,7 @@ object Similarity {
     // 2. footer-stats file selection: only the probed buckets' files
     val cand = probedPostings(spark, post, probed)
     val excluded = excludeId match {
-      case Some(id) => cand.where(col(idCol) =!= id)
+      case Some(id) => cand.where(col(idCol) =!= param(id))
       case None     => cand
     }
     // 3. ADC over codes (bounded m·k table folded on the driver), then
@@ -1879,7 +1886,7 @@ object Similarity {
     // zero recall change. Only the OUTPUT adc is 6dp-rounded (the
     // cross-engine hash grain).
     val inProbed = excluded
-      .where(col("centroid_id").isin(probed.toIndexedSeq.map(Long.box): _*))
+      .where(isIn(col("centroid_id"), probed))
       .where(size(col("codes")) === m)
     // quantized cosine cos(q, q(v)) = dot(q, q(v)) / (|q|·‖q(v)‖):
     // BOTH factors are pure functions of the CODES (per-subspace dot
@@ -1926,11 +1933,11 @@ object Similarity {
     val qdot = (0 until m).map(s => col(s"_p$s").getField("_1")).reduce(_ + _)
     val rec2 = (0 until m).map(s => col(s"_p$s").getField("_2")).reduce(_ + _)
     val scored = withPairs.select(col(idCol),
-      nanvl(coalesce(qdot / (lit(qNorm) * sqrt(rec2)), lit(-2.0)), lit(-2.0)).as("_adcr"))
+      nanvl(coalesce(qdot / (param(qNorm) * sqrt(rec2)), lit(-2.0)), lit(-2.0)).as("_adcr"))
     val cutRow = scored.orderBy(col("_adcr").desc, col(idCol)).limit(shortlist)
       .agg(min(col("_adcr"))).head()
     if (cutRow.isNullAt(0)) return empty
-    val short = scored.where(col("_adcr") >= cutRow.getDouble(0) && col("_adcr") >= lit(-1.5))
+    val short = scored.where(col("_adcr") >= param(cutRow.getDouble(0)) && col("_adcr") >= lit(-1.5))
     // 4. exact re-rank of the tie-inclusive shortlist against the
     // source-of-truth vector table: broadcast while the set is
     // provably small (one bounded count — the re-scan is a footer-
@@ -1944,7 +1951,7 @@ object Similarity {
       else short.join(rerankVecs, idCol)
     joined
       .select(col(idCol), round(col("_adcr"), 6).as("adc"),
-        round(cosine(col("_rv"), qVec), 6).as("cos_sim"))
+        round(vec_cosine_to(col("_rv"), qArr), 6).as("cos_sim"))
       .where(col("cos_sim").isNotNull)
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(topK)

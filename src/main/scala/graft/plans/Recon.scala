@@ -81,24 +81,65 @@ object Recon {
 
   /** Last-success execution time per table from the operational metastore
     * (`reporting_utils.py:45-60`): duration of the most recent SUCCESS run
-    * of each table's job. The job→table mapping is the reference's prefix
-    * strip (`reporting_utils.py:51`), kept as a codegen'd `regexp_replace`
-    * rather than a UDF so Catalyst can still optimize through it.
+    * of each table's job, the run with the greatest (start time,
+    * duration), nulls lowest, as Spark's `max` over that struct orders
+    * it. The job→table mapping is the reference's prefix strip
+    * (`reporting_utils.py:51`). The metastore holds a few rows per run:
+    * its SUCCESS rows come to the driver in one scan and are folded
+    * there, and the report is a local relation `(TableName,
+    * IngestionTime)`, both nullable, sorted by table name.
     */
   def ingestionTimeReport(meta: DataFrame, jobPrefix: String = ""): DataFrame = {
-    val toTable =
-      if (jobPrefix.isEmpty) col("job_name")
-      else regexp_replace(col("job_name"), "^" + java.util.regex.Pattern.quote(jobPrefix), "")
-    meta
+    val runs = meta
       .where(col("job_status") === "SUCCESS")
-      .groupBy(col("job_name"))
-      .agg(max(struct(col("job_start_time"), col("job_duration"))).as("last"))
-      .select(toTable.as("TableName"), col("last.job_duration").as("IngestionTime"))
+      .select(col("job_name"), unix_micros(col("job_start_time")), col("job_duration"))
+    def opt[T](r: Row, i: Int): Option[T] = if (r.isNullAt(i)) None else Some(r.getAs[T](i))
+    val last = Ordering.by((r: Row) => (opt[Long](r, 1), opt[Int](r, 2)))
+    val rows = runs.collect().toSeq.groupBy(r => Option(r.getString(0))).toSeq.map {
+      case (job, rs) =>
+        Row(job.map(j => if (j.startsWith(jobPrefix)) j.substring(jobPrefix.length) else j).orNull,
+          rs.max(last).get(2))
+    }.sortBy(r => Option(r.getString(0)))
+    val schema = StructType(Seq(StructField("TableName", StringType),
+      StructField("IngestionTime", runs.schema("job_duration").dataType)))
+    meta.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Full recon: counts ⋈ times ⋈ sizes on `TableName`
     * (`reporting_utils.py:77-89`), written parquet-overwrite by callers.
+    * Each input holds about one row per table, so each comes to the
+    * driver (no job for a local relation) and the two left joins run
+    * there: a local relation with the rows, the column order and the
+    * types of Spark's `join(…, Seq("TableName"), "left")`, in `counts`'
+    * row order.
     */
-  def reconReport(counts: DataFrame, times: DataFrame, sizes: DataFrame): DataFrame =
-    counts.join(times, Seq("TableName"), "left").join(sizes, Seq("TableName"), "left")
+  def reconReport(counts: DataFrame, times: DataFrame, sizes: DataFrame): DataFrame = {
+    val (schema, rows) =
+      Seq(times, sizes).map(local).foldLeft(local(counts))(leftJoinOnTableName)
+    counts.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  private type Local = (StructType, Seq[Row])
+
+  private def local(d: DataFrame): Local = (d.schema, d.collect().toSeq)
+
+  /** `l` left-joined with `r` on `TableName` as Spark's using-join: the
+    * key, then `l`'s other columns, then `r`'s, made nullable; a null
+    * key matches nothing; one row per match, or one null-padded row.
+    */
+  private def leftJoinOnTableName(l: Local, r: Local): Local = {
+    val (lk, rk) = (l._1.fieldIndex("TableName"), r._1.fieldIndex("TableName"))
+    val lRest = l._1.indices.filter(_ != lk)
+    val rRest = r._1.indices.filter(_ != rk)
+    val byKey = r._2.filterNot(_.isNullAt(rk)).groupBy(_.get(rk))
+    val schema = StructType(
+      l._1(lk) +: (lRest.map(l._1(_)) ++ rRest.map(r._1(_).copy(nullable = true))))
+    val rows = l._2.flatMap { row =>
+      val left = row.get(lk) +: lRest.map(row.get)
+      val matches = if (row.isNullAt(lk)) Nil else byKey.getOrElse(row.get(lk), Nil)
+      if (matches.isEmpty) Seq(Row.fromSeq(left ++ rRest.map(_ => null)))
+      else matches.map(m => Row.fromSeq(left ++ rRest.map(m.get)))
+    }
+    (schema, rows)
+  }
 }

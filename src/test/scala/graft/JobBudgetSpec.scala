@@ -71,7 +71,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     Invert.writeIndex(spark, Invert.postingLists(docs, "doc_id", "text"), s"$dir/inv", files = 4)
     Invert.docLengths(docs, "doc_id", "text").write.parquet(s"$dir/doclen")
     val lens = spark.read.parquet(s"$dir/doclen")
-    val top = within("readIndex + bm25TopK", 10) {
+    val top = within("readIndex + bm25TopK", 8) {
       Invert.bm25TopK(Invert.readIndex(spark, s"$dir/inv"), lens, Seq("w3", "common"), 10)
         .collect()
     }
@@ -169,7 +169,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
       "ing_flagship" -> LakeDriver.ingestJob(
         s => s.read.parquet(s"$root/datalake/orders"), "flagship", root,
         filterSql = Some("SELECT * FROM flagship WHERE o_orderstatus = 'F'")))
-    val result = within("LakeDriver.run", 15) {
+    val result = within("LakeDriver.run", 11) {
       LakeDriver.run(spark,
         LakeDriver.Config(root, Some(deps.toString), jobPrefix = "ing_", maxBatchSize = 2), registry)
     }
