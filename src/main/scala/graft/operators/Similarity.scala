@@ -1,7 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.column
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, MapType, StructField, StructType}
+
+import scala.collection.mutable
 
 import graft.functions.Params.{isIn, param}
 import graft.functions.VectorFunctions.vec_cosine_to
@@ -392,10 +399,13 @@ object Similarity {
     * frame when no file does.
     */
   private def probedPostings(
-      spark: SparkSession, post: FileMerge.Snapshot, buckets: Array[Long]): DataFrame = {
-    val selected = FileMerge
-      .footerRanges(spark, post, "centroid_id")
-      .filter(r => !r.known || buckets.exists(c => c >= r.lo && c <= r.hi))
+      spark: SparkSession, post: FileMerge.Snapshot, buckets: Array[Long]): DataFrame =
+    probedPostings(spark, post, FileMerge.footerRanges(spark, post, "centroid_id"), buckets)
+
+  /** [[probedPostings]] over the postings' `centroid_id` footer `ranges`. */
+  private def probedPostings(spark: SparkSession, post: FileMerge.Snapshot,
+      ranges: Seq[FileMerge.FileRange], buckets: Array[Long]): DataFrame = {
+    val selected = ranges.filter(r => !r.known || buckets.exists(c => c >= r.lo && c <= r.hi))
     if (selected.isEmpty) FileMerge.readTable(spark, post).where(lit(false))
     else FileMerge.readFiles(spark, selected)
   }
@@ -441,34 +451,16 @@ object Similarity {
     // the two staged tables are independent jobs — write them
     // concurrently so the tiny centroid write rides the postings
     // write's tail (guide §2.6); the commit still happens only after BOTH
-    concurrentActions(
-      () => Scale.writeRangeClustered(postings, postingsPath(staging), "centroid_id", nFiles),
-      () => centroids
+    Concurrently { fork =>
+      val cents = fork(centroids
         .select(col(centIdCol).cast("long").as("centroid_id"), col(centVecCol).as("centroid"))
         .write
         .mode("overwrite")
         .parquet(centroidsPath(staging)))
+      Scale.writeRangeClustered(postings, postingsPath(staging), "centroid_id", nFiles)
+      cents()
+    }
     FileMerge.commitRewrite(spark, indexPath)
-  }
-
-  /** Run independent staged ACTIONS (parquet writes of unrelated
-    * tables) from a small thread pool and wait for all — guide §2.6's
-    * "overlap independent jobs" applied to the index builders' staging
-    * writes: the whole-index commit needs every table written, but
-    * nothing orders the writes among themselves. Failures propagate
-    * unwrapped; the pool always shuts down.
-    */
-  private def concurrentActions(actions: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(actions.size)
-    try {
-      val fs = actions.map(a => pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = a()
-      }))
-      fs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    } finally pool.shutdown()
   }
 
   /** Incrementally extend the persisted IVF index with a batch of NEW
@@ -1484,6 +1476,22 @@ object Similarity {
       (s, cid) -> ((dot, c.foldLeft(0.0)((acc, x) => acc + x * x)))
     }.toMap
 
+  /** The m·k² symmetric (SDC) table [[semDedupCandidates]] consumes:
+    * `dot(c_{s,x}, c_{s,y})` for every centroid pair (x, y) of each
+    * subspace s, folded on the driver from the codebook rows with
+    * [[dotD]]'s left-to-right double fold, so it is bit-identical to the
+    * Spark fold over the codebook's self-join on `sub`.
+    */
+  private[graft] def sdcDotTable(codebook: Seq[Row]): Map[(Int, Long, Long), Double] =
+    codebook.groupBy(_.getAs[Int]("sub")).toSeq.flatMap { case (s, rows) =>
+      val vecs = rows.map(r => r.getAs[Long]("cid") -> r.getSeq[Double](r.fieldIndex("cvec")))
+      for ((x, a) <- vecs; (y, b) <- vecs) yield {
+        require(a.length == b.length,
+          s"semDedupCandidates: codebook vectors ($s, $x) and ($s, $y) differ in dimension")
+        (s, x, y) -> a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i))
+      }
+    }.toMap
+
   /** Bounded collect of the m·k ADC distance table (the probedIds move):
     * squared L2 from each codebook centroid to the query's matching
     * subvector, keyed by (sub, cid).
@@ -1585,17 +1593,34 @@ object Similarity {
     * literal when the stored cids are NOT dense (a hand-filtered
     * codebook) or the span exceeds [[DenseLookupMaxK]] — correctness
     * never depends on density; only the O(1) fast path does.
+    *
+    * `cell` is the Catalyst type of a table value ([[DistCell]] or
+    * [[PairCell]]). The literal is built for that type directly, so no
+    * probe pays `typedLit`'s runtime-reflection type inference; value
+    * and type are what `typedLit` gives.
     */
-  private def denseLookup[T: scala.reflect.runtime.universe.TypeTag](
-      table: Map[Long, T], codeCol: Column): Column = {
+  private[graft] def denseLookup(table: Map[Long, Any], cell: DataType, codeCol: Column): Column = {
+    def literal(v: Any, t: DataType) =
+      column(Literal(CatalystTypeConverters.createToCatalystConverter(t)(v), t))
     val kMax = table.keys.max
     if (table.keys.min >= 0L && kMax < DenseLookupMaxK &&
         kMax + 1 <= 2L * table.size) {
-      val arr: Seq[Option[T]] = (0L to kMax).map(table.get)
+      val arr = (0L to kMax).map(table.get)
       when(codeCol >= 0L && codeCol <= kMax,
-        get(typedLit(arr), codeCol.cast("int")))
-    } else element_at(typedLit(table), codeCol)
+        get(literal(arr, ArrayType(cell, containsNull = true)), codeCol.cast("int")))
+    } else {
+      // a tuple value may be null, a primitive one never (typedLit's rule)
+      element_at(literal(table,
+        MapType(LongType, cell, valueContainsNull = cell.isInstanceOf[StructType])), codeCol)
+    }
   }
+
+  /** The [[denseLookup]] cell types: a `Double`, and a `(Double, Double)`
+    * pair, typed as `typedLit` types them.
+    */
+  private[graft] val DistCell: DataType = DoubleType
+  private[graft] val PairCell: DataType = StructType(Seq(
+    StructField("_1", DoubleType, nullable = false), StructField("_2", DoubleType, nullable = false)))
 
   /** Densest-allowed lookup-array span: covers every codebook regime
     * the SDC face admits (m·k² ≤ 262144 ⇒ per-subspace pair-key span
@@ -1614,7 +1639,7 @@ object Similarity {
     (0 until m).map { s =>
       val sub = dt.collect { case ((`s`, cid), dist) => cid -> dist }
       if (sub.isEmpty) lit(null).cast("double")
-      else denseLookup(sub, codesCol.getItem(s))
+      else denseLookup(sub, DistCell, codesCol.getItem(s))
     }.reduce(_ + _)
 
   // ---------------------------------------------------------------------
@@ -1689,12 +1714,15 @@ object Similarity {
     // three independent staged tables, three concurrent writes (the
     // ivfBuild move): the metadata-scale centroid/codebook writes ride
     // the postings write's tail instead of serializing after it
-    concurrentActions(
-      () => Scale.writeRangeClustered(postings, postingsPath(staging), "centroid_id", nFiles),
-      () => centroids
+    Concurrently { fork =>
+      val cents = fork(centroids
         .select(col(centIdCol).cast("long").as("centroid_id"), col(centVecCol).as("centroid"))
-        .write.mode("overwrite").parquet(centroidsPath(staging)),
-      () => cb.write.mode("overwrite").parquet(codebookPath(staging)))
+        .write.mode("overwrite").parquet(centroidsPath(staging)))
+      val codebook = fork(cb.write.mode("overwrite").parquet(codebookPath(staging)))
+      Scale.writeRangeClustered(postings, postingsPath(staging), "centroid_id", nFiles)
+      cents()
+      codebook()
+    }
     FileMerge.commitRewrite(spark, indexPath)
   }
 
@@ -1792,10 +1820,23 @@ object Similarity {
     * `shortlist` plus the boundary class, worst case one whole probed
     * bucket (≈ nprobe·n/nlist rows of exact cosine — the
     * IVF-without-PQ probe cost, the correct degenerate fallback when
-    * quantization distinguishes nothing); the re-rank join broadcasts
-    * the shortlist only while it is provably small and shuffle-joins
-    * past that, so correctness never depends on a tie class fitting
-    * in the driver.
+    * quantization distinguishes nothing).
+    *
+    * The cut takes ONE pass over the probed postings ([[topNTies]]):
+    * each partition keeps its rows at or past its own `shortlist`-th
+    * best adc, never above the global cut, and the driver cuts their
+    * union. The re-rank then reads only the shortlisted ids from
+    * `rerank` and joins their adc as a local relation. A partition
+    * whose rows would pass its share of [[MaxBroadcastShortlist]] sends
+    * the probe down the distributed path: one TakeOrdered finds the
+    * cut, and the re-rank join broadcasts the shortlist only while one
+    * count proves it small and shuffle-joins past that, so correctness
+    * never depends on a tie class fitting in the driver. Both paths
+    * return the same rows.
+    *
+    * Jobs, one path: the query collect and the centroid rank run
+    * beside the codebook collect and the postings footer scan (neither
+    * needs the query), then the one-pass shortlist and the re-rank.
     *
     * Size the shortlist with [[ivfPqShortlistFor]], not a constant:
     * any quantized score loses resolution inside a dense bucket, so a
@@ -1817,6 +1858,27 @@ object Similarity {
       rerank: DataFrame,
       rerankVecCol: String,
       excludeId: Option[Long] = None
+  ): DataFrame = ivfPqProbe(spark, indexPath, idCol, query, m, topK, nprobe, shortlist,
+    rerank, rerankVecCol, excludeId, MaxBroadcastShortlist)
+
+  /** [[ivfPqTopK]] with the driver bound of its one-pass shortlist as a
+    * parameter: the probe takes the distributed path when a partition's
+    * shortlist rows would pass `driverBound` divided by the partition
+    * count.
+    */
+  private[graft] def ivfPqProbe(
+      spark: SparkSession,
+      indexPath: String,
+      idCol: String,
+      query: DataFrame,
+      m: Int,
+      topK: Int,
+      nprobe: Int,
+      shortlist: Int,
+      rerank: DataFrame,
+      rerankVecCol: String,
+      excludeId: Option[Long],
+      driverBound: Long
   ): DataFrame = {
     require(topK >= 1, s"ivfPqTopK: topK must be at least 1, got $topK")
     require(shortlist >= topK,
@@ -1825,7 +1887,7 @@ object Similarity {
     require(query.columns.length == 1,
       "ivfPqTopK: query must be a one-row, one-column DataFrame")
     query.schema.fields(0).dataType match {
-      case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, _) => ()
+      case ArrayType(FloatType, _) => ()
       case other => throw new IllegalArgumentException(
         s"ivfPqTopK: query column must be ARRAY<FLOAT>, got ${other.simpleString}")
     }
@@ -1835,51 +1897,59 @@ object Similarity {
       .where(lit(false))
       .select(col(idCol),
         lit(null).cast("double").as("adc"), lit(null).cast("double").as("cos_sim"))
-    // jobs: the query collect, the codebook collect, the centroid rank
-    // (1.), the footer scan (2.), the shortlist cut (3.) and the gate
-    // count and the re-rank (4.); the rest is driver arithmetic
-    val qRows = query.limit(2).collect()
-    require(qRows.length == 1,
-      s"ivfPqTopK: query must have exactly one row, got ${qRows.length}")
-    if (qRows.head.isNullAt(0)) return empty
-    require(!qRows.head.getSeq[Any](0).contains(null),
-      "ivfPqTopK: the query vector has NULL elements")
-    val qArr = qRows.head.getSeq[Float](0).toArray
+    // jobs: the query collect and the centroid rank (1.) run beside the
+    // codebook collect and the postings footer scan (2.), which need no
+    // query value; then the one-pass shortlist (3.) and the re-rank
+    // (4.); the rest is driver arithmetic. A NULL query returns the
+    // empty frame without waiting on the side jobs.
+    val probe = Concurrently { fork =>
+      val cb = fork(storedCodebook(spark, index))
+      val footers = fork(FileMerge.footerRanges(spark, post, "centroid_id"))
+      val qRows = query.limit(2).collect()
+      require(qRows.length == 1,
+        s"ivfPqTopK: query must have exactly one row, got ${qRows.length}")
+      Option.unless(qRows.head.isNullAt(0)) {
+        require(!qRows.head.getSeq[Any](0).contains(null),
+          "ivfPqTopK: the query vector has NULL elements")
+        val q = qRows.head.getSeq[Float](0).toArray
+        require(q.length % m == 0,
+          s"ivfPqTopK: query dim ${q.length} not divisible into $m subspaces")
+        // 1. bucket ranking against the stored coarse quantizer
+        val probed = subTable(spark, index, "centroids")
+          .select(col("centroid_id"), vec_cosine_to(col("centroid"), q).as("_cs"))
+          .where(col("_cs").isNotNull)
+          .orderBy(col("_cs").desc, col("centroid_id"))
+          .limit(nprobe)
+          .select("centroid_id")
+          .collect()
+          .map(_.getLong(0))
+          .sorted
+        (q, probed, cb(), footers())
+      }
+    }
+    if (probe.isEmpty) return empty
+    val (qArr, probed, storedCb, ranges) = probe.get
     val dim = qArr.length
-    require(dim % m == 0, s"ivfPqTopK: query dim $dim not divisible into $m subspaces")
     // Guard the caller's m against the STORED codebook (the advisor's
     // silent-empty trap): a wrong m that still divides dim would fail
     // every size(codes)===m filter and return an empty frame instead of
     // erroring. The stored subspace count is max(sub)+1, exactly how
     // ivfPqAppend infers it.
-    val storedCb = storedCodebook(spark, index)
     require(m == storedCb.m,
       s"ivfPqTopK: caller m=$m does not match the stored codebook's " +
         s"subspace count ${storedCb.m} at $indexPath — a mismatched m would " +
         "silently filter every candidate")
-    // 1. bucket ranking against the stored coarse quantizer
-    val probed = subTable(spark, index, "centroids")
-      .select(col("centroid_id"), vec_cosine_to(col("centroid"), qArr).as("_cs"))
-      .where(col("_cs").isNotNull)
-      .orderBy(col("_cs").desc, col("centroid_id"))
-      .limit(nprobe)
-      .select("centroid_id")
-      .collect()
-      .map(_.getLong(0))
-      .sorted
     // 2. footer-stats file selection: only the probed buckets' files
-    val cand = probedPostings(spark, post, probed)
+    val cand = probedPostings(spark, post, ranges, probed)
     val excluded = excludeId match {
       case Some(id) => cand.where(col(idCol) =!= param(id))
       case None     => cand
     }
     // 3. ADC over codes (bounded m·k table folded on the driver), then
-    // the tie-inclusive shortlist cut: one distributed TakeOrdered finds
-    // the shortlist-th best adc (a single scalar collected — the
-    // probed-centroids discipline), and the filter keeps every
-    // candidate at or past it. The cut compares RAW doubles: code-tied
-    // candidates are bit-equal anyway (identical codes → identical
-    // fixed-order folds of shared literals, in every engine), while
+    // the tie-inclusive shortlist cut ([[topNTies]]): the shortlist-th
+    // best adc is the cut, and every candidate at or past it survives.
+    // The cut compares RAW doubles: code-tied candidates are bit-equal
+    // anyway (identical codes → identical fixed-order folds of shared literals, in every engine), while
     // rounding to 6dp BEFORE the cut merged near-misses across cells
     // into spurious tie classes — measured 2.2× probe cost at 500k on
     // the cosine-scale scores (values concentrate near 1.0) with
@@ -1926,7 +1996,7 @@ object Similarity {
     val pairCols = (0 until m).map { s =>
       val subPairs = dtn2.collect { case ((`s`, cid), dn) => cid -> dn }
       if (subPairs.isEmpty) lit(null).cast("struct<_1:double,_2:double>")
-      else denseLookup(subPairs, col("codes").getItem(s))
+      else denseLookup(subPairs, PairCell, col("codes").getItem(s))
     }
     val withPairs = inProbed.select(
       col(idCol) +: pairCols.zipWithIndex.map { case (c, s) => c.as(s"_p$s") }: _*)
@@ -1934,32 +2004,100 @@ object Similarity {
     val rec2 = (0 until m).map(s => col(s"_p$s").getField("_2")).reduce(_ + _)
     val scored = withPairs.select(col(idCol),
       nanvl(coalesce(qdot / (param(qNorm) * sqrt(rec2)), lit(-2.0)), lit(-2.0)).as("_adcr"))
-    val cutRow = scored.orderBy(col("_adcr").desc, col(idCol)).limit(shortlist)
-      .agg(min(col("_adcr"))).head()
-    if (cutRow.isNullAt(0)) return empty
-    val short = scored.where(col("_adcr") >= param(cutRow.getDouble(0)) && col("_adcr") >= lit(-1.5))
     // 4. exact re-rank of the tie-inclusive shortlist against the
-    // source-of-truth vector table: broadcast while the set is
-    // provably small (one bounded count — the re-scan is a footer-
-    // pruned codes read), shuffle-join past it (a maximal tie class is
-    // a whole probed bucket; correctness must not depend on it
-    // fitting in the driver)
-    val shortCount = short.count()
+    // source-of-truth vector table
     val rerankVecs = rerank.select(col(idCol), col(rerankVecCol).as("_rv"))
-    val joined =
-      if (shortCount <= MaxBroadcastShortlist) broadcast(short).join(rerankVecs, idCol)
-      else short.join(rerankVecs, idCol)
-    joined
+    def reranked(joined: DataFrame): DataFrame = joined
       .select(col(idCol), round(col("_adcr"), 6).as("adc"),
         round(vec_cosine_to(col("_rv"), qArr), 6).as("cos_sim"))
       .where(col("cos_sim").isNotNull)
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(topK)
+    topNTies(scored, shortlist, driverBound) match {
+      case Some(kept) =>
+        // one pass: the shortlist is on the driver, so the re-rank reads
+        // only its ids and joins their scores as a local relation
+        if (kept.isEmpty) return empty
+        val short = kept.filter(r => !r.isNullAt(0) && r.getDouble(1) >= -1.5)
+        val ids = short.map(_.get(0).asInstanceOf[Number].longValue)
+        val local = spark.createDataFrame(java.util.Arrays.asList(short: _*), scored.schema)
+        reranked(broadcast(local).join(
+          rerankVecs.where(isIn(col(idCol).cast("long"), ids)), idCol))
+      case None =>
+        // a partition passed its share of the driver bound: one
+        // distributed TakeOrdered finds the cut (a single scalar
+        // collected), and the re-rank join broadcasts the shortlist
+        // while one bounded count proves it small and shuffle-joins
+        // past it (a maximal tie class is a whole probed bucket;
+        // correctness must not depend on it fitting in the driver)
+        val cutRow = scored.orderBy(col("_adcr").desc, col(idCol)).limit(shortlist)
+          .agg(min(col("_adcr"))).head()
+        if (cutRow.isNullAt(0)) return empty
+        val short =
+          scored.where(col("_adcr") >= param(cutRow.getDouble(0)) && col("_adcr") >= lit(-1.5))
+        reranked(
+          if (short.count() <= MaxBroadcastShortlist) broadcast(short).join(rerankVecs, idCol)
+          else short.join(rerankVecs, idCol))
+    }
   }
 
-  /** Row bound under which [[ivfPqTopK]]'s re-rank join broadcasts the
-    * tie-inclusive shortlist (two 8-byte scalars per row ⇒ ≈ 16 MB at
-    * the bound); past it the join shuffles — the countMinEstimate
+  /** The tie-inclusive top `n` of `scored`, an (id, score) frame whose
+    * scores are never null or NaN, in one job, as driver rows: every row
+    * whose score is at or past the `n`-th best (all rows when there are
+    * fewer). Each partition keeps its rows at or past its own `n`-th
+    * best, which is never above the global `n`-th best, so the kept
+    * rows hold every row of the answer, and the driver cuts them. None
+    * when a partition's rows pass `bound` divided by the partition
+    * count: the rows held on the driver never pass `bound`. The job runs
+    * as a SQL execution of `scored`, as a Dataset action does, so query
+    * listeners see its scan.
+    */
+  private[graft] def topNTies(scored: DataFrame, n: Int, bound: Long): Option[Seq[Row]] = {
+    val qe = scored.queryExecution
+    val idType = scored.schema.head.dataType
+    val parts = SQLExecution.withNewExecutionId(qe, Some("topNTies")) {
+      val rdd = qe.toRdd
+      val cap = bound / math.max(1, rdd.getNumPartitions)
+      rdd
+        .mapPartitions(rows =>
+          Iterator(partitionTopN(rows.map(r => (r.get(0, idType), r.getDouble(1))), n, cap)))
+        .collect()
+    }
+    if (parts.exists(_.isEmpty)) None
+    else {
+      val kept = parts.toSeq.flatMap(_.get)
+      val cut = kept.map(_._2).sorted(Ordering.Double.TotalOrdering.reverse).take(n).lastOption
+      Some(kept.filter(r => cut.forall(r._2 >= _)).map { case (id, s) => Row(id, s) })
+    }
+  }
+
+  /** One partition's rows at or past its `n`-th best score, or None once
+    * they pass `cap`. The rows are kept in score classes (−0.0 with
+    * 0.0, as `>=` compares them); the lowest class is dropped while the
+    * rows above it still number `n`.
+    */
+  private def partitionTopN(
+      rows: Iterator[(Any, Double)], n: Int, cap: Long): Option[Seq[(Any, Double)]] = {
+    val classes = mutable.TreeMap.empty[Double, mutable.ArrayBuffer[(Any, Double)]](
+      Ordering.Double.TotalOrdering)
+    var kept = 0L
+    while (kept <= cap && rows.hasNext) {
+      val row = rows.next()
+      val key = if (row._2 == 0.0) 0.0 else row._2
+      if (kept < n || key >= classes.firstKey) {
+        classes.getOrElseUpdate(key, mutable.ArrayBuffer.empty) += row
+        kept += 1
+        while (kept - classes.head._2.size >= n) kept -= classes.remove(classes.firstKey).get.size
+      }
+    }
+    Option.when(kept <= cap)(classes.valuesIterator.flatten.toSeq)
+  }
+
+  /** Row bound on the tie-inclusive shortlist [[ivfPqTopK]] holds on
+    * the driver (two 8-byte scalars per row ⇒ ≈ 16 MB at the bound):
+    * the one-pass cut keeps at most this many rows over all partitions,
+    * and the distributed path's re-rank join broadcasts the shortlist
+    * under it and shuffles past it — the countMinEstimate
     * broadcast-gate discipline.
     */
   private val MaxBroadcastShortlist = 1000000L
@@ -2239,25 +2377,18 @@ object Similarity {
         s"keeps every pair otherwise), got $threshold")
     require(subBlocks >= 1, "semDedupCandidates: subBlocks must be >= 1")
     val stored = storedCodebook(spark, index)
-    val (cb, m, kMax) = (stored.local, stored.m, stored.kMax)
+    val (m, kMax) = (stored.m, stored.kMax)
     require(m.toLong * kMax * kMax <= 262144L,
       s"semDedupCandidates: SDC table m*k^2 = ${m.toLong * kMax * kMax} exceeds the " +
         "map-literal budget (262144) — this face covers the practical PQ regimes " +
         "(k <= 256 with m <= 4, k <= 64 at any m); larger codebooks need a " +
         "broadcast-join SDC variant")
-    // the symmetric distance table: dot(c_{s,x}, c_{s,y}) for every
-    // centroid pair per subspace — metadata-scale, collected once
-    val sdc = cb.select(col("sub"), col("cid").as("_ca"), col("cvec").as("_va"))
-      .join(cb.select(col("sub"), col("cid").as("_cb"), col("cvec").as("_vb")), "sub")
-      .select(col("sub"), col("_ca"), col("_cb"), dotD(col("_va"), col("_vb")).as("_d"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
-      .toMap
+    val sdc = sdcDotTable(stored.rows)
     def qdot(ca: Column, cbc: Column): Column =
       (0 until m).map { s =>
         val sub = sdc.collect { case ((`s`, x, y), d) => (x * kMax + y) -> d }
         if (sub.isEmpty) lit(null).cast("double")
-        else denseLookup(sub, ca.getItem(s) * kMax + cbc.getItem(s))
+        else denseLookup(sub, DistCell, ca.getItem(s) * kMax + cbc.getItem(s))
       }.reduce(_ + _)
     val post = FileMerge.readTable(spark, postings)
       .where(size(col("codes")) === m && col("nrm") > 0)

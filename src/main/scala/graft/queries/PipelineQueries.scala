@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.operators.{Checkpoints, Dedup, Multimodal, Pack, Scale, Similarity}
+import graft.operators.{Checkpoints, Concurrently, Dedup, Multimodal, Pack, Scale, Similarity}
 
 /** LLM-data-pipeline operator corpus (SURVEY.md §7 step 8, BASELINE.json
   * north star): dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash /
@@ -155,47 +155,25 @@ object PipelineQueries {
     Some(graft.streaming.Streams.adaptiveStatePartitions(
       s, Seq(s"$dir/events.parquet")))
 
-  /** Submit independent EAGER subtree builders from a small thread pool
-    * and wait for all (guide §2.6, "overlap independent jobs"): the
-    * composed-mix queries chain several iterative operators (near-dup
-    * CC, core peel, LPA, PPR), each a sequence of many small jobs whose
-    * driver round-trips serialize when the subtrees are built one after
-    * another. Spark's scheduler runs concurrently-submitted jobs FIFO,
-    * so one chain's scheduling gaps and stage tails back-fill the
-    * others' idle executors. Each builder's PLAN — and therefore every
-    * result row — is identical to the serial construction; only the
-    * submission timing changes. A builder's failure propagates as its
-    * own exception (the ExecutionException wrapper is unwrapped so
-    * operator row-guards stay loud); the pool always shuts down.
+  /** The four signal subtrees of the composed-mix queries (q169,
+    * q173), forked in this order: near-dup survivors, core numbers,
+    * (LPA labels, modularity) and PPR.
     */
-  private def awaitAll(pool: java.util.concurrent.ExecutorService)(
-      fs: Seq[java.util.concurrent.Future[AnyRef]]): Seq[AnyRef] =
-    try fs.map { f =>
-      try f.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    } finally pool.shutdown()
-
-  private def submitAll(thunks: Seq[() => AnyRef])
-      : Seq[AnyRef] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-    awaitAll(pool)(thunks.map(th =>
-      pool.submit(new java.util.concurrent.Callable[AnyRef] {
-        override def call(): AnyRef = th()
-      })))
-  }
-
-  private def concurrently4[A <: AnyRef, B <: AnyRef, C <: AnyRef, D <: AnyRef](
-      a: () => A, b: () => B, c: () => C, d: () => D): (A, B, C, D) = {
-    val r = submitAll(Seq(a, b, c, d))
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C], r(3).asInstanceOf[D])
-  }
-
-  private def concurrently5[A <: AnyRef, B <: AnyRef, C <: AnyRef, D <: AnyRef, E <: AnyRef](
-      a: () => A, b: () => B, c: () => C, d: () => D, e: () => E): (A, B, C, D, E) = {
-    val r = submitAll(Seq(a, b, c, d, e))
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C],
-      r(3).asInstanceOf[D], r(4).asInstanceOf[E])
-  }
+  private def signalSubtrees(fork: Concurrently.Forks, s: SparkSession, dir: String,
+      docs: DataFrame, ids: DataFrame, edges: DataFrame, und: DataFrame) = (
+    fork(docs.join(
+      nearDupLabels(s, dir).where(col("node") =!= col("label"))
+        .select(col("node").as("doc_id")),
+      Seq("doc_id"), "left_anti").select("doc_id")),
+    fork(graft.operators.Graph.coreNumbers(edges, kMax = 5)
+      .select(col("node").as("doc_id"), col("core"))),
+    fork {
+      val labels = graft.operators.Graph.labelPropagation(edges, rounds = LpaRounds)
+      (labels, graft.operators.Graph.modularityByCommunity(edges, labels))
+    },
+    fork(graft.operators.Graph.personalizedPageRankExact(
+      und, ids, "doc_id",
+      docs.where(col("doc_id") % 37 === 0), "doc_id", iterations = 5)))
 
   private def nearDupLabels(s: SparkSession, dir: String): DataFrame = {
     // evict entries of stopped sessions: their checkpoint blocks are gone
@@ -2027,24 +2005,13 @@ object PipelineQueries {
       // the four signal subtrees below are INDEPENDENT iterative
       // pipelines (near-dup CC, core peel, LPA→modularity, PPR), each a
       // chain of many small jobs whose driver round-trips serialize —
-      // submit them from a thread pool so each chain's scheduling gaps
-      // back-fill the others' idle executors (guide §2.6: overlap
-      // independent jobs). Every subtree's plan — and therefore the mix
-      // result — is unchanged; only the submission order is concurrent.
-      val (survivors, cores, labelsMod, ppr) = concurrently4(
-        () => docs.join(
-          nearDupLabels(s, dir).where(col("node") =!= col("label"))
-            .select(col("node").as("doc_id")),
-          Seq("doc_id"), "left_anti").select("doc_id"),
-        () => graft.operators.Graph.coreNumbers(edges, kMax = 5)
-          .select(col("node").as("doc_id"), col("core")),
-        () => {
-          val labels = graft.operators.Graph.labelPropagation(edges, rounds = LpaRounds)
-          (labels, graft.operators.Graph.modularityByCommunity(edges, labels))
-        },
-        () => graft.operators.Graph.personalizedPageRankExact(
-          und, ids, "doc_id",
-          docs.where(col("doc_id") % 37 === 0), "doc_id", iterations = 5))
+      // built side by side (overlap independent jobs). Every
+      // subtree's plan — and therefore the mix result — is unchanged;
+      // only the submission order is concurrent.
+      val (survivors, cores, labelsMod, ppr) = Concurrently { fork =>
+        val (sv, cr, lm, pr) = signalSubtrees(fork, s, dir, docs, ids, edges, und)
+        (sv(), cr(), lm(), pr())
+      }
       val (labels, mod) = labelsMod
       graft.operators.Curation.curationMix(
         docs, "doc_id", survivors, quality,
@@ -2189,21 +2156,9 @@ object PipelineQueries {
       val quality = docs.select(col("doc_id"), Text.qualityScore(col("text")).as("quality"))
       // same concurrent submission as q169 (guide §2.6), with the
       // freshness-sketch chain as the fifth independent subtree
-      val (survivors, cores, labelsMod, ppr, fresh) = concurrently5(
-        () => docs.join(
-          nearDupLabels(s, dir).where(col("node") =!= col("label"))
-            .select(col("node").as("doc_id")),
-          Seq("doc_id"), "left_anti").select("doc_id"),
-        () => graft.operators.Graph.coreNumbers(edges, kMax = 5)
-          .select(col("node").as("doc_id"), col("core")),
-        () => {
-          val labels = graft.operators.Graph.labelPropagation(edges, rounds = LpaRounds)
-          (labels, graft.operators.Graph.modularityByCommunity(edges, labels))
-        },
-        () => graft.operators.Graph.personalizedPageRankExact(
-          und, ids, "doc_id",
-          docs.where(col("doc_id") % 37 === 0), "doc_id", iterations = 5),
-        () => {
+      val (survivors, cores, labelsMod, ppr, fresh) = Concurrently { fork =>
+        val (sv, cr, lm, pr) = signalSubtrees(fork, s, dir, docs, ids, edges, und)
+        val fr = fork {
           val fp = docs.select(
             col("doc_id"), (col("doc_id") % 30).as("iday"), headFingerprint.as("fp"))
           val fpnn = fp.where(col("fp").isNotNull)
@@ -2214,7 +2169,9 @@ object PipelineQueries {
           fpnn
             .join(est, fpnn("fp") === est("key"))
             .select(fpnn("doc_id"), col("cm_est").as("fresh_cnt"))
-        })
+        }
+        (sv(), cr(), lm(), pr(), fr())
+      }
       val (labels, mod) = labelsMod
       graft.operators.Curation.curationMix(
         docs, "doc_id", survivors, quality,

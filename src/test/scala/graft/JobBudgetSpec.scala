@@ -94,7 +94,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     Similarity.ivfPqBuild(spark, emb, "vec_id", "embedding",
       emb.where(col("vec_id") < 16), "vec_id", "embedding",
       m = 4, k = 8, indexPath = idx, files = 4)
-    val top = within("ivfPqTopK", 9) {
+    val top = within("ivfPqTopK", 7) {
       Similarity.ivfPqTopK(spark, idx, "vec_id", queryVec,
         m = 4, topK = 5, nprobe = 4, shortlist = 40,
         rerank = emb, rerankVecCol = "embedding", excludeId = Some(0L)).collect()

@@ -584,10 +584,28 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("ivfPq probe scans only the probed buckets' postings files; no vectors read") {
     val idx = buildIvfPq("pqprune", files = 8)
-    val result = Similarity.ivfPqTopK(
-      spark, idx, "vec_id", queryVec,
-      m = 4, topK = 10, nprobe = 2, shortlist = 40,
-      rerank = emb, rerankVecCol = "embedding", excludeId = Some(0L))
+    // the probe reads the postings once, inside the call, to select its
+    // shortlist: record the files of every scan it executes
+    val read = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = qe.analyzed.foreach {
+        case org.apache.spark.sql.execution.datasources.LogicalRelation(
+            fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) =>
+          fs.location.inputFiles.foreach(read.add)
+        case _ =>
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Similarity.ivfPqTopK(
+        spark, idx, "vec_id", queryVec,
+        m = 4, topK = 10, nprobe = 2, shortlist = 40,
+        rerank = emb, rerankVecCol = "embedding", excludeId = Some(0L)).collect()
+      org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
     val probed = spark.read.parquet(s"$idx/centroids")
       .select(col("centroid_id"),
         graft.functions.VectorFunctions.vec_cosine(
@@ -595,7 +613,8 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
           typedLit(queryVec.head().getSeq[Float](0).toArray)).as("cs"))
       .orderBy(col("cs").desc, col("centroid_id"))
       .limit(2).select("centroid_id").as[Long].collect().toSeq
-    val scanned = result.inputFiles.filter(_.contains("/postings/")).map(_.split('/').last)
+    val scanned = read.toArray(Array.empty[String]).toSeq.distinct
+      .filter(_.contains("/postings/")).map(_.split('/').last)
     assert(scanned.nonEmpty)
     val ranges = FileMerge.fileRanges(spark, s"$idx/postings", "centroid_id")
       .map(r => r.file -> r).toMap
@@ -740,6 +759,50 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("the driver SDC table is the Spark dotD fold over the codebook self-join, bit for bit") {
+    val built = Similarity.pqBuild(emb, "vec_id", "embedding", 4, k = 8)
+    val rows = built.collect().toSeq
+    val cb = spark.createDataFrame(java.util.Arrays.asList(rows: _*), built.schema)
+    val viaSpark = cb.select(col("sub"), col("cid").as("_ca"), col("cvec").as("_va"))
+      .join(cb.select(col("sub"), col("cid").as("_cb"), col("cvec").as("_vb")), "sub")
+      .select(col("sub"), col("_ca"), col("_cb"), Similarity.dotD(col("_va"), col("_vb")))
+      .collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
+      .toMap
+    val driver = Similarity.sdcDotTable(rows)
+    assert(driver.size == 4 * 8 * 8 && driver.keySet == viaSpark.keySet)
+    // == on the doubles: no tolerance
+    driver.foreach { case (key, d) =>
+      assert(d == viaSpark(key), s"$key: driver $d vs Spark ${viaSpark(key)}")
+    }
+  }
+
+  test("denseLookup builds the array and map literals typedLit builds, value and type") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, MapType}
+    // the array and map literals of `c`, resolved over a code column
+    def literals(c: org.apache.spark.sql.Column) =
+      Seq(1L).toDF("c").select(c).queryExecution.analyzed.expressions.flatMap(_.collect {
+        case l @ Literal(_, _: ArrayType | _: MapType) => (l.dataType, l.sql)
+      })
+    def same(got: org.apache.spark.sql.Column, want: org.apache.spark.sql.Column) = {
+      val g = literals(got)
+      assert(g.size == 1 && g == literals(want))
+    }
+    val code = col("c")
+    val dist = Map(0L -> 0.5, 1L -> -1.25, 3L -> 2.0)
+    same(Similarity.denseLookup(dist, Similarity.DistCell, code),
+      typedLit((0L to 3L).map(dist.get)))
+    val pairs = Map(0L -> ((0.5, 1.0)), 2L -> ((-1.5, 2.5)))
+    same(Similarity.denseLookup(pairs, Similarity.PairCell, code),
+      typedLit((0L to 2L).map(pairs.get)))
+    // sparse codes: the map-literal fallback
+    val sparseDist = Map(0L -> 0.5, 9L -> 1.0)
+    same(Similarity.denseLookup(sparseDist, Similarity.DistCell, code), typedLit(sparseDist))
+    val sparsePairs = Map(0L -> ((0.5, 1.0)), 9L -> ((1.0, 2.0)))
+    same(Similarity.denseLookup(sparsePairs, Similarity.PairCell, code), typedLit(sparsePairs))
+  }
+
   test("ivfPq: tie-inclusive shortlist hands whole code-equivalence classes to the re-rank") {
     // the RECALL_r15 regression shape, miniaturized: two tight clusters
     // whose members all CODE identically (codebook trained on the two
@@ -783,6 +846,101 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(got == brute, "tie-inclusive shortlist must recover brute force here")
     assert(got == Seq(198L, 196L, 194L, 192L, 190L),
       "expected the smallest-noise (largest even) ids — a row-count cut would return 2,4,6,8,10")
+  }
+
+  /** The tie-class fixture above, persisted: 200 vectors in two tight
+    * clusters whose members code identically (m = 4, k = 2, two files),
+    * and the vectors as a parquet table.
+    */
+  private def tieClassIndex(tag: String): (String, org.apache.spark.sql.DataFrame) = {
+    val dim = 8
+    def vec(id: Int): Array[Float] = {
+      val base = Array.tabulate(dim)(i =>
+        if ((id % 2 == 0) == (i < 4)) 1f else 0f)
+      if (id >= 2) base(0) = base(0) + 1e-3f * (300 - id)
+      base
+    }
+    val idx = scratch(tag)
+    (0 until 200).map(id => (id.toLong, vec(id))).toDF("vec_id", "embedding")
+      .write.parquet(s"${idx}_vecs")
+    val tiny = spark.read.parquet(s"${idx}_vecs")
+    Similarity.ivfPqBuild(
+      spark, tiny, "vec_id", "embedding",
+      tiny.where(col("vec_id") < 2), "vec_id", "embedding",
+      m = 4, k = 2, indexPath = idx, files = 2,
+      trainOn = Some(tiny.where(col("vec_id") < 2)))
+    (idx, tiny)
+  }
+
+  test("ivfPq: a one-pass shortlist past its bound takes the distributed path, with the same rows") {
+    val (idx, tiny) = tieClassIndex("pqbound")
+    // a score that is a function of the codes, as ADC is: the two
+    // clusters are two tie classes of about 100 rows each
+    val scored = spark.read.parquet(s"$idx/postings").where(col("vec_id") =!= 0L)
+      .select(col("vec_id"), hash(col("codes")).cast("double").as("_adcr"))
+    val best = scored.agg(max(col("_adcr"))).head().getDouble(0)
+    val bestClass = scored.where(col("_adcr") === best).select("vec_id").as[Long].collect().toSet
+    assert(bestClass.size >= 99)
+    // a cut of 5 keeps the whole best class; a bound of 8 rows over the
+    // two files cannot hold it, and the selection says so
+    val kept = Similarity.topNTies(scored, 5, 1000000L)
+    assert(kept.map(_.map(_.getLong(0)).toSet).contains(bestClass))
+    assert(Similarity.topNTies(scored, 5, 8L).isEmpty)
+    def probe(bound: Long) = Similarity.ivfPqProbe(
+      spark, idx, "vec_id", tiny.where(col("vec_id") === 0L).select("embedding"),
+      m = 4, topK = 5, nprobe = 1, shortlist = 5,
+      rerank = tiny, rerankVecCol = "embedding", excludeId = Some(0L), driverBound = bound)
+    def localShortlists(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+    }.size
+    val (onePass, distributed) = (probe(1000000L), probe(8L))
+    assert(localShortlists(onePass) == 1 && localShortlists(distributed) == 0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    val brute = Similarity.cosineTopK(tiny, "vec_id", "embedding", queryId = 0L, k = 5)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(rows(distributed) == rows(onePass))
+    assert(rows(onePass).map(r => (r._1, r._3)) == brute)
+  }
+
+  test("ivfPq: a starved probe strips its sentinel rows after the cut") {
+    // twelve vectors in two clusters, every candidate probed, a
+    // shortlist past the candidate count: the cut keeps every row. The
+    // odd cluster's code of subspace 1 is then dropped from the stored
+    // codebook, so its rows score the -2 sentinel; they reach the cut,
+    // and only the even cluster may reach the re-rank
+    val dim = 8
+    def vec(id: Int): Array[Float] = {
+      val base = Array.tabulate(dim)(i => if ((id % 2 == 0) == (i < 4)) 1f else 0f)
+      if (id >= 2) base(0) = base(0) + 1e-2f * (20 - id)
+      base
+    }
+    val idx = scratch("pqstarved")
+    (0 until 12).map(id => (id.toLong, vec(id))).toDF("vec_id", "embedding")
+      .write.parquet(s"${idx}_vecs")
+    val tiny = spark.read.parquet(s"${idx}_vecs")
+    Similarity.ivfPqBuild(
+      spark, tiny, "vec_id", "embedding",
+      tiny.where(col("vec_id") < 2), "vec_id", "embedding",
+      m = 4, k = 2, indexPath = idx, files = 2,
+      trainOn = Some(tiny.where(col("vec_id") < 2)))
+    val oddCode = spark.read.parquet(s"$idx/postings").where(col("vec_id") === 1L)
+      .select(col("codes").getItem(1)).head().getLong(0)
+    val cb = spark.read.parquet(s"$idx/codebook")
+    val kept = cb.collect().filterNot(r =>
+      r.getAs[Int]("sub") == 1 && r.getAs[Long]("cid") == oddCode)
+    assert(kept.length == cb.count() - 1)
+    spark.createDataFrame(java.util.Arrays.asList(kept: _*), cb.schema)
+      .write.mode("overwrite").parquet(s"$idx/codebook")
+    val got = Similarity.ivfPqTopK(
+      spark, idx, "vec_id", tiny.where(col("vec_id") === 0L).select("embedding"),
+      m = 4, topK = 8, nprobe = 2, shortlist = 20,
+      rerank = tiny, rerankVecCol = "embedding", excludeId = Some(0L))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    // the rows the probe returned before its shortlist took one pass
+    assert(got == Seq(
+      (10L, 1.0, 0.999109), (8L, 1.0, 0.99873), (6L, 1.0, 0.998289),
+      (4L, 1.0, 0.997788), (2L, 1.0, 0.99723)))
   }
 
   test("ivfPqShortlistFor: population-scaled sizing; 1x-population probe equals brute force") {
